@@ -26,19 +26,21 @@ ladder:
 5. PQ — product quantization (Jegou et al. 2011): per-subspace
    codebooks (seeded Lloyd's on a bounded md5-ordered sample, r7)
    compress each vector to PQ_M 4-bit codes, queries score by ADC
-   (the lookup tables as ONE broadcast row — plan size independent of
-   the batch; the literal-map form is kept as the parity-contract
-   reference but routed off by default since r13: its plan compile
-   cost exceeds the broadcast row's execution), deep candidate list
+   with the lookup tables as ONE broadcast row (plan size independent
+   of the batch; ``adc_batch_parity_contract`` pins it bit-exact
+   against a numpy ADC over the same tables), deep candidate list
    exact-re-ranked;
-6. IVF-PQ (``ivfpq_index_topk``) — the faiss-standard composite:
-   RESIDUAL PQ codes (``by_residual=true``, r8 — codebooks quantize
-   emb − center, recall at the nprobe coverage cap) written
-   PARTITIONED BY coarse centroid, so a query reads nprobe/IVF_K of an
-   M-bytes-per-vector index (PartitionFilters plan-asserted),
-   residual-ADC-scores it (one extra (centroid, code) cross-dot lookup
-   per subspace), and refines the deep candidate list against the flat
-   store by id.  The 100 TB serving layout.
+6. the IVF × codec index stack — faiss ``index_factory`` compositions
+   "IVF8,PQ8x4" (``ivfpq_*``: RESIDUAL PQ codes, ``by_residual=true``,
+   r8 — recall at the nprobe coverage cap), "SQ8" (``sq8_*``) and
+   "IVF8,SQ8" (``ivfsq8_*``) share ONE build, meta format, serve and
+   round-trip body (``_build_index`` / ``_write_meta`` / ``_serve`` /
+   ``_serve_roundtrip``).  Under IVF the codes are written PARTITIONED
+   BY coarse centroid, so a query reads nprobe/IVF_K of the index
+   (PartitionFilters plan-asserted), scores it with the codec (residual
+   ADC: one extra (centroid, code) cross-dot lookup per subspace; SQ8:
+   affine dequant + centroid), and refines the deep candidate list
+   against the flat store by id.  The 100 TB serving layout.
 
 Exact math is built-in array expressions (``zip_with`` + ``aggregate``),
 computed in double, JVM-side — except the all-pairs near-dup verify
@@ -50,6 +52,7 @@ results (order-preserving accumulation).
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -122,6 +125,17 @@ def _dot_sql(a: str, b: str) -> str:
 def _cosine_sql(a: str, b: str) -> str:
     """SQL twin of :func:`cosine` — dot/(sqrt·sqrt), same tree."""
     return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+
+
+def _warehouse_path(prefix: str, sf_dir: str) -> str:
+    """Repo-local artifact directory ``spark-warehouse/<prefix>_<sf tag>``
+    (spark-warehouse/ is gitignored); keyed by SF so concurrent checks
+    at different scale factors don't clobber each other."""
+    import ssafynews_data_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__)))
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(root, "spark-warehouse", f"{prefix}_{tag}")
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,23 +599,38 @@ def _ivf_flat_serve(
     )
 
 
-def _ivf_fresh_topk(corpus: DataFrame) -> DataFrame:
-    """Fresh KMeans(IVF_K, seed 42) fit + IVF-Flat serve over an
-    already-loaded corpus — the body of ``ann_ivf_topk``, factored so
-    callers that ALREADY hold the (pinned) corpus
-    (``ivf_staleness_audit``'s fresh-baseline leg) don't re-scan
-    parquet and re-run the cast lineage for the same fit."""
+def _ivf_fit(
+    fit_on: DataFrame, assign: DataFrame | None = None
+) -> tuple[DataFrame, "np.ndarray"]:
+    """THE coarse-quantizer fit of every IVF index and audit:
+    KMeans(IVF_K, seed 42) on ``fit_on`` (vec_id, emb) exactly as given
+    — no repartition or coalesce, so the centers depend only on the
+    caller's frame — then the lazy (vec_id, emb, centroid) assignment of
+    ``assign`` (default ``fit_on``; the staleness audit fits on a prefix
+    and assigns the grown corpus) and the centroid matrix.  Callers pin
+    the assignment when it forks."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    spark = corpus.sparkSession
-    vecs = pin(corpus.withColumn("vec", array_to_vector(F.col("emb"))))
+    def vecs(df: DataFrame) -> DataFrame:
+        return df.withColumn("vec", array_to_vector(F.col("emb")))
+
     km = KMeans(k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid")
-    model = km.fit(vecs)
+    model = km.fit(vecs(fit_on))
+    centers = np.stack([np.asarray(c, dtype=float) for c in model.clusterCenters()])
+    assigned = model.transform(vecs(fit_on if assign is None else assign))
+    return assigned.select("vec_id", "emb", "centroid"), centers
+
+
+def _ivf_fresh_topk(corpus: DataFrame) -> DataFrame:
+    """Fresh IVF fit + IVF-Flat serve over an already-loaded corpus —
+    the body of ``ann_ivf_topk``, factored so callers that ALREADY hold
+    the (pinned) corpus (``ivf_staleness_audit``'s fresh-baseline leg)
+    don't re-scan parquet and re-run the cast lineage for the same fit."""
+    assigned, centers = _ivf_fit(corpus)
     # assigned feeds the query slice AND the candidate join inside
     # _ivf_flat_serve — pin so the transform runs once
-    assigned = pin(model.transform(vecs).select("vec_id", "emb", "centroid"))
-    return _ivf_flat_serve(assigned, _cent_frame(spark, model.clusterCenters()))
+    return _ivf_flat_serve(pin(assigned), _cent_frame(corpus.sparkSession, centers))
 
 
 @register("ann_ivf_topk", tags=("similarity", "ivf"))
@@ -772,20 +801,15 @@ def assign_capped_clusters(
 # ---------------------------------------------------------------------------
 
 
-def write_ivf_index(corpus: DataFrame, path: str, k: int = IVF_K, seed: int = 42):
-    """Materialize the IVF-Flat layout: assign each vector to its KMeans
+def write_ivf_index(corpus: DataFrame, path: str) -> "np.ndarray":
+    """Materialize the IVF-Flat layout: assign each vector to its IVF
     centroid and write parquet PARTITIONED BY centroid — at scale a
-    query probing ``nprobe`` centroids reads ``nprobe/k`` of the data
-    via partition pruning, which is the whole point of IVF.  Returns the
-    fitted KMeans model (its centers are the probe index)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(k=k, seed=seed, featuresCol="vec", predictionCol="centroid").fit(vecs)
-    assigned = model.transform(vecs).select("vec_id", "emb", "centroid")
+    query probing ``nprobe`` centroids reads ``nprobe/IVF_K`` of the
+    data via partition pruning, which is the whole point of IVF.
+    Returns the centroid matrix (the probe index)."""
+    assigned, centers = _ivf_fit(corpus)
     assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-    return model
+    return centers
 
 
 def read_ivf_probe(spark: SparkSession, path: str, probe_centroids: list[int]) -> DataFrame:
@@ -802,25 +826,13 @@ def ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by centroid → probe via partition-pruned read → exact
     rank within the probed partitions.  Rows-only check (KMeans is not
     SQL-expressible); recall vs exact top-k is pytest-gated."""
-    import os
-
-    import ssafynews_data_spark
-
     corpus = _corpus(spark, sf_dir)
     if corpus.isEmpty():  # KMeans cannot fit on zero rows (empty-day path)
         return local_df(spark, 
             [], "query_id LONG, neighbor_id LONG, sim DOUBLE, rank INT"
         )
-    # repo-local scratch (spark-warehouse/ is gitignored); keyed by SF so
-    # concurrent checks at different scale factors don't clobber
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "ivf_index_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    model = write_ivf_index(corpus, path)
-
-    cent_df = _cent_frame(spark, model.clusterCenters())
+    path = _warehouse_path("ivf_index", sf_dir)
+    cent_df = _cent_frame(spark, write_ivf_index(corpus, path))
     queries = corpus.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
@@ -1028,6 +1040,28 @@ _ANN_CONTRACT_SCHEMA = (
 )
 
 
+def _exact_facts(exact: DataFrame) -> DataFrame:
+    """The DuckDB-recomputable exact-side facts of a (query_id,
+    neighbor_id, sim) exact top-k: query and row counts plus the q4
+    similarity sum.  Per-row sims are 4-decimal-rounded doubles
+    (bit-identical cross-engine); quantize EACH to an integer and sum
+    integers — round(sum(<rounded doubles>), 3) lands on a
+    half-thousandth tie ~1/10 draws (caught by the pytest reseed gate,
+    seed 8675309: 16.181 vs 16.18) and tie-breaks per engine."""
+    return exact.agg(
+        F.count_distinct("query_id").alias("n_queries"),
+        F.count("*").alias("n_exact_rows"),
+        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
+    )
+
+
+def _hits(served: DataFrame, exact: DataFrame) -> int:
+    """How many (query_id, neighbor_id) pairs of ``served`` are in the
+    exact top-k."""
+    ids = ["query_id", "neighbor_id"]
+    return served.select(*ids).join(exact.select(*ids), ids).count()
+
+
 def _ann_recall_contract(
     spark: SparkSession, sf_dir: str, approx_fn, min_pct: int
 ) -> DataFrame:
@@ -1049,18 +1083,7 @@ def _ann_recall_contract(
         F.broadcast(exact.select("query_id", "neighbor_id")),
         ["query_id", "neighbor_id"],
     )
-    e = exact.agg(
-        F.count_distinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_exact_rows"),
-        # per-row sims are 4-decimal-rounded doubles (bit-identical
-        # cross-engine); quantize EACH to an integer and sum integers —
-        # round(sum(<rounded doubles>), 3) lands on a half-thousandth
-        # tie ~1/10 draws (caught by the pytest reseed gate, seed
-        # 8675309: 16.181 vs 16.18) and tie-breaks per engine
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias(
-            "exact_sim_sum_q4"
-        ),
-    )
+    e = _exact_facts(exact)
     h = hits.agg(F.count("*").alias("n_hits"))
     return e.crossJoin(h).select(
         "n_queries",
@@ -1322,31 +1345,40 @@ def _np_kmeans(X: "np.ndarray", k: int, seed: int, iters: int = 10) -> "np.ndarr
     return C
 
 
-def _pq_codebooks(
-    corpus: DataFrame, emb_col: str = "emb", id_col: str = "vec_id"
-) -> list:
-    """Train one seeded k-means(PQ_K) per subspace on a BOUNDED sample
-    of the subvectors; return the M centroid matrices (numpy, K x
-    dim/M).  Train-once-on-a-sample, encode-the-world is the standard
-    PQ pipeline (Jegou et al. 2011; faiss trains on sampled vectors):
-
-    - the sample is deterministic and order-free — top-PQ_FIT_SAMPLE by
-      md5 of the id (TakeOrderedAndProject: one pass over the corpus,
-      no full shuffle, no partition-order bias);
-    - the 8 fits run driver-side on that sample (seeded numpy Lloyd's,
-      milliseconds) instead of 8 MLlib jobs whose per-fit scheduling
-      overhead dominated at every fixture scale (VERDICT r6 item 3:
-      ann_pq_topk was ~pure fit overhead);
-    - fit cost is flat in corpus size BY CONSTRUCTION; encode stays
-      distributed (Arrow UDF, one GEMM per batch per subspace)."""
+def _pq_sample(
+    frame: DataFrame,
+    centers: "np.ndarray | None" = None,
+    emb_col: str = "emb",
+    id_col: str = "vec_id",
+) -> "np.ndarray":
+    """The bounded PQ training sample as a driver matrix — deterministic
+    and order-free: top-PQ_FIT_SAMPLE rows by md5 of the id
+    (TakeOrderedAndProject: one pass over the corpus, no full shuffle,
+    no partition-order bias).  With ``centers`` (``frame`` then carries
+    a ``centroid`` column) each sampled vector has its cell centroid
+    subtracted — the RESIDUAL sample of faiss ``by_residual=true``:
+    residuals concentrate near the origin, so the codebooks spend their
+    resolution on the within-cell displacement instead of re-describing
+    the coarse structure IVF already captured."""
+    resid = [F.col("centroid").alias("c")] if centers is not None else []
     rows = (
-        corpus.select(F.col(emb_col).alias("e"), F.md5(F.col(id_col).cast("string")).alias("o"))
+        frame.select(
+            F.col(emb_col).alias("e"), *resid, F.md5(F.col(id_col).cast("string")).alias("o")
+        )
         .sort("o")
         .limit(PQ_FIT_SAMPLE)
-        .select("e")
+        .select("e", *(["c"] if resid else []))
         .collect()
     )
     X = np.stack([np.asarray(r[0], dtype=float) for r in rows])
+    if resid:
+        X -= centers[np.asarray([int(r[1]) for r in rows])]
+    return X
+
+
+def _pq_books(X: "np.ndarray") -> list:
+    """One seeded k-means(PQ_K) per subspace of a driver sample: the M
+    centroid matrices (K x dim/M)."""
     sub = X.shape[1] // PQ_M
     return [
         _np_kmeans(X[:, m * sub : (m + 1) * sub], PQ_K, seed=42 + m)
@@ -1354,106 +1386,94 @@ def _pq_codebooks(
     ]
 
 
-def _pq_encode(books: list):
-    """Arrow UDF: embedding -> array<int> of PQ codes (argmin centroid
-    per subspace, one numpy GEMM per batch per subspace)."""
+def _pq_codebooks(
+    frame: DataFrame,
+    centers: "np.ndarray | None" = None,
+    emb_col: str = "emb",
+    id_col: str = "vec_id",
+) -> list:
+    """Train PQ codebooks on the bounded sample (``_pq_sample``; residual
+    when ``centers`` is given).  Train-once-on-a-sample, encode-the-world
+    is the standard PQ pipeline (Jegou et al. 2011; faiss trains on
+    sampled vectors): the 8 fits run driver-side (seeded numpy Lloyd's,
+    milliseconds) instead of 8 MLlib jobs whose per-fit scheduling
+    overhead dominated at every fixture scale (VERDICT r6 item 3), so
+    fit cost is flat in corpus size BY CONSTRUCTION; encode stays
+    distributed (Arrow UDF, one GEMM per batch per subspace)."""
+    return _pq_books(_pq_sample(frame, centers, emb_col, id_col))
+
+
+def _pq_encode(books: list, centers: "np.ndarray | None" = None):
+    """Arrow UDF producing PQ codes (argmin centroid per subspace, one
+    numpy GEMM per batch per subspace).  Flat (no ``centers``):
+    ``emb -> codes``.  Residual: ``(emb, centroid) -> codes`` of
+    emb − centers[centroid], the KB centroid matrix captured in the
+    closure."""
     sub = books[0].shape[1]
 
-    @F.pandas_udf("array<int>")
-    def encode(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(emb.to_numpy())
-        codes = np.empty((len(X), len(books)), dtype=np.int32)
+    def codes(X: "np.ndarray") -> pd.Series:
+        out = np.empty((len(X), len(books)), dtype=np.int32)
         for m, C in enumerate(books):
             Xm = X[:, m * sub : (m + 1) * sub]
             # argmin ||x - c||^2 = argmax (x.c - ||c||^2 / 2)
-            codes[:, m] = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
-        return pd.Series(list(codes))
+            out[:, m] = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
+        return pd.Series(list(out))
+
+    if centers is None:
+
+        @F.pandas_udf("array<int>")
+        def encode(emb: pd.Series) -> pd.Series:
+            if len(emb) == 0:
+                return pd.Series([], dtype=object)
+            return codes(np.stack(emb.to_numpy()))
+
+    else:
+
+        @F.pandas_udf("array<int>")
+        def encode(emb: pd.Series, cent: pd.Series) -> pd.Series:
+            if len(emb) == 0:
+                return pd.Series([], dtype=object)
+            return codes(np.stack(emb.to_numpy()) - centers[cent.to_numpy().astype(int)])
 
     return encode
 
 
-#: ADC lookup router (VERDICT r7 item 3).  The literal-map ADC form
-#: compiles M·K·|Q| partial-dot doubles INTO THE PLAN — a few KB at the
-#: contract's 10 queries, but thousands of serving queries would bloat
-#: generated code past the JVM method-size comfort zone.  Above this
-#: query count the SAME lookups travel as broadcast DATA instead: one
-#: 1-row frame carrying a (m·K + code) -> (partial-dots, ||c||²) map
-#: plus the query-id/norm arrays, crossJoined (Spark broadcasts the
-#: row) with identical per-row math — plan size then independent of
-#: |Q| and K.  Both paths are hash-equal by construction and pinned so
-#: by tests/test_similarity.py + adc_batch_parity_contract.
-#:
-#: 0 since the r13 optimization round: the literal plan's
-#: analysis/optimization/codegen cost EXCEEDS the broadcast row's whole
-#: execution even at the 10-query contract batch (measured sf0.1, noop,
-#: median of 5, identical output rows: flat ADC candidate cut
-#: 1.26 -> 0.82 s; residual IVF-PQ serve 3.46 -> 1.31 s — guide §7.3,
-#: "planning time itself can become the bottleneck").  At 100 TB the
-#: constant-size plan is also the right default: serving batches are
-#: large and codegen happens per query ON the driver.  The literal
-#: branch stays as the zero-extra-operator reference form, exercised
-#: explicitly by the parity contract and tests (raise this constant to
-#: route small batches back onto it).
-ADC_LITERAL_MAX_QUERIES = 0
-
-
-def _adc_dot_norm2(books: list, Q: "np.ndarray") -> tuple[Column, Column]:
-    """ADC scoring columns over a ``codes`` column: driver-built LITERAL
-    lookup maps — dot_maps[m][code] = array over queries of Q_m . c,
-    norm_maps[m][code] = ||c||^2 — folded into (dots, norm2) where
-    ``dots`` is the per-query partial-dot array and ``norm2`` the
-    reconstructed-vector squared norm.  M maps of K entries, each a few
-    KB: ADC is map lookups + one zip_with sum per subspace, pure
-    codegen, ZERO joins and zero shuffles."""
+def _adc_tables(books: list, Q: "np.ndarray") -> tuple[list, list]:
+    """The ADC lookup tables: per subspace m, the (|Q|, K) partial dots
+    Q_m · C_mᵀ and the K squared centroid norms ‖C_m[k]‖².  Shared by
+    the Spark lookup row and the numpy reference of
+    ``adc_batch_parity_contract``, so both read the same doubles."""
     sub = books[0].shape[1]
-    nq = Q.shape[0]
-    dots = F.array(*[F.lit(0.0) for _ in range(nq)])
-    norm2 = F.lit(0.0)
-    for m, C in enumerate(books):
-        Qm = Q[:, m * sub : (m + 1) * sub]
-        pd_mk = Qm @ C.T  # (Q, K)
-        dot_map = F.map_from_arrays(
-            F.array(*[F.lit(k) for k in range(PQ_K)]),
-            F.array(
-                *[
-                    F.array(*[F.lit(float(pd_mk[q, k])) for q in range(nq)])
-                    for k in range(PQ_K)
-                ]
-            ),
-        )
-        norm_map = F.map_from_arrays(
-            F.array(*[F.lit(k) for k in range(PQ_K)]),
-            F.array(*[F.lit(float((C[k] * C[k]).sum())) for k in range(PQ_K)]),
-        )
-        part = F.element_at(dot_map, F.col("codes")[m])
-        dots = F.zip_with(dots, part, lambda a, b: a + b)
-        norm2 = norm2 + F.element_at(norm_map, F.col("codes")[m])
-    return dots, norm2
+    dots = [Q[:, m * sub : (m + 1) * sub] @ C.T for m, C in enumerate(books)]
+    norms = [[float((C[k] * C[k]).sum()) for k in range(PQ_K)] for C in books]
+    return dots, norms
 
 
 def _adc_lut_row(
-    spark: SparkSession, books: list, Q: "np.ndarray", qids: list, qnorm: "np.ndarray"
+    spark: SparkSession,
+    books: list,
+    Q: "np.ndarray",
+    qids: list,
+    qnorm: "np.ndarray",
+    centers: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """The batch-serving ADC lookup table as ONE broadcastable row:
+    """The ADC lookup table as ONE broadcastable row, built with
+    createDataFrame (data, not plan literals — the literal form's plan
+    compile cost exceeded the whole execution, r13), so the serving
+    plan stays constant-size no matter how many queries are batched:
     ``_adc_lut[m·K + code] = (partial dots over queries, ||c||²)`` plus
-    the query-id / query-norm arrays.  Built with createDataFrame (data,
-    not plan literals), so the serving plan stays constant-size no
-    matter how many queries are batched."""
-    sub = books[0].shape[1]
-    entries = []
-    for m, C in enumerate(books):
-        pd_mk = Q[:, m * sub : (m + 1) * sub] @ C.T  # (Q, K)
-        for k in range(PQ_K):
-            entries.append(
-                (
-                    m * PQ_K + k,
-                    [float(x) for x in pd_mk[:, k]],
-                    float((C[k] * C[k]).sum()),
-                )
-            )
-    return (
+    the query-id / query-norm arrays.  With ``centers`` (residual ADC)
+    it also carries the centroid-keyed terms — ``_adc_qc[c]`` =
+    per-query dot(q, c) array, ``_adc_ccn2[c]`` = ‖c‖², and
+    ``_adc_cross[m·IVF_K·K + c·K + k]`` = dot(c_m, C_m[k]): M·IVF_K·K +
+    IVF_K·(Q + 2) doubles ≈ tens of KB."""
+    dots, norms = _adc_tables(books, Q)
+    entries = [
+        (m * PQ_K + k, [float(x) for x in pd_mk[:, k]], norms[m][k])
+        for m, pd_mk in enumerate(dots)
+        for k in range(PQ_K)
+    ]
+    row = (
         local_df(spark, entries, "lk int, pd array<double>, cn2 double")
         .agg(
             F.map_from_entries(
@@ -1463,6 +1483,31 @@ def _adc_lut_row(
         .withColumn("_adc_qids", F.lit([int(q) for q in qids]))
         .withColumn("_adc_qn", F.lit([float(x) for x in qnorm]))
     )
+    if centers is None:
+        return row
+    sub = books[0].shape[1]
+    n_cells = centers.shape[0]
+    qc = Q @ centers.T  # (Q, IVF_K)
+    cn2 = (centers * centers).sum(1)  # (IVF_K,)
+    cent_entries = [
+        (c, [float(x) for x in qc[:, c]], float(cn2[c])) for c in range(n_cells)
+    ]
+    cross_entries = []
+    for m, C in enumerate(books):
+        cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
+        for c in range(n_cells):
+            for k in range(PQ_K):
+                cross_entries.append(
+                    (m * n_cells * PQ_K + c * PQ_K + k, float(cc_mk[c, k]))
+                )
+    cent_row = local_df(spark, cent_entries, "c int, qc array<double>, cn2 double").agg(
+        F.map_from_entries(F.collect_list(F.struct("c", "qc"))).alias("_adc_qc"),
+        F.map_from_entries(F.collect_list(F.struct("c", "cn2"))).alias("_adc_ccn2"),
+    )
+    cross_row = local_df(spark, cross_entries, "ck int, x double").agg(
+        F.map_from_entries(F.collect_list(F.struct("ck", "x"))).alias("_adc_cross")
+    )
+    return row.crossJoin(cent_row).crossJoin(cross_row)
 
 
 #: columns the ADC machinery injects; never part of the caller's carry
@@ -1477,55 +1522,46 @@ def _adc_explode(
     Q: "np.ndarray",
     qids: list,
     qnorm: "np.ndarray",
-    use_literal: bool | None = None,
+    centers: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Explode a coded frame (``neighbor_id``, ``codes``, any carry
     columns) into per-(query, neighbor) ADC cosine rows: (query_id,
     <carry>, adc_sim), self-pairs dropped.  Shared by the flat PQ path
-    and IVF-PQ so the ADC normalization/tiebreak lives in ONE place.
+    and IVF-PQ so the ADC normalization/tiebreak lives in ONE place;
+    the lookups arrive as the one broadcast row of ``_adc_lut_row``.
 
-    Routing (``use_literal=None``): ≤ ADC_LITERAL_MAX_QUERIES queries →
-    literal lookup maps compiled into the plan (zero extra operators);
-    above → the same lookups as one broadcast row (``_adc_lut_row``)
-    crossJoined in, so plan size is independent of the query count.
-    Both branches compute identical doubles in identical order."""
-    nq = Q.shape[0]
-    if use_literal is None:
-        use_literal = nq <= ADC_LITERAL_MAX_QUERIES
+    With ``centers`` the frame also carries ``centroid`` and the codes
+    are RESIDUAL codes; the reconstruction is x̂ = c + r̂, so
+
+    - dot(q, x̂)  = dot(q, c)          [centroid lookup, per query]
+                  + Σ_m dot(q_m, C_m[k_m])   [the shared residual maps]
+    - ‖x̂‖²      = ‖c‖² + 2·Σ_m dot(c_m, C_m[k_m]) + Σ_m ‖C_m[k_m]‖²
+
+    i.e. exactly ONE extra lookup per subspace vs the flat form (the
+    (centroid, code) cross-dot), plus two centroid-keyed scalars.
+    Without ``centers`` no centroid term is emitted: the flat plan is
+    the flat sums alone."""
     carry = [c for c in df.columns if c not in _ADC_HELPER_COLS]
-    if use_literal:
-        dots, norm2 = _adc_dot_norm2(books, Q)
-        qid_arr = F.array(*[F.lit(int(q)) for q in qids])
-        qnorm_arr = F.array(*[F.lit(float(x)) for x in qnorm])
-        return (
-            df.select(
-                *carry,
-                F.posexplode(
-                    F.zip_with(dots, qnorm_arr, lambda d, qn: d / (qn * F.sqrt(norm2)))
-                ).alias("qpos", "adc_sim"),
-            )
-            .select(
-                F.element_at(qid_arr, F.col("qpos") + 1).alias("query_id"),
-                *carry,
-                "adc_sim",
-            )
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    # broadcast branch: the whole scoring expression as ONE parsed SQL
-    # string (guide §7.3) — the Column-API form paid ~40 py4j
-    # round-trips per zip_with/element_at while building the identical
-    # tree.  Operations and association order copied term-for-term
-    # from the Column twin above; bit-identity is pinned by
-    # test_adc_literal_and_batch_paths_identical.
     df = df.crossJoin(
-        F.broadcast(_adc_lut_row(df.sparkSession, books, Q, qids, qnorm))
+        F.broadcast(_adc_lut_row(df.sparkSession, books, Q, qids, qnorm, centers))
     )
+    # the whole scoring expression as ONE parsed SQL string (guide §7.3)
+    # — the Column-API form paid ~40 py4j round-trips per
+    # zip_with/element_at while building the identical tree
     ent = lambda m: f"element_at(_adc_lut, {m * PQ_K} + codes[{m}])"  # noqa: E731
     dots_s = f"{ent(0)}.pd"
     norm2_s = f"{ent(0)}.cn2"
     for m in range(1, len(books)):
         dots_s = f"zip_with({dots_s}, {ent(m)}.pd, (a, b) -> a + b)"
         norm2_s = f"{norm2_s} + {ent(m)}.cn2"
+    if centers is not None:
+        cross_s = " + ".join(
+            f"element_at(_adc_cross, {m * centers.shape[0] * PQ_K}"
+            f" + centroid * {PQ_K} + codes[{m}])"
+            for m in range(len(books))
+        )
+        dots_s = f"zip_with({dots_s}, element_at(_adc_qc, centroid), (r, c) -> r + c)"
+        norm2_s = f"element_at(_adc_ccn2, centroid) + ({cross_s}) * 2.0D + ({norm2_s})"
     sim_s = f"zip_with({dots_s}, _adc_qn, (d, qn) -> d / (qn * sqrt({norm2_s})))"
     return (
         df.selectExpr(
@@ -1542,12 +1578,12 @@ def _adc_explode(
     )
 
 
-def _adc_candidate_cut(scored: DataFrame) -> DataFrame:
-    """Keep the PQ_RERANK best ADC rows per query (deterministic
-    neighbor_id tiebreak)."""
+def _adc_candidate_cut(scored: DataFrame, depth: int = PQ_RERANK) -> DataFrame:
+    """Keep the ``depth`` best ``adc_sim`` rows per query (deterministic
+    neighbor_id tiebreak) — the candidate list of the exact refine."""
     w = W.partitionBy("query_id").orderBy(F.desc("adc_sim"), "neighbor_id")
     return scored.withColumn("r0", F.row_number().over(w)).filter(
-        F.col("r0") <= PQ_RERANK
+        F.col("r0") <= depth
     )
 
 
@@ -1574,10 +1610,10 @@ def ann_pq_topk_frame(
     the standard PQ serving pipeline (Jegou et al. 2011, public).
 
     Spark shape: the per-(subspace, code) partial dot products against
-    ALL queries are a driver-built LITERAL map (M maps of K entries,
-    each an array of Q doubles — a few KB), so ADC is map lookups +
-    one zip_with sum per subspace, pure codegen, ZERO joins and zero
-    shuffles until the per-query group limit; only the PQ_RERANK x Q
+    ALL queries travel as ONE broadcast lookup row (M·K entries, each
+    an array of Q doubles — a few KB), so ADC is map lookups + one
+    zip_with sum per subspace, pure codegen, no shuffles until the
+    per-query group limit; only the PQ_RERANK x Q
     candidate rows join back for exact re-rank.  At 100 TB the codes
     table (M bytes/vector vs 4·dim) is the stored index — encode once,
     serve many — and pairs naturally with the IVF layout
@@ -1592,7 +1628,7 @@ def ann_pq_topk_frame(
         return local_df(spark, 
             [], "query_id long, neighbor_id long, sim double, rank int"
         )
-    books = _pq_codebooks(corpus, emb_col, id_col)
+    books = _pq_codebooks(corpus, emb_col=emb_col, id_col=id_col)
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
     qnorm = np.sqrt((Q * Q).sum(1))
@@ -1654,226 +1690,6 @@ def pq_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_RECALL_MIN_PCT = 30
 
 
-def _pq_codebooks_residual(assigned: DataFrame, centers: "np.ndarray") -> list:
-    """Residual-PQ codebooks (faiss ``by_residual=true``): the same
-    bounded md5-ordered sample as ``_pq_codebooks``, but each sampled
-    vector has its cell centroid subtracted BEFORE the per-subspace
-    fits.  Residuals concentrate near the origin, so the K centroids
-    spend their resolution on the within-cell displacement instead of
-    re-describing the coarse structure IVF already captured — strictly
-    finer quantization for the same code budget."""
-    rows = (
-        assigned.select(
-            F.col("emb").alias("e"),
-            F.col("centroid").alias("c"),
-            F.md5(F.col("vec_id").cast("string")).alias("o"),
-        )
-        .sort("o")
-        .limit(PQ_FIT_SAMPLE)
-        .select("e", "c")
-        .collect()
-    )
-    X = np.stack([np.asarray(r[0], dtype=float) for r in rows])
-    X -= centers[np.asarray([int(r[1]) for r in rows])]
-    sub = X.shape[1] // PQ_M
-    return [
-        _np_kmeans(X[:, m * sub : (m + 1) * sub], PQ_K, seed=42 + m)
-        for m in range(PQ_M)
-    ]
-
-
-def _pq_encode_residual(books: list, centers: "np.ndarray"):
-    """Arrow UDF: (embedding, centroid) -> PQ codes of the RESIDUAL
-    (emb - center[centroid]); one numpy GEMM per batch per subspace,
-    the centroid matrix captured KB-sized in the closure."""
-    sub = books[0].shape[1]
-
-    @F.pandas_udf("array<int>")
-    def encode(emb: pd.Series, cent: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(emb.to_numpy()) - centers[cent.to_numpy().astype(int)]
-        codes = np.empty((len(X), len(books)), dtype=np.int32)
-        for m, C in enumerate(books):
-            Xm = X[:, m * sub : (m + 1) * sub]
-            codes[:, m] = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
-        return pd.Series(list(codes))
-
-    return encode
-
-
-def _residual_lut_row(
-    spark: SparkSession,
-    books: list,
-    Q: "np.ndarray",
-    qids: list,
-    qnorm: "np.ndarray",
-    centers: "np.ndarray",
-) -> DataFrame:
-    """The residual-ADC batch lookup table as ONE broadcastable row:
-    the flat ``_adc_lut_row`` (residual partial dots + residual norms)
-    extended with the centroid-keyed terms — ``_adc_qc[c]`` = per-query
-    dot(q, c) array, ``_adc_ccn2[c]`` = ‖c‖², and
-    ``_adc_cross[m·IVF_K·K + c·K + k]`` = dot(c_m, C_m[k]).  All built
-    with createDataFrame (data, not plan literals): M·IVF_K·K + IVF_K·
-    (Q + 2) doubles ≈ tens of KB, and the serving plan stays
-    constant-size no matter how many queries are batched."""
-    sub = books[0].shape[1]
-    n_cells = centers.shape[0]
-    qc = Q @ centers.T  # (Q, IVF_K)
-    cn2 = (centers * centers).sum(1)  # (IVF_K,)
-    cent_entries = [
-        (c, [float(x) for x in qc[:, c]], float(cn2[c])) for c in range(n_cells)
-    ]
-    cross_entries = []
-    for m, C in enumerate(books):
-        cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
-        for c in range(n_cells):
-            for k in range(PQ_K):
-                cross_entries.append(
-                    (m * n_cells * PQ_K + c * PQ_K + k, float(cc_mk[c, k]))
-                )
-    cent_row = local_df(spark, 
-        cent_entries, "c int, qc array<double>, cn2 double"
-    ).agg(
-        F.map_from_entries(F.collect_list(F.struct("c", "qc"))).alias("_adc_qc"),
-        F.map_from_entries(F.collect_list(F.struct("c", "cn2"))).alias("_adc_ccn2"),
-    )
-    cross_row = local_df(spark, cross_entries, "ck int, x double").agg(
-        F.map_from_entries(F.collect_list(F.struct("ck", "x"))).alias("_adc_cross")
-    )
-    return (
-        _adc_lut_row(spark, books, Q, qids, qnorm)
-        .crossJoin(cent_row)
-        .crossJoin(cross_row)
-    )
-
-
-def _adc_explode_residual(
-    df: DataFrame,
-    books: list,
-    Q: "np.ndarray",
-    qids: list,
-    qnorm: "np.ndarray",
-    centers: "np.ndarray",
-    use_literal: bool | None = None,
-) -> DataFrame:
-    """Residual-ADC scoring of a (neighbor_id, centroid, codes) frame:
-    the reconstruction is x̂ = c + r̂, so
-
-    - dot(q, x̂)  = dot(q, c)          [centroid lookup, per query]
-                  + Σ_m dot(q_m, C_m[k_m])   [the shared residual maps]
-    - ‖x̂‖²      = ‖c‖² + 2·Σ_m dot(c_m, C_m[k_m]) + Σ_m ‖C_m[k_m]‖²
-
-    i.e. exactly ONE extra lookup per subspace vs the raw-vector form
-    (the (centroid, code) cross-dot), plus two centroid-keyed scalars.
-
-    Routing mirrors ``_adc_explode`` (``use_literal=None``): ≤
-    ADC_LITERAL_MAX_QUERIES queries → all lookups are driver-built
-    literal maps compiled into the plan, totalling IVF_K·(M·K + Q + 1)
-    doubles (KB at contract scale); above → the same entries move into
-    ONE broadcast row (``_residual_lut_row``) crossJoined in, so bulk
-    serving's plan size is independent of the query count.  Both
-    branches perform identical lookups in identical accumulation
-    order — the residual twin of ``adc_batch_parity_contract``."""
-    sub = books[0].shape[1]
-    nq = Q.shape[0]
-    if use_literal is None:
-        use_literal = nq <= ADC_LITERAL_MAX_QUERIES
-    carry = [c for c in df.columns if c not in _ADC_HELPER_COLS]
-    if use_literal:
-        # residual partial dots + residual norm term (shared machinery)
-        rdots, rnorm2 = _adc_dot_norm2(books, Q)
-        # centroid-keyed terms
-        qc = Q @ centers.T  # (Q, IVF_K)
-        cn2 = (centers * centers).sum(1)  # (IVF_K,)
-        cents = list(range(centers.shape[0]))
-        qc_map = F.map_from_arrays(
-            F.array(*[F.lit(c) for c in cents]),
-            F.array(
-                *[F.array(*[F.lit(float(qc[q, c])) for q in range(nq)]) for c in cents]
-            ),
-        )
-        cn2_map = F.map_from_arrays(
-            F.array(*[F.lit(c) for c in cents]),
-            F.array(*[F.lit(float(x)) for x in cn2]),
-        )
-        # cross term maps: (centroid·K + code) -> dot(c_m, C_m[k]) per subspace
-        cross = F.lit(0.0)
-        for m, C in enumerate(books):
-            cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
-            cross_map = F.map_from_arrays(
-                F.array(*[F.lit(c * PQ_K + k) for c in cents for k in range(PQ_K)]),
-                F.array(
-                    *[F.lit(float(cc_mk[c, k])) for c in cents for k in range(PQ_K)]
-                ),
-            )
-            cross = cross + F.element_at(
-                cross_map, F.col("centroid") * PQ_K + F.col("codes")[m]
-            )
-        qc_cent = F.element_at(qc_map, F.col("centroid"))
-        ccn2 = F.element_at(cn2_map, F.col("centroid"))
-        qid_arr = F.array(*[F.lit(int(q)) for q in qids])
-        qnorm_arr = F.array(*[F.lit(float(x)) for x in qnorm])
-        dots = F.zip_with(rdots, qc_cent, lambda r, c: r + c)
-        norm2 = ccn2 + 2.0 * cross + rnorm2
-        return (
-            df.select(
-                *carry,
-                F.posexplode(
-                    F.zip_with(dots, qnorm_arr, lambda d, qn: d / (qn * F.sqrt(norm2)))
-                ).alias("qpos", "adc_sim"),
-            )
-            .select(
-                F.element_at(qid_arr, F.col("qpos") + 1).alias("query_id"),
-                *carry,
-                "adc_sim",
-            )
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    # broadcast branch: ONE parsed SQL string for the whole residual-ADC
-    # scoring expression (guide §7.3 — the Column form of this tree cost
-    # ~1 s of py4j chatter per serve construction, built twice per serve
-    # contract).  Same lookups, same accumulation order as the literal
-    # twin above; bit-identity pinned by
-    # test_residual_adc_literal_and_batch_paths_identical.
-    n_cells = centers.shape[0]
-    df = df.crossJoin(
-        F.broadcast(
-            _residual_lut_row(df.sparkSession, books, Q, qids, qnorm, centers)
-        )
-    )
-    ent = lambda m: f"element_at(_adc_lut, {m * PQ_K} + codes[{m}])"  # noqa: E731
-    rdots_s = f"{ent(0)}.pd"
-    rnorm2_s = f"{ent(0)}.cn2"
-    for m in range(1, len(books)):
-        rdots_s = f"zip_with({rdots_s}, {ent(m)}.pd, (a, b) -> a + b)"
-        rnorm2_s = f"{rnorm2_s} + {ent(m)}.cn2"
-    xent = lambda m: (  # noqa: E731 — cross-dot lookup
-        f"element_at(_adc_cross,"
-        f" {m * n_cells * PQ_K} + centroid * {PQ_K} + codes[{m}])"
-    )
-    cross_s = xent(0)
-    for m in range(1, len(books)):
-        cross_s = f"{cross_s} + {xent(m)}"
-    dots_s = f"zip_with({rdots_s}, element_at(_adc_qc, centroid), (r, c) -> r + c)"
-    norm2_s = f"element_at(_adc_ccn2, centroid) + ({cross_s}) * 2.0D + ({rnorm2_s})"
-    sim_s = f"zip_with({dots_s}, _adc_qn, (d, qn) -> d / (qn * sqrt({norm2_s})))"
-    return (
-        df.selectExpr(
-            *[f"`{c}`" for c in carry],
-            "_adc_qids",
-            f"posexplode({sim_s}) AS (qpos, adc_sim)",
-        )
-        .selectExpr(
-            "element_at(_adc_qids, qpos + 1) AS query_id",
-            *[f"`{c}`" for c in carry],
-            "adc_sim",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-
 def ivfpq_topk_frame(spark: SparkSession, corpus: DataFrame, path: str) -> DataFrame:
     """IVF-PQ serving (Jegou et al. 2011; the faiss IVFPQ + refine
     pipeline, public):
@@ -1892,7 +1708,7 @@ def ivfpq_topk_frame(spark: SparkSession, corpus: DataFrame, path: str) -> DataF
       (IVF_K × dim floats — KB); each query picks its NPROBE nearest
       cells by one tiny GEMM, the probed cells are read back partition-
       pruned (PartitionFilters — plan-asserted in tests), residual-ADC
-      scores the codes (``_adc_explode_residual``: the shared partial-
+      scores the codes (``_adc_explode`` with centers: the shared partial-
       dot maps plus one (centroid, code) cross-dot lookup per subspace —
       the exact price of by_residual) with a per-query allowed-cell
       literal map filtering cross-probe rows, and the deep candidate
@@ -1901,7 +1717,7 @@ def ivfpq_topk_frame(spark: SparkSession, corpus: DataFrame, path: str) -> DataF
 
     At 100 TB this is the serving layout the module ladder points at:
     scan cost per query = nprobe/IVF_K of an M-bytes-per-vector table,
-    fit cost sample-bounded (``_pq_codebooks_residual``), re-rank cost
+    fit cost sample-bounded (``_pq_codebooks``), re-rank cost
     output-sized.  Reference scope: pgvector column only
     (ollama_consumer.py:234); this is north-star M6's scale path.
 
@@ -1923,97 +1739,21 @@ def ivfpq_topk_frame(spark: SparkSession, corpus: DataFrame, path: str) -> DataF
 def ivfpq_build_index(
     spark: SparkSession, corpus: DataFrame, path: str
 ) -> tuple[list, "np.ndarray"]:
-    """The corpus-sized, run-once half of IVF-PQ: KMeans(IVF_K) coarse
-    quantizer, residual codebooks (sample-bounded fit), then TWO
-    centroid-partitioned tables — ``path`` holding (vec_id, codes) (the
-    M-bytes-per-vector compressed index every probe scans) and
-    ``path + "_flat"`` holding (vec_id, emb) (the inverted-list raw
-    vectors, read partition-pruned ONLY for the Q×PQ_RERANK refine
-    candidates — the disk-resident analogue of faiss keeping original
-    vectors alongside the lists for re-ranking).  Returns the
-    driver-resident serving state (codebooks + centroid matrix, KB)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(
-        k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid"
-    ).fit(vecs)
-    centers = np.stack(
-        [np.asarray(c, dtype=float) for c in model.clusterCenters()]
-    )
-    assigned = pin(model.transform(vecs).select("vec_id", "emb", "centroid"))
-    assigned.count()  # materialize once before the consumers fork
-    # the flat refine companion never consumes the codebooks — write it
-    # CONCURRENTLY with the sample collect + driver-side Lloyd's fits
-    # (guide §2.6); the codes + meta writes then overlap each other
-    books, _ = run_parallel(
-        lambda: _pq_codebooks_residual(assigned, centers),
-        lambda: assigned.select("vec_id", "emb", "centroid")
-        .write.mode("overwrite")
-        .partitionBy("centroid")
-        .parquet(path + "_flat"),
-    )
-    coded = assigned.select(
-        "vec_id",
-        "centroid",
-        _pq_encode_residual(books, centers)(
-            F.col("emb"), F.col("centroid")
-        ).alias("codes"),
-    )
-    run_parallel(
-        lambda: coded.write.mode("overwrite").partitionBy("centroid").parquet(path),
-        lambda: _write_ivfpq_meta(spark, path, books, centers),
-    )
-    return books, centers
-
-
-def _write_ivfpq_meta(
-    spark: SparkSession, path: str, books: list, centers: "np.ndarray"
-) -> None:
-    """Persist the driver-resident serving state (residual codebooks +
-    coarse centroids, KB) beside the index, so a serving tier can
-    reload it without re-training — the third file of the faiss-style
-    artifact (codes, flat vectors, quantizer).  Doubles roundtrip
-    parquet bit-exactly, so a reloaded server computes the SAME ADC
-    scores (asserted by ``ivfpq_serve_contract``)."""
-    rows = [
-        ("center", int(c), -1, [float(x) for x in centers[c]])
-        for c in range(centers.shape[0])
-    ]
-    rows += [
-        ("book", int(m), int(k), [float(x) for x in books[m][k]])
-        for m in range(len(books))
-        for k in range(PQ_K)
-    ]
-    local_df(spark, 
-        rows, "kind string, m int, k int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_meta")
+    """The corpus-sized, run-once half of IVF-PQ (``_build_index``):
+    IVF fit, residual codebooks (sample-bounded fit), then the
+    centroid-partitioned (vec_id, codes) index every probe scans, the
+    ``_flat`` (vec_id, emb) refine companion and the ``_meta``
+    quantizer.  Returns the driver-resident serving state (codebooks +
+    centroid matrix, KB)."""
+    state = _build_index(spark, corpus, path, "ivfpq")
+    return state["book"], state["center"]
 
 
 def ivfpq_load_meta(spark: SparkSession, path: str) -> tuple[list, "np.ndarray"]:
-    """Reload the serving state written by ``_write_ivfpq_meta`` — the
-    cold-start path of a serving tier: no corpus scan, no KMeans, just
-    the KB-sized quantizer parquet."""
-    rows = spark.read.parquet(path + "_meta").collect()
-    centers = np.stack(
-        [
-            np.asarray(v, dtype=float)
-            for _, v in sorted((r.m, r.vec) for r in rows if r.kind == "center")
-        ]
-    )
-    book_rows = [(r.m, r.k, r.vec) for r in rows if r.kind == "book"]
-    n_books = max(m for m, _, _ in book_rows) + 1
-    books = [
-        np.stack(
-            [
-                np.asarray(v, dtype=float)
-                for _, v in sorted((k, v) for mm, k, v in book_rows if mm == m)
-            ]
-        )
-        for m in range(n_books)
-    ]
-    return books, centers
+    """Reload the IVF-PQ serving state (cold start: no corpus scan, no
+    KMeans, just the KB-sized quantizer parquet)."""
+    state = _read_meta(spark, path)
+    return list(state["book"]), state["center"]
 
 
 def _serve_expected(idx: DataFrame, centers: "np.ndarray", qrows: list) -> int:
@@ -2069,63 +1809,13 @@ def ivfpq_serve(
     centers: "np.ndarray",
     qrows: list,
 ) -> DataFrame:
-    """The per-batch serving half: probe (driver GEMM against the KB
-    centroid matrix) → partition-pruned codes read → residual ADC →
-    candidate cut → partition-pruned flat read for the exact re-rank.
-    NOTHING here scans the corpus: both reads touch nprobe-probed
-    partitions only and the query embeddings arrive with the request
-    (``qrows``), so serve cost scales with the probed fraction, not the
-    table."""
-    Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
-    qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
-    probes = _probe_cells(centers, Q, qids)
-    cells = sorted({c for cs in probes.values() for c in cs})
-
-    pruned = spark.read.parquet(path).filter(F.col("centroid").isin(cells))
-
-    # -- residual ADC over the pruned codes, per query in ITS cells ----
-    # (per-query allowed-cell map as one parsed literal string — integer
-    # membership logic, so only plan-construction cost changes)
-    allow_s = "map(" + ", ".join(
-        f"{q}, array({', '.join(str(c) for c in probes[q])})" for q in qids
-    ) + ")"
-    coded_read = pruned.select(
-        F.col("vec_id").alias("neighbor_id"), "centroid", "codes"
-    )
-    scored = _adc_explode_residual(
-        coded_read, books, Q, qids, qnorm, centers
-    ).filter(f"array_contains(element_at({allow_s}, query_id), centroid)")
-    cand = _adc_candidate_cut(scored).select("query_id", "neighbor_id")
-
-    # -- refine: exact re-rank against the PRUNED inverted-list flats --
-    # (every candidate came from a probed cell, so its raw vector lives
-    # in a probed partition of the flat companion by construction)
-    flat = (
-        spark.read.parquet(path + "_flat")
-        .filter(F.col("centroid").isin(cells))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("emb_n"))
-    )
-    q_emb = local_df(spark, 
-        [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
-        "query_id long, emb_q array<double>",
-    )
-    return _exact_rerank_topk(
-        flat.join(F.broadcast(cand), "neighbor_id")  # candidates are Q×RERANK rows
-        .join(F.broadcast(q_emb), "query_id")
-    )
+    """The per-batch IVF-PQ serving half (``_serve``): probe → pruned
+    codes read → residual ADC → candidate cut → pruned flat refine."""
+    return _serve(spark, path, "ivfpq", {"center": centers, "book": books}, qrows)
 
 
 def _ivfpq_path(sf_dir: str) -> str:
-    import os
-
-    import ssafynews_data_spark
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "ivfpq_index_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    return _warehouse_path("ivfpq_index", sf_dir)
 
 
 @register("ivfpq_index_topk", tags=("similarity", "ivf", "pq", "layout"))
@@ -2233,14 +1923,7 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_hits = ivf.join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
-    e = exact.agg(
-        F.count_distinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_exact_rows"),
-        # integer q4 sum — see _ann_recall_contract for the tie class
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias(
-            "exact_sim_sum_q4"
-        ),
-    )
+    e = _exact_facts(exact)
     h = pq_hits.agg(F.count("*").alias("n_pq_hits")).crossJoin(
         ivf_hits.agg(F.count("*").alias("n_ivf_hits"))
     )
@@ -2258,8 +1941,32 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 7. Round-8 contracts: ADC router parity + incremental index append.
+# 7. Round-8 contracts: ADC exactness + incremental index append.
 # ---------------------------------------------------------------------------
+
+
+def _adc_reference(
+    ids: list, codes: "np.ndarray", books: list, Q: "np.ndarray", qids: list,
+    qnorm: "np.ndarray",
+) -> list[tuple]:
+    """numpy twin of flat ``_adc_explode`` over (ids, codes (n, M)):
+    the SAME ``_adc_tables`` doubles, summed over subspaces left to
+    right exactly like the Spark fold, then d / (qn · sqrt(norm2)) —
+    every step one correctly rounded IEEE op, so the (query_id,
+    neighbor_id, adc_sim) rows are bit-identical by construction."""
+    dots, norms = _adc_tables(books, Q)
+    acc = dots[0][:, codes[:, 0]]  # (Q, n)
+    norm2 = np.asarray(norms[0])[codes[:, 0]]
+    for m in range(1, len(books)):
+        acc = acc + dots[m][:, codes[:, m]]
+        norm2 = norm2 + np.asarray(norms[m])[codes[:, m]]
+    sim = acc / (qnorm[:, None] * np.sqrt(norm2)[None, :])
+    return [
+        (int(q), int(n), float(sim[j, i]))
+        for j, q in enumerate(qids)
+        for i, n in enumerate(ids)
+        if q != n
+    ]
 
 
 @register(
@@ -2273,17 +1980,16 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "pq", "adc", "contract"),
 )
 def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable contract for the ADC router (r8): the literal
-    form (lookup tables compiled into the plan) and the batch-serving
-    form (the same tables as ONE broadcast row) must score every
-    (query, neighbor) pair BIT-identically — same lookups, same
-    accumulation order, only where the table lives differs.  Output:
-    (n_scored, paths_identical); n_scored = |Q|·(n−1) (self-pairs
-    dropped) is what DuckDB recomputes.  The equality is checked with
-    one anti-join in each direction on the full scored row (query,
-    neighbor, sim), so ANY diverging double fails the contract — this
-    is the cross-engine twin of
-    tests/test_similarity.py::test_adc_literal_and_batch_paths_identical."""
+    """Driver-checkable exactness contract for flat ADC: Spark's
+    broadcast-lookup scoring (``_adc_explode``) and a numpy ADC over
+    the SAME lookup tables in the SAME accumulation order
+    (``_adc_reference``) must score every (query, neighbor) pair
+    BIT-identically.  Output: (n_scored, paths_identical); n_scored =
+    |Q|·(n−1) (self-pairs dropped) is what DuckDB recomputes.  The
+    equality is checked with one anti-join in each direction on the
+    full scored row (query, neighbor, sim), so ANY diverging double
+    fails the contract — the cross-engine twin of
+    tests/test_similarity.py::test_adc_matches_numpy_reference."""
     corpus = pin(_corpus(spark, sf_dir))
     qrows = sorted(
         corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
@@ -2302,17 +2008,27 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_encode(books)(F.col("emb")).alias("codes"),
         )
     )
-    # pin both scored frames: each feeds two anti-join counts (and lit a
-    # third count) — without the barrier the ADC scoring pipeline re-ran
-    # per consumer (the serve-contract built/loaded pattern, F2)
-    lit = pin(_adc_explode(coded, books, Q, qids, qnorm, use_literal=True))
-    bat = pin(_adc_explode(coded, books, Q, qids, qnorm, use_literal=False))
+    code_rows = coded.collect()
+    ref = local_df(
+        spark,
+        _adc_reference(
+            [r.neighbor_id for r in code_rows],
+            np.array([r.codes for r in code_rows], dtype=np.int64).reshape(-1, PQ_M),
+            books, Q, qids, qnorm,
+        ),
+        "query_id long, neighbor_id long, adc_sim double",
+    )
+    # pin both scored frames: each feeds two anti-join counts (and got
+    # a third count) — without the barrier the ADC scoring pipeline
+    # re-ran per consumer
+    got = pin(_adc_explode(coded, books, Q, qids, qnorm))
+    ref = pin(ref)
     cols = ["query_id", "neighbor_id", "adc_sim"]
-    only_lit = lit.join(bat, cols, "left_anti").count()
-    only_bat = bat.join(lit, cols, "left_anti").count()
-    n = lit.count()
+    only_got = got.join(ref, cols, "left_anti").count()
+    only_ref = ref.join(got, cols, "left_anti").count()
+    n = got.count()
     return local_df(spark, 
-        [(n, only_lit == 0 and only_bat == 0)],
+        [(n, only_got == 0 and only_ref == 0)],
         "n_scored long, paths_identical boolean",
     )
 
@@ -2411,9 +2127,7 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded_delta.select(
         "vec_id",
         "centroid",
-        _pq_encode_residual(books, centers)(F.col("emb"), F.col("centroid")).alias(
-            "codes"
-        ),
+        _pq_encode(books, centers)(F.col("emb"), F.col("centroid")).alias("codes"),
     ).write.mode("append").partitionBy("centroid").parquet(path)
     coded_delta.select("vec_id", "emb", "centroid").write.mode("append").partitionBy(
         "centroid"
@@ -2483,59 +2197,21 @@ def ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (alpha 0.33).  Reference scope: the reference has no index
     lifecycle at all (pgvector column writes, ollama_consumer.py:234).
     """
-    import shutil
-
     corpus = pin(_corpus(spark, sf_dir))
     qrows = sorted(
         corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
     )
+    schema = "n_queries long, state_roundtrip_ok boolean, serve_complete boolean"
     if not qrows:
-        return local_df(spark, 
-            [(0, True, True)],
-            "n_queries long, state_roundtrip_ok boolean, serve_complete boolean",
-        )
+        return local_df(spark, [(0, True, True)], schema)
     path = _ivfpq_path(sf_dir) + "_serve"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(path + "_flat", ignore_errors=True)
-    shutil.rmtree(path + "_meta", ignore_errors=True)
-    books, centers = ivfpq_build_index(spark, corpus, path)
-    books2, centers2 = ivfpq_load_meta(spark, path)
-
-    # pin both serve outputs: built feeds two anti-join counts and
-    # loaded three consumers — without the barrier each count re-ran
-    # the whole serve pipeline (codes scan + ADC + window + refine).
-    # CONSTRUCTION lives inside the legs: building a serve frame is
-    # ~0.5 s of driver-side py4j/analysis that overlaps the other
-    # legs' cluster work when run from the pool threads (guide §2.6 —
-    # phase-timed serially at ~1.0 s for the pair before this move).
-    def built_leg() -> tuple[DataFrame, int]:
-        b = pin(ivfpq_serve(spark, path, books, centers, qrows))
-        return b, b.count()
-
-    def loaded_leg() -> tuple[DataFrame, int]:
-        ld = pin(ivfpq_serve(spark, path, books2, centers2, qrows))
-        return ld, ld.count()
-
-    (built, _), (loaded, n_loaded), expected = run_parallel(
-        built_leg,
-        loaded_leg,
-        lambda: _serve_expected(spark.read.parquet(path), centers2, qrows),
+    ok, n_loaded, _, (expected,), _ = _serve_roundtrip(
+        spark, "ivfpq", corpus, path, qrows,
+        beside_serve=lambda built, loaded: _serve_expected(
+            spark.read.parquet(path), loaded["center"], qrows
+        ),
     )
-    cols = built.columns
-    only_built, only_loaded = run_parallel(
-        lambda: built.join(loaded, cols, "left_anti").count(),
-        lambda: loaded.join(built, cols, "left_anti").count(),
-    )
-    return local_df(spark, 
-        [
-            (
-                len(qrows),
-                only_built == 0 and only_loaded == 0,
-                n_loaded == expected,
-            )
-        ],
-        "n_queries long, state_roundtrip_ok boolean, serve_complete boolean",
-    )
+    return local_df(spark, [(len(qrows), ok, n_loaded == expected)], schema)
 
 
 @register(
@@ -2658,12 +2334,6 @@ def _opq_fit(X: "np.ndarray") -> tuple:
     d = X.shape[1]
     sub = d // PQ_M
 
-    def fit_books(Xr):
-        return [
-            _np_kmeans(Xr[:, m * sub : (m + 1) * sub], PQ_K, seed=42 + m)
-            for m in range(PQ_M)
-        ]
-
     def reconstruct(Xr, books):
         # copy, not empty_like: if d were ever not divisible by PQ_M,
         # the tail columns beyond PQ_M*sub must reconstruct as identity
@@ -2682,7 +2352,7 @@ def _opq_fit(X: "np.ndarray") -> tuple:
     plain_sse = None
     for it in range(OPQ_ITERS):
         Xr = X @ R
-        books = fit_books(Xr)
+        books = _pq_books(Xr)
         recon = reconstruct(Xr, books)
         sse = float(((Xr - recon) ** 2).sum())
         if it == 0:
@@ -2763,16 +2433,7 @@ def opq_rotation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_vectors long, n_subspaces int, rotation_orthogonal_ok boolean,"
             " opq_train_sse_le_plain boolean, opq_corpus_sse_ok boolean",
         )
-    rows = (
-        corpus.select(
-            F.col("emb").alias("e"), F.md5(F.col("vec_id").cast("string")).alias("o")
-        )
-        .sort("o")
-        .limit(PQ_FIT_SAMPLE)
-        .select("e")
-        .collect()
-    )
-    X = np.stack([np.asarray(r[0], dtype=float) for r in rows])
+    X = _pq_sample(corpus)
     R, opq_books, plain_books, plain_sse, opq_sse = _opq_fit(X)
     d = X.shape[1]
     orthogonal = bool(np.abs(R.T @ R - np.eye(d)).max() < 1e-8)
@@ -2915,17 +2576,7 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
             " rotation_preserves_exact_topk boolean, recall_ok boolean",
         )
-    sample = (
-        corpus.select(
-            F.col("emb").alias("e"), F.md5(F.col("vec_id").cast("string")).alias("o")
-        )
-        .sort("o")
-        .limit(PQ_FIT_SAMPLE)
-        .select("e")
-        .collect()
-    )
-    X = np.stack([np.asarray(r[0], dtype=float) for r in sample])
-    R = _opq_fit(X)[0]
+    R = _opq_fit(_pq_sample(corpus))[0]
     rotated = pin(corpus.select("vec_id", _rotate_embeddings(R)(F.col("emb")).alias("emb")))
 
     exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
@@ -2940,11 +2591,7 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = served.join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
-    e = exact.agg(
-        F.count_distinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_exact_rows"),
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
-    )
+    e = _exact_facts(exact)
     checks = mismatches.agg(F.count("*").alias("n_mismatch")).crossJoin(
         hits.agg(F.count("*").alias("n_hits"))
     )
@@ -2980,16 +2627,6 @@ SQ_RERANK = 64  # exact re-rank depth per query (same refine shape as PQ)
 #: sits far under the surveyed band while a real codec regression
 #: (wrong scale, transposed dims) reads ~0-20%.
 SQ8_RECALL_MIN_PCT = 90
-
-
-def _sq8_path(sf_dir: str) -> str:
-    import ssafynews_data_spark
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"sq8_index_{tag}")
 
 
 def sq8_train(corpus: DataFrame) -> tuple["np.ndarray", "np.ndarray"]:
@@ -3109,48 +2746,289 @@ def _sq8_dequant_sql(col: str = "codes") -> str:
     )
 
 
+# ---------------------------------------------------------------------------
+# The IVF × codec index stack — the faiss ``index_factory`` composition
+# ("IVF8,PQ8x4", "SQ8", "IVF8,SQ8"; Jegou et al., TPAMI 2011): an
+# optional IVF coarse quantizer in front of a codec (PQ or affine SQ8,
+# both residual under IVF).  ONE build, ONE meta format, ONE serve and
+# ONE build → reload → serve round-trip body; the per-kind entry points
+# (``ivfpq_*``, ``sq8_*``, ``ivfsq8_*``) are thin calls into it.
+# ---------------------------------------------------------------------------
+
+
+class _Kind(NamedTuple):
+    ivf: bool  # IVF coarse quantizer in front of the codec
+    codec: str  # "pq" or "sq8"
+    depth: int  # approximate candidates per query before the exact refine
+
+
+_KINDS = {
+    "ivfpq": _Kind(True, "pq", PQ_RERANK),
+    "sq8": _Kind(False, "sq8", SQ_RERANK),
+    "ivfsq8": _Kind(True, "sq8", PQ_RERANK),
+}
+
+
+def _check_finite(kind: str, name: str, arr: "np.ndarray") -> None:
+    """SQ8 constants reach the plan as SQL literals (``_arr_sql``) and
+    Spark's parser has no NaN/Inf double literal (``nanD`` analyzes as
+    an unresolved column): a corpus with a non-finite embedding
+    component fails HERE, naming the index kind and the bound, instead
+    of deep inside the build."""
+    bad = np.argwhere(~np.isfinite(arr))
+    if len(bad):
+        at = tuple(int(i) for i in bad[0])
+        raise ValueError(
+            f"{kind} index: non-finite {name}{''.join(f'[{i}]' for i in at)}"
+            f" = {arr[at]!r} (the corpus has a NaN/Inf embedding component)"
+        )
+
+
+def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -> dict:
+    """Build one index kind from a (vec_id, emb) corpus: optional IVF
+    fit → codec training CONCURRENT with the flat-companion write (the
+    refine store never consumes the codec; guide §2.6) → the codes
+    write CONCURRENT with the meta write.  Three artifacts, the faiss
+    layout: ``path`` (vec_id, codes) — the compressed scan set —,
+    ``path_flat`` (vec_id, emb) read only for the refine candidates,
+    and ``path_meta`` (``_write_meta``); under IVF the first two are
+    partitioned by ``centroid`` so a probe reads nprobe/IVF_K of them.
+    Returns the driver-resident serving state: ``center`` (IVF) plus
+    ``book`` (PQ codebooks) or ``sq`` (the SQ8 vmin/vmax rows)."""
+    k = _KINDS[kind]
+    state: dict = {}
+    frame, part, src = corpus, [], "emb"
+    if k.ivf:
+        assigned, state["center"] = _ivf_fit(corpus)
+        part = ["centroid"]
+        if k.codec == "sq8":
+            # the SQ8 codec sees the residual vs the own-cell centroid —
+            # centroid matrix inlined as one parsed literal (see _arr_sql)
+            _check_finite(kind, "centroid", state["center"])
+            src = "res"
+            assigned = assigned.withColumn("res", F.expr(
+                f"zip_with(emb, element_at({_arr2_sql(state['center'])},"
+                f" centroid + 1), (x, c) -> x - c)"
+            ))
+        frame = pin(assigned)
+        frame.count()  # materialize once before the consumers fork
+
+    def write(df: DataFrame, suffix: str = "") -> None:
+        w = df.write.mode("overwrite")
+        (w.partitionBy(*part) if part else w).parquet(path + suffix)
+
+    def train() -> dict:
+        if k.codec == "pq":
+            return {"book": _pq_codebooks(frame, state.get("center"))}
+        vmin, vmax = sq8_train(frame.select(F.col(src).alias("emb")))
+        _check_finite(kind, "vmin", vmin)
+        _check_finite(kind, "vmax", vmax)
+        return {"sq": np.stack([vmin, vmax])}
+
+    codec, _ = run_parallel(train, lambda: write(frame.select("vec_id", "emb", *part), "_flat"))
+    state.update(codec)
+    if k.codec == "pq":
+        codes = _pq_encode(state["book"], state.get("center"))("emb", *part)
+    else:
+        codes = F.expr(_sq8_encode_sql(*state["sq"], src))
+    run_parallel(
+        lambda: write(frame.select("vec_id", *part, codes.alias("codes"))),
+        lambda: _write_meta(spark, path, state),
+    )
+    return state
+
+
+def _write_meta(spark: SparkSession, path: str, state: dict) -> None:
+    """THE meta format of every kind: the KB-sized serving state as
+    (kind, m, k, vec) rows beside the index — row m of a matrix as
+    (name, m, -1, row), entry [m][k] of a stack of matrices (the PQ
+    codebooks) as (name, m, k, vec).  Doubles roundtrip parquet
+    bit-exactly, so a reloaded server computes the SAME scores
+    (certified by ``_serve_roundtrip``)."""
+    rows = []
+    for name, arr in state.items():
+        arr = np.asarray(arr, dtype=float)
+        for m, a in enumerate(arr):
+            if arr.ndim == 2:
+                rows.append((name, m, -1, [float(x) for x in a]))
+            else:
+                rows += [(name, m, k, [float(x) for x in v]) for k, v in enumerate(a)]
+    local_df(spark, rows, "kind string, m int, k int, vec array<double>").write.mode(
+        "overwrite"
+    ).parquet(path + "_meta")
+
+
+def _read_meta(spark: SparkSession, path: str) -> dict:
+    """Reload ``_write_meta``'s state — the cold-start path of a serving
+    tier: no corpus scan, no KMeans, just the KB-sized meta parquet."""
+    by_name: dict[str, list] = {}
+    for r in spark.read.parquet(path + "_meta").collect():
+        by_name.setdefault(r.kind, []).append((r.m, r.k, r.vec))
+    state = {}
+    for name, rows in by_name.items():
+        rows.sort(key=lambda t: t[:2])
+        arr = np.asarray([v for _, _, v in rows], dtype=float)
+        if rows[0][1] >= 0:  # a stack of matrices
+            arr = arr.reshape(rows[-1][0] + 1, -1, arr.shape[1])
+        state[name] = arr
+    return state
+
+
+def _sq8_adc(
+    coded: DataFrame,
+    q_emb: DataFrame,
+    vmin: "np.ndarray",
+    vmax: "np.ndarray",
+    centers: "np.ndarray | None" = None,
+) -> DataFrame:
+    """SQ8 asymmetric score of a (neighbor_id, [centroid,] codes) frame:
+    float queries (broadcast) against the affine dequant of the codes —
+    plus the cell centroid when ``centers`` (IVF-SQ8 residual codes) —
+    as (query_id, neighbor_id, [centroid,] adc_sim).  The quantizer
+    (and centroid) constants ride as one broadcast row
+    (``_sq8_const_row``) and the projections are parsed strings."""
+    carry = ["centroid"] if centers is not None else []
+    emb_hat = _sq8_dequant_sql()
+    if centers is not None:
+        emb_hat = f"zip_with({emb_hat}, element_at(_cent, centroid + 1), (r, c) -> r + c)"
+    const = _sq8_const_row(coded.sparkSession, vmin, vmax, centers)
+    return (
+        coded.crossJoin(F.broadcast(const))
+        .selectExpr("neighbor_id", *carry, f"{emb_hat} AS emb_hat")
+        .join(F.broadcast(q_emb), F.col("neighbor_id") != F.col("query_id"))
+        .selectExpr(
+            "query_id", "neighbor_id", *carry,
+            f"{_cosine_sql('emb_q', 'emb_hat')} AS adc_sim",
+        )
+    )
+
+
+def _serve(
+    spark: SparkSession, path: str, kind: str, state: dict, qrows: list
+) -> DataFrame:
+    """Serve one query batch (``qrows``: (id, embedding) pairs arriving
+    with the request) from a built index: under IVF, probe each query's
+    NPROBE nearest cells (driver GEMM against the KB centroid matrix)
+    and read the codes and flat stores partition-pruned → the codec's
+    approximate score (ADC lookups or SQ8 dequant) → under IVF, keep
+    each query's rows from ITS probed cells → per-query cut to the
+    kind's depth → exact re-rank against the flat store, fetched for
+    the candidates only (the faiss ``...,Refine`` shape).  NOTHING here
+    scans the corpus beyond the probed cells, so serve cost scales with
+    the probed fraction, not the table."""
+    k = _KINDS[kind]
+    Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
+    qids = [int(r[0]) for r in qrows]
+    q_emb = local_df(spark,
+        [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
+        "query_id long, emb_q array<double>",
+    )
+    centers = state.get("center")
+    codes = spark.read.parquet(path)
+    flat = spark.read.parquet(path + "_flat")
+    part = []
+    if k.ivf:
+        probes = _probe_cells(centers, Q, qids)
+        cells = sorted({c for cs in probes.values() for c in cs})
+        codes = codes.filter(F.col("centroid").isin(cells))
+        flat = flat.filter(F.col("centroid").isin(cells))
+        part = ["centroid"]
+    coded = codes.select(F.col("vec_id").alias("neighbor_id"), *part, "codes")
+    if k.codec == "pq":
+        qnorm = np.sqrt((Q * Q).sum(1))
+        scored = _adc_explode(coded, state["book"], Q, qids, qnorm, centers)
+    else:
+        scored = _sq8_adc(coded, q_emb, *state["sq"], centers)
+    if k.ivf:
+        # per-query allowed-cell map as one parsed literal string —
+        # integer membership logic, so only plan-construction cost changes
+        allow_s = "map(" + ", ".join(
+            f"{q}, array({', '.join(str(c) for c in probes[q])})" for q in qids
+        ) + ")"
+        scored = scored.filter(f"array_contains(element_at({allow_s}, query_id), centroid)")
+    cand = _adc_candidate_cut(scored, k.depth).select("query_id", "neighbor_id")
+    # every candidate came from a probed cell, so its raw vector lives
+    # in a probed partition of the flat companion by construction
+    flat = flat.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("emb_n"))
+    return _exact_rerank_topk(
+        flat.join(F.broadcast(cand), "neighbor_id")  # candidates: Q×depth rows
+        .join(F.broadcast(q_emb), "query_id")
+    )
+
+
+def _serve_roundtrip(
+    spark: SparkSession,
+    kind: str,
+    corpus: DataFrame,
+    path: str,
+    qrows: list,
+    beside_build=None,
+    beside_serve=None,
+    beside_diff: tuple = (),
+) -> tuple:
+    """The serving lifecycle every ``*_serve_contract`` certifies: build
+    the artifact, COLD-START a second server from the meta parquet
+    alone (``_read_meta``), serve the batch from both, and anti-join
+    the two (query_id, neighbor_id, sim, rank) row sets both ways —
+    doubles roundtrip parquet bit-exactly, so any difference means the
+    serving state is not self-contained.  The contract's own checks
+    ride along in the same driver actions: ``beside_build()`` overlaps
+    the build, ``beside_serve(built_state, loaded_state)`` the two
+    serves, ``beside_diff[i](loaded_frame, built_state)`` the
+    anti-joins.  Returns
+    (roundtrip_ok, n_loaded_rows, [beside_build], [beside_serve],
+    [beside_diff...])."""
+    import shutil
+
+    for suffix in ("", "_flat", "_meta"):
+        shutil.rmtree(path + suffix, ignore_errors=True)
+    state, *pre = run_parallel(
+        lambda: _build_index(spark, corpus, path, kind),
+        *([beside_build] if beside_build else []),
+    )
+    loaded_state = _read_meta(spark, path)
+
+    # pin both serve outputs: each feeds several counts, and without
+    # the barrier every count re-ran the whole serve pipeline.
+    # CONSTRUCTION lives inside the legs: building a serve frame is
+    # ~0.5 s of driver-side py4j/analysis that overlaps the other legs'
+    # cluster work when run from the pool threads (guide §2.6)
+    def leg(st: dict):
+        def run() -> tuple[DataFrame, int]:
+            df = pin(_serve(spark, path, kind, st, qrows))
+            return df, df.count()
+
+        return run
+
+    (built, _), (loaded, n_loaded), *side = run_parallel(
+        leg(state),
+        leg(loaded_state),
+        *([lambda: beside_serve(state, loaded_state)] if beside_serve else []),
+    )
+    cols = built.columns
+    only_built, only_loaded, *diff = run_parallel(
+        lambda: built.join(loaded, cols, "left_anti").count(),
+        lambda: loaded.join(built, cols, "left_anti").count(),
+        *[(lambda f=f: f(loaded, state)) for f in beside_diff],
+    )
+    return only_built == 0 and only_loaded == 0, n_loaded, pre, side, diff
+
+
 def sq8_build_index(
     spark: SparkSession, corpus: DataFrame, path: str
 ) -> tuple["np.ndarray", "np.ndarray"]:
-    """Train (one d-row agg) → persist quantizer meta (d rows: dim,
-    vmin, vmax — the KB-sized cold-start artifact) → encode the corpus
-    row-locally and write (vec_id, codes) plus the flat refine
-    companion.  At 100 TB the codes file is the 4x-smaller scan set;
-    the flat file is touched only for SQ_RERANK candidates per query."""
-    # the flat refine companion never consumes the quantizer — write it
-    # CONCURRENTLY with the d-row train aggregate (guide §2.6); the
-    # codec-dependent codes + meta writes then overlap each other.
-    # (Serving callers pass the already-materialized pinned corpus, so
-    # the two legs read the cache rather than racing to build it.)
-    (vmin, vmax), _ = run_parallel(
-        lambda: sq8_train(corpus),
-        lambda: corpus.select("vec_id", "emb")
-        .write.mode("overwrite")
-        .parquet(path + "_flat"),
-    )
-    run_parallel(
-        lambda: local_df(
-            spark,
-            [(i, float(vmin[i]), float(vmax[i])) for i in range(len(vmin))],
-            "dim int, vmin double, vmax double",
-        )
-        .write.mode("overwrite")
-        .parquet(path + "_meta"),
-        lambda: corpus.selectExpr(
-            "vec_id", f"{_sq8_encode_sql(vmin, vmax)} AS codes"
-        )
-        .write.mode("overwrite")
-        .parquet(path),
-    )
+    """SQ8 build (``_build_index``): train (one d-row agg) → encode the
+    corpus row-locally into (vec_id, codes) plus the flat refine
+    companion and the d-wide quantizer meta.  At 100 TB the codes file
+    is the 4x-smaller scan set; the flat file is touched only for
+    SQ_RERANK candidates per query."""
+    vmin, vmax = _build_index(spark, corpus, path, "sq8")["sq"]
     return vmin, vmax
 
 
 def sq8_load_meta(spark: SparkSession, path: str) -> tuple["np.ndarray", "np.ndarray"]:
-    rows = sorted(spark.read.parquet(path + "_meta").collect(), key=lambda r: r.dim)
-    return (
-        np.array([r.vmin for r in rows]),
-        np.array([r.vmax for r in rows]),
-    )
+    vmin, vmax = _read_meta(spark, path)["sq"]
+    return vmin, vmax
 
 
 def sq8_serve(
@@ -3160,42 +3038,11 @@ def sq8_serve(
     vmax: "np.ndarray",
     qrows: list,
 ) -> DataFrame:
-    """Asymmetric serve: float queries against dequantized codes (one
-    compressed-scan pass, broadcast query side), cut to SQ_RERANK
-    candidates per query, exact re-rank against the flat companion
-    fetched for candidates only — the faiss ``SQ8,Refine`` shape."""
-    q_emb = local_df(spark,
-        [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
-        "query_id long, emb_q array<double>",
-    )
-    # quantizer constants ride as one broadcast row (see _sq8_const_row)
-    codes = (
-        spark.read.parquet(path)
-        .crossJoin(F.broadcast(_sq8_const_row(spark, vmin, vmax)))
-        .selectExpr(
-            "vec_id AS neighbor_id",
-            f"{_sq8_dequant_sql()} AS emb_hat",
-        )
-    )
-    approx = codes.join(
-        F.broadcast(q_emb), F.col("neighbor_id") != F.col("query_id")
-    ).selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"{_cosine_sql('emb_q', 'emb_hat')} AS approx_sim",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("approx_sim"), "neighbor_id")
-    cand = (
-        approx.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= SQ_RERANK)
-        .select("query_id", "neighbor_id")
-    )
-    flat = spark.read.parquet(path + "_flat").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("emb_n")
-    )
-    return _exact_rerank_topk(
-        flat.join(F.broadcast(cand), "neighbor_id").join(F.broadcast(q_emb), "query_id")
-    )
+    """Asymmetric SQ8 serve (``_serve``): float queries against the
+    dequantized codes (one compressed-scan pass), cut to SQ_RERANK
+    candidates per query, exact re-rank — the faiss ``SQ8,Refine``
+    shape."""
+    return _serve(spark, path, "sq8", {"sq": np.stack([vmin, vmax])}, qrows)
 
 
 def _sq8_recon_ok(
@@ -3272,89 +3119,45 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: train is one d-row agg, encode is row-local codegen,
     serve scans codes only (broadcast queries) and touches the flat
     store for Q×SQ_RERANK candidate rows."""
-    import shutil
-
     corpus = pin(_corpus(spark, sf_dir))
     qrows = sorted(
         corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
     )
-    if not qrows:
-        return local_df(spark, 
-            [(0, 0, None, True, True, True)],
-            "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-            " state_roundtrip_ok boolean, recon_err_bounded boolean,"
-            " recall_ok boolean",
-        )
-    path = _sq8_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(path + "_meta", ignore_errors=True)
-    shutil.rmtree(path + "_flat", ignore_errors=True)
-    # exact baseline over the PINNED corpus (not a fresh parquet scan —
-    # guide §2.4; expressions identical to cosine_topk).  Its facts
-    # aggregate is build-independent (it reads only the already-
-    # materialized corpus pin), so it runs CONCURRENTLY with the whole
-    # build instead of serially after it (guide §2.6, VERDICT r13
-    # item 1): the exact-topk wall clock hides behind the train+write
-    # critical path.
-    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
-    (vmin, vmax), facts = run_parallel(
-        lambda: sq8_build_index(spark, corpus, path),
-        lambda: exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count("*").alias("n_exact_rows"),
-            F.sum(F.round(F.col("sim") * 10000).cast("long")).alias(
-                "exact_sim_sum_q4"
-            ),
-        ).collect()[0],
-    )
-    vmin2, vmax2 = sq8_load_meta(spark, path)
-
-    # pin both serve outputs (see ivfpq_serve_contract): each extra
-    # consumer otherwise re-ran the dequant scan + window + refine.
-    # Construction runs inside the legs so its driver-side py4j cost
-    # overlaps the other legs' cluster work (guide §2.6).
-    def built_leg() -> DataFrame:
-        b = pin(sq8_serve(spark, path, vmin, vmax, qrows))
-        b.count()
-        return b
-
-    def loaded_leg() -> DataFrame:
-        ld = pin(sq8_serve(spark, path, vmin2, vmax2, qrows))
-        ld.count()
-        return ld
-
-    built, loaded, recon = run_parallel(
-        built_leg,
-        loaded_leg,
-        lambda: _sq8_recon_ok(spark.read.parquet(path), corpus, vmin, vmax),
-    )
-    cols = built.columns
-    only_built, only_loaded, n_hits = run_parallel(
-        lambda: built.join(loaded, cols, "left_anti").count(),
-        lambda: loaded.join(built, cols, "left_anti").count(),
-        lambda: loaded.select("query_id", "neighbor_id")
-        .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-        .count(),
-    )
-    roundtrip_ok = only_built == 0 and only_loaded == 0
-    return local_df(spark, 
-        [
-            (
-                int(facts.n_queries),
-                int(facts.n_exact_rows),
-                # None when the exact top-k is empty (rows but no
-                # vec_id < N_QUERIES) — the oracle emits NULL there too
-                int(facts.exact_sim_sum_q4)
-                if facts.exact_sim_sum_q4 is not None
-                else None,
-                bool(roundtrip_ok),
-                bool(recon),
-                bool(n_hits * 100 >= facts.n_exact_rows * SQ8_RECALL_MIN_PCT),
-            )
-        ],
+    schema = (
         "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
         " state_roundtrip_ok boolean, recon_err_bounded boolean,"
-        " recall_ok boolean",
+        " recall_ok boolean"
+    )
+    if not qrows:
+        return local_df(spark, [(0, 0, None, True, True, True)], schema)
+    path = _warehouse_path("sq8_index", sf_dir)
+    # exact baseline over the PINNED corpus (not a fresh parquet scan —
+    # guide §2.4; expressions identical to cosine_topk).  Its facts
+    # aggregate is build-independent, so it runs CONCURRENTLY with the
+    # build (guide §2.6, VERDICT r13 item 1)
+    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
+    ok, _, (facts,), (recon,), (n_hits,) = _serve_roundtrip(
+        spark, "sq8", corpus, path, qrows,
+        beside_build=lambda: _exact_facts(exact).collect()[0],
+        beside_serve=lambda built, _: _sq8_recon_ok(
+            spark.read.parquet(path), corpus, *built["sq"]
+        ),
+        beside_diff=(lambda served, _: _hits(served, exact),),
+    )
+    return local_df(spark,
+        [
+            (
+                facts.n_queries,
+                facts.n_exact_rows,
+                # NULL when the exact top-k is empty (rows but no
+                # vec_id < N_QUERIES) — the oracle emits NULL there too
+                facts.exact_sim_sum_q4,
+                ok,
+                recon,
+                n_hits * 100 >= facts.n_exact_rows * SQ8_RECALL_MIN_PCT,
+            )
+        ],
+        schema,
     )
 
 
@@ -3476,95 +3279,26 @@ def contrastive_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _centers_lit(centers: "np.ndarray") -> Column:
-    return F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in centers[c]])
-            for c in range(centers.shape[0])
-        ]
-    )
-
-
 def ivfsq8_build_index(
     spark: SparkSession, corpus: DataFrame, path: str
 ) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"]:
-    """KMeans(IVF_K) coarse quantizer (same seed-42 fit as IVF-PQ),
-    residual SQ8 codec trained in ONE d-row aggregation over the
-    residuals, then the same three-artifact layout as IVF-PQ: codes
-    partitioned by centroid, the flat refine companion, and the
-    KB-sized quantizer meta (centers + residual vmin/vmax).  Returns
-    the driver-resident serving state."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(
-        k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid"
-    ).fit(vecs)
-    centers = np.stack(
-        [np.asarray(c, dtype=float) for c in model.clusterCenters()]
-    )
-    # residual vs the own-cell centroid — centroid matrix inlined as one
-    # parsed literal (repr-round-tripped doubles; see _arr_sql) instead
-    # of ~520 F.lit py4j calls through _centers_lit (guide §7.3)
-    assigned = pin(
-        model.transform(vecs)
-        .select("vec_id", "emb", "centroid")
-        .withColumn(
-            "res",
-            F.expr(
-                f"zip_with(emb, element_at({_arr2_sql(centers)},"
-                f" centroid + 1), (x, c) -> x - c)"
-            ),
-        )
-    )
-    assigned.count()  # materialize once before the consumers fork
-    # the flat refine companion never consumes the residual codec —
-    # write it CONCURRENTLY with the sq8_train d-row aggregate (guide
-    # §2.6); the codec-dependent codes + meta writes then overlap
-    (vmin, vmax), _ = run_parallel(
-        lambda: sq8_train(assigned.select(F.col("res").alias("emb"))),
-        lambda: assigned.select("vec_id", "emb", "centroid")
-        .write.mode("overwrite")
-        .partitionBy("centroid")
-        .parquet(path + "_flat"),
-    )
-    rows = [
-        ("center", int(c), [float(x) for x in centers[c]])
-        for c in range(centers.shape[0])
-    ]
-    rows += [
-        ("sqmin", -1, [float(x) for x in vmin]),
-        ("sqmax", -1, [float(x) for x in vmax]),
-    ]
-    run_parallel(
-        lambda: assigned.select(
-            "vec_id", "centroid", F.expr(_sq8_encode_sql(vmin, vmax, "res")).alias("codes")
-        )
-        .write.mode("overwrite")
-        .partitionBy("centroid")
-        .parquet(path),
-        lambda: local_df(spark, rows, "kind string, m int, vec array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path + "_meta"),
-    )
-    return centers, vmin, vmax
+    """IVF-SQ8 build (``_build_index``): the same IVF fit as IVF-PQ,
+    the residual SQ8 codec trained in ONE d-row aggregation over the
+    residuals, then the same three-artifact layout — codes partitioned
+    by centroid, the flat refine companion, and the KB-sized quantizer
+    meta (centers + residual vmin/vmax).  Returns the driver-resident
+    serving state."""
+    state = _build_index(spark, corpus, path, "ivfsq8")
+    vmin, vmax = state["sq"]
+    return state["center"], vmin, vmax
 
 
 def ivfsq8_load_meta(
     spark: SparkSession, path: str
 ) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"]:
-    rows = spark.read.parquet(path + "_meta").collect()
-    centers = np.stack(
-        [
-            np.asarray(v, dtype=float)
-            for _, v in sorted((r.m, r.vec) for r in rows if r.kind == "center")
-        ]
-    )
-    vmin = np.asarray(next(r.vec for r in rows if r.kind == "sqmin"), dtype=float)
-    vmax = np.asarray(next(r.vec for r in rows if r.kind == "sqmax"), dtype=float)
-    return centers, vmin, vmax
+    state = _read_meta(spark, path)
+    vmin, vmax = state["sq"]
+    return state["center"], vmin, vmax
 
 
 def ivfsq8_serve(
@@ -3575,61 +3309,11 @@ def ivfsq8_serve(
     vmax: "np.ndarray",
     qrows: list,
 ) -> DataFrame:
-    """Probe (driver GEMM) → partition-pruned codes read → dequantize
-    residual + add back the cell centroid (row-local codegen) → approx
-    cosine cut to PQ_RERANK → partition-pruned flat read for the exact
-    re-rank.  Identical pruning shape to ``ivfpq_serve``; only the
-    scoring swaps ADC lookups for the SQ8 affine reconstruction."""
-    Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
-    qids = [int(r[0]) for r in qrows]
-    probes = _probe_cells(centers, Q, qids)
-    cells = sorted({c for cs in probes.values() for c in cs})
-
-    # quantizer + centroid constants as one broadcast row (see
-    # _sq8_const_row) — the literal form's plan compile cost exceeded
-    # half the serve pass; the projection itself is one parsed string
-    # (guide §7.3 — same expressions as the Column form)
-    pruned = (
-        spark.read.parquet(path)
-        .filter(F.col("centroid").isin(cells))
-        .crossJoin(F.broadcast(_sq8_const_row(spark, vmin, vmax, centers)))
-        .selectExpr(
-            "vec_id AS neighbor_id",
-            "centroid",
-            f"zip_with({_sq8_dequant_sql()},"
-            f" element_at(_cent, centroid + 1), (r, c) -> r + c) AS emb_hat",
-        )
-    )
-    q_emb = local_df(spark,
-        [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
-        "query_id long, emb_q array<double>",
-    )
-    allow_s = "map(" + ", ".join(
-        f"{q}, array({', '.join(str(c) for c in probes[q])})" for q in qids
-    ) + ")"
-    approx = (
-        pruned.join(F.broadcast(q_emb), F.col("neighbor_id") != F.col("query_id"))
-        .filter(f"array_contains(element_at({allow_s}, query_id), centroid)")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cosine_sql('emb_q', 'emb_hat')} AS approx_sim",
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("approx_sim"), "neighbor_id")
-    cand = (
-        approx.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= PQ_RERANK)
-        .select("query_id", "neighbor_id")
-    )
-    flat = (
-        spark.read.parquet(path + "_flat")
-        .filter(F.col("centroid").isin(cells))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("emb_n"))
-    )
-    return _exact_rerank_topk(
-        flat.join(F.broadcast(cand), "neighbor_id").join(F.broadcast(q_emb), "query_id")
-    )
+    """IVF-SQ8 serve (``_serve``): identical pruning shape to
+    ``ivfpq_serve``; only the scoring swaps ADC lookups for the SQ8
+    affine reconstruction of residual + cell centroid."""
+    state = {"center": centers, "sq": np.stack([vmin, vmax])}
+    return _serve(spark, path, "ivfsq8", state, qrows)
 
 
 @register(
@@ -3674,8 +3358,6 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap changes bytes-per-vector (4x vs 32x compression) but no cost
     TERM.  Reference scope: same pgvector anchor as the rest of the
     serving family (ollama_consumer.py:234)."""
-    import shutil
-
     corpus = pin(_corpus(spark, sf_dir))
     qrows = sorted(
         corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
@@ -3688,98 +3370,51 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not qrows:
         return local_df(spark, [(0, 0, None, True, True, True, True)], out_schema)
     path = _ivfpq_path(sf_dir) + "_sq8"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(path + "_meta", ignore_errors=True)
-    shutil.rmtree(path + "_flat", ignore_errors=True)
-    # exact baseline over the PINNED corpus (not a fresh parquet scan —
-    # guide §2.4; expressions identical to cosine_topk).  The facts
-    # aggregate never consumes KMeans centers or the codec, so it runs
-    # CONCURRENTLY with the whole build (guide §2.6, VERDICT r13
-    # item 1): the exact-topk pass hides behind the contract's one
-    # mandatory KMeans fit instead of extending the critical path.
+    # exact baseline over the PINNED corpus; its facts aggregate never
+    # consumes KMeans centers or the codec, so it runs CONCURRENTLY with
+    # the build (guide §2.6, VERDICT r13 item 1): the exact-topk pass
+    # hides behind the contract's one mandatory KMeans fit
     exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
-    (centers, vmin, vmax), facts = run_parallel(
-        lambda: ivfsq8_build_index(spark, corpus, path),
-        lambda: exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count("*").alias("n_exact_rows"),
-            F.sum(F.round(F.col("sim") * 10000).cast("long")).alias(
-                "exact_sim_sum_q4"
-            ),
-        ).collect()[0],
-    )
-    centers2, vmin2, vmax2 = ivfsq8_load_meta(spark, path)
 
-    # residual recon bound: rebuild the residual frame with the CODES
-    # alongside, named for _sq8_recon_ok's (vec_id, emb)/(vec_id, codes);
-    # centroid constants ride as one broadcast row (see _sq8_const_row)
-    resid = (
-        spark.read.parquet(path + "_flat")
-        .crossJoin(F.broadcast(_sq8_const_row(spark, vmin, vmax, centers)))
-        .selectExpr(
-            "vec_id",
-            "zip_with(emb, element_at(_cent, centroid + 1),"
-            " (x, c) -> x - c) AS emb",
+    def recon(built: dict, _) -> bool:
+        # residual recon bound: the residual frame named for
+        # _sq8_recon_ok's (vec_id, emb)/(vec_id, codes); centroid
+        # constants ride as one broadcast row (see _sq8_const_row)
+        resid = spark.read.parquet(path + "_flat").crossJoin(
+            F.broadcast(_sq8_const_row(spark, *built["sq"], built["center"]))
+        ).selectExpr(
+            "vec_id", "zip_with(emb, element_at(_cent, centroid + 1), (x, c) -> x - c) AS emb"
         )
-    )
+        codes = spark.read.parquet(path).select("vec_id", "codes")
+        return _sq8_recon_ok(codes, resid, *built["sq"])
+
     # flat-IVF retention baseline served from the index's OWN flat store
-    # and centers — ann_ivf_topk here re-fit the identical KMeans
-    # (same corpus, k, seed) and re-scanned the corpus for nothing
-    # (guide §2.4: remove the redundant pass).  Same assignment, same
-    # serve path (_ivf_flat_serve), identical hit set.
-    cent_df = _cent_frame(spark, centers)
-
-    # pin both serve outputs (see ivfpq_serve_contract): each extra
-    # consumer otherwise re-ran the pruned scan + dequant + refine.
-    # Construction runs inside the legs so its driver-side py4j cost
-    # overlaps the other legs' cluster work (guide §2.6).
-    def built_leg() -> DataFrame:
-        b = pin(ivfsq8_serve(spark, path, centers, vmin, vmax, qrows))
-        b.count()
-        return b
-
-    def loaded_leg() -> DataFrame:
-        ld = pin(ivfsq8_serve(spark, path, centers2, vmin2, vmax2, qrows))
-        ld.count()
-        return ld
-
-    built, loaded, recon = run_parallel(
-        built_leg,
-        loaded_leg,
-        lambda: _sq8_recon_ok(
-            spark.read.parquet(path).select("vec_id", "codes"), resid, vmin, vmax
-        ),
-    )
-    cols = built.columns
-    only_built, only_loaded, sq8_hits, ivf_hits = run_parallel(
-        lambda: built.join(loaded, cols, "left_anti").count(),
-        lambda: loaded.join(built, cols, "left_anti").count(),
-        lambda: loaded.select("query_id", "neighbor_id")
-        .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-        .count(),
-        lambda: _ivf_flat_serve(
+    # and centers — a fresh ann_ivf_topk would re-fit the identical
+    # KMeans (same corpus, k, seed) and re-scan the corpus for nothing
+    # (guide §2.4).  Same assignment, same serve path, identical hits.
+    def ivf_hits(_, built: dict) -> int:
+        served = _ivf_flat_serve(
             spark.read.parquet(path + "_flat").select("vec_id", "emb", "centroid"),
-            cent_df,
+            _cent_frame(spark, built["center"]),
         )
-        .select("query_id", "neighbor_id")
-        .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-        .count(),
+        return _hits(served, exact)
+
+    ok, _, (facts,), (recon_ok,), (sq8_hits, ivf_n) = _serve_roundtrip(
+        spark, "ivfsq8", corpus, path, qrows,
+        beside_build=lambda: _exact_facts(exact).collect()[0],
+        beside_serve=recon,
+        beside_diff=(lambda served, _: _hits(served, exact), ivf_hits),
     )
-    roundtrip_ok = only_built == 0 and only_loaded == 0
-    return local_df(spark, 
+    return local_df(spark,
         [
             (
-                int(facts.n_queries),
-                int(facts.n_exact_rows),
-                # None when the exact top-k is empty (rows but no
-                # vec_id < N_QUERIES) — the oracle emits NULL there too
-                int(facts.exact_sim_sum_q4)
-                if facts.exact_sim_sum_q4 is not None
-                else None,
-                bool(roundtrip_ok),
-                bool(recon),
-                bool(sq8_hits * 100 >= facts.n_exact_rows * IVFPQ_RECALL_MIN_PCT),
-                bool(sq8_hits * 100 >= ivf_hits * IVFPQ_RETENTION_MIN_PCT),
+                facts.n_queries,
+                facts.n_exact_rows,
+                facts.exact_sim_sum_q4,  # NULL on an empty exact top-k
+                ok,
+                recon_ok,
+                sq8_hits * 100 >= facts.n_exact_rows * IVFPQ_RECALL_MIN_PCT,
+                sq8_hits * 100 >= ivf_n * IVFPQ_RETENTION_MIN_PCT,
             )
         ],
         out_schema,
@@ -3898,9 +3533,6 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded.  Reference scope: the pgvector serving column
     (ollama_consumer.py:234) re-indexed on a cadence this number
     justifies."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     out_schema = (
         "n_base long, n_delta long, n_exact_rows long, exact_sim_sum_q4 long,"
         " delta_visible_ok boolean, stale_recall_ok boolean, retention_ok boolean"
@@ -3910,9 +3542,6 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not stats.n:
         return local_df(spark, [(0, 0, 0, None, True, True, True)], out_schema)
     cut = int(stats.mx) + 1 - int(stats.n) // STALE_DELTA_DEN
-
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    base = vecs.filter(F.col("vec_id") < cut)
 
     # exact baseline over the PINNED corpus (not a fresh parquet scan —
     # guide §2.4); materialize it (the facts aggregate) BEFORE forking
@@ -3924,15 +3553,14 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
 
     def stale_leg() -> tuple[int, int]:
-        model = KMeans(
-            k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid"
-        ).fit(base)
-        # frozen-centroid assignment of the GROWN corpus (base + delta) —
-        # model.transform is the broadcast-argmin map; in production only
-        # the delta runs through it, appending to the existing layout
-        assigned = pin(model.transform(vecs).select("vec_id", "emb", "centroid"))
+        # fit on the base, then the frozen-centroid assignment of the
+        # GROWN corpus (base + delta) — model.transform is the
+        # broadcast-argmin map; in production only the delta runs
+        # through it, appending to the existing layout
+        assigned, centers = _ivf_fit(corpus.filter(F.col("vec_id") < cut), corpus)
+        assigned = pin(assigned)
         assigned.count()  # materialize once before the two consumers fork
-        cent_df = _cent_frame(spark, model.clusterCenters())
+        cent_df = _cent_frame(spark, centers)
 
         # delta_visible_ok, the FALSIFIABLE form: every DELTA row's stored
         # cell must equal the independent Euclidean argmin against the
@@ -3947,21 +3575,13 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: argmin_assignment_mismatches(
                 assigned.filter(F.col("vec_id") >= cut), cent_df
             ),
-            lambda: _ivf_flat_serve(assigned, cent_df)
-            .select("query_id", "neighbor_id")
-            .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-            .count(),
+            lambda: _hits(_ivf_flat_serve(assigned, cent_df), exact),
         )
 
     def fresh_leg() -> int:
         # fresh baseline over the ALREADY-pinned corpus (ann_ivf_topk
         # would re-scan parquet and re-run the cast lineage)
-        return (
-            _ivf_fresh_topk(corpus)
-            .select("query_id", "neighbor_id")
-            .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-            .count()
-        )
+        return _hits(_ivf_fresh_topk(corpus), exact)
 
     # the stale and fresh legs each run their own KMeans fit — the two
     # fits (and the n_base count) are independent job chains; running
@@ -3974,19 +3594,16 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_delta = int(stats.n) - n_base
     # a corpus with rows but no vec_id < N_QUERIES has an EMPTY exact
-    # top-k: the sum aggregates to NULL (the oracle emits NULL too) —
-    # int(None) would crash, and the recall floors hold vacuously
-    sim_sum = (
-        int(facts.exact_sim_sum_q4) if facts.exact_sim_sum_q4 is not None else None
-    )
+    # top-k: the sum aggregates to NULL (the oracle emits NULL too) and
+    # the recall floors hold vacuously
     return local_df(spark, 
         [
             (
                 n_base,
                 n_delta,
-                int(facts.n_exact_rows),
-                sim_sum,
-                bool(delta_misassigned == 0),
+                facts.n_exact_rows,
+                facts.exact_sim_sum_q4,
+                delta_misassigned == 0,
                 bool(stale_hits * 100 >= facts.n_exact_rows * STALE_RECALL_MIN_PCT),
                 bool(stale_hits * 100 >= fresh_hits * STALE_RETENTION_MIN_PCT),
             )
@@ -4251,9 +3868,6 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe join of ``ann_ivf_topk``, and the per-point reduction is a
     TOP_K·|queries|-row join + count.  The curve is the artifact that
     justifies the NPROBE constant the serving ops hard-code."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     out_schema = (
         "nprobe int, n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
         " hits_at_full long, monotone_ok boolean, recall_floor_ok boolean"
@@ -4267,12 +3881,9 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             out_schema,
         )
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid").fit(
-        vecs
-    )
-    assigned = pin(model.transform(vecs).select("vec_id", "emb", "centroid"))
-    cent_df = _cent_frame(spark, model.clusterCenters())
+    assigned, centers = _ivf_fit(corpus)
+    assigned = pin(assigned)
+    cent_df = _cent_frame(spark, centers)
 
     exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
     exact_ids = exact.select("query_id", "neighbor_id")
@@ -4286,11 +3897,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(n).alias("nprobe"), "n_hits")
         )
         hit_rows = h if hit_rows is None else hit_rows.unionByName(h)
-    facts = exact.agg(
-        F.count_distinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_exact_rows"),
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
-    )
+    facts = _exact_facts(exact)
     w = W.orderBy("nprobe")
     prev = F.lag("n_hits").over(w)
     return (

@@ -91,16 +91,3 @@ def get_session(**kwargs) -> SparkSession:
     spark = session_builder(**kwargs).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_sf(spark: SparkSession, approx_rows: int) -> SparkSession:
-    """Adjust shuffle width for a known input size.
-
-    Local testing runs tiny scale factors where 32 shuffle partitions is
-    already generous; AQE coalesces further.  On a cluster, callers
-    should instead size ``spark.sql.shuffle.partitions`` to
-    ``input_bytes / 128MB`` per the capacity-planning note in README.
-    """
-    parts = max(4, min(2048, approx_rows // 50_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    return spark

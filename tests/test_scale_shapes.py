@@ -124,7 +124,7 @@ def test_ivf_probe_reads_only_probed_partitions(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     corpus = similarity._corpus(spark, sf)
     idx = str(tmp_path / "ivf_idx")
-    similarity.write_ivf_index(corpus, idx, k=4)
+    similarity.write_ivf_index(corpus, idx)
 
     pruned = similarity.read_ivf_probe(spark, idx, [1])
     plan = _plan(pruned)

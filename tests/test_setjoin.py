@@ -212,15 +212,27 @@ def test_edjoin_explicit_max_len_skips_discovery_job(spark):
     }
     df = spark.createDataFrame(list(corpus.items()), "doc_id long, key string")
 
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
 
-    n0 = len(tracker.getJobIdsForGroup(None))
-    plan_explicit = setjoin.edjoin_pairs(df, max_len=128)  # over-estimate
-    explicit_jobs = len(tracker.getJobIdsForGroup(None)) - n0
+    def jobs_of(phase: str, build):
+        # each phase's jobs under its own job group: the ungrouped job
+        # list is trimmed by spark.ui.retainedJobs in a long session,
+        # so a before/after difference of it can go negative
+        group = f"edjoin_max_len_{phase}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            plan = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return plan, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    n1 = len(tracker.getJobIdsForGroup(None))
-    plan_discovery = setjoin.edjoin_pairs(df)  # runs the max() pass
-    discovery_jobs = len(tracker.getJobIdsForGroup(None)) - n1
+    # an over-estimated cap, then the call that runs the max() pass
+    plan_explicit, explicit_jobs = jobs_of(
+        "explicit", lambda: setjoin.edjoin_pairs(df, max_len=128)
+    )
+    plan_discovery, discovery_jobs = jobs_of(
+        "discovery", lambda: setjoin.edjoin_pairs(df)
+    )
 
     assert explicit_jobs < discovery_jobs, (
         f"explicit max_len must skip the discovery job "

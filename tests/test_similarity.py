@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ssafynews_data_spark.operators import similarity
 
 
@@ -243,11 +245,16 @@ def test_pq_recall_vs_exact(spark, sf_dir):
         assert sims == sorted(sims, reverse=True)
 
 
-def test_adc_literal_and_batch_paths_identical(spark, sf_dir):
-    """The ADC router's two forms — literal maps compiled into the plan
-    vs one broadcast lookup row (ADC_LITERAL_MAX_QUERIES) — must produce
-    IDENTICAL (query_id, neighbor_id, adc_sim) rows: same lookups, same
-    accumulation order, only where the table lives differs."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_adc_matches_numpy_reference(spark, sf_dir):
+    """Flat ADC is exact over its lookup tables: Spark's broadcast-row
+    scoring must produce the SAME (query_id, neighbor_id, adc_sim) rows
+    as the numpy ADC over the same tables in the same accumulation
+    order (bit-identical, not approx), and the tables must reach the
+    plan as ONE broadcast row, never as plan literals."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -265,142 +272,36 @@ def test_adc_literal_and_batch_paths_identical(spark, sf_dir):
         F.col("vec_id").alias("neighbor_id"),
         similarity._pq_encode(books)(F.col("emb")).alias("codes"),
     )
-
-    def rows(use_literal):
-        out = similarity._adc_explode(
-            coded, books, Q, qids, qnorm, use_literal=use_literal
+    scored = similarity._adc_explode(coded, books, Q, qids, qnorm)
+    got = sorted((r.query_id, r.neighbor_id, r.adc_sim) for r in scored.collect())
+    code_rows = coded.collect()
+    want = sorted(
+        similarity._adc_reference(
+            [r.neighbor_id for r in code_rows],
+            np.array([r.codes for r in code_rows]),
+            books, Q, qids, qnorm,
         )
-        return sorted(
-            (r.query_id, r.neighbor_id, r.adc_sim) for r in out.collect()
-        )
-
-    lit_rows, batch_rows = rows(True), rows(False)
-    assert lit_rows == batch_rows  # bit-identical, not approx
-    assert len(lit_rows) > 0
-
-
-def test_adc_router_switches_on_query_count(spark, sf_dir, monkeypatch):
-    """Routing: at |Q| <= ADC_LITERAL_MAX_QUERIES the plan carries the
-    literal maps (no join); above it the broadcast lookup row appears
-    as a BroadcastNestedLoopJoin of the 1-row lut frame."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    corpus = similarity._corpus(spark, sf_dir).limit(200)
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < similarity.N_QUERIES)
-        .select("vec_id", "emb")
-        .collect()
     )
-    books = similarity._pq_codebooks(corpus)
-    Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
-    qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
-    coded = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        similarity._pq_encode(books)(F.col("emb")).alias("codes"),
-    )
+    assert got == want  # bit-identical, not approx
+    assert len(got) == len(qids) * (len(code_rows) - 1)
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # default (threshold 0 since r13 — the literal plan's compile cost
-    # exceeds the broadcast row's execution): the broadcast lut row
-    p_default = plan(similarity._adc_explode(coded, books, Q, qids, qnorm))
-    assert "_adc_lut" in p_default and "Broadcast" in p_default
-
-    # raise the threshold above |Q|: the literal form must come back
-    monkeypatch.setattr(similarity, "ADC_LITERAL_MAX_QUERIES", 1_000_000)
-    p_lit = plan(similarity._adc_explode(coded, books, Q, qids, qnorm))
-    assert "_adc_lut" not in p_lit
-
-
-def test_residual_adc_literal_and_batch_paths_identical(spark, sf_dir, monkeypatch):
-    """The residual router's two forms — literal maps (incl. the
-    centroid-keyed qc/cn2/cross terms) vs the one broadcast lut row —
-    must produce IDENTICAL (query_id, neighbor_id, adc_sim) rows, and
-    the router must switch on ADC_LITERAL_MAX_QUERIES exactly like the
-    flat path (ivfpq_serve is the bulk-batch serving half, so its plan
-    size must not grow with the query count)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = similarity.pin(similarity._corpus(spark, sf_dir).limit(300))
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(
-        k=similarity.IVF_K, seed=42, featuresCol="vec", predictionCol="centroid"
-    ).fit(vecs)
-    centers = np.stack([np.asarray(c, dtype=float) for c in model.clusterCenters()])
-    assigned = similarity.pin(
-        model.transform(vecs).select("vec_id", "emb", "centroid")
-    )
-    books = similarity._pq_codebooks_residual(assigned, centers)
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < similarity.N_QUERIES)
-        .select("vec_id", "emb")
-        .collect()
-    )
-    Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
-    qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
-    coded = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        "centroid",
-        similarity._pq_encode_residual(books, centers)(
-            F.col("emb"), F.col("centroid")
-        ).alias("codes"),
-    )
-
-    def rows(use_literal):
-        out = similarity._adc_explode_residual(
-            coded, books, Q, qids, qnorm, centers, use_literal=use_literal
-        )
-        return sorted(
-            (r.query_id, r.neighbor_id, r.centroid, r.adc_sim) for r in out.collect()
-        )
-
-    lit_rows, batch_rows = rows(True), rows(False)
-    assert lit_rows == batch_rows  # bit-identical, not approx
-    assert len(lit_rows) > 0
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # default (threshold 0 since r13 — see ADC_LITERAL_MAX_QUERIES):
-    # the broadcast lut row with the centroid-keyed cross terms
-    p_default = plan(
-        similarity._adc_explode_residual(coded, books, Q, qids, qnorm, centers)
-    )
-    assert "_adc_cross" in p_default and "Broadcast" in p_default
-
-    # raise the threshold above |Q|: the literal form must come back
-    monkeypatch.setattr(similarity, "ADC_LITERAL_MAX_QUERIES", 1_000_000)
-    p_lit = plan(
-        similarity._adc_explode_residual(coded, books, Q, qids, qnorm, centers)
-    )
-    assert "_adc_cross" not in p_lit
+    plan = _plan(scored)
+    assert "_adc_lut" in plan and "Broadcast" in plan
+    assert "_adc_cross" not in plan  # flat: no centroid terms
 
 
 def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
     """Residual-ADC is exact over the RECONSTRUCTION: for every scored
     (query, neighbor) row, adc_sim must equal the numpy cosine between
     the query and center[centroid] + decode(codes) — the cross-term and
-    norm bookkeeping of by_residual has no approximation of its own."""
+    norm bookkeeping of by_residual has no approximation of its own —
+    and the centroid-keyed terms reach the plan as the broadcast row."""
     import numpy as np
     from pyspark.sql import functions as F
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
     corpus = similarity.pin(similarity._corpus(spark, sf_dir).limit(300))
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(
-        k=similarity.IVF_K, seed=42, featuresCol="vec", predictionCol="centroid"
-    ).fit(vecs)
-    centers = np.stack([np.asarray(c, dtype=float) for c in model.clusterCenters()])
-    assigned = model.transform(vecs).select("vec_id", "emb", "centroid")
-    books = similarity._pq_codebooks_residual(assigned, centers)
+    assigned, centers = similarity._ivf_fit(corpus)
+    books = similarity._pq_codebooks(assigned, centers)
 
     qrows = sorted(
         corpus.filter(F.col("vec_id") < similarity.N_QUERIES)
@@ -414,13 +315,14 @@ def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
     coded = assigned.select(
         F.col("vec_id").alias("neighbor_id"),
         "centroid",
-        similarity._pq_encode_residual(books, centers)(
+        similarity._pq_encode(books, centers)(
             F.col("emb"), F.col("centroid")
         ).alias("codes"),
     )
-    rows = similarity._adc_explode_residual(
-        coded, books, Q, qids, qnorm, centers
-    ).collect()
+    scored = similarity._adc_explode(coded, books, Q, qids, qnorm, centers)
+    plan = _plan(scored)
+    assert "_adc_cross" in plan and "Broadcast" in plan
+    rows = scored.collect()
     assert rows
 
     qpos = {q: i for i, q in enumerate(qids)}
@@ -464,7 +366,7 @@ def test_ivfpq_append_visible_to_serve(spark, sf_dir, tmp_path):
     coded.select(
         "vec_id",
         "centroid",
-        similarity._pq_encode_residual(books, centers)(
+        similarity._pq_encode(books, centers)(
             F.col("emb"), F.col("centroid")
         ).alias("codes"),
     ).write.mode("append").partitionBy("centroid").parquet(path)
@@ -649,6 +551,54 @@ def test_sq8_meta_cold_start_matches_train(spark, sf_dir, tmp_path):
     vmin2, vmax2 = similarity.sq8_load_meta(spark, path)
     assert np.array_equal(vmin, vmin2)
     assert np.array_equal(vmax, vmax2)
+
+
+def test_sq8_build_rejects_non_finite_bounds(spark, tmp_path):
+    """One NaN embedding component makes an SQ8 bound non-finite; the
+    bounds are rendered as SQL literals, which have no NaN/Inf form, so
+    the build must fail with a ValueError naming the index kind and the
+    bound — not with a ParseException from deep inside the build."""
+    import math
+
+    rows = [(i, [float(i + j) / 8.0 for j in range(8)]) for i in range(30)]
+    rows[7][1][3] = math.nan
+    corpus = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    with pytest.raises(ValueError, match=r"sq8 index: non-finite vmax\[3\]"):
+        similarity.sq8_build_index(spark, corpus, str(tmp_path / "sq8nan"))
+
+
+@pytest.mark.parametrize(
+    "contract", ["ivfpq_serve_contract", "sq8_serve_contract", "ivf_sq8_serve_contract"]
+)
+def test_serve_roundtrip_detects_perturbed_state(spark, sf_dir, monkeypatch, contract):
+    """The shared build → reload → serve → anti-join body can FAIL: a
+    cold-started server whose reloaded state differs from the built one
+    in a single double must report state_roundtrip_ok = False."""
+    import numpy as np
+
+    q0 = np.asarray(similarity._corpus(spark, sf_dir).filter("vec_id = 0").first().emb)
+    read = similarity._read_meta
+
+    def perturbed(spark, path):
+        state = read(spark, path)
+        if "center" in state:
+            # one coordinate of query 0's nearest cell turns NaN: the
+            # probe never picks that cell again, so query 0's probed
+            # cells (and with them its neighbours) change
+            arr = state["center"].copy()
+            arr[similarity._probe_cells(arr, q0[None, :], [0])[0][0], 0] = np.nan
+            state["center"] = arr
+        else:
+            # vmin[0] turns NaN: every approximate score is NaN, so the
+            # candidate cut no longer follows similarity
+            arr = state["sq"].copy()
+            arr[0, 0] = np.nan
+            state["sq"] = arr
+        return state
+
+    monkeypatch.setattr(similarity, "_read_meta", perturbed)
+    row = getattr(similarity, contract)(spark, sf_dir).collect()[0]
+    assert row.state_roundtrip_ok is False
 
 
 def test_contrastive_triplet_invariants(spark, sf_dir):
