@@ -134,13 +134,15 @@ def main() -> int:
     # CPU-bound data-parallel aggregate (no shuffle, no Python) whose
     # wall time scales ~1/cores; it lives in the DETAIL sidecar +
     # stderr only — never in the stdout "queries"/"value", which stay
-    # byte-compatible round-over-round.
+    # byte-compatible round-over-round.  The load average is read
+    # before it: the probe saturates every core, and loadavg_after
+    # describes the load the measured query runs saw.
+    load_after = os.getloadavg()
     probe_runs = []
     for _ in range(3):
         t0 = time.perf_counter()
         spark.range(1 << 30).selectExpr("sum(xxhash64(id, id + 1))").collect()
         probe_runs.append(round(time.perf_counter() - t0, 3))
-    load_after = os.getloadavg()
 
     # Compact machine line: headline + per-query medians only.  Detail
     # (minima, loadavg, secondary SF) goes to the sidecar + stderr so the

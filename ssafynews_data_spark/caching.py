@@ -17,6 +17,7 @@ release explicitly after materializing.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -37,7 +38,7 @@ def release_pins() -> int:
         df = _LIVE.pop()
         try:
             df.unpersist()
-        except Exception:
+        except (Py4JError, RuntimeError):
             pass  # session already stopped — nothing to release
     return n
 

@@ -1457,57 +1457,59 @@ def _adc_lut_row(
     qnorm: "np.ndarray",
     centers: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """The ADC lookup table as ONE broadcastable row, built with
-    createDataFrame (data, not plan literals — the literal form's plan
-    compile cost exceeded the whole execution, r13), so the serving
-    plan stays constant-size no matter how many queries are batched:
-    ``_adc_lut[m·K + code] = (partial dots over queries, ||c||²)`` plus
-    the query-id / query-norm arrays.  With ``centers`` (residual ADC)
-    it also carries the centroid-keyed terms — ``_adc_qc[c]`` =
-    per-query dot(q, c) array, ``_adc_ccn2[c]`` = ‖c‖², and
-    ``_adc_cross[m·IVF_K·K + c·K + k]`` = dot(c_m, C_m[k]): M·IVF_K·K +
-    IVF_K·(Q + 2) doubles ≈ tens of KB."""
+    """The ADC lookup table as ONE broadcastable ``local_df`` row whose
+    maps are built on the driver (data, not plan literals — the literal
+    form's plan compile cost exceeded the whole execution, r13), so the
+    serving plan stays constant-size no matter how many queries are
+    batched and the row costs no job of its own:
+
+    - ``_adc_lut[m·K + code]`` = (pd: partial dots over queries,
+      cn2: ||c||²), a ``map<int, struct<pd, cn2>>``;
+    - ``_adc_qids`` and ``_adc_qn``, the query ids and query norms;
+      the ids stay ``array<int>`` (``bigint`` only for ids past 2³¹),
+      since they become the served ``query_id``.
+
+    With ``centers`` (residual ADC) it also carries the centroid-keyed
+    terms — ``_adc_qc[c]`` = per-query dot(q, c) array, ``_adc_ccn2[c]``
+    = ‖c‖², and ``_adc_cross[m·IVF_K·K + c·K + k]`` = dot(c_m, C_m[k]):
+    M·IVF_K·K + IVF_K·(Q + 2) doubles ≈ tens of KB."""
     dots, norms = _adc_tables(books, Q)
-    entries = [
-        (m * PQ_K + k, [float(x) for x in pd_mk[:, k]], norms[m][k])
-        for m, pd_mk in enumerate(dots)
-        for k in range(PQ_K)
+    row = [
+        {
+            m * PQ_K + k: ([float(x) for x in pd_mk[:, k]], norms[m][k])
+            for m, pd_mk in enumerate(dots)
+            for k in range(PQ_K)
+        },
+        [int(q) for q in qids],
+        [float(x) for x in qnorm],
     ]
-    row = (
-        local_df(spark, entries, "lk int, pd array<double>, cn2 double")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("lk", F.struct("pd", "cn2")))
-            ).alias("_adc_lut")
+    # int unless an id needs 64 bits — the type F.lit gave this array
+    qid_t = "int" if all(-(2**31) <= q < 2**31 for q in row[1]) else "bigint"
+    schema = (
+        "_adc_lut map<int, struct<pd: array<double>, cn2: double>>,"
+        f" _adc_qids array<{qid_t}>, _adc_qn array<double>"
+    )
+    if centers is not None:
+        sub = books[0].shape[1]
+        n_cells = centers.shape[0]
+        qc = Q @ centers.T  # (Q, IVF_K)
+        cn2 = (centers * centers).sum(1)  # (IVF_K,)
+        cross = {}
+        for m, C in enumerate(books):
+            cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
+            for c in range(n_cells):
+                for k in range(PQ_K):
+                    cross[m * n_cells * PQ_K + c * PQ_K + k] = float(cc_mk[c, k])
+        row += [
+            {c: [float(x) for x in qc[:, c]] for c in range(n_cells)},
+            {c: float(cn2[c]) for c in range(n_cells)},
+            cross,
+        ]
+        schema += (
+            ", _adc_qc map<int, array<double>>, _adc_ccn2 map<int, double>,"
+            " _adc_cross map<int, double>"
         )
-        .withColumn("_adc_qids", F.lit([int(q) for q in qids]))
-        .withColumn("_adc_qn", F.lit([float(x) for x in qnorm]))
-    )
-    if centers is None:
-        return row
-    sub = books[0].shape[1]
-    n_cells = centers.shape[0]
-    qc = Q @ centers.T  # (Q, IVF_K)
-    cn2 = (centers * centers).sum(1)  # (IVF_K,)
-    cent_entries = [
-        (c, [float(x) for x in qc[:, c]], float(cn2[c])) for c in range(n_cells)
-    ]
-    cross_entries = []
-    for m, C in enumerate(books):
-        cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
-        for c in range(n_cells):
-            for k in range(PQ_K):
-                cross_entries.append(
-                    (m * n_cells * PQ_K + c * PQ_K + k, float(cc_mk[c, k]))
-                )
-    cent_row = local_df(spark, cent_entries, "c int, qc array<double>, cn2 double").agg(
-        F.map_from_entries(F.collect_list(F.struct("c", "qc"))).alias("_adc_qc"),
-        F.map_from_entries(F.collect_list(F.struct("c", "cn2"))).alias("_adc_ccn2"),
-    )
-    cross_row = local_df(spark, cross_entries, "ck int, x double").agg(
-        F.map_from_entries(F.collect_list(F.struct("ck", "x"))).alias("_adc_cross")
-    )
-    return row.crossJoin(cent_row).crossJoin(cross_row)
+    return local_df(spark, [tuple(row)], schema)
 
 
 #: columns the ADC machinery injects; never part of the caller's carry
@@ -2655,12 +2657,15 @@ def _arr_sql(arr) -> str:
     finite double exactly (and Spark's parser, like Java's
     ``parseDouble``, is correctly rounded), so the parsed literal holds
     the same bits ``F.lit(float(v))`` would — one parse instead of one
-    py4j call per element (guide §7.3)."""
+    py4j call per element (guide §7.3).  A non-finite element has no
+    literal form and raises ``_check_finite``'s ValueError."""
+    _check_finite("SQL array literal", "element", arr)
     return "array(" + ", ".join(f"{float(v)!r}D" for v in arr) + ")"
 
 
 def _arr2_sql(mat) -> str:
-    """2-D double array literal as SQL text (see :func:`_arr_sql`)."""
+    """2-D double array literal as SQL text (see :func:`_arr_sql`; a
+    non-finite element raises the same ValueError)."""
     return "array(" + ", ".join(_arr_sql(row) for row in mat) + ")"
 
 
@@ -2769,18 +2774,20 @@ _KINDS = {
 }
 
 
-def _check_finite(kind: str, name: str, arr: "np.ndarray") -> None:
-    """SQ8 constants reach the plan as SQL literals (``_arr_sql``) and
+def _check_finite(what: str, name: str, arr) -> None:
+    """Doubles rendered as SQL literals (``_arr_sql``) must be finite:
     Spark's parser has no NaN/Inf double literal (``nanD`` analyzes as
-    an unresolved column): a corpus with a non-finite embedding
-    component fails HERE, naming the index kind and the bound, instead
-    of deep inside the build."""
+    an unresolved column).  Fail HERE with a ValueError naming ``what``
+    and the first bad element instead of an AnalysisException deep
+    inside a plan.  The builds call it up front on their SQ8 constants
+    so the error names the index kind and the bound."""
+    arr = np.asarray(arr, dtype=float)
     bad = np.argwhere(~np.isfinite(arr))
     if len(bad):
         at = tuple(int(i) for i in bad[0])
         raise ValueError(
-            f"{kind} index: non-finite {name}{''.join(f'[{i}]' for i in at)}"
-            f" = {arr[at]!r} (the corpus has a NaN/Inf embedding component)"
+            f"{what}: non-finite {name}{''.join(f'[{i}]' for i in at)}"
+            f" = {arr[at]!r} (Spark SQL has no NaN/Inf double literal)"
         )
 
 
@@ -2804,7 +2811,7 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
         if k.codec == "sq8":
             # the SQ8 codec sees the residual vs the own-cell centroid —
             # centroid matrix inlined as one parsed literal (see _arr_sql)
-            _check_finite(kind, "centroid", state["center"])
+            _check_finite(f"{kind} index", "centroid", state["center"])
             src = "res"
             assigned = assigned.withColumn("res", F.expr(
                 f"zip_with(emb, element_at({_arr2_sql(state['center'])},"
@@ -2821,8 +2828,8 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
         if k.codec == "pq":
             return {"book": _pq_codebooks(frame, state.get("center"))}
         vmin, vmax = sq8_train(frame.select(F.col(src).alias("emb")))
-        _check_finite(kind, "vmin", vmin)
-        _check_finite(kind, "vmax", vmax)
+        _check_finite(f"{kind} index", "vmin", vmin)
+        _check_finite(f"{kind} index", "vmax", vmax)
         return {"sq": np.stack([vmin, vmax])}
 
     codec, _ = run_parallel(train, lambda: write(frame.select("vec_id", "emb", *part), "_flat"))

@@ -45,19 +45,20 @@ MAX_PARALLEL_JOBS = 3
 def _inheritable(thunks: Sequence[Callable[[], Any]]) -> Sequence[Callable[[], Any]]:
     """Wrap thunks so JVM thread-locals (job description/group, tags)
     carry into the pool threads under pinned-thread mode.  Falls back
-    to the bare thunks when no classic session is active (unit tests
-    that exercise run_parallel without Spark)."""
+    to the bare thunks when PySpark is missing or no session is active
+    (unit tests that exercise run_parallel without Spark); any other
+    failure to wrap surfaces instead of silently dropping the job
+    group and tags."""
     try:
         from pyspark import inheritable_thread_target
         from pyspark.sql import SparkSession
-
-        session = SparkSession.getActiveSession()
-        if session is None:
-            return thunks
-        wrap = inheritable_thread_target(session)
-        return [wrap(t) for t in thunks]
-    except Exception:
+    except ImportError:
         return thunks
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return thunks
+    wrap = inheritable_thread_target(session)
+    return [wrap(t) for t in thunks]
 
 
 def run_parallel(*thunks: Callable[[], Any]) -> Sequence[Any]:

@@ -51,3 +51,26 @@ def test_pin_release_is_idempotent(spark):
     assert release_pins() == 1
     assert release_pins() == 0
     assert live_pins() == 0
+
+
+class _Pinned:
+    def __init__(self, error: BaseException):
+        self.error = error
+
+    def unpersist(self):
+        raise self.error
+
+
+def test_release_pins_tolerates_only_a_stopped_session(monkeypatch):
+    """A stopped session makes ``unpersist`` raise a py4j error, which
+    ``release_pins`` swallows (nothing left to release); any other error
+    surfaces (ADVICE r14)."""
+    from py4j.protocol import Py4JError
+
+    from ssafynews_data_spark import caching
+
+    monkeypatch.setattr(caching, "_LIVE", [_Pinned(Py4JError("stopped"))])
+    assert release_pins() == 1
+    monkeypatch.setattr(caching, "_LIVE", [_Pinned(ValueError("unexpected"))])
+    with pytest.raises(ValueError, match="unexpected"):
+        release_pins()

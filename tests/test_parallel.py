@@ -68,3 +68,18 @@ def test_thunks_overlap_in_time():
     run_parallel(lambda: thunk("a"), lambda: thunk("b"))
     (a0, a1), (b0, b1) = spans["a"], spans["b"]
     assert max(a0, b0) < min(a1, b1), f"no overlap: a={spans['a']} b={spans['b']}"
+
+
+def test_unexpected_wrap_error_surfaces(spark, monkeypatch):
+    """Only a missing PySpark falls back to bare thunks (ADVICE r14).
+    Any other failure to wrap the thunks for an active session would
+    silently drop the job group and tags in the pool threads, so it
+    must raise."""
+    import pyspark
+
+    def broken(session):
+        raise RuntimeError("cannot wrap")
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", broken)
+    with pytest.raises(RuntimeError, match="cannot wrap"):
+        run_parallel(lambda: 1, lambda: 2)

@@ -755,3 +755,64 @@ def test_sq8_sql_twins_match_column_forms(spark):
         f"{similarity._arr2_sql(mat)} AS m"
     ).collect()[0].m
     assert [list(r) for r in lit_col] == [list(r) for r in lit_sql]
+
+
+@pytest.mark.parametrize(
+    "arr",
+    [[0.5, float("nan")], [2.0, float("inf")], [[1.0, 2.0], [3.0, float("-inf")]]],
+    ids=["nan", "inf", "2d-neg-inf"],
+)
+def test_arr_sql_rejects_non_finite(arr):
+    """Spark SQL has no NaN/Inf double literal (``nanD`` analyzes as an
+    unresolved column): the literal renderers themselves must raise the
+    ValueError ``_check_finite`` raises, so a caller that skips the
+    up-front check still gets a clear error, never an AnalysisException."""
+    import numpy as np
+
+    render = similarity._arr2_sql if np.ndim(arr) == 2 else similarity._arr_sql
+    with pytest.raises(ValueError, match=r"SQL array literal: non-finite element\[1\]"):
+        render(arr)
+
+
+#: Spark jobs per warm ``*_serve`` request (ROADMAP direction 5, "budgets
+#: first").  Job counts repeat exactly, so they pin the serve path the way
+#: test_shuffle_budget pins shuffles: the query embeddings, the ADC lookup
+#: row and the SQ8 constants are LocalRelations that cost no job, and the
+#: IVF-PQ lookup maps are built on the driver, not aggregated by Spark.
+#: Slack 0 — a new job must be justified, not absorbed.
+SERVE_JOB_BUDGET = {"ivfpq": 8, "sq8": 9, "ivfsq8": 9}
+
+
+def test_serve_job_budget(spark, sf_dir, tmp_path):
+    """Each warm serve request, counted under its own job group, runs
+    exactly its budgeted jobs, and its executed plan scans no Python RDD
+    (``LogicalRDD``/``ExistingRDD``: a Python worker per execution)."""
+    from pyspark.sql import functions as F
+
+    corpus = similarity.pin(similarity._corpus(spark, sf_dir))
+    qrows = [
+        (int(r.vec_id), list(r.emb))
+        for r in corpus.filter(F.col("vec_id") < 10).orderBy("vec_id").collect()
+    ]
+    if not qrows:
+        pytest.skip("no query ids")
+    sc = spark.sparkContext
+    jobs = {}
+    for kind in SERVE_JOB_BUDGET:
+        path = str(tmp_path / kind)
+        getattr(similarity, f"{kind}_build_index")(spark, corpus, path)
+        meta = getattr(similarity, f"{kind}_load_meta")(spark, path)
+        serve = getattr(similarity, f"{kind}_serve")
+        serve(spark, path, *meta, qrows).collect()  # warm
+        group = f"serve_budget_{kind}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df = serve(spark, path, *meta, qrows)
+            assert len(df.collect()) == len(qrows) * similarity.TOP_K
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
+        plan = _plan(df)
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, (kind, plan)
+    assert jobs == SERVE_JOB_BUDGET
