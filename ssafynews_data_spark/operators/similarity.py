@@ -681,9 +681,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if corpus.isEmpty():
         return local_df(spark, [], "vec_id LONG, centroid INT, n_dropped_in_cluster LONG")
     vecs = pin(corpus.withColumn("vec", array_to_vector(F.col("emb"))))
-    # right-size the iterative fit like vectors.pca_kmeans: ~20 KMeans
-    # jobs each pay per-task scheduling overhead; ~10k rows per task,
-    # clamped to cluster width (no-op at real scale).
+    # right-size the iterative fit: ~20 KMeans jobs each pay per-task
+    # scheduling overhead; ~10k rows per task, clamped to cluster width
+    # (no-op at real scale).
     n = vecs.count()
     width = spark.sparkContext.defaultParallelism
     parts = max(1, min(width, n // 10_000 + 1))
@@ -1319,7 +1319,9 @@ PQ_RECALL_MIN_PCT = 50
 #: codebook training sample cap.  PQ codebooks are routinely trained on
 #: ~50-100k vectors regardless of corpus size (faiss does exactly this);
 #: quality saturates long before the corpus does.  The cap bounds BOTH
-#: the one collect (<= 50k * dim doubles, ~25 MB at dim 64) and the fit.
+#: the one collect and the fit.  The collect is Arrow float32, 50k * dim
+#: * 4 bytes (13 MB at the fixture's dim 64, 154 MB at 768); the fit
+#: matrix is float64, twice that (26 MB; 307 MB at 768).
 PQ_FIT_SAMPLE = 50_000
 
 
@@ -1345,34 +1347,47 @@ def _np_kmeans(X: "np.ndarray", k: int, seed: int, iters: int = 10) -> "np.ndarr
     return C
 
 
-def _pq_sample(
+def _fit_sample(
     frame: DataFrame,
     centers: "np.ndarray | None" = None,
     emb_col: str = "emb",
     id_col: str = "vec_id",
+    order: "list[Column] | None" = None,
 ) -> "np.ndarray":
-    """The bounded PQ training sample as a driver matrix — deterministic
-    and order-free: top-PQ_FIT_SAMPLE rows by md5 of the id
-    (TakeOrderedAndProject: one pass over the corpus, no full shuffle,
-    no partition-order bias).  With ``centers`` (``frame`` then carries
-    a ``centroid`` column) each sampled vector has its cell centroid
-    subtracted — the RESIDUAL sample of faiss ``by_residual=true``:
-    residuals concentrate near the origin, so the codebooks spend their
-    resolution on the within-cell displacement instead of re-describing
-    the coarse structure IVF already captured."""
+    """The bounded training sample of a driver-side fit as a (n, dim)
+    matrix — deterministic and order-free: the top-PQ_FIT_SAMPLE rows by
+    md5 of the id, or by the ``order`` keys (TakeOrderedAndProject: one
+    pass over the corpus, no full shuffle, no partition-order bias).  It
+    arrives as Arrow and is reshaped from the flat float buffer, so no
+    Python object is made per element.  No rows is a (0, 0) matrix.
+    With ``centers`` (``frame`` then carries a ``centroid`` column) each
+    sampled vector has its cell centroid subtracted — the RESIDUAL
+    sample of faiss ``by_residual=true``: residuals concentrate near the
+    origin, so the codebooks spend their resolution on the within-cell
+    displacement instead of re-describing the coarse structure IVF
+    already captured."""
+    keys = order if order is not None else [F.md5(F.col(id_col).cast("string"))]
     resid = [F.col("centroid").alias("c")] if centers is not None else []
-    rows = (
+    t = (
         frame.select(
-            F.col(emb_col).alias("e"), *resid, F.md5(F.col(id_col).cast("string")).alias("o")
+            F.col(emb_col).alias("e"), *resid, *(k.alias(f"_o{i}") for i, k in enumerate(keys))
         )
-        .sort("o")
+        .sort(*(f"_o{i}" for i in range(len(keys))))
         .limit(PQ_FIT_SAMPLE)
         .select("e", *(["c"] if resid else []))
-        .collect()
+        .toArrow()
     )
-    X = np.stack([np.asarray(r[0], dtype=float) for r in rows])
+    if t.num_rows == 0:
+        return np.empty((0, 0))
+    e = t.column("e").combine_chunks()
+    lens = e.value_lengths().to_numpy(zero_copy_only=False)
+    if lens.min() != lens.max():
+        raise ValueError(
+            f"{emb_col}: vectors of {lens.min()} and {lens.max()} dims in one fit sample"
+        )
+    X = e.flatten().to_numpy(zero_copy_only=False).astype(float).reshape(len(e), -1)
     if resid:
-        X -= centers[np.asarray([int(r[1]) for r in rows])]
+        X -= centers[t.column("c").to_numpy().astype(np.int64)]
     return X
 
 
@@ -1392,7 +1407,7 @@ def _pq_codebooks(
     emb_col: str = "emb",
     id_col: str = "vec_id",
 ) -> list:
-    """Train PQ codebooks on the bounded sample (``_pq_sample``; residual
+    """Train PQ codebooks on the bounded sample (``_fit_sample``; residual
     when ``centers`` is given).  Train-once-on-a-sample, encode-the-world
     is the standard PQ pipeline (Jegou et al. 2011; faiss trains on
     sampled vectors): the 8 fits run driver-side (seeded numpy Lloyd's,
@@ -1400,7 +1415,7 @@ def _pq_codebooks(
     overhead dominated at every fixture scale (VERDICT r6 item 3), so
     fit cost is flat in corpus size BY CONSTRUCTION; encode stays
     distributed (Arrow UDF, one GEMM per batch per subspace)."""
-    return _pq_books(_pq_sample(frame, centers, emb_col, id_col))
+    return _pq_books(_fit_sample(frame, centers, emb_col, id_col))
 
 
 def _pq_encode(books: list, centers: "np.ndarray | None" = None):
@@ -2435,7 +2450,7 @@ def opq_rotation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_vectors long, n_subspaces int, rotation_orthogonal_ok boolean,"
             " opq_train_sse_le_plain boolean, opq_corpus_sse_ok boolean",
         )
-    X = _pq_sample(corpus)
+    X = _fit_sample(corpus)
     R, opq_books, plain_books, plain_sse, opq_sse = _opq_fit(X)
     d = X.shape[1]
     orthogonal = bool(np.abs(R.T @ R - np.eye(d)).max() < 1e-8)
@@ -2578,7 +2593,7 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
             " rotation_preserves_exact_topk boolean, recall_ok boolean",
         )
-    R = _opq_fit(_pq_sample(corpus))[0]
+    R = _opq_fit(_fit_sample(corpus))[0]
     rotated = pin(corpus.select("vec_id", _rotate_embeddings(R)(F.col("emb")).alias("emb")))
 
     exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
@@ -2774,20 +2789,23 @@ _KINDS = {
 }
 
 
-def _check_finite(what: str, name: str, arr) -> None:
+def _check_finite(
+    what: str, name: str, arr, why: str = "Spark SQL has no NaN/Inf double literal"
+) -> None:
     """Doubles rendered as SQL literals (``_arr_sql``) must be finite:
     Spark's parser has no NaN/Inf double literal (``nanD`` analyzes as
     an unresolved column).  Fail HERE with a ValueError naming ``what``
     and the first bad element instead of an AnalysisException deep
     inside a plan.  The builds call it up front on their SQ8 constants
-    so the error names the index kind and the bound."""
+    so the error names the index kind and the bound; driver-side fits
+    call it on their sample with their own ``why``."""
     arr = np.asarray(arr, dtype=float)
     bad = np.argwhere(~np.isfinite(arr))
     if len(bad):
         at = tuple(int(i) for i in bad[0])
         raise ValueError(
             f"{what}: non-finite {name}{''.join(f'[{i}]' for i in at)}"
-            f" = {arr[at]!r} (Spark SQL has no NaN/Inf double literal)"
+            f" = {arr[at]!r} ({why})"
         )
 
 

@@ -4,20 +4,46 @@ The reference's analytical core is: array→vector UDF (M1,
 spark_daily_report.py:38-41), PCA k=2 (M2, :87-89), KMeans k=min(5,n)
 seed=42 (M3, :91-94), then pandas element extraction (M4, :97-98).
 
-Engine changes: the hand-rolled row UDF becomes the built-in
-``array_to_vector``; element extraction stays in Spark via
-``vector_to_array`` (no toPandas); the whole chain is one cached
-DataFrame instead of the reference's six re-reads (SURVEY.md §4).
+Engine changes: no vector UDF and no toPandas — the chain reads the
+``array<float>`` column directly and the element extraction is SQL.
+M2/M3 are fitted on the DRIVER from one bounded sample (``pca_kmeans``).
+With the MLlib ``PCA.fit`` + ``KMeans.fit`` pair the query ran 38 Spark
+jobs on the 500-row fixture, and a cold run spent more than half of its
+JVM CPU in the JIT compiler threads warming MLlib's code paths, not in
+tasks — the fixed per-job overhead Chukonu (PAPERS.md) measures on
+small jobs.  Now the fit is one sample action (a
+``TakeOrderedAndProject`` over the day's embeddings), a numpy
+eigen-decomposition, seeded Lloyd's (``similarity._np_kmeans``, the PQ
+codebook fit) and one projection against the models shipped as a
+broadcast row: 4 jobs.
+
+100 TB shape: the fit is flat-cost in corpus size.  The sample
+(``similarity._fit_sample``, the one the PQ codebooks train on) is
+capped at ``PQ_FIT_SAMPLE`` rows and arrives as Arrow float32: 13 MB at
+the fixture's dim 64 and 154 MB at the reference's dim 768, held as a
+float64 matrix of twice that (307 MB at 768) plus a dim×dim scatter.
+That fixes a 2-D projection and 5 centres as well as the whole corpus
+would, and the assignment is one row-local pass with no shuffle.  Below
+the cap the sample is every row, so a daily report gets the full-data
+models: PCA equal to MLlib's at the reported 4 places up to sign, and
+KMeans seeded differently from MLlib's k-means||, so label numbering
+differs.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssafynews_data_spark.caching import pin
 from ssafynews_data_spark.localframe import local_df
-from ssafynews_data_spark.parallel import run_parallel
+from ssafynews_data_spark.operators.similarity import (
+    _check_finite,
+    _dot_sql,
+    _fit_sample,
+    _np_kmeans,
+)
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
@@ -44,6 +70,23 @@ def _drop_training_summary(model) -> None:
         pass  # model type without a summary slot — nothing to detach
 
 
+def _pca_components(X: "np.ndarray", k: int) -> "np.ndarray":
+    """The top-``k`` principal axes of a driver sample as a (k, dim)
+    matrix: eigenvectors of the sample covariance (``eigh`` of the
+    centred scatter — the positive 1/(n-1) scale moves no eigenvector).
+    A coordinate that is constant over the sample centres to exact
+    zeros, not to the rounding noise of its mean, so a one-row or
+    all-identical sample is the zero matrix, whose axes are the
+    coordinate axes.  Ordered by eigenvalue, descending, ties kept in
+    axis order; each axis signed so its largest-magnitude entry is
+    positive, so reruns and reseeds never flip a component."""
+    Xc = np.where(np.ptp(X, 0) == 0, 0.0, X - X.mean(0))
+    w, V = np.linalg.eigh(Xc.T @ Xc)
+    V = V[:, np.argsort(-w, kind="stable")[:k]].T
+    lead = V[np.arange(len(V)), np.abs(V).argmax(1)]
+    return V * np.where(lead < 0, -1.0, 1.0)[:, None]
+
+
 def pca_kmeans(
     df: DataFrame,
     embedding_col: str = "embedding",
@@ -51,60 +94,52 @@ def pca_kmeans(
     max_k: int = KMEANS_MAX_K,
     seed: int = SEED,
 ) -> DataFrame:
-    """M1-M4 chain: array→vector, PCA(k=2), KMeans(k=min(5,n), seed=42),
-    vector→(pc1, pc2).  Returns input columns minus the embedding plus
-    (cluster, pc1, pc2)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    """M1-M4 chain: PCA(k=2), KMeans(k=min(5,n), seed=42), then
+    (pc1, pc2).  Returns input columns minus the embedding plus
+    (cluster, pc1, pc2).
 
-    clean = df.filter(F.col(embedding_col).isNotNull()).withColumn(
-        "_vec", array_to_vector(F.col(embedding_col))
-    )
-    pin(clean)  # reference recomputed the scan per action; we don't (§4)
-    n = clean.count()
-    if n == 0:
+    Both models are fitted on the driver from ONE bounded sample (see
+    the module docstring): the top ``PQ_FIT_SAMPLE`` rows by a hash of
+    the embedding (``_fit_sample``), every row when n is below the
+    cap — then this one action also gives n and k.  The models ride
+    back to the executors as one broadcast row, and the assignment is
+    one projection: ``cluster`` = argmax(x·c − ‖c‖²/2) over the centres
+    (the ``_np_kmeans`` identity; ties to the lowest centre), ``pc<i>``
+    = x·axis_i rounded to 4 places, uncentred like MLlib's
+    ``PCAModel.transform``.  A non-finite sampled element is a
+    ValueError; past the cap, an unsampled non-finite vector is not
+    checked and projects to NaN components in cluster 0."""
+    e = f"`{embedding_col}`"
+    clean = df.filter(F.col(embedding_col).isNotNull())
+    carry = [f"`{c}`" for c in df.columns if c != embedding_col]
+    emb = F.col(embedding_col)
+    X = _fit_sample(clean, emb_col=embedding_col, order=[F.xxhash64(emb), emb])
+    if not len(X):
         # empty-day path (spark_daily_report.py:107-112) — keep the
         # output contract: same columns as the fitted path, zero rows
-        return (
-            clean.withColumn("cluster", F.lit(None).cast("int"))
-            .withColumn("pc1", F.lit(None).cast("double"))
-            .withColumn("pc2", F.lit(None).cast("double"))
-            .drop("_vec", embedding_col)
+        return clean.selectExpr(
+            *carry, "CAST(NULL AS INT) AS cluster",
+            *(f"CAST(NULL AS DOUBLE) AS pc{i + 1}" for i in range(k_pca)),
         )
-
-    # Right-size parallelism for the iterative fits: KMeans/PCA run ~20
-    # jobs each, and per-job task-scheduling overhead dominates when n is
-    # small relative to the partition count.  ~10k rows per task, clamped
-    # to cluster width — at real scale this is a no-op.
-    width = df.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(width, n // 10_000 + 1))
-    if parts < clean.rdd.getNumPartitions():
-        clean = pin(clean.coalesce(parts))
-        # materialize the coalesced pin BEFORE the two fits fork below,
-        # so neither races to build the shared cache (one cheap job)
-        clean.count()
-
-    # Both fits read only ``_vec``: KMeans never looks at the PCA output
-    # column, so fitting it on ``clean`` instead of ``pca.transform(clean)``
-    # is the identical computation (verified bit-identical centers at
-    # sf0.01/sf0.1) — which makes the two iterative fits independent jobs
-    # that can overlap (guide §2.6) instead of running back-to-back.
-    k = min(max_k, n)
-    pca, km = run_parallel(
-        lambda: PCA(k=k_pca, inputCol="_vec", outputCol="_pca").fit(clean),
-        lambda: KMeans(
-            k=k, seed=seed, featuresCol="_vec", predictionCol="cluster"
-        ).fit(clean),
+    _check_finite("pca_kmeans", embedding_col, X, "PCA and KMeans need finite vectors")
+    if X.shape[1] < k_pca:
+        raise ValueError(f"pca_kmeans: {embedding_col} has {X.shape[1]} dims < k_pca={k_pca}")
+    # below the cap len(X) IS n; at the cap n >= PQ_FIT_SAMPLE > max_k
+    C = _np_kmeans(X, min(max_k, len(X)), seed=seed, iters=20)
+    model = local_df(
+        df.sparkSession,
+        [(_pca_components(X, k_pca).tolist(), C.tolist(), ((C * C).sum(1) / 2.0).tolist())],
+        "_pc array<array<double>>, _km array<array<double>>, _kh array<double>",
     )
-    reduced = pca.transform(clean)
-    _drop_training_summary(km)
-    out = km.transform(reduced)
-    arr = vector_to_array(F.col("_pca"))
+    pcs = [f"pc{i + 1}" for i in range(k_pca)]
     return (
-        out.withColumn("pc1", F.round(arr[0], 4))
-        .withColumn("pc2", F.round(arr[1], 4))
-        .drop("_vec", "_pca", embedding_col)
+        clean.crossJoin(F.broadcast(model))
+        .selectExpr(
+            *carry,
+            f"zip_with(_km, _kh, (c, h) -> {_dot_sql(e, 'c')} - h) AS _s",
+            *(f"round({_dot_sql(e, f'_pc[{i}]')}, 4) AS {pc}" for i, pc in enumerate(pcs)),
+        )
+        .selectExpr(*carry, "CAST(array_position(_s, array_max(_s)) - 1 AS INT) AS cluster", *pcs)
     )
 
 
@@ -112,9 +147,9 @@ def pca_kmeans(
 def pca_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The daily report's embedding-clustering stage
     (spark_daily_report.py:82-98) on the embeddings fixture.  Rows-only
-    check: PCA sign/rotation and KMeans label numbering are
+    check: KMeans label numbering and the PCA sign convention are
     implementation-defined; tests assert cluster count, determinism
-    under reruns, and blob purity against ``label``."""
+    under reruns, and that every cluster gets rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     return pca_kmeans(emb).select("vec_id", "label", "cluster", "pc1", "pc2")
 

@@ -9,8 +9,9 @@ from ssafynews_data_spark.caching import live_pins, pin, release_pins
 from ssafynews_data_spark.registry import load_all
 
 #: every registered query that pins intermediates (dedup barrier, LSH
-#: signatures, similarity corpus, rollup ladder, MLlib fit input,
-#: block-id partitioning).
+#: signatures, similarity corpus, rollup ladder, block-id
+#: partitioning).  ``pca_kmeans_clusters`` pinned its MLlib fit input
+#: and now fits on a driver sample; it stays listed as a no-leak check.
 CACHE_USERS = [
     "minhash_lsh_pairs",
     "embedding_near_dup",

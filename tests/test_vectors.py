@@ -3,6 +3,8 @@ dim == 2, seed-42 determinism, blob purity)."""
 
 from __future__ import annotations
 
+import pytest
+
 from ssafynews_data_spark.operators import vectors
 
 
@@ -85,3 +87,86 @@ def test_int8_quantization_error_bounded(spark, sf_dir):
     for r in rows:
         assert r.n_vecs > 0 and r.avg_scale > 0
         assert 0.0 <= r.avg_mse <= bound
+
+
+def test_one_row_input_gets_cluster_zero(spark):
+    """A day with a single embedded article: k = min(5, 1) = 1, one row
+    out with cluster 0 and finite components (a one-row covariance is
+    the zero matrix, not an error)."""
+    import math
+
+    df = spark.createDataFrame(
+        [(7, [0.5, -1.25, 2.0, 0.75])], "vec_id long, embedding array<float>"
+    )
+    rows = vectors.pca_kmeans(df).collect()
+    assert len(rows) == 1
+    assert rows[0].cluster == 0
+    assert math.isfinite(rows[0].pc1) and math.isfinite(rows[0].pc2)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_embedding_is_a_value_error(spark, bad):
+    """A NaN/Inf element fails up front with a ValueError naming the
+    column and the first bad element, never deep inside the fit."""
+    rows = [(i, [float(i), 1.0, 2.0]) for i in range(6)]
+    rows[3][1][2] = bad
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=r"non-finite embedding\[\d+\]\[2\] = "):
+        vectors.pca_kmeans(df).collect()
+
+
+@pytest.mark.parametrize(
+    "v, elem",
+    [
+        ([0.5, -1.25, 2.0, 0.75], "float"),
+        # not binary fractions: the double mean of six copies of 0.1 is
+        # off by rounding, and the covariance must still be exactly zero
+        ([0.1, 0.2, 0.3], "double"),
+    ],
+)
+def test_identical_vectors_one_cluster_identity_components(spark, v, elem):
+    """All-identical vectors: every row lands in cluster 0 and, with a
+    zero covariance, the components are the first two axes, so pc1/pc2
+    are the first two coordinates."""
+    df = spark.createDataFrame(
+        [(i, v) for i in range(6)], f"vec_id long, embedding array<{elem}>"
+    )
+    rows = vectors.pca_kmeans(df).collect()
+    assert len(rows) == 6
+    assert {r.cluster for r in rows} == {0}
+    assert {(r.pc1, r.pc2) for r in rows} == {(v[0], v[1])}
+
+
+def test_output_contract_columns_and_types(spark):
+    """Input columns minus the embedding, then cluster int, pc1/pc2
+    double — the column order the daily report relies on."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    rows = [(i, "x", [float(x) for x in rng.standard_normal(8)]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, tag string, embedding array<float>")
+    out = vectors.pca_kmeans(df)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("vec_id", "bigint"), ("tag", "string"), ("cluster", "int"),
+        ("pc1", "double"), ("pc2", "double"),
+    ]
+    assert out.count() == 20
+
+
+def test_fewer_dims_than_components_is_a_value_error(spark):
+    df = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(4)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="1 dims < k_pca=2"):
+        vectors.pca_kmeans(df)
+
+
+def test_ragged_embeddings_are_a_value_error(spark):
+    """Vectors of different lengths fail up front: reshaping their flat
+    buffer would otherwise split 3 + 5 floats into two rows of 4."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="vectors of 3 and 5 dims"):
+        vectors.pca_kmeans(df)

@@ -15,7 +15,14 @@ so the run proves the wins survive the grading driver's environment
 (the engine-session conf, e.g. dataFrameDebugging=off, must not be the
 only thing carrying a number).
 
-Prints one line per query to stdout: ``name  median  min  runs``.
+Prints two lines per query to stdout: ``name  median  min  runs``, then
+``name  threads  kind=cpu_s ...``, the JVM's CPU time over its reps
+split by thread kind (``THREAD_KINDS``: JIT compiler, executor tasks,
+py4j handlers, the scheduler and AQE stage threads, GC, other), read
+from ``/proc/<jvm>/task/*/stat``.  That split showed the daily report's
+MLlib fits spending most of their CPU in the JIT compiler threads
+warming MLlib's code paths, not in tasks; run one query with
+``--reps=1`` to see it cold.
 """
 
 from __future__ import annotations
@@ -29,6 +36,53 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ssafynews_data_spark import get_session, registry
 from ssafynews_data_spark.caching import release_pins
+
+#: JVM thread kinds by thread-name prefix (the kernel keeps the first
+#: 15 characters of a name); a thread matching none counts as "other"
+THREAD_KINDS = (
+    ("compiler", ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")),
+    ("executor", ("Executor task l",)),
+    ("py4j", ("Thread-",)),  # py4j's connection handlers are unnamed
+    ("scheduler", (
+        "dag-scheduler", "dispatcher-", "spark-listener", "task-result-get",
+        "ResultQueryStag", "QueryStageCreat", "broadcast-excha",
+    )),
+    ("gc", ("GC Thread", "G1 ", "VM Thread")),
+)
+
+
+def thread_kind(name: str) -> str:
+    for kind, prefixes in THREAD_KINDS:
+        if name.startswith(prefixes):
+            return kind
+    return "other"
+
+
+def jvm_threads(pid: int, proc: str = "/proc") -> dict[int, tuple[str, int]]:
+    """``tid -> (kind, utime + stime ticks)`` for every live thread of
+    process ``pid``."""
+    out = {}
+    task = os.path.join(proc, str(pid), "task")
+    for tid in os.listdir(task):
+        try:
+            with open(os.path.join(task, tid, "stat"), encoding="ascii", errors="replace") as fh:
+                stat = fh.read()
+        except OSError:  # the thread exited while we looked
+            continue
+        name = stat[stat.index("(") + 1 : stat.rindex(")")]
+        fields = stat[stat.rindex(")") + 2 :].split()
+        out[int(tid)] = (thread_kind(name), int(fields[11]) + int(fields[12]))
+    return out
+
+
+def thread_split_s(before: dict, after: dict) -> dict[str, float]:
+    """CPU seconds per thread kind between two ``jvm_threads`` snapshots.
+    A thread that exited in between drops out: its time is in the
+    process total but not in this split."""
+    split = dict.fromkeys([k for k, _ in THREAD_KINDS] + ["other"], 0)
+    for tid, (kind, ticks) in after.items():
+        split[kind] += ticks - before.get(tid, (kind, 0))[1]
+    return {k: v / os.sysconf("SC_CLK_TCK") for k, v in split.items()}
 
 
 def main() -> int:
@@ -90,6 +144,7 @@ def main() -> int:
     # same warmup as bench.py: JVM/codegen/Arrow paths exist before timing
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.range(64).repartition(4).mapInPandas(lambda it: it, "id long").count()
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
 
     for name, q in sel.items():
         # formatted plan (captured via the internal API so it lands in a file)
@@ -104,6 +159,7 @@ def main() -> int:
             print(f"{name}  plan written")
             continue
         runs = []
+        t_before = jvm_threads(jvm_pid)
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
             t0 = time.perf_counter()
@@ -116,6 +172,8 @@ def main() -> int:
             f"{name}  median={statistics.median(runs):.3f}  "
             f"min={min(runs):.3f}  runs={[round(r, 3) for r in runs]}"
         )
+        split = thread_split_s(t_before, jvm_threads(jvm_pid))
+        print(f"{name}  threads  " + "  ".join(f"{k}={v:.2f}" for k, v in split.items()))
     return 0
 
 
