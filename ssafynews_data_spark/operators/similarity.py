@@ -20,9 +20,12 @@ ladder:
    ADC scores every (query, code) pair, so its cost is q·n map lookups
    regardless of codebook quality — linear in the corpus, pruned
    further only by pairing with the IVF layout;
-4. IVF — KMeans(seed 42) coarse quantizer, probe the ``NPROBE`` nearest
-   centroids only (classic IVF-Flat layout: at scale the corpus is
-   partitioned by centroid id, so a query touches nprobe partitions);
+4. IVF-Flat — KMeans(seed 42) coarse quantizer, probe the ``NPROBE``
+   nearest centroids only and rank exactly within them: the ``"ivf"``
+   kind of the index stack (item 6) with no codec, so its centroid-
+   partitioned ``_flat`` store is the whole index and a query reads
+   nprobe partitions (served from the artifact, or from an in-memory
+   fitted frame by the same ``_serve``);
 5. PQ — product quantization (Jegou et al. 2011): per-subspace
    codebooks (seeded Lloyd's on a bounded md5-ordered sample, r7)
    compress each vector to PQ_M 4-bit codes, queries score by ADC
@@ -31,16 +34,22 @@ ladder:
    against a numpy ADC over the same tables), deep candidate list
    exact-re-ranked;
 6. the IVF × codec index stack — faiss ``index_factory`` compositions
-   "IVF8,PQ8x4" (``ivfpq_*``: RESIDUAL PQ codes, ``by_residual=true``,
-   r8 — recall at the nprobe coverage cap), "SQ8" (``sq8_*``) and
-   "IVF8,SQ8" (``ivfsq8_*``) share ONE build, meta format, serve and
-   round-trip body (``_build_index`` / ``_write_meta`` / ``_serve`` /
-   ``_serve_roundtrip``).  Under IVF the codes are written PARTITIONED
-   BY coarse centroid, so a query reads nprobe/IVF_K of the index
-   (PartitionFilters plan-asserted), scores it with the codec (residual
+   "IVF8,Flat" (``"ivf"``: IVF-Flat, item 4), "IVF8,PQ8x4" (``ivfpq_*``:
+   RESIDUAL PQ codes, ``by_residual=true``, r8 — recall at the nprobe
+   coverage cap), "SQ8" (``sq8_*``) and "IVF8,SQ8" (``ivfsq8_*``) share
+   ONE build, meta format, serve and round-trip body (``_build_index`` /
+   ``_write_meta`` / ``_serve`` / ``_serve_roundtrip``).  Under IVF the
+   stores are written PARTITIONED BY coarse centroid, so a query reads
+   nprobe/IVF_K of the index (PartitionFilters plan-asserted); the one
+   probe is ``_probe_cells``.  A codec scores the probed codes (residual
    ADC: one extra (centroid, code) cross-dot lookup per subspace; SQ8:
-   affine dequant + centroid), and refines the deep candidate list
-   against the flat store by id.  The 100 TB serving layout.
+   affine dequant + centroid) and refines the deep candidate list
+   against the flat store by id; IVF-Flat ranks the probed flat rows
+   directly.  The 100 TB serving layout.
+
+Every top-k ends in the ONE exact-rank step, ``_exact_rerank_topk``:
+rank by the raw cosine (then neighbor_id, the DuckDB oracles' order)
+and round to 4 places only in the emitted column.
 
 Exact math is built-in array expressions (``zip_with`` + ``aggregate``),
 computed in double, JVM-side — except the all-pairs near-dup verify
@@ -71,6 +80,7 @@ N_QUERIES = 10  # vec_id < 10 form the query set
 NEAR_DUP_COS = 0.35  # max pairwise cos in the fixture blobs is ~0.48
 NPROBE = 2
 IVF_K = 8
+_TOPK_SCHEMA = "query_id long, neighbor_id long, sim double, rank int"
 #: hard ceiling for the exact (driver-materialized) near-dup verify form —
 #: above this the quadratic GEMM and the toPandas() both stop being "small
 #: by contract"; callers must switch to ``near_dup_auto`` / LSH.  This is
@@ -174,34 +184,47 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — the corpus streams through once, no shuffle until the final
     per-query top-k (which AQE keeps tiny).  This is the correct shape
     at 100 TB whenever |queries| ≪ |corpus|."""
-    return _exact_topk_rounded(_corpus(spark, sf_dir))
+    return _exact_topk(_corpus(spark, sf_dir))
 
 
-def _exact_topk_rounded(corpus: DataFrame) -> DataFrame:
+def _exact_topk(corpus: DataFrame, raw: bool = False) -> DataFrame:
     """``cosine_topk``'s exact body over an arbitrary (vec_id, emb)
     frame — factored so the serving contracts that already hold the
-    PINNED corpus reuse it for their exact-baseline leg instead of
-    re-scanning parquet and re-running the cast lineage (guide §2.4;
-    the ``_ivf_fresh_topk`` pattern).  Expressions are identical to the
-    pre-factoring ``cosine_topk`` — same rounding, same tie-breaks."""
+    PINNED (or rotated) corpus reuse it for their exact-baseline leg
+    instead of re-scanning parquet and re-running the cast lineage
+    (guide §2.4).  The renaming projection collapses into the join's,
+    so the plan is the pre-factoring ``cosine_topk``'s."""
     queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    sims = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        # one parsed string instead of the Column-API cosine tree
-        # (same expressions — see _cosine_sql)
-        .selectExpr(
-            "query_id",
-            "vec_id AS neighbor_id",
-            f"{_cosine_sql('q_emb', 'emb')} AS sim",
-        )
+    cand = corpus.join(
+        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
+    ).selectExpr("query_id", "vec_id AS neighbor_id", "q_emb AS emb_q", "emb AS emb_n")
+    return _exact_rerank_topk(cand, raw)
+
+
+def _exact_rerank_topk(cand: DataFrame, raw: bool = False) -> DataFrame:
+    """THE exact-rank step of every top-k here: the exact cosine of each
+    (query_id, neighbor_id, emb_q, emb_n) candidate (one parsed string —
+    see _cosine_sql), ranked by the RAW double descending, then
+    neighbor_id — the order of ``cosine_topk``'s DuckDB oracle — and cut
+    to TOP_K.  The sim is rounded to 4 places only in the emitted
+    column: ranking on the rounded value would break a 4-place tie by
+    id even where the higher id has the larger cosine.  ``raw`` keeps
+    the unrounded sim for comparisons finer than the rounding."""
+    sims = cand.selectExpr(
+        "query_id", "neighbor_id", f"{_cosine_sql('emb_q', 'emb_n')} AS sim"
     )
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("sim") if raw else F.round("sim", 4).alias("sim"),
+            "rank",
+        )
     )
 
 
@@ -335,19 +358,11 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_emb = corpus.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("emb_q")
     )
-    pairs = (
-        cand.join(corpus.select(F.col("vec_id").alias("neighbor_id"), "emb"), "neighbor_id")
-        .join(F.broadcast(q_emb), "query_id")
-        .select(
-            "query_id",
+    return _exact_rerank_topk(
+        cand.join(
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("emb_n")),
             "neighbor_id",
-            F.round(cosine(F.col("emb_q"), F.col("emb")), 4).alias("sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        ).join(F.broadcast(q_emb), "query_id")
     )
 
 
@@ -549,53 +564,12 @@ def near_dup_auto(
 # ---------------------------------------------------------------------------
 
 
-def _cent_frame(spark: SparkSession, centers) -> DataFrame:
-    """(centroid, c_emb) frame from the KB-sized centroid list/matrix
-    (numpy rows or MLlib ``clusterCenters()``) — the broadcast side of
-    every IVF probe/argmin join; one definition so the call sites
-    cannot drift."""
-    return local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "centroid INT, c_emb ARRAY<DOUBLE>",
-    )
-
-
-def _ivf_flat_serve(
-    assigned: DataFrame, cent_df: DataFrame, nprobe: int = NPROBE
-) -> DataFrame:
-    """The IVF-Flat serving shape shared by ``ann_ivf_topk`` (fresh fit),
-    ``ivf_staleness_audit`` (frozen fit) and ``ivf_recall_curve``
-    (swept ``nprobe``): probe each query's ``nprobe`` nearest centroids
-    (broadcast crossJoin — |queries| × k rows), rank exactly within the
-    probed cells.  One definition so the stale-vs-fresh retention
-    comparison can never be skewed by the two paths drifting apart."""
-    queries = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    qc = queries.crossJoin(F.broadcast(cent_df)).selectExpr(
-        "query_id", "q_emb", "centroid",
-        f"{_cosine_sql('q_emb', 'c_emb')} AS c_sim",
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("c_sim"), "centroid")
-    probe = (
-        qc.withColumn("p", F.row_number().over(wq))
-        .filter(F.col("p") <= nprobe)
-        .select("query_id", "q_emb", "centroid")
-    )
-    cands = assigned.join(F.broadcast(probe), "centroid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sims = cands.selectExpr(
-        "query_id",
-        "vec_id AS neighbor_id",
-        f"{_cosine_sql('q_emb', 'emb')} AS sim",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+def _query_rows(corpus: DataFrame, n_queries: int = N_QUERIES) -> list:
+    """The query set (vec_id < ``n_queries``) as sorted driver-side
+    (vec_id, emb) rows — the request batch every serve takes; a capped
+    fetch (``n_queries`` rows by contract)."""
+    return sorted(
+        corpus.filter(F.col("vec_id") < n_queries).select("vec_id", "emb").collect()
     )
 
 
@@ -622,27 +596,24 @@ def _ivf_fit(
     return assigned.select("vec_id", "emb", "centroid"), centers
 
 
-def _ivf_fresh_topk(corpus: DataFrame) -> DataFrame:
-    """Fresh IVF fit + IVF-Flat serve over an already-loaded corpus —
-    the body of ``ann_ivf_topk``, factored so callers that ALREADY hold
-    the (pinned) corpus (``ivf_staleness_audit``'s fresh-baseline leg)
-    don't re-scan parquet and re-run the cast lineage for the same fit."""
-    assigned, centers = _ivf_fit(corpus)
-    # assigned feeds the query slice AND the candidate join inside
-    # _ivf_flat_serve — pin so the transform runs once
-    return _ivf_flat_serve(pin(assigned), _cent_frame(corpus.sparkSession, centers))
-
-
 @register("ann_ivf_topk", tags=("similarity", "ivf"))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat: KMeans(k=8, seed=42) coarse centroids; each query
-    probes its NPROBE nearest centroids and ranks exactly within them.
+    probes its NPROBE nearest centroids and ranks exactly within them —
+    the ``"ivf"`` kind's ``_serve`` over the in-memory fitted frame.
 
     At scale the corpus is written partitioned by ``centroid`` so a
-    query reads nprobe/k of the data (partition pruning); here the
-    pruning happens via the broadcast equi-join on centroid id.
+    query reads nprobe/k of the data (partition pruning, the artifact
+    form of ``ivf_partition_pruning``); here the pruning happens via the
+    broadcast equi-join on centroid id.  No query ids (an empty corpus
+    included) is an empty top-k, with no fit.
     """
-    return _ivf_fresh_topk(_corpus(spark, sf_dir))
+    corpus = pin(_corpus(spark, sf_dir))
+    qrows = _query_rows(corpus)
+    if not qrows:
+        return local_df(spark, [], _TOPK_SCHEMA)
+    assigned, centers = _ivf_fit(corpus)
+    return _serve(spark, assigned, "ivf", {"center": centers}, qrows)
 
 
 # ---------------------------------------------------------------------------
@@ -801,76 +772,16 @@ def assign_capped_clusters(
 # ---------------------------------------------------------------------------
 
 
-def write_ivf_index(corpus: DataFrame, path: str) -> "np.ndarray":
-    """Materialize the IVF-Flat layout: assign each vector to its IVF
-    centroid and write parquet PARTITIONED BY centroid — at scale a
-    query probing ``nprobe`` centroids reads ``nprobe/IVF_K`` of the
-    data via partition pruning, which is the whole point of IVF.
-    Returns the centroid matrix (the probe index)."""
-    assigned, centers = _ivf_fit(corpus)
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-    return centers
-
-
-def read_ivf_probe(spark: SparkSession, path: str, probe_centroids: list[int]) -> DataFrame:
-    """Read ONLY the probed partitions.  The isin filter on the
-    partition column compiles to PartitionFilters in the parquet scan
-    (asserted in tests/test_similarity.py) — no data files outside the
-    probed centroids are opened."""
-    return spark.read.parquet(path).filter(F.col("centroid").isin(probe_centroids))
-
-
 @register("ivf_partition_pruning", tags=("similarity", "ivf", "layout"))
 def ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end IVF with the REAL storage layout: build → write
-    partitioned by centroid → probe via partition-pruned read → exact
-    rank within the probed partitions.  Rows-only check (KMeans is not
-    SQL-expressible); recall vs exact top-k is pytest-gated."""
-    corpus = _corpus(spark, sf_dir)
-    if corpus.isEmpty():  # KMeans cannot fit on zero rows (empty-day path)
-        return local_df(spark, 
-            [], "query_id LONG, neighbor_id LONG, sim DOUBLE, rank INT"
-        )
-    path = _warehouse_path("ivf_index", sf_dir)
-    cent_df = _cent_frame(spark, write_ivf_index(corpus, path))
-    queries = corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    # nprobe nearest centroids per query: tiny (|q| x k) — driver-side,
-    # exactly how an IVF index serves (the centroid table IS the index)
-    probe = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .select(
-            "query_id", "q_emb", "centroid",
-            cosine(F.col("q_emb"), F.col("c_emb")).alias("c_sim"),
-        )
-        .withColumn(
-            "p",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.desc("c_sim"), "centroid")
-            ),
-        )
-        .filter(F.col("p") <= NPROBE)
-        .select("query_id", "q_emb", "centroid")
-    )
-    probe_rows = probe.collect()  # tiny: N_QUERIES x NPROBE rows
-    cents = sorted({r["centroid"] for r in probe_rows})
-
-    pruned = read_ivf_probe(spark, path, cents)
-    probe_df = local_df(spark, probe_rows, probe.schema)
-    cands = pruned.join(F.broadcast(probe_df), "centroid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sims = cands.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine(F.col("q_emb"), F.col("emb")).alias("sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+    """End-to-end IVF-Flat with the REAL storage layout, for the first
+    three query ids: build the ``"ivf"`` index (the corpus written
+    partitioned by centroid) → probe → partition-pruned read of the
+    probed cells only → exact rank within them (``_build_serve``).
+    Rows-only check (KMeans is not SQL-expressible); recall vs exact
+    top-k is pytest-gated."""
+    return _build_serve(
+        spark, _corpus(spark, sf_dir), _warehouse_path("ivf_index", sf_dir), "ivf", 3
     )
 
 
@@ -1604,20 +1515,6 @@ def _adc_candidate_cut(scored: DataFrame, depth: int = PQ_RERANK) -> DataFrame:
     )
 
 
-def _exact_rerank_topk(cand: DataFrame) -> DataFrame:
-    """Exact-cosine re-rank of a candidate frame carrying (query_id,
-    neighbor_id, emb_q, emb_n) down to TOP_K."""
-    rer = cand.selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"round({_cosine_sql('emb_q', 'emb_n')}, 4) AS sim",
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return rer.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= TOP_K
-    )
-
-
 def ann_pq_topk_frame(
     spark: SparkSession, corpus: DataFrame, id_col: str = "vec_id", emb_col: str = "emb"
 ) -> DataFrame:
@@ -1633,8 +1530,8 @@ def ann_pq_topk_frame(
     per-query group limit; only the PQ_RERANK x Q
     candidate rows join back for exact re-rank.  At 100 TB the codes
     table (M bytes/vector vs 4·dim) is the stored index — encode once,
-    serve many — and pairs naturally with the IVF layout
-    (``write_ivf_index``) for partition-pruned PQ scans."""
+    serve many — and pairs with the IVF layout (``ivfpq``) for
+    partition-pruned PQ scans."""
     corpus = pin(corpus)
     qrows = sorted(
         corpus.filter(F.col(id_col) < N_QUERIES).select(id_col, emb_col).collect()
@@ -1642,9 +1539,7 @@ def ann_pq_topk_frame(
     if not qrows:
         # empty corpus / no queries: nothing to train or serve (KMeans
         # cannot fit on zero rows — same guard as the ANN contracts)
-        return local_df(spark, 
-            [], "query_id long, neighbor_id long, sim double, rank int"
-        )
+        return local_df(spark, [], _TOPK_SCHEMA)
     books = _pq_codebooks(corpus, emb_col=emb_col, id_col=id_col)
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
@@ -1707,52 +1602,6 @@ def pq_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_RECALL_MIN_PCT = 30
 
 
-def ivfpq_topk_frame(spark: SparkSession, corpus: DataFrame, path: str) -> DataFrame:
-    """IVF-PQ serving (Jegou et al. 2011; the faiss IVFPQ + refine
-    pipeline, public):
-
-    - WRITE: assign each vector to its KMeans(IVF_K) centroid, PQ-encode
-      the RESIDUAL emb − center[centroid] (faiss ``by_residual=true``,
-      the library default: residuals concentrate near the origin, so
-      the codebooks spend their resolution on within-cell displacement
-      instead of re-describing the coarse structure — measured recall@5
-      now sits AT the nprobe coverage cap: 0.52/0.52 at sf0.01 and
-      0.60/0.62 at sf0.1, vs 0.54 = 87% of cap raw), and write (vec_id,
-      codes) parquet PARTITIONED BY centroid.  That table IS the index:
-      PQ_M small ints per vector instead of 4·dim bytes, clustered so a
-      probe reads ``nprobe/IVF_K`` of the files via partition pruning.
-    - SERVE: the centroid matrix is the driver-resident probe index
-      (IVF_K × dim floats — KB); each query picks its NPROBE nearest
-      cells by one tiny GEMM, the probed cells are read back partition-
-      pruned (PartitionFilters — plan-asserted in tests), residual-ADC
-      scores the codes (``_adc_explode`` with centers: the shared partial-
-      dot maps plus one (centroid, code) cross-dot lookup per subspace —
-      the exact price of by_residual) with a per-query allowed-cell
-      literal map filtering cross-probe rows, and the deep candidate
-      list joins back to the flat vector store BY ID (broadcast of the
-      Q×PQ_RERANK candidate side) for exact re-rank.
-
-    At 100 TB this is the serving layout the module ladder points at:
-    scan cost per query = nprobe/IVF_K of an M-bytes-per-vector table,
-    fit cost sample-bounded (``_pq_codebooks``), re-rank cost
-    output-sized.  Reference scope: pgvector column only
-    (ollama_consumer.py:234); this is north-star M6's scale path.
-
-    Split as ``ivfpq_build_index`` (corpus-sized, once) + ``ivfpq_serve``
-    (per query batch, pruned) so the scale sweep can grade the two
-    costs separately — serving never scans the corpus (r8)."""
-    corpus = pin(corpus)
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
-    if not qrows:
-        return local_df(spark, 
-            [], "query_id long, neighbor_id long, sim double, rank int"
-        )
-    books, centers = ivfpq_build_index(spark, corpus, path)
-    return ivfpq_serve(spark, path, books, centers, qrows)
-
-
 def ivfpq_build_index(
     spark: SparkSession, corpus: DataFrame, path: str
 ) -> tuple[list, "np.ndarray"]:
@@ -1804,17 +1653,25 @@ def _serve_expected(idx: DataFrame, centers: "np.ndarray", qrows: list) -> int:
 
 
 def _probe_cells(
-    centers: "np.ndarray", Q: "np.ndarray", qids: list
+    centers: "np.ndarray", Q: "np.ndarray", qids: list, nprobe: int = NPROBE
 ) -> dict[int, list[int]]:
-    """Per-query NPROBE nearest coarse cells by centroid cosine — the
-    driver-side probe step (one tiny GEMM against the KB matrix),
-    shared by serving and by the append contract's coverage
-    expectation."""
-    qnorm = np.sqrt((Q * Q).sum(1))
-    cnorm = np.sqrt((centers * centers).sum(1))
-    csim = (Q @ centers.T) / (qnorm[:, None] * cnorm[None, :])
+    """Per-query ``nprobe`` nearest coarse cells by centroid cosine,
+    descending, ties to the lower centroid id — THE probe of every IVF
+    kind (one tiny driver GEMM against the KB matrix), shared by serving
+    and by the append contract's coverage expectation.  The GEMM
+    accumulates dimension by dimension in order (the
+    ``embedding_near_dup`` recipe), so each cosine is bit-identical to
+    the JVM fold of ``_cosine_sql`` and the order is a Spark window's
+    over (c_sim DESC, centroid)."""
+    dots = np.zeros((len(Q), len(centers)))
+    qn2, cn2 = np.zeros(len(Q)), np.zeros(len(centers))
+    for i in range(Q.shape[1]):
+        dots = dots + Q[:, i][:, None] * centers[:, i][None, :]
+        qn2 = qn2 + Q[:, i] * Q[:, i]
+        cn2 = cn2 + centers[:, i] * centers[:, i]
+    csim = dots / (np.sqrt(qn2)[:, None] * np.sqrt(cn2)[None, :])
     return {
-        q: [int(c) for c in np.argsort(-csim[i])[:NPROBE]]
+        q: [int(c) for c in np.argsort(-csim[i], kind="stable")[:nprobe]]
         for i, q in enumerate(qids)
     }
 
@@ -1837,12 +1694,29 @@ def _ivfpq_path(sf_dir: str) -> str:
 
 @register("ivfpq_index_topk", tags=("similarity", "ivf", "pq", "layout"))
 def ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered IVF-PQ end-to-end (see ``ivfpq_topk_frame``): build →
-    write the centroid-partitioned codes index → probe partition-pruned
-    → ADC → exact refine.  Rows-only driver check (KMeans is not
+    """Registered IVF-PQ end-to-end (Jegou et al. 2011; the faiss IVFPQ
+    + refine pipeline, public) through ``_build_serve``:
+
+    - WRITE (``ivfpq_build_index``): assign each vector to its
+      KMeans(IVF_K) centroid, PQ-encode the RESIDUAL emb − center
+      (faiss ``by_residual=true``: residuals concentrate near the
+      origin, so the codebooks spend their resolution on within-cell
+      displacement — measured recall@5 sits AT the nprobe coverage cap,
+      0.52/0.52 at sf0.01 and 0.60/0.62 at sf0.1, vs 0.54 = 87% of cap
+      raw) and write (vec_id, codes) PARTITIONED BY centroid: PQ_M small
+      ints per vector instead of 4·dim bytes, clustered so a probe reads
+      ``nprobe/IVF_K`` of the files.
+    - SERVE (``ivfpq_serve``): the KB centroid matrix is the driver-
+      resident probe index; the probed cells are read back partition-
+      pruned, residual ADC scores the codes, and the deep candidate list
+      joins back to the flat store BY ID for the exact re-rank.
+
+    At 100 TB: scan cost per query = nprobe/IVF_K of an M-bytes-per-
+    vector table, fit cost sample-bounded (``_pq_codebooks``), re-rank
+    cost output-sized.  Rows-only driver check (KMeans is not
     SQL-expressible); the recall floor is the oracle-bearing
     ``ivfpq_recall_contract``."""
-    return ivfpq_topk_frame(spark, _corpus(spark, sf_dir), _ivfpq_path(sf_dir))
+    return _build_serve(spark, _corpus(spark, sf_dir), _ivfpq_path(sf_dir), "ivfpq")
 
 
 #: residual-encoding retention: IVF-PQ must keep at least this share
@@ -1887,56 +1761,38 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     retains >= IVFPQ_RETENTION_MIN_PCT of flat IVF's hits on the same
     nprobe/IVF_K probes, so quantization loss is certified ~zero
     independent of the embedding draw (see the constant's ladder)."""
-    # ONE pinned corpus + ONE guard aggregate (total rows, query-slice
-    # rows) instead of three fresh parquet scans — the old shape issued
-    # a fresh _corpus scan for each isEmpty() guard plus one more inside
-    # cosine_topk / ivfpq_index_topk (ADVICE r13; guide §2.4).  The
-    # aggregate also materializes the pin before anything forks on it.
+    # ONE pinned corpus instead of three fresh parquet scans (ADVICE
+    # r13; guide §2.4); the query-slice fetch also materializes the pin
+    # before anything forks on it
     corpus = pin(_corpus(spark, sf_dir))
-    g = corpus.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col("vec_id") < N_QUERIES, True)).alias("nq"),
-    ).first()
-    if not g.n:
+    qrows = _query_rows(corpus)
+    if not qrows:
+        # no query ids (an empty corpus included): the exact top-k is
+        # empty, every hit count is 0 and both floors hold vacuously
+        # (0 >= 0) — the oracle's row
         return local_df(spark,
             [(0, 0, None, True, True)],
             "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
             " recall_ok boolean, retention_ok boolean",
         )
-    # exact baseline over the SAME pinned corpus (expressions identical
-    # to cosine_topk — it IS _exact_topk_rounded over a fresh scan)
-    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
+    # exact baseline over the SAME pinned corpus (cosine_topk's body)
+    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
     path = _ivfpq_path(sf_dir)
     # the exact-baseline materialization is fit-independent — overlap it
     # with the eager index build (guide §2.6, VERDICT r13 item 1) so the
     # exact pass hides behind the KMeans fit + artifact writes
     pq_frame, _ = run_parallel(
-        lambda: ivfpq_topk_frame(spark, corpus, path),  # builds the artifact
+        lambda: _build_serve(spark, corpus, path, "ivfpq"),  # builds the artifact
         lambda: exact.count(),
     )
     pq_hits = pq_frame.select("query_id", "neighbor_id").join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
-    # flat-IVF retention baseline served from the index's OWN flat store
-    # and persisted centers — ann_ivf_topk here re-fit the identical
-    # KMeans (same corpus, k, seed) and re-scanned the corpus for
-    # nothing (guide §2.4; the ivf_sq8_serve_contract move).  Same
-    # assignment (the flat store IS the fit's assignment, doubles
-    # roundtrip parquet bit-exactly), same serve path, identical hits.
-    if not g.nq:
-        # rows but no vec_id < N_QUERIES: ivfpq_topk_frame early-returns
-        # WITHOUT building the artifact (KMeans on zero queries has
-        # nothing to serve), so there is no meta/flat to read — and no
-        # baseline is owed: the exact top-k is empty, every hit count is
-        # 0, and both floors hold vacuously (0 >= 0), matching the
-        # oracle's literal TRUEs.
-        ivf = local_df(spark, [], "query_id long, neighbor_id long")
-    else:
-        _, centers = ivfpq_load_meta(spark, path)
-        ivf = _ivf_flat_serve(
-            spark.read.parquet(path + "_flat").select("vec_id", "emb", "centroid"),
-            _cent_frame(spark, centers),
-        ).select("query_id", "neighbor_id")
+    # flat-IVF retention baseline: the "ivf" kind served from the index's
+    # OWN flat store (partition-pruned) and persisted centers — no re-fit
+    # of the identical KMeans, no corpus re-scan (guide §2.4).  Same
+    # assignment, same probe, identical hits.
+    ivf = _serve(spark, path, "ivf", _read_meta(spark, path), qrows)
     ivf_hits = ivf.join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
@@ -2008,9 +1864,7 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the contract — the cross-engine twin of
     tests/test_similarity.py::test_adc_matches_numpy_reference."""
     corpus = pin(_corpus(spark, sf_dir))
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
+    qrows = _query_rows(corpus)
     if not qrows:
         return local_df(spark, 
             [(0, True)], "n_scored long, paths_identical boolean"
@@ -2157,9 +2011,7 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.forall("codes", lambda c: (c >= 0) & (c < PQ_K))
         ).alias("ok")
     ).collect()[0].ok
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
+    qrows = _query_rows(corpus)
     serve_rows = ivfpq_serve(spark, path, books, centers, qrows).count()
     expected = _serve_expected(idx, centers, qrows)
     return local_df(spark, 
@@ -2215,9 +2067,7 @@ def ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle at all (pgvector column writes, ollama_consumer.py:234).
     """
     corpus = pin(_corpus(spark, sf_dir))
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
+    qrows = _query_rows(corpus)
     schema = "n_queries long, state_roundtrip_ok boolean, serve_complete boolean"
     if not qrows:
         return local_df(spark, [(0, True, True)], schema)
@@ -2491,28 +2341,6 @@ def _rotate_embeddings(R: "np.ndarray"):
     return rot
 
 
-def _exact_topk_frame(corpus: DataFrame) -> DataFrame:
-    """Brute-force cosine top-k over an arbitrary (vec_id, emb) frame —
-    the cosine_topk shape (broadcast queries, one corpus pass, one
-    per-query window), reusable for transformed corpora."""
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    sims = corpus.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine(F.col("q_emb"), F.col("emb")).alias("sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim")
-    )
-
-
 #: Benign boundary band for rotation-preservation checks: an orthogonal
 #: rotation preserves inner products only up to float round-off
 #: (~1e-15/term, d=64 → well under 1e-12 per cosine), so a rank-K/K+1
@@ -2596,16 +2424,18 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     R = _opq_fit(_fit_sample(corpus))[0]
     rotated = pin(corpus.select("vec_id", _rotate_embeddings(R)(F.col("emb")).alias("emb")))
 
-    exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
-    exact_rot = _exact_topk_frame(rotated)
+    # both sides of the tie band at RAW precision: a rounded kth sim
+    # would sit up to 5e-5 from a raw boundary sim and never inside
+    # ROTATION_TIE_EPS.  The facts and hits read the rounded sims, the
+    # precision the oracle emits.
+    exact_raw = pin(_exact_topk(corpus, raw=True))
+    exact = exact_raw.select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"))
     # set equality per query == symmetric difference is empty (both
     # sides are exactly N_QUERIES * TOP_K rows by construction), with
     # sub-round-off boundary pairs excluded (see _rotation_mismatches).
-    mismatches = _rotation_mismatches(exact, exact_rot)
-    served = ivfpq_topk_frame(
-        spark, rotated, _ivfpq_path(sf_dir) + "_opq"
-    ).select("query_id", "neighbor_id")
-    hits = served.join(
+    mismatches = _rotation_mismatches(exact_raw, _exact_topk(rotated, raw=True))
+    served = _build_serve(spark, rotated, _ivfpq_path(sf_dir) + "_opq", "ivfpq")
+    hits = served.select("query_id", "neighbor_id").join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
     e = _exact_facts(exact)
@@ -2768,21 +2598,23 @@ def _sq8_dequant_sql(col: str = "codes") -> str:
 
 # ---------------------------------------------------------------------------
 # The IVF × codec index stack — the faiss ``index_factory`` composition
-# ("IVF8,PQ8x4", "SQ8", "IVF8,SQ8"; Jegou et al., TPAMI 2011): an
-# optional IVF coarse quantizer in front of a codec (PQ or affine SQ8,
-# both residual under IVF).  ONE build, ONE meta format, ONE serve and
-# ONE build → reload → serve round-trip body; the per-kind entry points
-# (``ivfpq_*``, ``sq8_*``, ``ivfsq8_*``) are thin calls into it.
+# ("IVF8,Flat", "IVF8,PQ8x4", "SQ8", "IVF8,SQ8"; Jegou et al., TPAMI
+# 2011): an optional IVF coarse quantizer in front of a codec (none, PQ
+# or affine SQ8, the last two residual under IVF).  ONE build, ONE meta
+# format, ONE serve and ONE build → reload → serve round-trip body; the
+# per-kind entry points (``ivfpq_*``, ``sq8_*``, ``ivfsq8_*``) are thin
+# calls into it.
 # ---------------------------------------------------------------------------
 
 
 class _Kind(NamedTuple):
     ivf: bool  # IVF coarse quantizer in front of the codec
-    codec: str  # "pq" or "sq8"
+    codec: str  # "flat" (exact within the probed cells), "pq" or "sq8"
     depth: int  # approximate candidates per query before the exact refine
 
 
 _KINDS = {
+    "ivf": _Kind(True, "flat", 0),
     "ivfpq": _Kind(True, "pq", PQ_RERANK),
     "sq8": _Kind(False, "sq8", SQ_RERANK),
     "ivfsq8": _Kind(True, "sq8", PQ_RERANK),
@@ -2818,8 +2650,10 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
     ``path_flat`` (vec_id, emb) read only for the refine candidates,
     and ``path_meta`` (``_write_meta``); under IVF the first two are
     partitioned by ``centroid`` so a probe reads nprobe/IVF_K of them.
-    Returns the driver-resident serving state: ``center`` (IVF) plus
-    ``book`` (PQ codebooks) or ``sq`` (the SQ8 vmin/vmax rows)."""
+    IVF-Flat has no codec: its ``_flat`` store, written concurrently
+    with the meta, is the whole index.  Returns the driver-resident
+    serving state: ``center`` (IVF) plus ``book`` (PQ codebooks) or
+    ``sq`` (the SQ8 vmin/vmax rows)."""
     k = _KINDS[kind]
     state: dict = {}
     frame, part, src = corpus, [], "emb"
@@ -2841,6 +2675,13 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
     def write(df: DataFrame, suffix: str = "") -> None:
         w = df.write.mode("overwrite")
         (w.partitionBy(*part) if part else w).parquet(path + suffix)
+
+    if k.codec == "flat":
+        run_parallel(
+            lambda: write(frame.select("vec_id", "emb", *part), "_flat"),
+            lambda: _write_meta(spark, path, state),
+        )
+        return state
 
     def train() -> dict:
         if k.codec == "pq":
@@ -2929,35 +2770,55 @@ def _sq8_adc(
 
 
 def _serve(
-    spark: SparkSession, path: str, kind: str, state: dict, qrows: list
+    spark: SparkSession,
+    path: "str | DataFrame",
+    kind: str,
+    state: dict,
+    qrows: list,
+    nprobe: int = NPROBE,
 ) -> DataFrame:
     """Serve one query batch (``qrows``: (id, embedding) pairs arriving
     with the request) from a built index: under IVF, probe each query's
-    NPROBE nearest cells (driver GEMM against the KB centroid matrix)
-    and read the codes and flat stores partition-pruned → the codec's
-    approximate score (ADC lookups or SQ8 dequant) → under IVF, keep
-    each query's rows from ITS probed cells → per-query cut to the
-    kind's depth → exact re-rank against the flat store, fetched for
-    the candidates only (the faiss ``...,Refine`` shape).  NOTHING here
-    scans the corpus beyond the probed cells, so serve cost scales with
-    the probed fraction, not the table."""
+    ``nprobe`` nearest cells (``_probe_cells``) and read the stores
+    partition-pruned.  IVF-Flat then ranks each query exactly against
+    the flat rows of ITS probed cells (a broadcast of the |Q|·nprobe
+    (query, cell) pairs).  A codec scores the codes approximately (ADC
+    lookups or SQ8 dequant) → under IVF, keeps each query's rows from
+    ITS probed cells → cuts per query to the kind's depth → re-ranks
+    exactly against the flat store, fetched for the candidates only
+    (the faiss ``...,Refine`` shape).  NOTHING here scans the corpus
+    beyond the probed cells, so serve cost scales with the probed
+    fraction, not the table.  IVF-Flat also serves an in-memory fitted
+    (vec_id, emb, centroid) frame passed as ``path``: the same serve,
+    with no artifact."""
     k = _KINDS[kind]
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
-    q_emb = local_df(spark,
-        [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
-        "query_id long, emb_q array<double>",
-    )
+    embs = [[float(x) for x in r[1]] for r in qrows]
     centers = state.get("center")
-    codes = spark.read.parquet(path)
-    flat = spark.read.parquet(path + "_flat")
+    flat = spark.read.parquet(path + "_flat") if isinstance(path, str) else path
     part = []
     if k.ivf:
-        probes = _probe_cells(centers, Q, qids)
+        probes = _probe_cells(centers, Q, qids, nprobe)
         cells = sorted({c for cs in probes.values() for c in cs})
-        codes = codes.filter(F.col("centroid").isin(cells))
         flat = flat.filter(F.col("centroid").isin(cells))
         part = ["centroid"]
+    if k.codec == "flat":
+        probe = local_df(
+            spark,
+            [(q, c, e) for q, e in zip(qids, embs) for c in probes[q]],
+            "query_id long, centroid int, emb_q array<double>",
+        )
+        cand = flat.join(F.broadcast(probe), "centroid").filter(
+            F.col("vec_id") != F.col("query_id")
+        )
+        return _exact_rerank_topk(
+            cand.selectExpr("query_id", "vec_id AS neighbor_id", "emb_q", "emb AS emb_n")
+        )
+    q_emb = local_df(spark, list(zip(qids, embs)), "query_id long, emb_q array<double>")
+    codes = spark.read.parquet(path)
+    if k.ivf:
+        codes = codes.filter(F.col("centroid").isin(cells))
     coded = codes.select(F.col("vec_id").alias("neighbor_id"), *part, "codes")
     if k.codec == "pq":
         qnorm = np.sqrt((Q * Q).sum(1))
@@ -2979,6 +2840,21 @@ def _serve(
         flat.join(F.broadcast(cand), "neighbor_id")  # candidates: Q×depth rows
         .join(F.broadcast(q_emb), "query_id")
     )
+
+
+def _build_serve(
+    spark: SparkSession, corpus: DataFrame, path: str, kind: str, n_queries: int = N_QUERIES
+) -> DataFrame:
+    """Build ``kind`` over ``corpus`` at ``path`` and serve its first
+    ``n_queries`` query ids from the artifact — the end-to-end form of
+    ``ivfpq_index_topk``, ``ivf_partition_pruning`` and the contracts
+    that grade a freshly built index.  No query ids (an empty corpus
+    included) is an empty top-k, with nothing built."""
+    corpus = pin(corpus)
+    qrows = _query_rows(corpus, n_queries)
+    if not qrows:
+        return local_df(spark, [], _TOPK_SCHEMA)
+    return _serve(spark, path, kind, _build_index(spark, corpus, path, kind), qrows)
 
 
 def _serve_roundtrip(
@@ -3145,9 +3021,7 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve scans codes only (broadcast queries) and touches the flat
     store for Q×SQ_RERANK candidate rows."""
     corpus = pin(_corpus(spark, sf_dir))
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
+    qrows = _query_rows(corpus)
     schema = (
         "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
         " state_roundtrip_ok boolean, recon_err_bounded boolean,"
@@ -3160,7 +3034,7 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.4; expressions identical to cosine_topk).  Its facts
     # aggregate is build-independent, so it runs CONCURRENTLY with the
     # build (guide §2.6, VERDICT r13 item 1)
-    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
+    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
     ok, _, (facts,), (recon,), (n_hits,) = _serve_roundtrip(
         spark, "sq8", corpus, path, qrows,
         beside_build=lambda: _exact_facts(exact).collect()[0],
@@ -3384,9 +3258,7 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     TERM.  Reference scope: same pgvector anchor as the rest of the
     serving family (ollama_consumer.py:234)."""
     corpus = pin(_corpus(spark, sf_dir))
-    qrows = sorted(
-        corpus.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
-    )
+    qrows = _query_rows(corpus)
     out_schema = (
         "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
         " state_roundtrip_ok boolean, recon_err_bounded boolean,"
@@ -3399,7 +3271,7 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes KMeans centers or the codec, so it runs CONCURRENTLY with
     # the build (guide §2.6, VERDICT r13 item 1): the exact-topk pass
     # hides behind the contract's one mandatory KMeans fit
-    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
+    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
 
     def recon(built: dict, _) -> bool:
         # residual recon bound: the residual frame named for
@@ -3413,16 +3285,13 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes = spark.read.parquet(path).select("vec_id", "codes")
         return _sq8_recon_ok(codes, resid, *built["sq"])
 
-    # flat-IVF retention baseline served from the index's OWN flat store
-    # and centers — a fresh ann_ivf_topk would re-fit the identical
-    # KMeans (same corpus, k, seed) and re-scan the corpus for nothing
-    # (guide §2.4).  Same assignment, same serve path, identical hits.
+    # flat-IVF retention baseline: the "ivf" kind served from the
+    # index's OWN flat store (partition-pruned) and centers — a fresh
+    # ann_ivf_topk would re-fit the identical KMeans (same corpus, k,
+    # seed) and re-scan the corpus for nothing (guide §2.4).  Same
+    # assignment, same probe, identical hits.
     def ivf_hits(_, built: dict) -> int:
-        served = _ivf_flat_serve(
-            spark.read.parquet(path + "_flat").select("vec_id", "emb", "centroid"),
-            _cent_frame(spark, built["center"]),
-        )
-        return _hits(served, exact)
+        return _hits(_serve(spark, path, "ivf", built, qrows), exact)
 
     ok, _, (facts,), (recon_ok,), (sq8_hits, ivf_n) = _serve_roundtrip(
         spark, "ivfsq8", corpus, path, qrows,
@@ -3571,11 +3440,21 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact baseline over the PINNED corpus (not a fresh parquet scan —
     # guide §2.4); materialize it (the facts aggregate) BEFORE forking
     # the legs so neither leg races to build the shared cache
-    exact = pin(_exact_topk_rounded(corpus).select("query_id", "neighbor_id", "sim"))
+    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
     facts = exact.agg(
         F.count("*").alias("n_exact_rows"),
         F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
     ).collect()[0]
+
+    qrows = _query_rows(corpus)
+
+    def serve_hits(assigned: DataFrame, centers: "np.ndarray") -> int:
+        # the "ivf" kind's serve over the in-memory fitted frame — the
+        # SAME serve for the frozen and the fresh fit, so retention
+        # compares serving paths, never code paths
+        if not qrows:  # no query ids: nothing served, nothing hit
+            return 0
+        return _hits(_serve(spark, assigned, "ivf", {"center": centers}, qrows), exact)
 
     def stale_leg() -> tuple[int, int]:
         # fit on the base, then the frozen-centroid assignment of the
@@ -3585,28 +3464,30 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned, centers = _ivf_fit(corpus.filter(F.col("vec_id") < cut), corpus)
         assigned = pin(assigned)
         assigned.count()  # materialize once before the two consumers fork
-        cent_df = _cent_frame(spark, centers)
 
         # delta_visible_ok, the FALSIFIABLE form: every DELTA row's stored
         # cell must equal the independent Euclidean argmin against the
         # FROZEN centroid list — the append-without-refit property itself,
         # not a row-count identity (model.transform is row-preserving, so
         # n_index == n is a tautology; a count check could never fail).
-        # serve on the frozen cells — the SAME _ivf_flat_serve as the
-        # fresh fit below, so retention compares serving paths, never
-        # code paths.  The two checks are independent consumers of the
-        # cached assignment — overlap them (guide §2.6).
+        # The check and the serve on the frozen cells are independent
+        # consumers of the cached assignment — overlap them (guide §2.6).
+        cent_df = local_df(
+            spark,
+            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+            "centroid INT, c_emb ARRAY<DOUBLE>",
+        )
         return run_parallel(
             lambda: argmin_assignment_mismatches(
                 assigned.filter(F.col("vec_id") >= cut), cent_df
             ),
-            lambda: _hits(_ivf_flat_serve(assigned, cent_df), exact),
+            lambda: serve_hits(assigned, centers),
         )
 
     def fresh_leg() -> int:
         # fresh baseline over the ALREADY-pinned corpus (ann_ivf_topk
         # would re-scan parquet and re-run the cast lineage)
-        return _hits(_ivf_fresh_topk(corpus), exact)
+        return serve_hits(*_ivf_fit(corpus))
 
     # the stale and fresh legs each run their own KMeans fit — the two
     # fits (and the n_base count) are independent job chains; running
@@ -3865,8 +3746,9 @@ IVF_CURVE_NPROBES: tuple[int, ...] = (1, 2, 4, IVF_K)
 )
 def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nprobe design table for IVF serving: one KMeans(IVF_K, seed
-    42) fit, then the SAME ``_ivf_flat_serve`` swept over nprobe in
-    {1, 2, 4, 8}, each row carrying the DuckDB-recomputed exact-side
+    42) fit, then the SAME ``"ivf"`` kind ``_serve`` over the fitted
+    frame swept over nprobe in {1, 2, 4, 8}, each row carrying the
+    DuckDB-recomputed exact-side
     facts plus three engine-asserted claims:
 
     - ``monotone_ok`` — recall is non-decreasing in nprobe.  This is a
@@ -3898,8 +3780,11 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         " hits_at_full long, monotone_ok boolean, recall_floor_ok boolean"
     )
     corpus = _corpus(spark, sf_dir)
-    if corpus.isEmpty():
-        return local_df(spark, 
+    qrows = _query_rows(corpus)
+    if not qrows:
+        # no query ids (an empty corpus included): the oracle's rows —
+        # an empty exact top-k, 0 hits at full probe, vacuous claims
+        return local_df(spark,
             [
                 (n, 0, 0, None, 0 if n == IVF_K else None, True, True)
                 for n in IVF_CURVE_NPROBES
@@ -3908,13 +3793,12 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     assigned, centers = _ivf_fit(corpus)
     assigned = pin(assigned)
-    cent_df = _cent_frame(spark, centers)
 
     exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
     exact_ids = exact.select("query_id", "neighbor_id")
     hit_rows = None
     for n in IVF_CURVE_NPROBES:
-        served = _ivf_flat_serve(assigned, cent_df, nprobe=n)
+        served = _serve(spark, assigned, "ivf", {"center": centers}, qrows, n)
         h = (
             served.select("query_id", "neighbor_id")
             .join(exact_ids, ["query_id", "neighbor_id"])

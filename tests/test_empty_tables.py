@@ -22,30 +22,12 @@ def empty_sf_dir(spark, tmp_path_factory) -> str:
     return str(d)
 
 
-# ML fits genuinely cannot run on empty input; these queries document
-# their empty behavior separately below.
-FIT_QUERIES = {"ann_ivf_topk", "ann_lsh_topk"}
-
-
 def test_all_queries_survive_empty_tables(spark, empty_sf_dir):
     failures = []
     for name, q in sorted(registry.load_all().items()):
-        if name in FIT_QUERIES:
-            continue
         try:
             rows = q.fn(spark, empty_sf_dir).collect()
             assert isinstance(rows, list)
         except Exception as e:  # noqa: BLE001 - collecting all failures
             failures.append((name, f"{type(e).__name__}: {e}"))
     assert not failures, failures
-
-
-def test_fit_queries_raise_cleanly_on_empty(spark, empty_sf_dir):
-    """KMeans/LSH fits on zero rows raise — acceptable, but they must
-    raise a clear error, not corrupt state."""
-    for name in sorted(FIT_QUERIES):
-        q = registry.load_all()[name]
-        try:
-            q.fn(spark, empty_sf_dir).collect()
-        except Exception:
-            continue  # expected: nothing to fit

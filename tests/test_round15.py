@@ -191,28 +191,21 @@ def test_ivf_full_probe_serve_equals_brute_force(spark, sf_dir):
     """At nprobe = IVF_K the IVF serve must be SET-identical to
     cosine_topk (ids, ranks, rounded sims) — the theorem behind
     hits_at_full, checked at row granularity, not just counts."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     from ssafynews_data_spark.operators.similarity import (
         _corpus,
-        _ivf_flat_serve,
+        _ivf_fit,
+        _query_rows,
+        _serve,
         cosine_topk,
     )
 
     corpus = _corpus(spark, sf_dir)
-    vecs = corpus.withColumn("vec", array_to_vector(F.col("emb")))
-    model = KMeans(k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid").fit(
-        vecs
-    )
-    assigned = model.transform(vecs).select("vec_id", "emb", "centroid")
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent_df = spark.createDataFrame(centroids, "centroid INT, c_emb ARRAY<DOUBLE>")
+    assigned, centers = _ivf_fit(corpus)
     served = {
         (r.query_id, r.neighbor_id, r.sim, r.rank)
-        for r in _ivf_flat_serve(assigned, cent_df, nprobe=IVF_K).collect()
+        for r in _serve(
+            spark, assigned, "ivf", {"center": centers}, _query_rows(corpus), IVF_K
+        ).collect()
     }
     exact = {
         (r.query_id, r.neighbor_id, r.sim, r.rank)

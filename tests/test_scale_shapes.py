@@ -118,15 +118,16 @@ def test_near_dup_auto_exact_vs_lsh_consistent(spark, sf_dir):
 
 
 def test_ivf_probe_reads_only_probed_partitions(spark, tmp_path):
-    """IVF write path: the probe's isin on the partition column must
-    reach the scan as PartitionFilters — a 1-centroid probe reads 1/k of
-    the index, which is the entire point of the layout."""
+    """IVF-Flat write path: the probe's isin on the partition column of
+    the ``"ivf"`` kind's ``_flat`` store must reach the scan as
+    PartitionFilters — a 1-centroid probe reads 1/k of the index, which
+    is the entire point of the layout."""
     sf = "/root/testdata/sf0.001"
     corpus = similarity._corpus(spark, sf)
     idx = str(tmp_path / "ivf_idx")
-    similarity.write_ivf_index(corpus, idx)
+    similarity._build_index(spark, corpus, idx, "ivf")
 
-    pruned = similarity.read_ivf_probe(spark, idx, [1])
+    pruned = spark.read.parquet(idx + "_flat").filter(F.col("centroid").isin([1]))
     plan = _plan(pruned)
     pf = plan.split("PartitionFilters: [")[1].split("]")[0]
     assert "centroid" in pf  # pruning predicate reached the scan

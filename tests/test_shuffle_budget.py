@@ -198,6 +198,17 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     # fwd-topk frame and the <=|Q|-row distinct/joins re-printed per
     # reader; denominator joins are broadcast (excluded by design)
     "margin_bitext_mine": 6,
+    # IVF-Flat on the index stack: the probe is a driver GEMM and the
+    # (query, cell) pairs a broadcast LocalRelation, so the only
+    # exchange is the exact-rank window (the Spark probe window made 2)
+    "ann_ivf_topk": 1,
+    # the same serve from the partition-pruned "ivf" artifact
+    "ivf_partition_pruning": 1,
+    # per nprobe point: the serve's window, the two sides of its hit
+    # join with the pinned exact top-k and that pin's window re-printed
+    # (4 x 4); plus the facts' distinct-count exchange and one more
+    # re-print (22 with a probe window per serve)
+    "ivf_recall_curve": 18,
 }
 
 

@@ -27,6 +27,28 @@ def test_exact_topk_shape(spark, sf_dir):
         assert all(r.neighbor_id != q for r in rs)
 
 
+def test_exact_rank_orders_by_raw_cosine(spark):
+    """The one exact-rank step ranks by the RAW cosine and rounds only
+    the emitted sim: two candidates that tie at 4 places on the rank-5/6
+    boundary keep the higher-cosine one, even when it has the higher id
+    (cosine_topk's DuckDB oracle orders by the raw double, then id)."""
+    import math
+
+    def at(c: float) -> list[float]:  # unit vector at cosine c to e0
+        return [c, math.sqrt(1.0 - c * c)]
+
+    sims = {1: 0.9, 2: 0.8, 3: 0.7, 4: 0.6, 5: 0.300001, 6: 0.300004}
+    cand = spark.createDataFrame(
+        [(0, n, [1.0, 0.0], at(c)) for n, c in sims.items()],
+        "query_id long, neighbor_id long, emb_q array<double>, emb_n array<double>",
+    )
+    rows = {r.rank: r for r in similarity._exact_rerank_topk(cand).collect()}
+    assert sorted(rows) == list(range(1, similarity.TOP_K + 1))
+    assert rows[5].neighbor_id == 6, "the larger raw cosine must win the 4-place tie"
+    assert rows[5].sim == 0.3
+    assert [rows[k].neighbor_id for k in range(1, 5)] == [1, 2, 3, 4]
+
+
 def test_lsh_recall_vs_exact(spark, sf_dir):
     exact = _topk_sets(similarity.cosine_topk(spark, sf_dir))
     approx = _topk_sets(similarity.ann_lsh_topk(spark, sf_dir))
@@ -83,7 +105,7 @@ def test_ivfpq_recall_and_pruned_read(spark, sf_dir, tmp_path):
 
     corpus = similarity._corpus(spark, sf_dir)
     path = str(tmp_path / "ivfpq")
-    out = similarity.ivfpq_topk_frame(spark, corpus, path)
+    out = similarity._build_serve(spark, corpus, path, "ivfpq")
     approx = _topk_sets(out)
     exact = _topk_sets(similarity.cosine_topk(spark, sf_dir))
     hits = sum(len(exact[q] & approx.get(q, set())) for q in exact)
@@ -484,8 +506,8 @@ def test_opq_ivfpq_contract_and_mismatch_detector_fires(spark, sf_dir, tmp_path)
     broken = corpus.select(
         "vec_id", similarity._rotate_embeddings(bad)(F.col("emb")).alias("emb")
     )
-    orig = similarity._exact_topk_frame(corpus)
-    rot = similarity._exact_topk_frame(broken)
+    orig = similarity._exact_topk(corpus, raw=True)
+    rot = similarity._exact_topk(broken, raw=True)
     # the PRODUCTION detector (boundary-banded symmetric difference)
     # must fire — a broken rotation perturbs sims at O(1), far beyond
     # the ROTATION_TIE_EPS exclusion band
@@ -493,6 +515,61 @@ def test_opq_ivfpq_contract_and_mismatch_detector_fires(spark, sf_dir, tmp_path)
     assert n_mismatch > 0, "projection must perturb exact top-k sets"
     # and the band must be a no-op on the identity "rotation"
     assert similarity._rotation_mismatches(orig, orig).count() == 0
+
+
+def test_opq_tie_band_compares_raw_sims(spark, tmp_path, monkeypatch):
+    """A rank-5/6 swap far below ROTATION_TIE_EPS is benign round-off,
+    and the contract's own wiring must see it so: a crafted corpus
+    whose rank-5/6 pair for query 0 is an exact tie (ids 20 and 21, the
+    same vector), "rotated" into a twin where id 21 is nudged ~7e-13
+    ahead.  Both sides of the tie band must be compared at raw
+    precision; a rounded kth sim sits ~4e-5 from the raw one and would
+    count the swap as a mismatch."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    d, c5 = 8, 0.523456
+    rng = np.random.RandomState(5)
+    X = np.zeros((48, d), dtype=np.float32)
+    X[:, 1:] = rng.standard_normal((48, d - 1))
+    X[:, 0] = 0.05 * rng.standard_normal(48)  # cos to e0 well below c5
+    X[0] = np.eye(d)[0]  # query 0
+    for j, c in enumerate((0.9, 0.8, 0.7, 0.6)):  # ranks 1-4 of query 0
+        X[30 + j] = 0.0
+        X[30 + j, 0], X[30 + j, 1 + j] = c, np.sqrt(1 - c * c)
+    X[20] = 0.0
+    X[20, 0], X[20, d - 1] = c5, np.sqrt(1 - c5 * c5)
+    X[21] = X[20]  # exact tie: id 20 ranks 5, id 21 ranks 6
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(48), pa.int64()),
+            "embedding": pa.array([list(v) for v in X], pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(48)], pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    twin = X[21].astype(float)
+    twin[0] += 1e-12
+    cos = lambda v: float(v[0] / np.sqrt(v @ v))  # noqa: E731
+    gap = cos(twin) - cos(X[20].astype(float))
+    assert 0 < gap < similarity.ROTATION_TIE_EPS
+
+    def nudge(_R):
+        return lambda emb: F.when(
+            F.col("vec_id") == 21, F.array(*[F.lit(float(x)) for x in twin])
+        ).otherwise(emb)
+
+    monkeypatch.setattr(similarity, "_rotate_embeddings", nudge)
+    row = similarity.opq_ivfpq_serve_contract(spark, str(tmp_path)).collect()[0]
+    assert row.rotation_preserves_exact_topk
+    top = {
+        r.rank: r.neighbor_id
+        for r in similarity.cosine_topk(spark, str(tmp_path)).collect()
+        if r.query_id == 0
+    }
+    assert top == {1: 30, 2: 31, 3: 32, 4: 33, 5: 20}  # the crafted order
 
 
 def test_sq8_codec_roundtrip_and_detector_fires(spark, sf_dir, tmp_path):
@@ -774,6 +851,45 @@ def test_arr_sql_rejects_non_finite(arr):
         render(arr)
 
 
+def test_probe_cells_orders_like_a_spark_window(spark, sf_dir):
+    """``_probe_cells``, the one IVF probe, orders cells exactly as a
+    Spark window over (c_sim DESC, centroid) of ``_cosine_sql`` — the
+    probe order the serve had before it moved to the driver: the same
+    doubles (in-order accumulation), and an exact tie (a duplicated
+    centroid) goes to the lower centroid id."""
+    import numpy as np
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    qrows = similarity._query_rows(similarity._corpus(spark, sf_dir))
+    if not qrows:
+        pytest.skip("no query ids")
+    Q = np.stack([np.asarray(r.emb, dtype=float) for r in qrows])
+    qids = [int(r.vec_id) for r in qrows]
+    C = np.random.RandomState(3).standard_normal((similarity.IVF_K, Q.shape[1]))
+    C[5] = C[2]  # exact tie for every query: cell 2 must precede cell 5
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(qids, Q)], "query_id long, q_emb array<double>"
+    )
+    c = spark.createDataFrame(
+        [(j, [float(x) for x in v]) for j, v in enumerate(C)], "centroid int, c_emb array<double>"
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("c_sim"), "centroid")
+    ranked = (
+        q.crossJoin(c)
+        .selectExpr("query_id", "centroid", f"{similarity._cosine_sql('q_emb', 'c_emb')} AS c_sim")
+        .withColumn("p", F.row_number().over(w))
+        .collect()
+    )
+    want: dict[int, list] = {}
+    for r in sorted(ranked, key=lambda r: (r.query_id, r.p)):
+        want.setdefault(r.query_id, []).append(r.centroid)
+    assert similarity._probe_cells(C, Q, qids, similarity.IVF_K) == want
+    assert similarity._probe_cells(C, Q, qids) == {
+        k: v[: similarity.NPROBE] for k, v in want.items()
+    }
+
+
 #: Spark jobs per warm ``*_serve`` request (ROADMAP direction 5, "budgets
 #: first").  Job counts repeat exactly, so they pin the serve path the way
 #: test_shuffle_budget pins shuffles: the query embeddings, the ADC lookup
@@ -816,3 +932,38 @@ def test_serve_job_budget(spark, sf_dir, tmp_path):
         plan = _plan(df)
         assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, (kind, plan)
     assert jobs == SERVE_JOB_BUDGET
+
+
+#: Spark jobs per warm IVF-Flat (``"ivf"`` kind) request served from its
+#: artifact — pinned beside SERVE_JOB_BUDGET (which reaches each kind by
+#: its public ``<kind>_*`` entry points; IVF-Flat has none).
+IVF_FLAT_SERVE_JOBS = 4
+
+
+def test_ivf_flat_serve_job_budget(spark, sf_dir, tmp_path):
+    """IVF-Flat through ``_build_index`` / ``_read_meta`` / ``_serve``:
+    the meta holds the centroids alone, a warm request runs exactly its
+    pinned jobs, the ``_flat`` scan prunes on ``centroid``
+    (PartitionFilters) and the plan scans no Python RDD."""
+    corpus = similarity.pin(similarity._corpus(spark, sf_dir))
+    qrows = similarity._query_rows(corpus)
+    if not qrows:
+        pytest.skip("no query ids")
+    path = str(tmp_path / "ivf")
+    similarity._build_index(spark, corpus, path, "ivf")
+    state = similarity._read_meta(spark, path)
+    assert set(state) == {"center"}
+    similarity._serve(spark, path, "ivf", state, qrows).collect()  # warm
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "serve_budget_ivf")
+    try:
+        df = similarity._serve(spark, path, "ivf", state, qrows)
+        assert len(df.collect()) == len(qrows) * similarity.TOP_K
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plan = _plan(df)
+    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert "centroid" in pf  # the probe reached the _flat scan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    assert len(sc.statusTracker().getJobIdsForGroup("serve_budget_ivf")) == IVF_FLAT_SERVE_JOBS
