@@ -20,8 +20,10 @@ ladder:
    ADC scores every (query, code) pair, so its cost is q·n map lookups
    regardless of codebook quality — linear in the corpus, pruned
    further only by pairing with the IVF layout;
-4. IVF-Flat — KMeans(seed 42) coarse quantizer, probe the ``NPROBE``
-   nearest centroids only and rank exactly within them: the ``"ivf"``
+4. IVF-Flat — a seeded k-means coarse quantizer (``_ivf_fit``, the ONE
+   coarse fit: numpy Lloyd's on a bounded driver sample, cells assigned
+   by one JVM argmin projection), probe the ``NPROBE`` nearest centroids
+   only and rank exactly within them: the ``"ivf"``
    kind of the index stack (item 6) with no codec, so its centroid-
    partitioned ``_flat`` store is the whole index and a query reads
    nprobe partitions (served from the artifact, or from an in-memory
@@ -560,7 +562,7 @@ def near_dup_auto(
 
 
 # ---------------------------------------------------------------------------
-# 4. IVF coarse-quantizer ANN (KMeans partitions + nprobe).
+# 4. IVF coarse-quantizer ANN (k-means cells + nprobe).
 # ---------------------------------------------------------------------------
 
 
@@ -574,33 +576,56 @@ def _query_rows(corpus: DataFrame, n_queries: int = N_QUERIES) -> list:
 
 
 def _ivf_fit(
-    fit_on: DataFrame, assign: DataFrame | None = None
+    fit_on: DataFrame, assign: DataFrame | None = None, k: int = IVF_K
 ) -> tuple[DataFrame, "np.ndarray"]:
-    """THE coarse-quantizer fit of every IVF index and audit:
-    KMeans(IVF_K, seed 42) on ``fit_on`` (vec_id, emb) exactly as given
-    — no repartition or coalesce, so the centers depend only on the
-    caller's frame — then the lazy (vec_id, emb, centroid) assignment of
-    ``assign`` (default ``fit_on``; the staleness audit fits on a prefix
-    and assigns the grown corpus) and the centroid matrix.  Callers pin
-    the assignment when it forks."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """THE coarse-quantizer fit of every IVF index, audit and cluster
+    step: seeded Lloyd's (``_np_kmeans``, MLlib's default 20 iterations)
+    on the bounded driver sample of ``fit_on`` (``_fit_sample``, by md5
+    of ``vec_id`` — so the centers never depend on row order), then the
+    lazy ``_ivf_assign`` of ``assign`` (default ``fit_on``; the
+    staleness audit fits a prefix and assigns the grown corpus),
+    returned with the k × dim centers.  An empty or non-finite sample
+    is a ValueError naming the fit.  Callers pin the assignment when it
+    forks."""
+    X = _fit_sample(fit_on)
+    what = f"k-means({k}) coarse fit"
+    if not len(X):
+        raise ValueError(f"{what}: no emb vectors to fit")
+    _check_finite(what, "emb", X, "k-means needs finite vectors")
+    centers = _np_kmeans(X, k, seed=42, iters=20)
+    return _ivf_assign(fit_on if assign is None else assign, centers), centers
 
-    def vecs(df: DataFrame) -> DataFrame:
-        return df.withColumn("vec", array_to_vector(F.col("emb")))
 
-    km = KMeans(k=IVF_K, seed=42, featuresCol="vec", predictionCol="centroid")
-    model = km.fit(vecs(fit_on))
-    centers = np.stack([np.asarray(c, dtype=float) for c in model.clusterCenters()])
-    assigned = model.transform(vecs(fit_on if assign is None else assign))
-    return assigned.select("vec_id", "emb", "centroid"), centers
+def _ivf_assign(df: DataFrame, centers: "np.ndarray") -> DataFrame:
+    """``df`` plus ``centroid`` INT, the nearest of ``centers`` by
+    squared Euclidean distance, in one JVM projection (no Python
+    worker; the centers ride as one broadcast row).  Each distance
+    folds in ``argmin_assignment_mismatches``' order, so the two agree
+    bit for bit; ties go to the lowest id, so a surplus center that
+    repeats an earlier one stays empty.  An ``emb`` that is NULL, holds
+    a NULL or is not ``centers``-dim makes every distance NULL and is a
+    runtime error, never a NULL cell.  Replaces any ``centroid``."""
+    carry = [f"`{c}`" for c in df.columns if c != "centroid"]
+    cent = local_df(df.sparkSession, [(centers.tolist(),)], "_cent array<array<double>>")
+    d2 = "aggregate(zip_with(emb, c, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"
+    bad = f"coarse assign: emb is NULL, holds a NULL or is not {centers.shape[1]}-dim"
+    return (
+        df.crossJoin(F.broadcast(cent))
+        .selectExpr(*carry, f"transform(_cent, c -> {d2}) AS _d2")
+        .selectExpr(
+            *carry,
+            "coalesce(CAST(array_position(_d2, array_min(_d2)) - 1 AS INT),"
+            f" raise_error('{bad}')) AS centroid",
+        )
+    )
 
 
 @register("ann_ivf_topk", tags=("similarity", "ivf"))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat: KMeans(k=8, seed=42) coarse centroids; each query
-    probes its NPROBE nearest centroids and ranks exactly within them —
-    the ``"ivf"`` kind's ``_serve`` over the in-memory fitted frame.
+    """IVF-Flat: k-means(IVF_K, seed 42) coarse centroids (``_ivf_fit``);
+    each query probes its NPROBE nearest centroids and ranks exactly
+    within them — the ``"ivf"`` kind's ``_serve`` over the in-memory
+    fitted frame.
 
     At scale the corpus is written partitioned by ``centroid`` so a
     query reads nprobe/k of the data (partition pruning, the artifact
@@ -623,16 +648,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_K = 8
 SEMDEDUP_EPS = NEAR_DUP_COS
-SEMDEDUP_MAXITER = 5
 
 
 @register("semantic_dedup", tags=("dedup", "similarity", "semdedup"), bench=True)
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): KMeans the
-    embeddings into coarse clusters, then drop any vector that has a
-    smaller-id neighbor in the SAME cluster with cosine >= eps (greedy
-    keep-lowest-id).  Returns (vec_id, centroid) of the keepers plus the
-    per-cluster drop count.
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means the
+    embeddings into coarse clusters (``_ivf_fit``), then drop any vector
+    that has a smaller-id neighbor in the SAME cluster with cosine >= eps
+    (greedy keep-lowest-id).  Returns (vec_id, centroid) of the keepers
+    plus the per-cluster drop count.
 
     100 TB shape: the pairwise step is confined within clusters — cost
     Σ|cluster|² instead of |corpus|², and each cluster's pairs build
@@ -642,32 +666,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     salting the within-cluster join (docs/SCALE.md).  Rows-only check
     (KMeans isn't SQL-expressible); semantics vs the exact pair set are
     pytest-gated (tests/test_similarity.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    import numpy as np
-    import pandas as pd
-
     corpus = _corpus(spark, sf_dir)
     if corpus.isEmpty():
         return local_df(spark, [], "vec_id LONG, centroid INT, n_dropped_in_cluster LONG")
-    vecs = pin(corpus.withColumn("vec", array_to_vector(F.col("emb"))))
-    # right-size the iterative fit: ~20 KMeans jobs each pay per-task
-    # scheduling overhead; ~10k rows per task, clamped to cluster width
-    # (no-op at real scale).
-    n = vecs.count()
-    width = spark.sparkContext.defaultParallelism
-    parts = max(1, min(width, n // 10_000 + 1))
-    if parts < vecs.rdd.getNumPartitions():
-        vecs = pin(vecs.coalesce(parts))
-    # a coarse quantizer only needs rough partitions — 5 Lloyd
-    # iterations, not the default 20 (dedup quality is governed by the
-    # pairwise verify, not centroid polish; halves the fit wall-time).
-    km = KMeans(
-        k=SEMDEDUP_K, seed=42, maxIter=SEMDEDUP_MAXITER,
-        featuresCol="vec", predictionCol="centroid",
-    )
-    assigned = km.fit(vecs).transform(vecs).select("vec_id", "emb", "centroid")
+    assigned, _ = _ivf_fit(corpus, k=SEMDEDUP_K)
 
     def keepers_in_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         # dense GEMM within one cluster — dimension-by-dimension IN-ORDER
@@ -718,9 +720,7 @@ def assign_capped_clusters(
     corpus: DataFrame,
     k: int = SEMDEDUP_K,
     cap: int = 10_000,
-    seed: int = 42,
     max_depth: int = 3,
-    emb_col: str = "emb",
 ) -> DataFrame:
     """Cluster assignment with a SIZE CAP — the giant-cluster mitigation
     ``semantic_dedup`` documents: any cluster larger than ``cap`` is
@@ -729,24 +729,19 @@ def assign_capped_clusters(
     group no matter how skewed the embedding space is.
 
     Returns (input columns…, cluster STRING) where cluster is the
-    hierarchy path ("3", "3/1", …) — stable keys for groupBy.  The
-    driver loop runs one KMeans fit per oversized cluster per level
-    (cheap: fits see only that cluster's rows); splitting CAN separate a
+    hierarchy path ("3", "3/1", …) — stable keys for groupBy (an input
+    ``centroid`` column is not kept).  The driver loop runs one
+    ``_ivf_fit`` per oversized cluster per level (one bounded sample
+    collect each, ordered by the md5 of ``vec_id``, which ``corpus``
+    must carry); splitting CAN separate a
     borderline pair — acceptable because SemDeDup is already
     cluster-approximate by construction.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
     def _assign(df: DataFrame, kk: int, prefix: str) -> DataFrame:
-        vecs = df.withColumn("_v", array_to_vector(F.col(emb_col)))
-        km = KMeans(
-            k=kk, seed=seed, maxIter=SEMDEDUP_MAXITER,
-            featuresCol="_v", predictionCol="_c",
-        )
-        out = km.fit(vecs).transform(vecs)
-        label = F.concat(F.lit(prefix), F.col("_c").cast("string"))
-        return out.withColumn("cluster", label).drop("_v", "_c")
+        out, _ = _ivf_fit(df, k=kk)
+        label = F.concat(F.lit(prefix), F.col("centroid").cast("string"))
+        return out.withColumn("cluster", label).drop("centroid")
 
     result = pin(_assign(corpus, k, ""))
     for _ in range(max_depth):
@@ -1904,25 +1899,6 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assign_centroids(centers: "np.ndarray"):
-    """Arrow UDF: embedding -> nearest coarse-cell id (argmin Euclidean
-    via the same argmax identity PQ encoding uses; one GEMM per batch
-    against the KB-sized centroid matrix)."""
-
-    @F.pandas_udf("int")
-    def assign(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:  # np.stack raises on an empty Arrow batch
-            return pd.Series([], dtype="int32")
-        X = np.stack(emb.to_numpy())
-        return pd.Series(
-            np.argmax(X @ centers.T - (centers * centers).sum(1) / 2.0, axis=1).astype(
-                "int32"
-            )
-        )
-
-    return assign
-
-
 #: holdout appended incrementally in ``ivfpq_index_append`` — the
 #: newest IVFPQ_APPEND_N vec_ids arrive AFTER the index is built.
 IVFPQ_APPEND_N = 20
@@ -1956,8 +1932,8 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``train()`` lifecycle): build the index on the corpus MINUS the
     newest IVFPQ_APPEND_N vectors, then append those by encoding with
     the EXISTING codebooks/centroids — assign each new vector to its
-    nearest coarse cell (one Arrow GEMM against the KB centroid
-    matrix), residual-encode, and ``mode("append")`` into the
+    nearest coarse cell (``_ivf_assign``, one JVM projection),
+    residual-encode, and ``mode("append")`` into the
     centroid-partitioned codes + flat tables.  No re-fit, no rewrite of
     existing partitions: at 100 TB this is how a live index absorbs a
     day's new embeddings — append cost is sized by the DELTA only.
@@ -1992,9 +1968,7 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(path + "_flat", ignore_errors=True)
     books, centers = ivfpq_build_index(spark, base, path)
-    coded_delta = delta.select(
-        "vec_id", _assign_centroids(centers)(F.col("emb")).alias("centroid"), "emb"
-    )
+    coded_delta = _ivf_assign(delta, centers)
     coded_delta.select(
         "vec_id",
         "centroid",
@@ -3349,10 +3323,10 @@ def argmin_assignment_mismatches(assigned: DataFrame, cent_df: DataFrame) -> int
     ``centroid`` differs from the independent argmin over ``cent_df``
     (centroid INT, c_emb ARRAY<DOUBLE>).
 
-    KMeans assigns by EUCLIDEAN distance (not cosine — centroids are
+    k-means assigns by EUCLIDEAN distance (not cosine — centroids are
     means of unit vectors and are NOT unit-norm), so the check uses the
-    same metric; min-id tie-break matches MLlib's first-minimal-index
-    choice on exact ties.  Cost: |assigned| × |centroids| rows with the
+    same metric; the min-id tie-break matches ``_ivf_assign``'s choice
+    on exact ties.  Cost: |assigned| × |centroids| rows with the
     centroid side broadcast.  Trip-wire proven in
     tests/test_round12.py: a single corrupted cell makes it non-zero."""
     d2 = F.aggregate(
@@ -3418,12 +3392,12 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       fresh fit's hits — the drift cost stays bounded, so the audit
       passing means "don't re-train yet".
 
-    100 TB shape: the freeze-fit is KMeans on the base (sample-
-    bounded in production); delta ingest is one broadcast-centroid
+    100 TB shape: the freeze-fit is ``_ivf_fit`` on the base (one
+    bounded driver sample); delta ingest is one broadcast-centroid
     argmin map over the DELTA only; serving touches nprobe/IVF_K of
     the data exactly as ``ann_ivf_topk`` — the audit adds one exact
     top-k pass (the ground-truth cost every recall measurement pays)
-    and a second KMeans for the fresh baseline, both query-side-
+    and a second sample fit for the fresh baseline, both query-side-
     bounded.  Reference scope: the pgvector serving column
     (ollama_consumer.py:234) re-indexed on a cadence this number
     justifies."""
@@ -3458,7 +3432,7 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def stale_leg() -> tuple[int, int]:
         # fit on the base, then the frozen-centroid assignment of the
-        # GROWN corpus (base + delta) — model.transform is the
+        # GROWN corpus (base + delta) — ``_ivf_assign`` is the
         # broadcast-argmin map; in production only the delta runs
         # through it, appending to the existing layout
         assigned, centers = _ivf_fit(corpus.filter(F.col("vec_id") < cut), corpus)
@@ -3468,7 +3442,7 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # delta_visible_ok, the FALSIFIABLE form: every DELTA row's stored
         # cell must equal the independent Euclidean argmin against the
         # FROZEN centroid list — the append-without-refit property itself,
-        # not a row-count identity (model.transform is row-preserving, so
+        # not a row-count identity (the assignment is row-preserving, so
         # n_index == n is a tautology; a count check could never fail).
         # The check and the serve on the frozen cells are independent
         # consumers of the cached assignment — overlap them (guide §2.6).
@@ -3489,10 +3463,10 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # would re-scan parquet and re-run the cast lineage)
         return serve_hits(*_ivf_fit(corpus))
 
-    # the stale and fresh legs each run their own KMeans fit — the two
-    # fits (and the n_base count) are independent job chains; running
-    # them concurrently overlaps the per-iteration scheduling latency
-    # that dominates an MLlib fit on a small, cached input (guide §2.6)
+    # the stale and fresh legs (each a sample fit, then its serve) and
+    # the n_base count are independent job chains over the cached
+    # corpus; running them concurrently overlaps their per-job
+    # scheduling latency
     (delta_misassigned, stale_hits), fresh_hits, n_base = run_parallel(
         stale_leg,
         fresh_leg,
@@ -3745,7 +3719,7 @@ IVF_CURVE_NPROBES: tuple[int, ...] = (1, 2, 4, IVF_K)
     tags=("similarity", "ivf", "tuning", "contract"),
 )
 def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The nprobe design table for IVF serving: one KMeans(IVF_K, seed
+    """The nprobe design table for IVF serving: one k-means(IVF_K, seed
     42) fit, then the SAME ``"ivf"`` kind ``_serve`` over the fitted
     frame swept over nprobe in {1, 2, 4, 8}, each row carrying the
     DuckDB-recomputed exact-side

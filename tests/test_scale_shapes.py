@@ -82,14 +82,7 @@ def test_ivf_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     """The IVF scale claim from docs/SCALE.md made concrete: corpus
     written partitioned by centroid id, a probe reads only its
     partitions (PartitionFilters in the scan, not a post-filter)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = similarity._corpus(spark, sf_dir).withColumn(
-        "vec", array_to_vector(F.col("emb"))
-    )
-    km = KMeans(k=4, seed=42, featuresCol="vec", predictionCol="centroid").fit(corpus)
-    assigned = km.transform(corpus).select("vec_id", "emb", "centroid")
+    assigned, _ = similarity._ivf_fit(similarity._corpus(spark, sf_dir), k=4)
     path = str(tmp_path / "ivf")
     assigned.write.partitionBy("centroid").parquet(path)
 

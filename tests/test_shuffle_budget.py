@@ -154,8 +154,9 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     # round-12: row-local integer score -> ONE (bin, shard) window
     # exchange; never a global sort
     "curriculum_schedule": 1,
-    # round-12: both KMeans fits, serving, and the hit joins run
-    # inside the contract body; literal row out
+    # round-12: both coarse fits (driver-side, from one sample each),
+    # serving, and the hit joins run inside the contract body; literal
+    # row out
     "ivf_staleness_audit": 0,
     # round-13: ONE corpus-scale (source, shingle) distinct consumed by
     # one join; the matrix axes are narrow-column distincts and the

@@ -153,18 +153,11 @@ def test_semantic_dedup_keepers_have_no_smaller_dup_in_cluster(spark, sf_dir):
     kept = {r.vec_id: r.centroid for r in out.collect()}
     assert kept
 
-    # rebuild the same clustering + exact pair set independently
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = similarity._corpus(spark, sf_dir).withColumn(
-        "vec", array_to_vector(F.col("emb"))
+    # rebuild the same clustering (the one coarse fit) and the exact
+    # pair set independently of the grouped-map GEMM
+    assigned, _ = similarity._ivf_fit(
+        similarity._corpus(spark, sf_dir), k=similarity.SEMDEDUP_K
     )
-    km = KMeans(
-        k=similarity.SEMDEDUP_K, seed=42, maxIter=similarity.SEMDEDUP_MAXITER,
-        featuresCol="vec", predictionCol="centroid",
-    )
-    assigned = km.fit(corpus).transform(corpus).select("vec_id", "emb", "centroid")
     a = assigned.select("centroid", F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"))
     b = assigned.select("centroid", F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"))
     pairs = [
@@ -204,6 +197,109 @@ def test_capped_clusters_respect_cap(spark, sf_dir):
     assert max(sizes.values()) <= 60
     # hierarchy labels: child labels extend a parent path with "/"
     assert any("/" in c for c in sizes), "cap should force at least one split"
+
+
+def test_ivf_fit_is_row_order_free(spark, sf_dir):
+    """The coarse fit trains on a sample chosen by a hash of the id, so a
+    repartitioned corpus gives bit-identical centres and the same cell
+    for every vector."""
+    import numpy as np
+
+    corpus = similarity._corpus(spark, sf_dir)
+    a1, c1 = similarity._ivf_fit(corpus)
+    a2, c2 = similarity._ivf_fit(corpus.repartition(7))
+    assert np.array_equal(c1, c2)
+
+    def cells(a):
+        return sorted((r.vec_id, r.centroid) for r in a.select("vec_id", "centroid").collect())
+
+    assert cells(a1) == cells(a2)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [None, [0.5] * 7, [0.5] * 9, [0.5] * 7 + [None]],
+    ids=["null", "short", "long", "null_elem"],
+)
+def test_ivf_assign_rejects_bad_vectors(spark, bad):
+    """A vector assigned to the frozen cells (the append delta, or a
+    corpus row outside the fit sample) that is NULL, holds a NULL or has
+    the wrong dimension is an error, not a row written under a NULL cell
+    that no probe reads."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    rows = [(i, [float(i + j) / 8.0 for j in range(8)]) for i in range(30)]
+    schema = "vec_id long, emb array<double>"
+    fit_on = spark.createDataFrame(rows, schema)
+    delta = spark.createDataFrame([(100, [0.25] * 8), (101, bad)], schema)
+    assigned, _ = similarity._ivf_fit(fit_on, delta)
+    with pytest.raises((Py4JJavaError, PySparkException)):
+        assigned.collect()
+
+
+def _rows_with_nan() -> list:
+    """30 (vec_id, 8-dim vector) rows; vector 7 holds a NaN at index 3."""
+    import math
+
+    rows = [(i, [float(i + j) / 8.0 for j in range(8)]) for i in range(30)]
+    rows[7][1][3] = math.nan
+    return rows
+
+
+def test_ivf_build_rejects_empty_corpus(spark, tmp_path):
+    """No vectors to fit is a ValueError naming the fit, not an index
+    built over nothing."""
+    empty = spark.createDataFrame([], "vec_id long, emb array<double>")
+    with pytest.raises(ValueError, match=r"k-means\(8\) coarse fit: no emb vectors"):
+        similarity._build_index(spark, empty, str(tmp_path / "empty"), "ivfpq")
+
+
+def test_ivfpq_build_rejects_non_finite_vector(spark, tmp_path):
+    """One NaN component in the fit sample is a ValueError naming the fit
+    and the element."""
+    corpus = spark.createDataFrame(_rows_with_nan(), "vec_id long, emb array<double>")
+    with pytest.raises(ValueError, match=r"k-means\(8\) coarse fit: non-finite emb\[\d+\]\[3\]"):
+        similarity.ivfpq_build_index(spark, corpus, str(tmp_path / "nan"))
+
+
+def test_semantic_dedup_rejects_non_finite_vector(spark, tmp_path):
+    """``semantic_dedup`` runs the same coarse fit, so a NaN embedding in
+    the fixture fails the same way."""
+    from ssafynews_data_spark.schemas import TESTDATA_SCHEMAS
+
+    d = tmp_path / "nan_sf"
+    rows = [(i, v, i % 3) for i, v in _rows_with_nan()]
+    spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).coalesce(1).write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    with pytest.raises(ValueError, match=r"k-means\(8\) coarse fit: non-finite emb\[\d+\]\[3\]"):
+        similarity.semantic_dedup(spark, str(d))
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq8"])
+def test_ivf_kinds_build_and_serve_below_ivf_k(spark, tmp_path, kind):
+    """Fewer vectors than IVF_K: the fit still returns IVF_K centroids,
+    the surplus ones repeat sample rows and stay empty (ties go to the
+    lowest id), and a full-probe serve finds every other vector."""
+    import math
+
+    import numpy as np
+
+    n = 5
+    rows = [(i, [math.cos(7.0 * i + j) for j in range(8)]) for i in range(n)]
+    corpus = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    path = str(tmp_path / kind)
+    state = similarity._build_index(spark, corpus, path, kind)
+    C = state["center"]
+    assert C.shape == (similarity.IVF_K, 8)
+    X = np.array([v for _, v in rows])
+    assert all(any(np.array_equal(c, x) for x in X) for c in C[n:])
+    flat = spark.read.parquet(path + "_flat")
+    assert {r.centroid for r in flat.select("centroid").distinct().collect()} == set(range(n))
+    out = similarity._serve(spark, path, kind, state, rows, nprobe=similarity.IVF_K)
+    got = {(r.query_id, r.neighbor_id) for r in out.collect()}
+    assert got == {(q, m) for q in range(n) for m in range(n) if q != m}
 
 
 def test_contract_queries_hold(spark, sf_dir):
@@ -380,11 +476,7 @@ def test_ivfpq_append_visible_to_serve(spark, sf_dir, tmp_path):
     delta = spark.createDataFrame(
         [(9_000_000, twin)], "vec_id long, emb array<double>"
     )
-    coded = delta.select(
-        "vec_id",
-        similarity._assign_centroids(centers)(F.col("emb")).alias("centroid"),
-        "emb",
-    )
+    coded = similarity._ivf_assign(delta, centers)
     coded.select(
         "vec_id",
         "centroid",
@@ -635,11 +727,7 @@ def test_sq8_build_rejects_non_finite_bounds(spark, tmp_path):
     bounds are rendered as SQL literals, which have no NaN/Inf form, so
     the build must fail with a ValueError naming the index kind and the
     bound — not with a ParseException from deep inside the build."""
-    import math
-
-    rows = [(i, [float(i + j) / 8.0 for j in range(8)]) for i in range(30)]
-    rows[7][1][3] = math.nan
-    corpus = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    corpus = spark.createDataFrame(_rows_with_nan(), "vec_id long, emb array<double>")
     with pytest.raises(ValueError, match=r"sq8 index: non-finite vmax\[3\]"):
         similarity.sq8_build_index(spark, corpus, str(tmp_path / "sq8nan"))
 
@@ -967,3 +1055,33 @@ def test_ivf_flat_serve_job_budget(spark, sf_dir, tmp_path):
     assert "centroid" in pf  # the probe reached the _flat scan
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
     assert len(sc.statusTracker().getJobIdsForGroup("serve_budget_ivf")) == IVF_FLAT_SERVE_JOBS
+
+
+#: Spark jobs to build each index kind from a pinned, materialized
+#: corpus (``_build_index``), and to run ``semantic_dedup`` end to end,
+#: on the sf0.001 fixture.  Every coarse fit is one bounded sample
+#: collect; pinned like SERVE_JOB_BUDGET, slack 0.
+BUILD_JOB_BUDGET = {"ivf": 7, "ivfpq": 7, "sq8": 5, "ivfsq8": 9, "semantic_dedup": 5}
+
+
+def test_build_job_budget(spark, sf_dir, tmp_path):
+    """Each build, counted under its own job group (``run_parallel``'s
+    threads inherit it), runs exactly its budgeted jobs."""
+    assert set(BUILD_JOB_BUDGET) == set(similarity._KINDS) | {"semantic_dedup"}
+    corpus = similarity.pin(similarity._corpus(spark, sf_dir))
+    corpus.count()
+    sc = spark.sparkContext
+    jobs = {}
+    for name in BUILD_JOB_BUDGET:
+        group = f"build_budget_{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            if name == "semantic_dedup":
+                assert similarity.semantic_dedup(spark, sf_dir).collect()
+            else:
+                similarity._build_index(spark, corpus, str(tmp_path / name), name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == BUILD_JOB_BUDGET
