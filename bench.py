@@ -53,26 +53,10 @@ def main() -> int:
     qs = registry.load_all()
     bench = {n: q.fn for n, q in sorted(qs.items()) if q.bench}
 
-    # Session warmup: tiny jobs so executor threads, codegen, MLlib class
-    # loading, and the Arrow/pandas path exist before the first timed
-    # query (JVM cold-start is a constant, not a property of any query).
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import functions as F
-
+    # Session warmup: tiny jobs so executor threads, codegen and the
+    # Arrow/pandas path exist before the first timed query (JVM
+    # cold-start is a constant, not a property of any query).
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    tiny = spark.range(16).select(
-        F.col("id"), array_to_vector(F.array(F.rand(1), F.rand(2))).alias("vec")
-    )
-    lsh_model = BucketedRandomProjectionLSH(
-        inputCol="vec", outputCol="h", bucketLength=1.0, seed=1
-    ).fit(tiny)
-    lsh_model.approxSimilarityJoin(tiny, tiny, 10.0, distCol="d").count()
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import PCA
-
-    KMeans(k=2, seed=1, featuresCol="vec").fit(tiny)
-    PCA(k=1, inputCol="vec", outputCol="p").fit(tiny)
     spark.range(16).toPandas()
     # spin up the executor-side Python worker pool (mapInPandas /
     # grouped-map queries otherwise pay interpreter+Arrow startup in

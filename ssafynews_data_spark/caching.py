@@ -13,15 +13,30 @@ query N's pins: across a 65-query driver session at most one query's
 caches are ever live (previously they accumulated for the whole session
 — executor memory churn at larger scale factors).  bench.py and tests
 release explicitly after materializing.
+
+``scratch_dir`` is the one place a query's scratch artifacts (index
+stores, layouts, format copies, stream checkpoints) are put: a fresh
+directory per call, so no run can overwrite files a lazy result of
+another run still reads.  They are NOT released with the pins: a
+released frame only recomputes, but a deleted file fails it.  The
+whole root goes at interpreter exit.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+import threading
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
 
 
 def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -45,3 +60,21 @@ def release_pins() -> int:
 
 def live_pins() -> int:
     return len(_LIVE)
+
+
+def scratch_dir(name: str) -> str:
+    """A new empty directory named after ``name`` for one call's scratch
+    artifacts.  Every directory sits under one root private to this
+    process, made on first use in the first ``SPARK_LOCAL_DIRS`` entry
+    (the system temp dir when unset) and removed at interpreter exit.
+    The root is driver-local: a cluster needs it on a shared filesystem
+    (docs/SCALE.md)."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:  # run_parallel legs may race to make the root
+        if _SCRATCH_ROOT is None:
+            parent = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+            parent = parent or tempfile.gettempdir()
+            os.makedirs(parent, exist_ok=True)
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="ssafynews-scratch-", dir=parent)
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_SCRATCH_ROOT)

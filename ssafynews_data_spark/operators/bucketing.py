@@ -18,26 +18,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
 N_BUCKETS = 8
 
 
-def _warehouse(sf_dir: str) -> str:
-    import ssafynews_data_spark
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "bucketed_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def write_bucketed(
     df: DataFrame, table: str, key: str, path: str, n_buckets: int = N_BUCKETS
 ) -> None:
-    """Persist ``df`` as a bucketed+sorted table at an explicit repo-local
+    """Persist ``df`` as a bucketed+sorted table at an explicit external
     path.  ``repartition(n, key)`` first so each bucket is one file —
     that makes the per-bucket sort a global per-bucket order, letting the
     join skip its Sort as well as its Exchange."""
@@ -53,10 +44,12 @@ def write_bucketed(
 
 def bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Both fact tables written bucketed by the join key (orderkey) —
-    the one-time ingest cost that removes the join shuffle forever."""
-    base = _warehouse(sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    t_orders, t_li = f"b_orders_{tag}", f"b_lineitem_{tag}"
+    the one-time ingest cost that removes the join shuffle forever.
+    Tables are named after their fresh scratch directory, so a later
+    call never redefines a table an earlier call's frames resolved."""
+    base = scratch_dir("bucketed")
+    tag = os.path.basename(base)
+    t_orders, t_li = f"{tag}_orders", f"{tag}_lineitem"
     write_bucketed(
         load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
         t_orders,

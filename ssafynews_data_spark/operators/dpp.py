@@ -21,25 +21,14 @@ semantically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
 TOP_DAYS = 3
-
-
-def _layout_dir(sf_dir: str) -> str:
-    import ssafynews_data_spark
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"events_by_day_{tag}")
 
 
 def write_day_partitioned(spark: SparkSession, sf_dir: str) -> str:
@@ -47,7 +36,7 @@ def write_day_partitioned(spark: SparkSession, sf_dir: str) -> str:
     year_month_day layout).  ``repartition(d)`` first so each day is one
     file instead of one-per-task — at 100 TB you'd target N files/day
     sized to ``maxPartitionBytes``."""
-    path = _layout_dir(sf_dir)
+    path = scratch_dir("events_by_day")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "d", F.date_format("ts", "yyyy-MM-dd")
     )

@@ -39,12 +39,11 @@ the full-corpus twin is ``minhash_chain_recall_contract``
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ssafynews_data_spark.caching import pin
+from ssafynews_data_spark.caching import pin, scratch_dir
 from ssafynews_data_spark.operators.dedup import (
     _DUCK_SHINGLES,
     JACCARD_THRESHOLD,
@@ -58,16 +57,6 @@ from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.registry import register
 
 DELTA_MOD = 5  # doc_id % 5 == 0 → the "new batch" (20%)
-
-
-def _index_dir(sf_dir: str) -> str:
-    import ssafynews_data_spark
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"minhash_index_{tag}")
 
 
 def band_rows(sig_src: DataFrame) -> DataFrame:
@@ -91,8 +80,7 @@ def band_rows(sig_src: DataFrame) -> DataFrame:
 
 def build_index(spark: SparkSession, sf_dir: str) -> str:
     """The nightly build: base-corpus band rows, partitioned by band."""
-    path = _index_dir(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("minhash_index")
     base_h = _doc_shingle_hashes(spark, sf_dir).filter(
         F.col("doc_id") % DELTA_MOD != 0
     )
@@ -333,11 +321,10 @@ def streaming_index_ingest_contract(spark: SparkSession, sf_dir: str) -> DataFra
         docs.filter(F.col("doc_id") % DELTA_MOD == 0).select("doc_id", "text")
     )
     n_delta = delta_docs.count()
-    base = _index_dir(sf_dir) + "_stream_ingest"
-    shutil.rmtree(base, ignore_errors=True)
     if n_delta == 0:
         return local_df(spark, [(0, True, True, True)], out_schema)
 
+    base = scratch_dir("minhash_stream_ingest")
     stage = os.path.join(base, "stage")
     delta_docs.repartition(INGEST_STAGE_FILES).write.mode("overwrite").parquet(stage)
     idx_path = os.path.join(base, "index")

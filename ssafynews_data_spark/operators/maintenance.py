@@ -15,32 +15,19 @@ cardinality, and range in ONE pass — not one query per column.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
 TARGET_FILE_ROWS = 4_000  # stand-in for a byte target at fixture scale
 
 
-def _dir(sf_dir: str, name: str) -> str:
-    import ssafynews_data_spark
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"{name}_{tag}")
-
-
 def write_fragmented(spark: SparkSession, sf_dir: str, n_files: int = 64) -> str:
     """Simulate a micro-batch sink's droppings: 64 tiny files."""
-    path = _dir(sf_dir, "fragmented_events")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("fragmented_events")
     load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
         "overwrite"
     ).parquet(path)
@@ -55,7 +42,6 @@ def compact(spark: SparkSession, src: str, dst: str, target_rows: int) -> int:
     df = spark.read.parquet(src)
     n = df.count()
     files = max(1, -(-n // target_rows))  # ceil
-    shutil.rmtree(dst, ignore_errors=True)
     df.coalesce(files).write.mode("overwrite").parquet(dst)
     return files
 
@@ -80,7 +66,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutting the file count ~10x (asserted in tests/test_maintenance.py,
     along with the no-Exchange plan)."""
     frag = write_fragmented(spark, sf_dir)
-    dst = _dir(sf_dir, "compacted_events")
+    dst = scratch_dir("compacted_events")
     compact(spark, frag, dst, TARGET_FILE_ROWS)
     return (
         spark.read.parquet(dst)
@@ -181,12 +167,11 @@ def rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same answer from raw — the rollup layer must be lossless for
     decomposable aggregates.  count(DISTINCT day) comes free as the
     summary row count per type."""
-    daily_path = _dir(sf_dir, "daily_rollup")
+    daily_path = scratch_dir("daily_rollup")
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
     ).agg(F.count("*").alias("n"), F.sum("value").alias("sv"))
-    shutil.rmtree(daily_path, ignore_errors=True)
     daily.write.mode("overwrite").parquet(daily_path)
     summary = spark.read.schema("event_type string, d string, n long, sv double").parquet(
         daily_path
@@ -223,10 +208,8 @@ def federated_formats_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop.  Catalyst treats each scan by its own capabilities: the ORC
     side still pushes the balance filter; the CSV side (no stats, no
     pushdown) is 25 rows and broadcasts."""
-    orc_path = _dir(sf_dir, "federated_cust_orc")
-    csv_path = _dir(sf_dir, "federated_nation_csv")
-    shutil.rmtree(orc_path, ignore_errors=True)
-    shutil.rmtree(csv_path, ignore_errors=True)
+    orc_path = scratch_dir("federated_cust_orc")
+    csv_path = scratch_dir("federated_nation_csv")
     load_table(spark, sf_dir, "customer").write.mode("overwrite").option(
         "compression", "zstd"
     ).orc(orc_path)
@@ -301,8 +284,7 @@ def range_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
-    path = _dir(sf_dir, "range_layout_events")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("range_layout_events")
     (
         ev.repartitionByRange(RANGE_LAYOUT_PARTS, "event_id")
         .sortWithinPartitions("event_id")

@@ -7,6 +7,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
@@ -291,19 +292,10 @@ def observed_write_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are read back and counted.  The driver hash-checks all three
     figures against DuckDB, proving the observed metrics equal the
     ground truth and the write lost nothing."""
-    import os
-    import shutil
-
-    import ssafynews_data_spark
     from ssafynews_data_spark.sources.sinks import observed_write
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "observed_audit_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("observed_audit")
     metrics = observed_write(docs, path, audit_cols=("text",))
     n_back = spark.read.parquet(path).count()
     return local_df(spark, 

@@ -71,7 +71,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ssafynews_data_spark.caching import pin
+from ssafynews_data_spark.caching import pin, scratch_dir
 from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.parallel import run_parallel
 from ssafynews_data_spark.registry import register
@@ -139,15 +139,11 @@ def _cosine_sql(a: str, b: str) -> str:
     return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
 
 
-def _warehouse_path(prefix: str, sf_dir: str) -> str:
-    """Repo-local artifact directory ``spark-warehouse/<prefix>_<sf tag>``
-    (spark-warehouse/ is gitignored); keyed by SF so concurrent checks
-    at different scale factors don't clobber each other."""
-    import ssafynews_data_spark
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__)))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"{prefix}_{tag}")
+def _index_path(name: str) -> str:
+    """A fresh index location: ``_build_index`` writes ``index`` and its
+    ``index_flat`` / ``index_meta`` siblings inside one new scratch
+    directory."""
+    return os.path.join(scratch_dir(name), "index")
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,7 +772,7 @@ def ivf_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only check (KMeans is not SQL-expressible); recall vs exact
     top-k is pytest-gated."""
     return _build_serve(
-        spark, _corpus(spark, sf_dir), _warehouse_path("ivf_index", sf_dir), "ivf", 3
+        spark, _corpus(spark, sf_dir), _index_path("ivf_index"), "ivf", 3
     )
 
 
@@ -1683,10 +1679,6 @@ def ivfpq_serve(
     return _serve(spark, path, "ivfpq", {"center": centers, "book": books}, qrows)
 
 
-def _ivfpq_path(sf_dir: str) -> str:
-    return _warehouse_path("ivfpq_index", sf_dir)
-
-
 @register("ivfpq_index_topk", tags=("similarity", "ivf", "pq", "layout"))
 def ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered IVF-PQ end-to-end (Jegou et al. 2011; the faiss IVFPQ
@@ -1711,7 +1703,7 @@ def ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost output-sized.  Rows-only driver check (KMeans is not
     SQL-expressible); the recall floor is the oracle-bearing
     ``ivfpq_recall_contract``."""
-    return _build_serve(spark, _corpus(spark, sf_dir), _ivfpq_path(sf_dir), "ivfpq")
+    return _build_serve(spark, _corpus(spark, sf_dir), _index_path("ivfpq_index"), "ivfpq")
 
 
 #: residual-encoding retention: IVF-PQ must keep at least this share
@@ -1772,7 +1764,7 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # exact baseline over the SAME pinned corpus (cosine_topk's body)
     exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
-    path = _ivfpq_path(sf_dir)
+    path = _index_path("ivfpq_recall")
     # the exact-baseline materialization is fit-independent — overlap it
     # with the eager index build (guide §2.6, VERDICT r13 item 1) so the
     # exact pass hides behind the KMeans fit + artifact writes
@@ -1949,8 +1941,6 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-append); the recall story stays with ``ivfpq_recall_contract``.
     Reference scope: the reference re-embeds into pgvector row by row
     (ollama_consumer.py:234) with no index lifecycle at all."""
-    import shutil
-
     corpus = pin(_corpus(spark, sf_dir))
     stats = corpus.agg(
         F.max("vec_id").alias("mx"), F.count("*").alias("n")
@@ -1964,9 +1954,7 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = int(stats.mx) - IVFPQ_APPEND_N  # newest N ids are the delta
     base = corpus.filter(F.col("vec_id") <= cut)
     delta = corpus.filter(F.col("vec_id") > cut)
-    path = _ivfpq_path(sf_dir) + "_append"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(path + "_flat", ignore_errors=True)
+    path = _index_path("ivfpq_append")
     books, centers = ivfpq_build_index(spark, base, path)
     coded_delta = _ivf_assign(delta, centers)
     coded_delta.select(
@@ -2045,7 +2033,7 @@ def ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "n_queries long, state_roundtrip_ok boolean, serve_complete boolean"
     if not qrows:
         return local_df(spark, [(0, True, True)], schema)
-    path = _ivfpq_path(sf_dir) + "_serve"
+    path = _index_path("ivfpq_serve")
     ok, n_loaded, _, (expected,), _ = _serve_roundtrip(
         spark, "ivfpq", corpus, path, qrows,
         beside_serve=lambda built, loaded: _serve_expected(
@@ -2408,7 +2396,7 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides are exactly N_QUERIES * TOP_K rows by construction), with
     # sub-round-off boundary pairs excluded (see _rotation_mismatches).
     mismatches = _rotation_mismatches(exact_raw, _exact_topk(rotated, raw=True))
-    served = _build_serve(spark, rotated, _ivfpq_path(sf_dir) + "_opq", "ivfpq")
+    served = _build_serve(spark, rotated, _index_path("ivfpq_opq"), "ivfpq")
     hits = served.select("query_id", "neighbor_id").join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
@@ -2619,10 +2607,10 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
     """Build one index kind from a (vec_id, emb) corpus: optional IVF
     fit → codec training CONCURRENT with the flat-companion write (the
     refine store never consumes the codec; guide §2.6) → the codes
-    write CONCURRENT with the meta write.  Three artifacts, the faiss
-    layout: ``path`` (vec_id, codes) — the compressed scan set —,
-    ``path_flat`` (vec_id, emb) read only for the refine candidates,
-    and ``path_meta`` (``_write_meta``); under IVF the first two are
+    write CONCURRENT with the meta write.  Three sibling artifacts, the
+    faiss layout: ``path`` (vec_id, codes) — the compressed scan set —,
+    ``path + "_flat"`` (vec_id, emb) read only for the refine candidates,
+    and ``path + "_meta"`` (``_write_meta``); under IVF the first two are
     partitioned by ``centroid`` so a probe reads nprobe/IVF_K of them.
     IVF-Flat has no codec: its ``_flat`` store, written concurrently
     with the meta, is the whole index.  Returns the driver-resident
@@ -2842,21 +2830,17 @@ def _serve_roundtrip(
     beside_diff: tuple = (),
 ) -> tuple:
     """The serving lifecycle every ``*_serve_contract`` certifies: build
-    the artifact, COLD-START a second server from the meta parquet
-    alone (``_read_meta``), serve the batch from both, and anti-join
-    the two (query_id, neighbor_id, sim, rank) row sets both ways —
-    doubles roundtrip parquet bit-exactly, so any difference means the
-    serving state is not self-contained.  The contract's own checks
+    the artifact at a fresh ``path``, COLD-START a second server from
+    the meta parquet alone (``_read_meta``), serve the batch from both,
+    and anti-join the two (query_id, neighbor_id, sim, rank) row sets
+    both ways — doubles roundtrip parquet bit-exactly, so any difference
+    means the serving state is not self-contained.  The contract's own checks
     ride along in the same driver actions: ``beside_build()`` overlaps
     the build, ``beside_serve(built_state, loaded_state)`` the two
     serves, ``beside_diff[i](loaded_frame, built_state)`` the
     anti-joins.  Returns
     (roundtrip_ok, n_loaded_rows, [beside_build], [beside_serve],
     [beside_diff...])."""
-    import shutil
-
-    for suffix in ("", "_flat", "_meta"):
-        shutil.rmtree(path + suffix, ignore_errors=True)
     state, *pre = run_parallel(
         lambda: _build_index(spark, corpus, path, kind),
         *([beside_build] if beside_build else []),
@@ -3003,7 +2987,7 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not qrows:
         return local_df(spark, [(0, 0, None, True, True, True)], schema)
-    path = _warehouse_path("sq8_index", sf_dir)
+    path = _index_path("sq8_index")
     # exact baseline over the PINNED corpus (not a fresh parquet scan —
     # guide §2.4; expressions identical to cosine_topk).  Its facts
     # aggregate is build-independent, so it runs CONCURRENTLY with the
@@ -3240,7 +3224,7 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not qrows:
         return local_df(spark, [(0, 0, None, True, True, True, True)], out_schema)
-    path = _ivfpq_path(sf_dir) + "_sq8"
+    path = _index_path("ivfsq8_index")
     # exact baseline over the PINNED corpus; its facts aggregate never
     # consumes KMeans centers or the codec, so it runs CONCURRENTLY with
     # the build (guide §2.6, VERDICT r13 item 1): the exact-topk pass

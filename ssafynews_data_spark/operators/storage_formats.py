@@ -15,29 +15,16 @@ gate lives in tests/test_storage_formats.py), and everything else
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
 
-def orc_path(sf_dir: str) -> str:
-    import ssafynews_data_spark
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "orc_docs_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def write_orc(spark: SparkSession, sf_dir: str) -> str:
-    path = orc_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("orc_docs")
     (
         load_table(spark, sf_dir, "documents")
         .write.mode("overwrite")

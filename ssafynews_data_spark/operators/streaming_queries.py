@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import _ensure_session_conf
@@ -458,17 +459,9 @@ def streaming_file_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-sink/unit tested; this row makes the driver hash-check the
     on-disk result (VERDICT r4 "next" #5; consumer2.py:190-209).
     """
-    import shutil
-
-    import ssafynews_data_spark
     from ssafynews_data_spark.sources.sinks import foreach_batch_upsert
 
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "stream_sink_e2e_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_sink_e2e")
     data_path = os.path.join(base, "data")
     out_schema = "event_id LONG, ymd STRING, event_type STRING, value DOUBLE"
     # empty-day path: zero batches fire, so no files would exist to read
@@ -562,16 +555,7 @@ def streaming_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver hash-checks per-day exact counts (recomputed batch-side,
     DuckDB-matched) plus the contract that every day's estimate lands
     within 5% of exact."""
-    import shutil
-
-    import ssafynews_data_spark
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))),
-        "spark-warehouse",
-        "stream_sketches_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_sketches")
     data_path = os.path.join(base, "sketches")
     out_schema = "day STRING, exact_users LONG, est_ok BOOLEAN"
     from ssafynews_data_spark.sources.readers import load_table
@@ -806,9 +790,7 @@ def streaming_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stateful pipeline eventually asks) into a verifiable query.
     At scale this reader is how you audit state growth without
     restarting the job."""
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="state_inspect_")
+    ckpt = scratch_dir("state_inspect")
     dedup = (
         _events_stream(spark, sf_dir)
         .select("user_id")
@@ -832,13 +814,7 @@ def streaming_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     state = spark.read.format("statestore").load(ckpt)
-    out = state.select(F.col("key.user_id").alias("user_id"))
-    # materialize before deleting the checkpoint the reader points at
-    result = local_df(spark, out.collect(), out.schema)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    return state.select(F.col("key.user_id").alias("user_id"))
 
 
 @register(

@@ -26,11 +26,10 @@ key-shuffled layout of the same file count.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssafynews_data_spark.caching import scratch_dir
 from ssafynews_data_spark.registry import register
 from ssafynews_data_spark.sources.readers import load_table
 
@@ -40,16 +39,6 @@ N_FILES = 16
 #: the benchmark box: mid-range value band × a 6-day slice.
 BOX_VALUE = (100.0, 150.0)
 BOX_TS = ("2024-01-10", "2024-01-16")
-
-
-def _layout_dir(sf_dir: str, flavor: str) -> str:
-    import ssafynews_data_spark
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.abspath(ssafynews_data_spark.__file__))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, "spark-warehouse", f"zorder_{flavor}_{tag}")
 
 
 def morton_key(xq: str, yq: str, bits: int = BITS) -> F.Column:
@@ -103,7 +92,7 @@ def write_zordered(spark: SparkSession, sf_dir: str) -> str:
     ``N_FILES`` files, each covering a compact Z-curve segment, so each
     file's parquet min/max box on (value, ts) is tight on BOTH
     dimensions."""
-    path = _layout_dir(sf_dir, "morton")
+    path = scratch_dir("zorder_morton")
     (
         quantized_events(spark, sf_dir)
         .repartitionByRange(N_FILES, "z")

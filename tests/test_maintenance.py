@@ -18,9 +18,9 @@ def _parquet_files(path: str) -> int:
     )
 
 
-def test_compaction_cuts_file_count(spark, sf_dir):
+def test_compaction_cuts_file_count(spark, sf_dir, tmp_path):
     frag = maintenance.write_fragmented(spark, sf_dir, n_files=64)
-    dst = maintenance._dir(sf_dir, "compacted_events")
+    dst = str(tmp_path / "compacted_events")
     maintenance.compact(spark, frag, dst, maintenance.TARGET_FILE_ROWS)
     before, after = _parquet_files(frag), _parquet_files(dst)
     assert before == 64
@@ -64,29 +64,31 @@ def test_range_layout_footers_disjoint(spark, sf_dir):
     min/max, no row scan — file-level ranges must not overlap and
     within each file row-group mins must be nondecreasing (sorted
     writes)."""
+    from urllib.parse import urlparse
+
     import pyarrow.parquet as pq
 
-    maintenance.range_layout_audit(spark, sf_dir).collect()
-    path = maintenance._dir(sf_dir, "range_layout_events")
+    audit = maintenance.range_layout_audit(spark, sf_dir)
+    audit.collect()
+    # the layout files the audit itself read back
+    files = sorted(urlparse(f).path for f in audit.inputFiles())
+    assert files and all(f.endswith(".parquet") for f in files)
     spans = []
-    for root, _, files in os.walk(path):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(root, f)).metadata
-            col = [
-                i
-                for i in range(len(md.schema))
-                if md.schema.column(i).name == "event_id"
-            ][0]
-            rg_mins, mn, mx = [], None, None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col).statistics
-                rg_mins.append(st.min)
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            assert rg_mins == sorted(rg_mins)
-            spans.append((mn, mx))
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        col = [
+            i
+            for i in range(len(md.schema))
+            if md.schema.column(i).name == "event_id"
+        ][0]
+        rg_mins, mn, mx = [], None, None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(col).statistics
+            rg_mins.append(st.min)
+            mn = st.min if mn is None else min(mn, st.min)
+            mx = st.max if mx is None else max(mx, st.max)
+        assert rg_mins == sorted(rg_mins)
+        spans.append((mn, mx))
     spans.sort()
     assert len(spans) == maintenance.RANGE_LAYOUT_PARTS
     for (_, prev_mx), (mn, _) in zip(spans, spans[1:]):

@@ -45,12 +45,12 @@ def test_zorder_box_result_matches_raw(spark, sf_dir):
     assert got == raw
 
 
-def test_zorder_touches_fewer_files(spark, sf_dir):
+def test_zorder_touches_fewer_files(spark, sf_dir, tmp_path):
     """The point of the layout: the box's rows live in fewer files than
     under a key-shuffled layout with the SAME file count."""
     zpath = zorder.write_zordered(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    shuffled_path = zorder._layout_dir(sf_dir, "shuffled")
+    shuffled_path = str(tmp_path / "shuffled")
     ev.repartition(zorder.N_FILES, "event_id").write.mode("overwrite").parquet(
         shuffled_path
     )

@@ -220,7 +220,8 @@ HEADLINERS = (
 )
 
 #: serve-only pseudo-query: not a registry name (the registry serves
-#: end-to-end); state captured by the e2e row at the same scale dir.
+#: end-to-end); the e2e row at the same scale dir captures the built
+#: index path with its serving state (books, centres, query rows).
 _IVFPQ_STATE: dict[str, tuple] = {}
 
 
@@ -230,33 +231,23 @@ def _ivfpq_e2e(spark, sf_dir: str):
     from ssafynews_data_spark.operators import similarity as S
 
     corpus = S.pin(S._corpus(spark, sf_dir))
-    path = S._ivfpq_path(sf_dir)
+    path = S._index_path("ivfpq_index")
     books, centers = S.ivfpq_build_index(spark, corpus, path)
     qrows = sorted(
         corpus.filter(SF.col("vec_id") < S.N_QUERIES)
         .select("vec_id", "emb")
         .collect()
     )
-    _IVFPQ_STATE[sf_dir] = (books, centers, qrows)
+    _IVFPQ_STATE[sf_dir] = (path, books, centers, qrows)
     return S.ivfpq_serve(spark, path, books, centers, qrows)
 
 
 def _ivfpq_serve_only(spark, sf_dir: str):
-    from pyspark.sql import functions as SF
-
     from ssafynews_data_spark.operators import similarity as S
 
-    path = S._ivfpq_path(sf_dir)
     if sf_dir not in _IVFPQ_STATE:  # standalone use (pytest guard)
-        corpus = S.pin(S._corpus(spark, sf_dir))
-        books, centers = S.ivfpq_build_index(spark, corpus, path)
-        qrows = sorted(
-            corpus.filter(SF.col("vec_id") < S.N_QUERIES)
-            .select("vec_id", "emb")
-            .collect()
-        )
-        _IVFPQ_STATE[sf_dir] = (books, centers, qrows)
-    books, centers, qrows = _IVFPQ_STATE[sf_dir]
+        _ivfpq_e2e(spark, sf_dir)
+    path, books, centers, qrows = _IVFPQ_STATE[sf_dir]
     return S.ivfpq_serve(spark, path, books, centers, qrows)
 
 
