@@ -53,6 +53,13 @@ Every top-k ends in the ONE exact-rank step, ``_exact_rerank_topk``:
 rank by the raw cosine (then neighbor_id, the DuckDB oracles' order)
 and round to 4 places only in the emitted column.
 
+Every contract that grades a served top-k grades it one way (section
+7): ``_exact_side`` pins the exact top-k of the contract's own corpus
+and collects its DuckDB-recomputable facts, ``_hits`` counts the served
+pairs in it, ``_floor_ok`` applies each floor on the driver, and the
+contract returns one literal row whose oracle ``_graded_oracle`` builds
+from the claim names.
+
 Exact math is built-in array expressions (``zip_with`` + ``aggregate``),
 computed in double, JVM-side — except the all-pairs near-dup verify
 form, where per-pair row machinery dominates and a blocked numpy matrix
@@ -137,6 +144,20 @@ def _dot_sql(a: str, b: str) -> str:
 def _cosine_sql(a: str, b: str) -> str:
     """SQL twin of :func:`cosine` — dot/(sqrt·sqrt), same tree."""
     return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+
+
+def _cosine_matrix(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """All-pairs cosine of the rows of ``A`` against the rows of ``B``.
+    Dots and squared norms accumulate dimension by dimension in order,
+    so every double is bit-identical to the JVM fold of
+    ``_cosine_sql``: vectorization changes the speed, not the math."""
+    acc = np.zeros((len(A), len(B)))
+    na2, nb2 = np.zeros(len(A)), np.zeros(len(B))
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i][:, None] * B[:, i][None, :]
+        na2 = na2 + A[:, i] * A[:, i]
+        nb2 = nb2 + B[:, i] * B[:, i]
+    return acc / (np.sqrt(na2)[:, None] * np.sqrt(nb2)[None, :])
 
 
 def _index_path(name: str) -> str:
@@ -258,9 +279,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes the speed, not the math.  Measured 64 s → ~1 s at sf0.1 vs
     the row-at-a-time nested-loop join.
     """
-    import numpy as np
-    import pandas as pd
-
     corpus = pin(_corpus(spark, sf_dir))
     n = corpus.count()
     if n > EXACT_NEAR_DUP_MAX_ROWS:
@@ -278,24 +296,13 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     B = np.array(pdf["emb"].tolist(), dtype=np.float64)
-    d = B.shape[1]
-    nb2 = np.zeros(len(B))
-    for i in range(d):  # in-order sum of squares == dot(x, x)
-        nb2 = nb2 + B[:, i] * B[:, i]
-    nb = np.sqrt(nb2)
 
     def gemm_block(batches):
         for block in batches:
             if block.empty:
                 continue
             a_ids = block["vec_id"].to_numpy(dtype=np.int64)
-            A = np.array(block["emb"].tolist(), dtype=np.float64)
-            na2 = np.zeros(len(A))
-            acc = np.zeros((len(A), len(B)))
-            for i in range(d):  # left-to-right accumulation per pair
-                na2 = na2 + A[:, i] * A[:, i]
-                acc = acc + A[:, i][:, None] * B[:, i][None, :]
-            sim = acc / (np.sqrt(na2)[:, None] * nb[None, :])
+            sim = _cosine_matrix(np.array(block["emb"].tolist(), dtype=np.float64), B)
             mask = (a_ids[:, None] < b_ids[None, :]) & (sim >= NEAR_DUP_COS)
             ii, jj = np.nonzero(mask)
             yield pd.DataFrame(
@@ -668,20 +675,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _ = _ivf_fit(corpus, k=SEMDEDUP_K)
 
     def keepers_in_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        # dense GEMM within one cluster — dimension-by-dimension IN-ORDER
-        # accumulation, bitwise-identical to the JVM aggregate(zip_with)
-        # cosine (same recipe as embedding_near_dup; vectorization
-        # changes speed, not math, so threshold comparisons can't flip).
+        # dense GEMM within one cluster, bitwise-identical to the JVM
+        # cosine (_cosine_matrix), so threshold comparisons can't flip
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         A = np.array(pdf["emb"].tolist(), dtype=np.float64)
-        d = A.shape[1]
-        n2 = np.zeros(len(A))
-        acc = np.zeros((len(A), len(A)))
-        for i in range(d):
-            n2 = n2 + A[:, i] * A[:, i]
-            acc = acc + A[:, i][:, None] * A[:, i][None, :]
-        nrm = np.sqrt(n2)
-        sim = acc / (nrm[:, None] * nrm[None, :])
+        sim = _cosine_matrix(A, A)
         mask = (ids[:, None] < ids[None, :]) & (sim >= SEMDEDUP_EPS)
         # the group knows its whole answer: kept rows AND the drop count
         # (every id with a smaller-id near-dup drops; the smallest id of
@@ -897,11 +895,16 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KMeans labels are engine-specific), but their CONTRACTS are: the exact
 # top-k reference is DuckDB-computable, and the recall / containment /
 # accounting guarantees are deterministic facts the driver can hash-check.
-# Each contract frame mixes genuinely-DuckDB-computed columns (exact-side
+# Each contract row mixes genuinely-DuckDB-computed columns (exact-side
 # counts and similarity sums) with spec columns (recall_ok=TRUE): if the
-# approximate side ever degrades, the Spark frame diverges and the row
-# FAILS — converting the previous rows-only checks into driver-certified
-# ones.  (VERDICT r4 "What's missing" #3.)
+# approximate side ever degrades, the Spark row diverges and FAILS.
+#
+# Every contract that grades a served top-k grades it ONE way:
+# ``_exact_side`` pins the exact top-k of the contract's own corpus once
+# and collects its facts, ``_hits`` counts served pairs in it,
+# ``_floor_ok`` applies each floor on the driver, and ``_graded_row``
+# returns the one literal row whose oracle ``_graded_oracle`` builds from
+# the same claim names.
 # ---------------------------------------------------------------------------
 
 #: aggregate-recall floors, identical to tests/test_similarity.py.
@@ -937,80 +940,98 @@ _EXACT_TOPK_CTE = f"""
 """
 
 
-_ANN_CONTRACT_SCHEMA = (
-    "n_queries LONG, n_exact_rows LONG, exact_sim_sum_q4 LONG, recall_ok BOOLEAN"
-)
+class _Exact(NamedTuple):
+    """The exact side of a graded contract: the pinned exact top-k at
+    raw precision (``topk``; None when there are no query ids) and its
+    DuckDB-recomputable facts."""
+
+    topk: DataFrame | None
+    n_queries: int
+    n_exact_rows: int
+    exact_sim_sum_q4: int | None  # NULL on an empty exact top-k, as in SQL
 
 
-def _exact_facts(exact: DataFrame) -> DataFrame:
-    """The DuckDB-recomputable exact-side facts of a (query_id,
-    neighbor_id, sim) exact top-k: query and row counts plus the q4
-    similarity sum.  Per-row sims are 4-decimal-rounded doubles
-    (bit-identical cross-engine); quantize EACH to an integer and sum
-    integers — round(sum(<rounded doubles>), 3) lands on a
+#: the exact side of a corpus without query ids: the oracle's vacuous row
+_NO_EXACT = _Exact(None, 0, 0, None)
+
+
+def _exact_side(corpus: DataFrame) -> _Exact:
+    """Pin ``corpus``'s exact top-k once, at raw precision (``_exact_topk``;
+    the ranking is the same as the rounded form's), and collect its facts:
+    query and row counts plus the q4 similarity sum.  Each sim is rounded
+    to 4 places as the oracle's top-k is, then quantized to an integer
+    and summed as integers — round(sum(<rounded doubles>), 3) lands on a
     half-thousandth tie ~1/10 draws (caught by the pytest reseed gate,
-    seed 8675309: 16.181 vs 16.18) and tie-breaks per engine."""
-    return exact.agg(
-        F.count_distinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_exact_rows"),
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
-    )
+    seed 8675309: 16.181 vs 16.18) and tie-breaks per engine.  One
+    driver action, so it runs as a ``run_parallel`` leg or a
+    ``_serve_roundtrip`` ``beside_build`` thunk."""
+    topk = pin(_exact_topk(corpus, raw=True))
+    facts = topk.agg(
+        F.count_distinct("query_id"),
+        F.count("*"),
+        F.sum(F.round(F.round("sim", 4) * 10000).cast("long")),
+    ).first()
+    return _Exact(topk, *facts)
 
 
-def _hits(served: DataFrame, exact: DataFrame) -> int:
+def _hits(served: DataFrame, exact: _Exact) -> int:
     """How many (query_id, neighbor_id) pairs of ``served`` are in the
-    exact top-k."""
+    exact top-k — THE hit count of every graded contract."""
     ids = ["query_id", "neighbor_id"]
-    return served.select(*ids).join(exact.select(*ids), ids).count()
+    return served.select(*ids).join(exact.topk.select(*ids), ids).count()
+
+
+def _floor_ok(hits: int, of: int, min_pct: int) -> bool:
+    """A recall or retention floor: ``hits`` is at least ``min_pct``
+    percent of ``of`` (vacuously true when ``of`` is 0)."""
+    return hits * 100 >= of * min_pct
+
+
+def _graded_row(spark: SparkSession, exact: _Exact, **claims: bool) -> DataFrame:
+    """The one row of a graded contract: the exact-side facts, then each
+    claim as a BOOLEAN column, in ``_graded_oracle``'s order."""
+    schema = "n_queries long, n_exact_rows long, exact_sim_sum_q4 long" + "".join(
+        f", {c} boolean" for c in claims
+    )
+    return local_df(spark, [(*exact[1:], *claims.values())], schema)
+
+
+_EXACT_FACTS_SQL = """count(DISTINCT query_id) AS n_queries,
+               count(*) AS n_exact_rows,
+               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT)
+                   AS exact_sim_sum_q4"""
+
+
+def _graded_oracle(*claims: str) -> str:
+    """The oracle of a graded contract: DuckDB recomputes the exact-side
+    facts and asserts every claim TRUE.  The floors themselves are
+    applied Spark-side (a violated one emits FALSE, which then
+    hash-mismatches the oracle's TRUE), so no floor constant appears in
+    the SQL."""
+    trues = "".join(f",\n               TRUE AS {c}" for c in claims)
+    return f"""{_EXACT_TOPK_CTE}
+        SELECT {_EXACT_FACTS_SQL}{trues}
+        FROM topk
+    """
 
 
 def _ann_recall_contract(
     spark: SparkSession, sf_dir: str, approx_fn, min_pct: int
 ) -> DataFrame:
-    """One-row contract frame: exact-side facts (DuckDB-recomputable) +
-    the aggregate-recall guarantee of ``approx_fn``'s top-k vs the exact
-    top-k.  ``approx_fn`` is called lazily so the empty-corpus path never
-    touches the (unfittable-on-zero-rows) LSH/KMeans models."""
-    if _corpus(spark, sf_dir).isEmpty():
-        # matches the oracle on empty input: counts 0, NULL sim sum,
-        # recall vacuously satisfied (0 hits >= 0 required)
-        return local_df(spark, [(0, 0, None, True)], _ANN_CONTRACT_SCHEMA)
-    approx = approx_fn()
-    # pin: exact feeds the hit join AND the facts aggregate — one
-    # corpus topk pass instead of two; broadcast: both sides are
-    # N_QUERIES×TOP_K rows but post-window estimates planned a
-    # sort-merge join (guide §3.1)
-    exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
-    hits = approx.select("query_id", "neighbor_id").join(
-        F.broadcast(exact.select("query_id", "neighbor_id")),
-        ["query_id", "neighbor_id"],
-    )
-    e = _exact_facts(exact)
-    h = hits.agg(F.count("*").alias("n_hits"))
-    return e.crossJoin(h).select(
-        "n_queries",
-        "n_exact_rows",
-        "exact_sim_sum_q4",
-        (F.col("n_hits") * 100 >= F.col("n_exact_rows") * min_pct).alias("recall_ok"),
-    )
-
-
-#: one shared oracle for both ANN contracts: DuckDB recomputes the
-#: exact-side facts; the recall floor itself is applied SPARK-SIDE (the
-#: frame emits recall_ok=false when violated, which then hash-mismatches
-#: the oracle's TRUE) — the floor constant does not appear in the SQL.
-_ANN_CONTRACT_ORACLE = f"""{_EXACT_TOPK_CTE}
-        SELECT count(DISTINCT query_id) AS n_queries,
-               count(*) AS n_exact_rows,
-               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT) AS exact_sim_sum_q4,
-               TRUE AS recall_ok
-        FROM topk
-    """
+    """The graded row of a registered ANN top-k: exact-side facts plus
+    the aggregate-recall floor of ``approx_fn``'s top-k.  ``approx_fn``
+    runs only when the exact top-k has rows, so a corpus without query
+    ids never touches the (unfittable-on-zero-rows) LSH/KMeans models;
+    with no exact rows every hit count is 0 and the floor holds
+    vacuously."""
+    exact = _exact_side(pin(_corpus(spark, sf_dir)))
+    hits = _hits(approx_fn(), exact) if exact.n_exact_rows else 0
+    return _graded_row(spark, exact, recall_ok=_floor_ok(hits, exact.n_exact_rows, min_pct))
 
 
 @register(
     "ann_lsh_recall_contract",
-    oracle=_ANN_CONTRACT_ORACLE,
+    oracle=_graded_oracle("recall_ok"),
     tags=("similarity", "lsh", "contract"),
 )
 def ann_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1026,7 +1047,7 @@ def ann_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_recall_contract",
-    oracle=_ANN_CONTRACT_ORACLE,
+    oracle=_graded_oracle("recall_ok"),
     tags=("similarity", "ivf", "contract"),
 )
 def ann_ivf_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1558,7 +1579,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pq_ann_recall_contract",
-    oracle=_ANN_CONTRACT_ORACLE,
+    oracle=_graded_oracle("recall_ok"),
     tags=("similarity", "pq", "contract"),
 )
 def pq_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1618,7 +1639,10 @@ def _serve_expected(idx: DataFrame, centers: "np.ndarray", qrows: list) -> int:
     each query yields min(TOP_K, vectors in its probed cells minus
     itself when its own cell is probed).  Draw-robust — never bets on
     a fixture's KMeans/cell shape — and cheap: two IVF_K-sized
-    aggregates plus the driver-side probe GEMM."""
+    aggregates plus the driver-side probe GEMM.  An empty batch
+    expects 0 rows."""
+    if not qrows:
+        return 0
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
     probes = _probe_cells(centers, Q, qids)
@@ -1649,18 +1673,11 @@ def _probe_cells(
     """Per-query ``nprobe`` nearest coarse cells by centroid cosine,
     descending, ties to the lower centroid id — THE probe of every IVF
     kind (one tiny driver GEMM against the KB matrix), shared by serving
-    and by the append contract's coverage expectation.  The GEMM
-    accumulates dimension by dimension in order (the
-    ``embedding_near_dup`` recipe), so each cosine is bit-identical to
-    the JVM fold of ``_cosine_sql`` and the order is a Spark window's
-    over (c_sim DESC, centroid)."""
-    dots = np.zeros((len(Q), len(centers)))
-    qn2, cn2 = np.zeros(len(Q)), np.zeros(len(centers))
-    for i in range(Q.shape[1]):
-        dots = dots + Q[:, i][:, None] * centers[:, i][None, :]
-        qn2 = qn2 + Q[:, i] * Q[:, i]
-        cn2 = cn2 + centers[:, i] * centers[:, i]
-    csim = dots / (np.sqrt(qn2)[:, None] * np.sqrt(cn2)[None, :])
+    and by the append contract's coverage expectation.  Each cosine is
+    bit-identical to the JVM fold of ``_cosine_sql``
+    (``_cosine_matrix``) and the order is a Spark window's over (c_sim
+    DESC, centroid)."""
+    csim = _cosine_matrix(Q, centers)
     return {
         q: [int(c) for c in np.argsort(-csim[i], kind="stable")[:nprobe]]
         for i, q in enumerate(qids)
@@ -1725,19 +1742,9 @@ def ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lives in the ratio.
 IVFPQ_RETENTION_MIN_PCT = 90
 
-_IVFPQ_CONTRACT_ORACLE = f"""{_EXACT_TOPK_CTE}
-        SELECT count(DISTINCT query_id) AS n_queries,
-               count(*) AS n_exact_rows,
-               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT) AS exact_sim_sum_q4,
-               TRUE AS recall_ok,
-               TRUE AS retention_ok
-        FROM topk
-    """
-
-
 @register(
     "ivfpq_recall_contract",
-    oracle=_IVFPQ_CONTRACT_ORACLE,
+    oracle=_graded_oracle("recall_ok", "retention_ok"),
     tags=("similarity", "ivf", "pq", "contract"),
 )
 def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1748,55 +1755,31 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     retains >= IVFPQ_RETENTION_MIN_PCT of flat IVF's hits on the same
     nprobe/IVF_K probes, so quantization loss is certified ~zero
     independent of the embedding draw (see the constant's ladder)."""
-    # ONE pinned corpus instead of three fresh parquet scans (ADVICE
-    # r13; guide §2.4); the query-slice fetch also materializes the pin
+    # ONE pinned corpus; the query-slice fetch also materializes the pin
     # before anything forks on it
     corpus = pin(_corpus(spark, sf_dir))
     qrows = _query_rows(corpus)
     if not qrows:
-        # no query ids (an empty corpus included): the exact top-k is
-        # empty, every hit count is 0 and both floors hold vacuously
-        # (0 >= 0) — the oracle's row
-        return local_df(spark,
-            [(0, 0, None, True, True)],
-            "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-            " recall_ok boolean, retention_ok boolean",
-        )
-    # exact baseline over the SAME pinned corpus (cosine_topk's body)
-    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
+        # no query ids (an empty corpus included): nothing is built and
+        # both floors hold vacuously — the oracle's row
+        return _graded_row(spark, _NO_EXACT, recall_ok=True, retention_ok=True)
     path = _index_path("ivfpq_recall")
-    # the exact-baseline materialization is fit-independent — overlap it
-    # with the eager index build (guide §2.6, VERDICT r13 item 1) so the
-    # exact pass hides behind the KMeans fit + artifact writes
-    pq_frame, _ = run_parallel(
-        lambda: _build_serve(spark, corpus, path, "ivfpq"),  # builds the artifact
-        lambda: exact.count(),
-    )
-    pq_hits = pq_frame.select("query_id", "neighbor_id").join(
-        exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
+    # the exact side is fit-independent: it overlaps the eager build
+    pq_frame, exact = run_parallel(
+        lambda: _build_serve(spark, corpus, path, "ivfpq"),
+        lambda: _exact_side(corpus),
     )
     # flat-IVF retention baseline: the "ivf" kind served from the index's
     # OWN flat store (partition-pruned) and persisted centers — no re-fit
-    # of the identical KMeans, no corpus re-scan (guide §2.4).  Same
-    # assignment, same probe, identical hits.
+    # of the identical KMeans, no corpus re-scan.  Same assignment, same
+    # probe, identical hits.
     ivf = _serve(spark, path, "ivf", _read_meta(spark, path), qrows)
-    ivf_hits = ivf.join(
-        exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
-    )
-    e = _exact_facts(exact)
-    h = pq_hits.agg(F.count("*").alias("n_pq_hits")).crossJoin(
-        ivf_hits.agg(F.count("*").alias("n_ivf_hits"))
-    )
-    return e.crossJoin(h).select(
-        "n_queries",
-        "n_exact_rows",
-        "exact_sim_sum_q4",
-        (F.col("n_pq_hits") * 100 >= F.col("n_exact_rows") * IVFPQ_RECALL_MIN_PCT).alias(
-            "recall_ok"
-        ),
-        (
-            F.col("n_pq_hits") * 100 >= F.col("n_ivf_hits") * IVFPQ_RETENTION_MIN_PCT
-        ).alias("retention_ok"),
+    pq_hits, ivf_hits = run_parallel(lambda: _hits(pq_frame, exact), lambda: _hits(ivf, exact))
+    return _graded_row(
+        spark,
+        exact,
+        recall_ok=_floor_ok(pq_hits, exact.n_exact_rows, IVFPQ_RECALL_MIN_PCT),
+        retention_ok=_floor_ok(pq_hits, ivf_hits, IVFPQ_RETENTION_MIN_PCT),
     )
 
 
@@ -2341,14 +2324,7 @@ def _rotation_mismatches(exact: DataFrame, exact_rot: DataFrame) -> DataFrame:
 
 @register(
     "opq_ivfpq_serve_contract",
-    oracle=f"""{_EXACT_TOPK_CTE}
-        SELECT count(DISTINCT query_id) AS n_queries,
-               count(*) AS n_exact_rows,
-               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT) AS exact_sim_sum_q4,
-               TRUE AS rotation_preserves_exact_topk,
-               TRUE AS recall_ok
-        FROM topk
-    """,
+    oracle=_graded_oracle("rotation_preserves_exact_topk", "recall_ok"),
     tags=("similarity", "ivf", "pq", "opq", "contract"),
 )
 def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2376,42 +2352,34 @@ def opq_ivfpq_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation changes NO cost term (same pruned probe reads, same ADC,
     same bounded re-rank).  The exact passes here are contract
     apparatus, not the serving path."""
-    corpus = _corpus(spark, sf_dir)
-    if corpus.isEmpty():
-        return local_df(spark, 
-            [(0, 0, None, True, True)],
-            "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-            " rotation_preserves_exact_topk boolean, recall_ok boolean",
+    corpus = pin(_corpus(spark, sf_dir))
+    if not _query_rows(corpus):
+        # no query ids (an empty corpus included): both exact top-k sets
+        # are empty and nothing is served, so both claims hold vacuously
+        return _graded_row(
+            spark, _NO_EXACT, rotation_preserves_exact_topk=True, recall_ok=True
         )
     R = _opq_fit(_fit_sample(corpus))[0]
     rotated = pin(corpus.select("vec_id", _rotate_embeddings(R)(F.col("emb")).alias("emb")))
-
-    # both sides of the tie band at RAW precision: a rounded kth sim
-    # would sit up to 5e-5 from a raw boundary sim and never inside
-    # ROTATION_TIE_EPS.  The facts and hits read the rounded sims, the
-    # precision the oracle emits.
-    exact_raw = pin(_exact_topk(corpus, raw=True))
-    exact = exact_raw.select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    exact, served = run_parallel(
+        lambda: _exact_side(corpus),
+        lambda: _build_serve(spark, rotated, _index_path("ivfpq_opq"), "ivfpq"),
+    )
     # set equality per query == symmetric difference is empty (both
     # sides are exactly N_QUERIES * TOP_K rows by construction), with
     # sub-round-off boundary pairs excluded (see _rotation_mismatches).
-    mismatches = _rotation_mismatches(exact_raw, _exact_topk(rotated, raw=True))
-    served = _build_serve(spark, rotated, _index_path("ivfpq_opq"), "ivfpq")
-    hits = served.select("query_id", "neighbor_id").join(
-        exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
+    # Both sides of the tie band are at RAW precision: a rounded kth sim
+    # would sit up to 5e-5 from a raw boundary sim and never inside
+    # ROTATION_TIE_EPS.
+    n_mismatch, hits = run_parallel(
+        lambda: _rotation_mismatches(exact.topk, _exact_topk(rotated, raw=True)).count(),
+        lambda: _hits(served, exact),
     )
-    e = _exact_facts(exact)
-    checks = mismatches.agg(F.count("*").alias("n_mismatch")).crossJoin(
-        hits.agg(F.count("*").alias("n_hits"))
-    )
-    return e.crossJoin(checks).select(
-        "n_queries",
-        "n_exact_rows",
-        "exact_sim_sum_q4",
-        (F.col("n_mismatch") == 0).alias("rotation_preserves_exact_topk"),
-        (
-            F.col("n_hits") * 100 >= F.col("n_exact_rows") * IVFPQ_RECALL_MIN_PCT
-        ).alias("recall_ok"),
+    return _graded_row(
+        spark,
+        exact,
+        rotation_preserves_exact_topk=n_mismatch == 0,
+        recall_ok=_floor_ok(hits, exact.n_exact_rows, IVFPQ_RECALL_MIN_PCT),
     )
 
 
@@ -2752,7 +2720,9 @@ def _serve(
     beyond the probed cells, so serve cost scales with the probed
     fraction, not the table.  IVF-Flat also serves an in-memory fitted
     (vec_id, emb, centroid) frame passed as ``path``: the same serve,
-    with no artifact."""
+    with no artifact.  An empty batch is an empty top-k."""
+    if not qrows:
+        return local_df(spark, [], _TOPK_SCHEMA)
     k = _KINDS[kind]
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
@@ -2837,8 +2807,8 @@ def _serve_roundtrip(
     means the serving state is not self-contained.  The contract's own checks
     ride along in the same driver actions: ``beside_build()`` overlaps
     the build, ``beside_serve(built_state, loaded_state)`` the two
-    serves, ``beside_diff[i](loaded_frame, built_state)`` the
-    anti-joins.  Returns
+    serves, ``beside_diff[i](loaded_frame, built_state[, beside_build
+    result])`` the anti-joins.  Returns
     (roundtrip_ok, n_loaded_rows, [beside_build], [beside_serve],
     [beside_diff...])."""
     state, *pre = run_parallel(
@@ -2868,7 +2838,7 @@ def _serve_roundtrip(
     only_built, only_loaded, *diff = run_parallel(
         lambda: built.join(loaded, cols, "left_anti").count(),
         lambda: loaded.join(built, cols, "left_anti").count(),
-        *[(lambda f=f: f(loaded, state)) for f in beside_diff],
+        *[(lambda f=f: f(loaded, state, *pre)) for f in beside_diff],
     )
     return only_built == 0 and only_loaded == 0, n_loaded, pre, side, diff
 
@@ -2940,16 +2910,7 @@ def _sq8_recon_ok(
 
 @register(
     "sq8_serve_contract",
-    oracle=f"""{_EXACT_TOPK_CTE}
-        SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
-               CAST(count(*) AS BIGINT) AS n_exact_rows,
-               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT)
-                   AS exact_sim_sum_q4,
-               TRUE AS state_roundtrip_ok,
-               TRUE AS recon_err_bounded,
-               TRUE AS recall_ok
-        FROM topk
-    """,
+    oracle=_graded_oracle("state_roundtrip_ok", "recon_err_bounded", "recall_ok"),
     tags=("similarity", "sq8", "quantization", "serving", "contract"),
     bench2=True,
 )
@@ -2980,41 +2941,27 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     store for Q×SQ_RERANK candidate rows."""
     corpus = pin(_corpus(spark, sf_dir))
     qrows = _query_rows(corpus)
-    schema = (
-        "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-        " state_roundtrip_ok boolean, recon_err_bounded boolean,"
-        " recall_ok boolean"
-    )
     if not qrows:
-        return local_df(spark, [(0, 0, None, True, True, True)], schema)
+        return _graded_row(
+            spark, _NO_EXACT, state_roundtrip_ok=True, recon_err_bounded=True, recall_ok=True
+        )
     path = _index_path("sq8_index")
-    # exact baseline over the PINNED corpus (not a fresh parquet scan —
-    # guide §2.4; expressions identical to cosine_topk).  Its facts
-    # aggregate is build-independent, so it runs CONCURRENTLY with the
-    # build (guide §2.6, VERDICT r13 item 1)
-    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
-    ok, _, (facts,), (recon,), (n_hits,) = _serve_roundtrip(
+    # the exact side is build-independent: it runs CONCURRENTLY with the
+    # build, and the served hits count beside the roundtrip's anti-joins
+    ok, _, (exact,), (recon,), (hits,) = _serve_roundtrip(
         spark, "sq8", corpus, path, qrows,
-        beside_build=lambda: _exact_facts(exact).collect()[0],
+        beside_build=lambda: _exact_side(corpus),
         beside_serve=lambda built, _: _sq8_recon_ok(
             spark.read.parquet(path), corpus, *built["sq"]
         ),
-        beside_diff=(lambda served, _: _hits(served, exact),),
+        beside_diff=(lambda served, _, exact: _hits(served, exact),),
     )
-    return local_df(spark,
-        [
-            (
-                facts.n_queries,
-                facts.n_exact_rows,
-                # NULL when the exact top-k is empty (rows but no
-                # vec_id < N_QUERIES) — the oracle emits NULL there too
-                facts.exact_sim_sum_q4,
-                ok,
-                recon,
-                n_hits * 100 >= facts.n_exact_rows * SQ8_RECALL_MIN_PCT,
-            )
-        ],
-        schema,
+    return _graded_row(
+        spark,
+        exact,
+        state_roundtrip_ok=ok,
+        recon_err_bounded=recon,
+        recall_ok=_floor_ok(hits, exact.n_exact_rows, SQ8_RECALL_MIN_PCT),
     )
 
 
@@ -3175,17 +3122,9 @@ def ivfsq8_serve(
 
 @register(
     "ivf_sq8_serve_contract",
-    oracle=f"""{_EXACT_TOPK_CTE}
-        SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
-               CAST(count(*) AS BIGINT) AS n_exact_rows,
-               CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT)
-                   AS exact_sim_sum_q4,
-               TRUE AS state_roundtrip_ok,
-               TRUE AS recon_err_bounded,
-               TRUE AS recall_ok,
-               TRUE AS retention_ok
-        FROM topk
-    """,
+    oracle=_graded_oracle(
+        "state_roundtrip_ok", "recon_err_bounded", "recall_ok", "retention_ok"
+    ),
     tags=("similarity", "ivf", "sq8", "serving", "contract"),
     bench2=True,
 )
@@ -3217,19 +3156,12 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving family (ollama_consumer.py:234)."""
     corpus = pin(_corpus(spark, sf_dir))
     qrows = _query_rows(corpus)
-    out_schema = (
-        "n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-        " state_roundtrip_ok boolean, recon_err_bounded boolean,"
-        " recall_ok boolean, retention_ok boolean"
-    )
     if not qrows:
-        return local_df(spark, [(0, 0, None, True, True, True, True)], out_schema)
+        return _graded_row(
+            spark, _NO_EXACT, state_roundtrip_ok=True, recon_err_bounded=True,
+            recall_ok=True, retention_ok=True,
+        )
     path = _index_path("ivfsq8_index")
-    # exact baseline over the PINNED corpus; its facts aggregate never
-    # consumes KMeans centers or the codec, so it runs CONCURRENTLY with
-    # the build (guide §2.6, VERDICT r13 item 1): the exact-topk pass
-    # hides behind the contract's one mandatory KMeans fit
-    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
 
     def recon(built: dict, _) -> bool:
         # residual recon bound: the residual frame named for
@@ -3246,30 +3178,27 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flat-IVF retention baseline: the "ivf" kind served from the
     # index's OWN flat store (partition-pruned) and centers — a fresh
     # ann_ivf_topk would re-fit the identical KMeans (same corpus, k,
-    # seed) and re-scan the corpus for nothing (guide §2.4).  Same
-    # assignment, same probe, identical hits.
-    def ivf_hits(_, built: dict) -> int:
+    # seed) and re-scan the corpus for nothing.  Same assignment, same
+    # probe, identical hits.
+    def ivf_hits(_, built: dict, exact: _Exact) -> int:
         return _hits(_serve(spark, path, "ivf", built, qrows), exact)
 
-    ok, _, (facts,), (recon_ok,), (sq8_hits, ivf_n) = _serve_roundtrip(
+    # the exact side never consumes KMeans centers or the codec, so it
+    # runs CONCURRENTLY with the build: the exact-topk pass hides behind
+    # the contract's one mandatory KMeans fit
+    ok, _, (exact,), (recon_ok,), (sq8_hits, ivf_n) = _serve_roundtrip(
         spark, "ivfsq8", corpus, path, qrows,
-        beside_build=lambda: _exact_facts(exact).collect()[0],
+        beside_build=lambda: _exact_side(corpus),
         beside_serve=recon,
-        beside_diff=(lambda served, _: _hits(served, exact), ivf_hits),
+        beside_diff=(lambda served, _, exact: _hits(served, exact), ivf_hits),
     )
-    return local_df(spark,
-        [
-            (
-                facts.n_queries,
-                facts.n_exact_rows,
-                facts.exact_sim_sum_q4,  # NULL on an empty exact top-k
-                ok,
-                recon_ok,
-                sq8_hits * 100 >= facts.n_exact_rows * IVFPQ_RECALL_MIN_PCT,
-                sq8_hits * 100 >= ivf_n * IVFPQ_RETENTION_MIN_PCT,
-            )
-        ],
-        out_schema,
+    return _graded_row(
+        spark,
+        exact,
+        state_roundtrip_ok=ok,
+        recon_err_bounded=recon_ok,
+        recall_ok=_floor_ok(sq8_hits, exact.n_exact_rows, IVFPQ_RECALL_MIN_PCT),
+        retention_ok=_floor_ok(sq8_hits, ivf_n, IVFPQ_RETENTION_MIN_PCT),
     )
 
 
@@ -3395,23 +3324,16 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_df(spark, [(0, 0, 0, None, True, True, True)], out_schema)
     cut = int(stats.mx) + 1 - int(stats.n) // STALE_DELTA_DEN
 
-    # exact baseline over the PINNED corpus (not a fresh parquet scan —
-    # guide §2.4); materialize it (the facts aggregate) BEFORE forking
-    # the legs so neither leg races to build the shared cache
-    exact = pin(_exact_topk(corpus).select("query_id", "neighbor_id", "sim"))
-    facts = exact.agg(
-        F.count("*").alias("n_exact_rows"),
-        F.sum(F.round(F.col("sim") * 10000).cast("long")).alias("exact_sim_sum_q4"),
-    ).collect()[0]
-
+    # the exact side is materialized BEFORE forking the legs so neither
+    # leg races to build the shared cache
+    exact = _exact_side(corpus)
     qrows = _query_rows(corpus)
 
     def serve_hits(assigned: DataFrame, centers: "np.ndarray") -> int:
         # the "ivf" kind's serve over the in-memory fitted frame — the
         # SAME serve for the frozen and the fresh fit, so retention
-        # compares serving paths, never code paths
-        if not qrows:  # no query ids: nothing served, nothing hit
-            return 0
+        # compares serving paths, never code paths (no query ids: an
+        # empty serve, nothing hit)
         return _hits(_serve(spark, assigned, "ivf", {"center": centers}, qrows), exact)
 
     def stale_leg() -> tuple[int, int]:
@@ -3465,11 +3387,11 @@ def ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 n_base,
                 n_delta,
-                facts.n_exact_rows,
-                facts.exact_sim_sum_q4,
+                exact.n_exact_rows,
+                exact.exact_sim_sum_q4,
                 delta_misassigned == 0,
-                bool(stale_hits * 100 >= facts.n_exact_rows * STALE_RECALL_MIN_PCT),
-                bool(stale_hits * 100 >= fresh_hits * STALE_RETENTION_MIN_PCT),
+                _floor_ok(stale_hits, exact.n_exact_rows, STALE_RECALL_MIN_PCT),
+                _floor_ok(stale_hits, fresh_hits, STALE_RETENTION_MIN_PCT),
             )
         ],
         out_schema,
@@ -3684,13 +3606,7 @@ IVF_CURVE_NPROBES: tuple[int, ...] = (1, 2, 4, IVF_K)
 @register(
     "ivf_recall_curve",
     oracle=f"""{_EXACT_TOPK_CTE},
-        facts AS (
-            SELECT count(DISTINCT query_id) AS n_queries,
-                   count(*) AS n_exact_rows,
-                   CAST(sum(CAST(round(sim * 10000) AS BIGINT)) AS BIGINT)
-                       AS exact_sim_sum_q4
-            FROM topk
-        )
+        facts AS (SELECT {_EXACT_FACTS_SQL} FROM topk)
         SELECT CAST(p.nprobe AS INT) AS nprobe,
                n_queries, n_exact_rows, exact_sim_sum_q4,
                CAST(CASE WHEN p.nprobe = {IVF_K} THEN n_exact_rows END AS BIGINT)
@@ -3733,54 +3649,32 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe join of ``ann_ivf_topk``, and the per-point reduction is a
     TOP_K·|queries|-row join + count.  The curve is the artifact that
     justifies the NPROBE constant the serving ops hard-code."""
-    out_schema = (
-        "nprobe int, n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
-        " hits_at_full long, monotone_ok boolean, recall_floor_ok boolean"
-    )
-    corpus = _corpus(spark, sf_dir)
+    corpus = pin(_corpus(spark, sf_dir))
     qrows = _query_rows(corpus)
-    if not qrows:
-        # no query ids (an empty corpus included): the oracle's rows —
-        # an empty exact top-k, 0 hits at full probe, vacuous claims
-        return local_df(spark,
-            [
-                (n, 0, 0, None, 0 if n == IVF_K else None, True, True)
-                for n in IVF_CURVE_NPROBES
-            ],
-            out_schema,
+    # no query ids (an empty corpus included): the oracle's rows — an
+    # empty exact top-k, 0 hits everywhere, vacuous claims
+    exact, hits = _NO_EXACT, [0] * len(IVF_CURVE_NPROBES)
+    if qrows:
+        (assigned, centers), exact = run_parallel(
+            lambda: _ivf_fit(corpus), lambda: _exact_side(corpus)
         )
-    assigned, centers = _ivf_fit(corpus)
-    assigned = pin(assigned)
-
-    exact = pin(cosine_topk(spark, sf_dir).select("query_id", "neighbor_id", "sim"))
-    exact_ids = exact.select("query_id", "neighbor_id")
-    hit_rows = None
-    for n in IVF_CURVE_NPROBES:
-        served = _serve(spark, assigned, "ivf", {"center": centers}, qrows, n)
-        h = (
-            served.select("query_id", "neighbor_id")
-            .join(exact_ids, ["query_id", "neighbor_id"])
-            .agg(F.count("*").alias("n_hits"))
-            .select(F.lit(n).alias("nprobe"), "n_hits")
-        )
-        hit_rows = h if hit_rows is None else hit_rows.unionByName(h)
-    facts = _exact_facts(exact)
-    w = W.orderBy("nprobe")
-    prev = F.lag("n_hits").over(w)
-    return (
-        hit_rows.crossJoin(facts)
-        .select(
-            "nprobe",
-            "n_queries",
-            "n_exact_rows",
-            "exact_sim_sum_q4",
-            F.when(F.col("nprobe") == IVF_K, F.col("n_hits"))
-            .cast("long")
-            .alias("hits_at_full"),
-            (prev.isNull() | (F.col("n_hits") >= prev)).alias("monotone_ok"),
+        assigned = pin(assigned)
+        hits = run_parallel(*[
+            lambda n=n: _hits(_serve(spark, assigned, "ivf", {"center": centers}, qrows, n), exact)
+            for n in IVF_CURVE_NPROBES
+        ])
+    return local_df(
+        spark,
+        [
             (
-                (F.col("nprobe") < NPROBE)
-                | (F.col("n_hits") * 100 >= F.col("n_exact_rows") * IVF_RECALL_MIN_PCT)
-            ).alias("recall_floor_ok"),
-        )
+                n,
+                *exact[1:],
+                h if n == IVF_K else None,
+                i == 0 or h >= hits[i - 1],
+                n < NPROBE or _floor_ok(h, exact.n_exact_rows, IVF_RECALL_MIN_PCT),
+            )
+            for i, (n, h) in enumerate(zip(IVF_CURVE_NPROBES, hits))
+        ],
+        "nprobe int, n_queries long, n_exact_rows long, exact_sim_sum_q4 long,"
+        " hits_at_full long, monotone_ok boolean, recall_floor_ok boolean",
     )

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ssafynews_data_spark.caching import scratch_dir
+
 
 def session_builder(
     app_name: str = "ssafynews_data_spark",
@@ -79,6 +81,9 @@ def session_builder(
         # implements pushFilters; loading it requires this on)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # any catalog access creates the warehouse directory; keep it out
+        # of the caller's working directory
+        .config("spark.sql.warehouse.dir", scratch_dir("warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -109,3 +109,15 @@ def test_scratch_location_has_one_owner():
                     ):
                         hits.append(f"{os.path.relpath(path, REPO)}:{i}: {line.strip()}")
     assert not hits, "\n".join(hits)
+
+
+def test_engine_session_warehouse_lies_under_the_scratch_root(spark):
+    """Catalog access creates the warehouse directory, so the engine
+    session points it under the scratch root; Spark's default is
+    ``spark-warehouse`` in the caller's working directory."""
+    from ssafynews_data_spark.caching import scratch_dir
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    root = os.path.dirname(scratch_dir("probe"))
+    assert os.path.commonpath([root, warehouse]) == root
+    assert os.path.commonpath([os.getcwd(), warehouse]) != os.getcwd()

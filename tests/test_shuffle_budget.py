@@ -112,17 +112,10 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     # round-10: ONE corpus-reducing hash agg on source; the windows
     # after it run over |sources| rows (single-partition by design)
     "token_budget_allocation": 1,
-    # round-10 (OPQ∘IVF-PQ): the returned plan composes the CONTRACT
-    # APPARATUS — two exact top-k windows (original + rotated space),
-    # the served-hits join, the symmetric-difference full-outer join,
-    # and their aggregates; the serving path itself stays the pruned
-    # ivfpq shape (its own rows above).  Not a serving-cost pin.
-    # r11: +3 for the boundary-band apparatus in _rotation_mismatches
-    # (per-query kth-sim aggregate + its join into the symmetric
-    # difference — ADVICE r10's degenerate-margin tolerance); all three
-    # move |queries|-sized rows only.  Still contract apparatus, not
-    # the serving path.
-    "opq_ivfpq_serve_contract": 14,
+    # round-10 (OPQ∘IVF-PQ): build, serve, the exact top-k sets and
+    # the rotation and hit checks run inside the contract body; literal
+    # row out (was 14 while the checks were the returned plan)
+    "opq_ivfpq_serve_contract": 0,
     # round-11 (SQ8 lifecycle): build + both serves run inside the
     # contract body; the returned row is a literal frame
     "sq8_serve_contract": 0,
@@ -205,11 +198,10 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     "ann_ivf_topk": 1,
     # the same serve from the partition-pruned "ivf" artifact
     "ivf_partition_pruning": 1,
-    # per nprobe point: the serve's window, the two sides of its hit
-    # join with the pinned exact top-k and that pin's window re-printed
-    # (4 x 4); plus the facts' distinct-count exchange and one more
-    # re-print (22 with a probe window per serve)
-    "ivf_recall_curve": 18,
+    # the fit, the exact top-k and every nprobe point's hit count run
+    # inside the body; literal rows out (was 18 while the hit joins were
+    # the returned plan)
+    "ivf_recall_curve": 0,
 }
 
 

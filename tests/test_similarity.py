@@ -829,40 +829,57 @@ def test_ivf_sq8_pruned_reads(spark, sf_dir, tmp_path):
         assert "centroid" in pf
 
 
-def test_ivfpq_recall_contract_rows_but_no_query_ids(spark, tmp_path):
-    """Rows but no vec_id < N_QUERIES (a shape tiny reseeds can draw):
-    ivfpq_index_topk never builds the artifact (there is nothing to
-    serve), so the contract must emit the vacuous row — counts 0, NULL
-    sim sum, both floors TRUE — WITHOUT touching the (nonexistent or
-    stale) meta/flat paths for its flat-IVF retention baseline (r13
-    optimization-round regression guard)."""
-    import os
-
-    from ssafynews_data_spark.registry import load_all
+@pytest.fixture(scope="module")
+def no_query_ids_sf(spark, tmp_path_factory) -> str:
+    """Rows but no vec_id < N_QUERIES (a shape tiny reseeds can draw)."""
     from ssafynews_data_spark.schemas import TESTDATA_SCHEMAS
 
-    d = str(tmp_path / "noq_sf")
-    for name, schema in TESTDATA_SCHEMAS.items():
-        rows = []
-        if name == "embeddings":
-            rows = [
-                (
-                    similarity.N_QUERIES + i,
-                    [float(i + j) / 8.0 for j in range(8)],
-                    i % 3,
-                )
-                for i in range(30)
-            ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            os.path.join(d, f"{name}.parquet")
-        )
-    out = load_all()["ivfpq_recall_contract"].fn(spark, d).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.n_queries == 0
-    assert r.n_exact_rows == 0
-    assert r.exact_sim_sum_q4 is None
-    assert bool(r.recall_ok) and bool(r.retention_ok)
+    d = tmp_path_factory.mktemp("noq_sf")
+    rows = [
+        (similarity.N_QUERIES + i, [float(i + j) / 8.0 for j in range(8)], i % 3)
+        for i in range(30)
+    ]
+    spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).coalesce(1).write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_lsh_recall_contract",
+        "ann_ivf_recall_contract",
+        "pq_ann_recall_contract",
+        "ivfpq_recall_contract",
+        "opq_ivfpq_serve_contract",
+        "sq8_serve_contract",
+        "ivf_sq8_serve_contract",
+        "ivf_staleness_audit",
+        "ivf_recall_curve",
+        "ivfpq_index_append",
+    ],
+)
+def test_rows_but_no_query_ids_match_the_oracle(spark, no_query_ids_sf, name):
+    """With no query ids the exact top-k is empty: every graded contract
+    emits the oracle's vacuous row (counts 0, NULL sim sum, every floor
+    TRUE) without touching a meta/flat path it never built, and the
+    append contract serves an empty batch as an empty top-k.  Compared
+    the way tools/check_oracles.py compares: dtype kinds, then values."""
+    import duckdb
+
+    from ssafynews_data_spark.registry import load_all
+    from tools.check_oracles import canon, kind_mismatches
+
+    q = load_all()[name]
+    got = q.fn(spark, no_query_ids_sf).toPandas()
+    con = duckdb.connect()
+    emb = f"{no_query_ids_sf}/embeddings.parquet/*.parquet"
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{emb}'")
+    want = con.execute(q.oracle).fetchdf()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert kind_mismatches(got, want) == {}
+    assert canon(got) == canon(want)
 
 
 def test_sq8_sql_twins_match_column_forms(spark):
