@@ -267,6 +267,24 @@ def minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return sigs.select("doc_id", F.array(*[f"h{i}" for i in range(k)]).alias("sig"))
 
 
+def band_rows(
+    sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
+) -> DataFrame:
+    """(doc_id, band_idx, band_hash): one row per doc and band, the
+    band's ``k // bands`` signature rows hashed with its index by
+    ``xxhash64``.  THE minhash banding: ``lsh_candidate_pairs`` joins it
+    against itself, and the incremental index stores it as is (its
+    storage schema) and joins a delta batch's rows against it."""
+    rows = k // bands
+    band_cols = [
+        F.xxhash64(F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)])
+        for b in range(bands)
+    ]
+    return sigs.select(
+        "doc_id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash")
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
 ) -> DataFrame:
@@ -277,17 +295,7 @@ def lsh_candidate_pairs(
     generation is shuffle-linear in docs — this is what makes near-dup
     feasible at 100 TB (vs the quadratic shingle self-join).
     """
-    rows = k // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)]
-        ).alias(f"b{b}")
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"),
-    )
+    banded = band_rows(sigs, bands, k)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

@@ -50,32 +50,13 @@ from ssafynews_data_spark.operators.dedup import (
     MINHASH_CHAIN_CONFIDENT_Q4,
     _doc_shingle_hashes,
     _doc_shingles,
-    lsh_candidate_pairs,
+    band_rows,
     minhash_signatures,
 )
 from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.registry import register
 
 DELTA_MOD = 5  # doc_id % 5 == 0 → the "new batch" (20%)
-
-
-def band_rows(sig_src: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_hash) — the index's storage schema,
-    derived from the same banding as ``lsh_candidate_pairs`` (it joins
-    a frame of this shape against itself; here the two sides are index
-    vs delta instead)."""
-    from ssafynews_data_spark.operators.dedup import LSH_BANDS, MINHASH_K
-
-    rows = MINHASH_K // LSH_BANDS
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)]
-        ).alias(f"b{b}")
-        for b in range(LSH_BANDS)
-    ]
-    return sig_src.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash")
-    )
 
 
 def build_index(spark: SparkSession, sf_dir: str) -> str:

@@ -7,15 +7,16 @@ ladder:
 1. brute-force cosine top-k — exact baseline, broadcast the query set so
    the corpus is scanned once with no shuffle (oracle-checked against
    DuckDB ``list_cosine_similarity``);
-2. embedding near-dup pairs — cosine >= threshold self-join (exact,
-   quadratic → correctness oracle);
-3. SRP-banded LSH — sign-random-projection bit bands (Charikar '02);
-   candidate pairs via equality join on (band, key), bits-per-band
-   derived from corpus size so background candidates stay ~linear
-   (scale path; both ``near_dup_auto`` and the query-side ANN
-   ``ann_lsh_topk`` moved onto SRP banding in round 6, replacing
-   MLlib's BucketedRandomProjectionLSH — BRP's scalar buckets
-   degenerate on unit vectors, see ``near_dup_auto``);
+2. embedding near-dup pairs — cosine >= threshold over all pairs, the
+   ONE exact kernel ``_exact_pairs`` (quadratic → correctness oracle);
+3. SRP-banded LSH — sign-random-projection bit bands (Charikar '02),
+   bits-per-band derived from corpus size (scale path; both
+   ``near_dup_auto`` and the query-side ANN ``ann_lsh_topk`` moved
+   onto SRP banding in round 6, replacing MLlib's
+   BucketedRandomProjectionLSH — BRP's scalar buckets degenerate on
+   unit vectors, see ``near_dup_auto``).  ``near_dup_auto`` verifies
+   inside each (band, key) bucket; ``ann_lsh_topk`` probes the buckets
+   by a broadcast equality join;
 3b. PQ-ANN (ladder item 5) keeps the O(q·n) scoring remark instead:
    ADC scores every (query, code) pair, so its cost is q·n map lookups
    regardless of codebook quality — linear in the corpus, pruned
@@ -61,10 +62,12 @@ contract returns one literal row whose oracle ``_graded_oracle`` builds
 from the claim names.
 
 Exact math is built-in array expressions (``zip_with`` + ``aggregate``),
-computed in double, JVM-side — except the all-pairs near-dup verify
-form, where per-pair row machinery dominates and a blocked numpy matrix
-product via ``mapInPandas`` is ~60x faster with bitwise-identical
-results (order-preserving accumulation).
+computed in double, JVM-side — except where whole blocks of vectors
+meet: every near-dup pair set (``_exact_pairs``, the LSH bucket verify
+and SemDeDup's cluster step, all through the one pair mask
+``_near_pairs``) and the IVF probe run ``_cosine_matrix``, the in-order
+numpy twin of the JVM fold, so every double is bitwise identical and
+per-pair row machinery disappears (~60x at sf0.1).
 """
 
 from __future__ import annotations
@@ -99,8 +102,9 @@ _TOPK_SCHEMA = "query_id long, neighbor_id long, sim double, rank int"
 EXACT_NEAR_DUP_MAX_ROWS = 50_000
 
 #: default router crossover (perf, not safety): below this the exact
-#: quadratic branch beats LSH band generation; far below the hard cap.
-EXACT_NEAR_DUP_ROUTE_ROWS = 1_000
+#: kernel measured faster than the LSH branch (``near_dup_auto``); far
+#: below the hard cap.
+EXACT_NEAR_DUP_ROUTE_ROWS = 5_000
 assert EXACT_NEAR_DUP_ROUTE_ROWS <= EXACT_NEAR_DUP_MAX_ROWS
 
 
@@ -262,65 +266,85 @@ def _exact_rerank_topk(cand: DataFrame, raw: bool = False) -> DataFrame:
         WHERE list_cosine_similarity(a.emb, b.emb) >= {NEAR_DUP_COS}
     """,
     tags=("dedup", "similarity"),
-    # NOT benched: this is the driver-materialized GEMM verify form; the
-    # benched near-dup headline is near_dup_auto_pairs (the scale path).
+    # NOT benched: this is the driver-materialized exact form; the
+    # benched near-dup headline is near_dup_lsh_verified (the scale path).
 )
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine near-dup pairs (the embedding analog of
-    ``ngram_jaccard_pairs``).  Quadratic — the oracle/verify form; the
-    LSH variant below is the candidate generator at scale.
-
-    Physical strategy: blocked matrix product via ``mapInPandas`` — each
-    task multiplies its block of rows against the broadcast corpus
-    matrix with numpy, emitting only surviving pairs through Arrow.
-    Accumulation is dimension-by-dimension IN ORDER, so every double is
-    bitwise identical to the JVM ``aggregate(zip_with(...))`` form (and
-    to the DuckDB oracle at the rounded precision) — vectorization
-    changes the speed, not the math.  Measured 64 s → ~1 s at sf0.1 vs
-    the row-at-a-time nested-loop join.
-    """
+    ``ngram_jaccard_pairs``): the exact all-pairs kernel
+    ``_exact_pairs`` over the whole corpus.  Quadratic — the
+    oracle/verify form; ``near_dup_auto`` routes larger corpora onto
+    SRP-LSH buckets."""
     corpus = pin(_corpus(spark, sf_dir))
-    n = corpus.count()
-    if n > EXACT_NEAR_DUP_MAX_ROWS:
-        # Fail loudly instead of OOMing the driver: the corpus matrix is
-        # broadcast into every Python worker AND materialized here.
+    pairs = _exact_pairs(corpus, NEAR_DUP_COS)
+    # round JVM-side so the rounding rule matches every other query
+    return pairs.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+
+
+#: rows per side of one ``_near_pairs`` cosine tile: a 2,048 × 2,048
+#: float64 matrix is 32 MB whatever the corpus, block or bucket size
+PAIR_TILE = 2048
+_PAIRS_SCHEMA = "id_a LONG, id_b LONG, cos_sim DOUBLE"
+
+
+def _near_pairs(a_ids, A, b_ids, B, threshold: float):
+    """THE near-dup pair mask: yields ``(i, j, cos)`` index arrays for
+    every row i of ``A`` and j of ``B`` with ``a_ids[i] < b_ids[j]`` and
+    cosine >= ``threshold``, one PAIR_TILE × PAIR_TILE ``_cosine_matrix``
+    tile at a time (each element is computed on its own, so tiling
+    changes no double).  The comparison is numpy's: a vector with zero
+    norm or a non-finite component has a NaN cosine and is never
+    paired."""
+    for r in range(0, len(A), PAIR_TILE):
+        for c in range(0, len(B), PAIR_TILE):
+            sim = _cosine_matrix(A[r : r + PAIR_TILE], B[c : c + PAIR_TILE])
+            lt = a_ids[r : r + PAIR_TILE, None] < b_ids[None, c : c + PAIR_TILE]
+            ii, jj = np.nonzero(lt & (sim >= threshold))
+            yield ii + r, jj + c, sim[ii, jj]
+
+
+def _exact_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
+    """THE exact all-pairs near-dup kernel: ``(id_a, id_b, cos_sim)``
+    for every pair of ``corpus`` ``(vec_id, emb)`` rows with id_a < id_b
+    and cosine >= ``threshold``, cos_sim unrounded.
+
+    Physical strategy: the corpus matrix is materialized on the driver
+    and broadcast into a blocked ``mapInPandas``; each task pairs its
+    block against it through ``_near_pairs``, emitting only surviving
+    pairs through Arrow.  Every double is bitwise identical to the JVM
+    ``aggregate(zip_with(...))`` fold (and to the DuckDB oracle at the
+    rounded precision).  Measured 64 s → ~1 s at sf0.1 vs the
+    row-at-a-time nested-loop join.  Callers pin ``corpus``: it is
+    collected, then scanned."""
+    # the one capped collect is the cap check: past the cap the matrix
+    # would OOM the driver and every Python worker it is broadcast into
+    pdf = corpus.limit(EXACT_NEAR_DUP_MAX_ROWS + 1).toPandas()
+    if len(pdf) > EXACT_NEAR_DUP_MAX_ROWS:
         raise ValueError(
-            f"embedding_near_dup is the exact verify form (quadratic, "
-            f"driver-materialized) and is capped at "
-            f"{EXACT_NEAR_DUP_MAX_ROWS} rows; got {n}. Use near_dup_auto "
-            f"(LSH candidates + exact verify) at scale."
+            f"the exact near-dup kernel (quadratic, driver-materialized) "
+            f"is capped at {EXACT_NEAR_DUP_MAX_ROWS} rows; the corpus has "
+            f"more. Use near_dup_auto (SRP-LSH buckets) at scale."
         )
-    pdf = corpus.toPandas()  # verify-form corpus is small by contract (guarded)
     if pdf.empty:
-        return local_df(spark, [], "id_a LONG, id_b LONG, cos_sim DOUBLE")
+        return local_df(corpus.sparkSession, [], _PAIRS_SCHEMA)
 
     b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     B = np.array(pdf["emb"].tolist(), dtype=np.float64)
 
     def gemm_block(batches):
         for block in batches:
-            if block.empty:
-                continue
             a_ids = block["vec_id"].to_numpy(dtype=np.int64)
-            sim = _cosine_matrix(np.array(block["emb"].tolist(), dtype=np.float64), B)
-            mask = (a_ids[:, None] < b_ids[None, :]) & (sim >= NEAR_DUP_COS)
-            ii, jj = np.nonzero(mask)
-            yield pd.DataFrame(
-                {"id_a": a_ids[ii], "id_b": b_ids[jj], "cos_sim": sim[ii, jj]}
-            )
+            A = np.array(block["emb"].tolist(), dtype=np.float64)
+            for ii, jj, sim in _near_pairs(a_ids, A, b_ids, B, threshold):
+                yield pd.DataFrame({"id_a": a_ids[ii], "id_b": b_ids[jj], "cos_sim": sim})
 
     # Right-size the fan-out: ~2k-row GEMM blocks.  With a tiny corpus,
     # 32 Python workers would each pay interpreter+numpy startup for
     # microseconds of matmul; at scale the same formula spreads blocks
-    # across the cluster (block × corpus fits executor memory by
-    # construction: 2048 × |corpus| × 8 B).
-    width = spark.sparkContext.defaultParallelism
-    parts = max(1, min(width, len(pdf) // 2048 + 1))
-    out = corpus.repartition(parts).mapInPandas(
-        gemm_block, "id_a LONG, id_b LONG, cos_sim DOUBLE"
-    )
-    # round JVM-side so the rounding rule matches every other query
-    return out.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+    # across the cluster.
+    width = corpus.sparkSession.sparkContext.defaultParallelism
+    parts = max(1, min(width, len(pdf) // PAIR_TILE + 1))
+    return corpus.repartition(parts).mapInPandas(gemm_block, _PAIRS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -371,49 +395,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIR_COSINE_UDF = None
-
-
-def pair_cosine(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine over two array columns with
-    dimension-by-dimension IN-ORDER accumulation — bitwise-identical to
-    the JVM ``aggregate(zip_with(...))`` fold and to the blocked-GEMM
-    forms (``embedding_near_dup``, ``semantic_dedup``), but ~8x faster
-    than the interpreted higher-order functions for per-pair work.
-    THE single definition of the accumulation recipe: every consumer
-    shares this UDF so the bitwise-equality guarantee can't drift.
-    Built lazily (and cached) because pandas_udf return-type parsing
-    needs an active SparkContext — module import must stay session-free.
-
-    Marked non-deterministic (it is not — the fold is exact) as the
-    optimizer fence from the optimization guide §4.4: a filter on the
-    UDF's output otherwise duplicates the ArrowEvalPython node (one
-    copy pushed below the filter, one in the surviving projection), so
-    every candidate pair paid the Arrow round-trip twice
-    (near_dup_auto's plan showed ArrowEvalPython at nodes 35 AND 38;
-    after the fence it is evaluated once)."""
-    global _PAIR_COSINE_UDF
-    if _PAIR_COSINE_UDF is None:
-
-        @F.pandas_udf("double")
-        def _pc(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-            if len(a_s) == 0:
-                return pd.Series([], dtype="float64")
-            A = np.array(a_s.tolist(), dtype=np.float64)
-            B = np.array(b_s.tolist(), dtype=np.float64)
-            na2 = np.zeros(len(A))
-            nb2 = np.zeros(len(A))
-            acc = np.zeros(len(A))
-            for i in range(A.shape[1]):  # left-to-right, like the JVM fold
-                na2 = na2 + A[:, i] * A[:, i]
-                nb2 = nb2 + B[:, i] * B[:, i]
-                acc = acc + A[:, i] * B[:, i]
-            return pd.Series(acc / (np.sqrt(na2) * np.sqrt(nb2)))
-
-        _PAIR_COSINE_UDF = _pc.asNondeterministic()
-    return _PAIR_COSINE_UDF(a, b)
-
-
 def srp_band_params(
     n: int, threshold: float, target_recall: float = 0.9, band_cap: int = 48
 ) -> tuple[int, int]:
@@ -425,24 +406,25 @@ def srp_band_params(
     Two competing constraints, resolved in this order:
 
     - pruning wants MORE bits: background collisions per random pair
-      per band are 0.5^rbits, so rbits ~ log2(n / 8) keeps expected
-      background candidates per vector roughly constant as n grows —
-      this is the knob that makes the join shuffle-linear at 100 TB;
+      per band are 0.5^rbits, so rbits ~ log2(n / 8) keeps a vector's
+      expected background bucket-mates roughly constant as n grows —
+      the knob that keeps the bucket verify near-linear at 100 TB;
     - recall wants FEWER bits: hitting ``target_recall`` at exactly
       ``threshold`` needs ln(1-R) / ln(1 - p_bit^rbits) bands, and the
       band budget is capped (each band is one exploded row per vector
-      in the join), so rbits is clamped to the largest value whose
-      band requirement fits the cap.
+      through the bucket exchange), so rbits is clamped to the largest
+      value whose band requirement fits the cap.
 
     At aggressive thresholds (>= ~0.8, the realistic near-dup regime)
     the recall clamp never binds and pruning scales with log n.  At
     permissive thresholds (the 0.35 fixture regime, inside the tail of
-    the RANDOM-pair cosine distribution at dim 64) p_bit is barely
-    above 1/2, the clamp binds at small rbits, and the pruning factor
-    is modest — correctly so: the true result set itself is a constant
-    fraction of all pairs there, so no candidate scheme can be
-    sub-quadratic.  Output-linear is the achievable contract, and the
-    verify step is output-proportional."""
+    the RANDOM-pair cosine distribution at dim 64) p_bit is 0.614, the
+    clamp binds at (6 bits, 42 bands) for every n from 500 to 200,000,
+    and about half of all pairs share some band (977,698 of 1,999,000
+    at sf0.1), although the true result is 0.2% of all pairs (4,137 of
+    1,999,000 at sf0.1; 425,773 of 199,990,000 at sf1).  So the
+    candidate pairs are never materialized: ``near_dup_auto`` verifies
+    inside each bucket and emits only the result."""
     import math
 
     # threshold == 1.0 would make p_bit exactly 1 and the recall-clamp
@@ -483,22 +465,26 @@ def _srp_band_keys(rbits: int, bands: int, seed: int = 42):
 
 def near_dup_auto(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "emb",
     threshold: float = NEAR_DUP_COS,
     exact_limit: int = EXACT_NEAR_DUP_ROUTE_ROWS,
 ) -> DataFrame:
-    """Adaptive near-dup: the library-level rewrite SURVEY.md §4 calls
-    out (no custom Catalyst rule needed).  Small corpora get the exact
-    quadratic self-join; above ``exact_limit`` rows the plan switches to
-    SRP-banded LSH candidates + exact verify — same output contract
-    (id_a < id_b, cos_sim >= threshold), different physical strategy.
+    """Adaptive near-dup over a ``(vec_id, emb)`` corpus: the
+    library-level rewrite SURVEY.md §4 calls out (no custom Catalyst
+    rule needed).  Small corpora get the exact all-pairs kernel
+    (``_exact_pairs``); above ``exact_limit`` rows the plan verifies
+    inside SRP-LSH buckets.  Same output contract either way (id_a <
+    id_b, cos_sim >= threshold, rounded to 4 places), and every cosine
+    is compared by ``_near_pairs``: a vector with zero norm or a
+    non-finite component is never paired, and a duplicate vector always
+    is (it shares every band key with its twin).
 
-    The default ``exact_limit`` (EXACT_NEAR_DUP_ROUTE_ROWS, 1k) is low
-    because the crossover is early: even with the
-    vectorized ``pair_cosine`` the quadratic branch pays |n|²/2 pair
-    materializations (~10 s at 2k×2k), while the LSH branch prunes
-    candidates before the verify.
+    The default ``exact_limit`` (EXACT_NEAR_DUP_ROUTE_ROWS, 5k) sits
+    below the measured crossover.  Warm wall time on 4 cores, first n
+    vectors of an sf1 fixture (dim 64, threshold 0.35), exact against
+    LSH: 1.0 vs 3.5 s at 1k, 1.8 vs 3.6 s at 2k, 3.3 vs 5.0 s at 5k,
+    9.6 vs 7.5 s at 10k.  At this threshold SRP prunes little (see
+    ``srp_band_params``), so both branches run ~n² cosines, and the
+    exact one also has full recall.
 
     The LSH is sign-random-projection banding (rbits-bit AND within a
     band, OR across bands — parameters derived per corpus by
@@ -511,57 +497,65 @@ def near_dup_auto(
     by tools/scale_sweep.py round 6).  BRP also cannot AND-compose
     projections within a table, so narrowing the buckets just trades
     the blow-up for recall loss.  SRP bands AND-compose by
-    construction, and rbits grows with log n so background candidates
-    stay ~linear in the corpus.
+    construction.
+
+    The LSH branch is ONE exchange on (band, key) with the verify inside
+    each bucket (SemDeDup's per-cluster GEMM; REPOSE's prune before
+    verify): one row per vector and band, carrying the vector and its
+    keys of the earlier bands, and ``_first_band_pairs`` per bucket.
+    Each pair leaves once, from the lowest band its keys share, so no
+    candidate pair, global distinct or embedding re-join exists and the
+    shuffle is n × bands rows (a banded self-join emits 1.4×10⁸
+    candidate rows for 3.9×10⁵ pairs at 20k vectors).
 
     The count() here is a cheap planning action (count-star over
     parquet metadata / cached input), the moral equivalent of AQE
     choosing a join strategy from runtime stats.
     """
-    # pin: the corpus feeds the routing count plus two (exact branch)
-    # or three (LSH branch: banding, id_a-emb join, id_b-emb join)
-    # consumers — one materialization instead of re-running the scan +
-    # cast lineage per consumer (guide §2.4).
+    # pin: the routing count, then the exact kernel's collect and scan
+    # or the banding, read one materialization (guide §2.4)
     corpus = pin(corpus)
     n = corpus.count()
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(emb_col).alias("emb_a"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(emb_col).alias("emb_b"))
-    sim = pair_cosine(F.col("emb_a"), F.col("emb_b"))
     # the hard cap overrides any caller preference: past it the exact
     # branch is a driver/executor memory hazard, not a strategy choice
     if n <= min(exact_limit, EXACT_NEAR_DUP_MAX_ROWS):
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    else:  # SRP-LSH candidates, then exact verify on candidates only
-        rbits, bands = srp_band_params(n, threshold)
-        keys = _srp_band_keys(rbits, bands)
-        # pin: banded feeds BOTH sides of the self-join; without the
-        # barrier each side re-runs the SRP GEMM over the whole corpus
-        # (the before-plan showed the banding ArrowEvalPython twice,
-        # nodes 4 and 12 — guide §4: halve the Python-boundary work).
-        banded = pin(corpus.select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(keys(as_double(F.col(emb_col)))).alias("_band", "_key"),
-        ))
-        cand = (
-            banded.alias("x")
-            .join(
-                banded.alias("y"),
-                (F.col("x._band") == F.col("y._band"))
-                & (F.col("x._key") == F.col("y._key"))
-                & (F.col("x._id") < F.col("y._id")),
+        pairs = _exact_pairs(corpus, threshold)
+    else:
+        keys = _srp_band_keys(*srp_band_params(n, threshold))
+        # posexplode_OUTER emits the same rows (every key array holds
+        # ``bands`` keys) but infers no size(_keys) > 0 filter, which
+        # would be pushed below the projection and run the band-key
+        # UDF twice
+        banded = (
+            corpus.select("vec_id", "emb", keys(F.col("emb")).alias("_keys"))
+            .select("vec_id", "emb", "_keys", F.posexplode_outer("_keys").alias("_band", "_key"))
+            .select(
+                "vec_id", "emb", "_band", "_key",
+                F.slice("_keys", 1, F.col("_band")).alias("_earlier"),
             )
-            .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-            .distinct()
         )
-        # join embeddings back by id: shuffles 2 corpus copies instead
-        # of carrying the vectors through the band explode (bands x the
-        # embedding bytes through the candidate shuffle)
-        pairs = cand.join(a, "id_a").join(b, "id_b")
-    return (
-        pairs.select("id_a", "id_b", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
-    )
+        pairs = banded.groupBy("_band", "_key").applyInPandas(
+            lambda bucket: _first_band_pairs(bucket, threshold), _PAIRS_SCHEMA
+        )
+    return pairs.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+
+
+def _first_band_pairs(bucket: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """One (band, key) bucket's verified pairs: ``_near_pairs`` over its
+    members, less every pair whose keys already agree in an earlier
+    band (``_earlier`` holds each member's keys of bands 0 .. band-1),
+    so a pair that collides in several bands leaves once, from the
+    lowest."""
+    ids = bucket["vec_id"].to_numpy(dtype=np.int64)
+    X = np.array(bucket["emb"].tolist(), dtype=np.float64)
+    K = np.stack(bucket["_earlier"].to_numpy())
+    out = []
+    for ii, jj, sim in _near_pairs(ids, X, ids, X, threshold):
+        first = ~(K[ii] == K[jj]).any(axis=1)
+        out.append(
+            pd.DataFrame({"id_a": ids[ii[first]], "id_b": ids[jj[first]], "cos_sim": sim[first]})
+        )
+    return pd.concat(out)
 
 
 # ---------------------------------------------------------------------------
@@ -675,16 +669,16 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _ = _ivf_fit(corpus, k=SEMDEDUP_K)
 
     def keepers_in_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        # dense GEMM within one cluster, bitwise-identical to the JVM
-        # cosine (_cosine_matrix), so threshold comparisons can't flip
+        # the near-dup pair mask within one cluster (_near_pairs),
+        # bitwise-identical to the JVM cosine, so comparisons can't flip
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         A = np.array(pdf["emb"].tolist(), dtype=np.float64)
-        sim = _cosine_matrix(A, A)
-        mask = (ids[:, None] < ids[None, :]) & (sim >= SEMDEDUP_EPS)
         # the group knows its whole answer: kept rows AND the drop count
         # (every id with a smaller-id near-dup drops; the smallest id of
         # a cluster can never drop, so a cluster is never empty)
-        dropped = np.unique(ids[np.nonzero(mask)[1]])
+        dropped = np.unique(
+            np.concatenate([ids[jj] for _, jj, _ in _near_pairs(ids, A, ids, A, SEMDEDUP_EPS)])
+        )
         keep = ~np.isin(ids, dropped)
         return pd.DataFrame(
             {
@@ -1078,20 +1072,12 @@ def semantic_dedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster — the greedy-within-cluster guarantee, decided from the
     output's own centroid column (cross-cluster survivors are
     SemDeDup-legitimate and excluded).  The global pair set is the SAME
-    exact self-join the driver hash-checks via ``near_dup_auto_pairs``,
-    so the reference side is itself verified."""
+    exact kernel (``_exact_pairs``, capped at EXACT_NEAR_DUP_MAX_ROWS)
+    the driver hash-checks via ``near_dup_auto_pairs``, so the reference
+    side is itself verified."""
     kept = semantic_dedup(spark, sf_dir)
-    corpus = _corpus(spark, sf_dir)
-
-    a = corpus.select(F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"))
-    b = corpus.select(F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"))
-    pairs = pin(
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        # shared vectorized pair cosine — the interpreted fold here cost
-        # ~a minute at 2k vectors for this one contract row
-        .filter(pair_cosine(F.col("emb_a"), F.col("emb_b")) >= SEMDEDUP_EPS)
-        .select("id_a", "id_b")
-    )
+    corpus = pin(_corpus(spark, sf_dir))
+    pairs = pin(_exact_pairs(corpus, SEMDEDUP_EPS).select("id_a", "id_b"))
     kept_ids = kept.select("vec_id")
     dropped = corpus.select("vec_id").join(kept_ids, "vec_id", "left_anti")
 
@@ -1145,9 +1131,9 @@ def near_dup_auto_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-scaled 5 000-vector reseed once routed onto the ~92%-recall
     LSH branch and broke the hash check) stays on the exact branch,
     where the exact-pair oracle holds by construction.  The library
-    default stays 1k.  No driver materialization either way (unlike
-    ``embedding_near_dup``'s GEMM verify form).  The benched
-    scale-path headline is ``near_dup_lsh_verified`` below."""
+    default is 5k.  The exact branch is ``embedding_near_dup``'s kernel,
+    so it collects the corpus on the driver.  The benched scale-path
+    headline is ``near_dup_lsh_verified`` below."""
     return near_dup_auto(_corpus(spark, sf_dir), exact_limit=6_000)
 
 
@@ -1158,8 +1144,9 @@ def near_dup_auto_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup SCALE path as the benched headline: the router with
-    ``exact_limit=0`` always takes LSH candidates + vectorized exact
-    verify — shuffle-linear at any corpus size.  Rows-only driver check
+    ``exact_limit=0`` always takes the SRP-LSH branch, one exchange on
+    (band, key) and the exact verify inside each bucket — n × bands
+    shuffled rows at any corpus size.  Rows-only driver check
     (bucket collisions are engine-specific); the containment/recall
     contract (output ⊆ exact pairs, recall ≥ 80%) is pytest-gated in
     tests/test_similarity.py, and the exact twin

@@ -22,6 +22,15 @@ from pyspark.sql import SparkSession
 from ssafynews_data_spark.caching import scratch_dir
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of physical RAM, at most 16g.  The rest of the machine is
+    left to the Python workers, the page cache and whatever else shares
+    it (a fixed 16g is more than a 15 GB machine has)."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return f"{min(16 * 1024, phys_mb // 4)}m"
+
+
 def session_builder(
     app_name: str = "ssafynews_data_spark",
     master: str | None = None,
@@ -84,7 +93,7 @@ def session_builder(
         # any catalog access creates the warehouse directory; keep it out
         # of the caller's working directory
         .config("spark.sql.warehouse.dir", scratch_dir("warehouse"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -38,6 +38,8 @@ SHUFFLE_BUDGET: dict[str, int] = {
     "llm_corpus_pipeline": 4,
     "minhash_lsh_pairs": 5,
     "mock_enrich_documents": 0,
+    # the one (band, key) exchange: each pair leaves its lowest shared
+    # band's bucket only, so no distinct follows
     "near_dup_lsh_verified": 1,
     "pca_kmeans_clusters": 0,
     "q1_pricing_summary": 1,
@@ -198,6 +200,13 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     "ann_ivf_topk": 1,
     # the same serve from the partition-pruned "ivf" artifact
     "ivf_partition_pruning": 1,
+    # the exact all-pairs kernel: a round-robin block split (not counted)
+    # into one mapInPandas against the driver-collected corpus matrix
+    "near_dup_auto_pairs": 0,
+    # semantic_dedup's cluster exchange, printed once per reader of its
+    # output (5), plus the drop-count distinct; the exact kernel's pair
+    # set adds none (was 8 while it was a pair_cosine nested-loop join)
+    "semantic_dedup_contract": 6,
     # the fit, the exact top-k and every nprobe point's hit count run
     # inside the body; literal rows out (was 18 while the hit joins were
     # the returned plan)

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from ssafynews_data_spark.operators import similarity
 
@@ -86,14 +88,103 @@ def test_router_never_exceeds_exact_hard_cap(spark, sf_dir, monkeypatch):
     """The ONE shared cap (VERDICT r6 item 5): even a caller demanding
     the exact branch (exact_limit=maxint) is clamped to
     EXACT_NEAR_DUP_MAX_ROWS — above it the router must take the SRP-LSH
-    plan (band posexplode + equi-join), never the quadratic
-    nested-loop self-join."""
+    plan (band posexplode + one grouped verify per (band, key) bucket),
+    never a quadratic join."""
     corpus = similarity._corpus(spark, sf_dir)
     assert similarity.EXACT_NEAR_DUP_ROUTE_ROWS <= similarity.EXACT_NEAR_DUP_MAX_ROWS
     monkeypatch.setattr(similarity, "EXACT_NEAR_DUP_MAX_ROWS", 10)
     routed = similarity.near_dup_auto(corpus, exact_limit=2_000_000_000)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, through its adaptive and query
+    stages (not into cached relations)."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        else:
+            yield node
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def test_lsh_near_dup_emits_pairs_in_proportion_to_its_output(spark, sf_dir):
+    """At sf0.1 the LSH branch produces pairs only inside the (band,
+    key) buckets, once each: the rows of every pair-producing node (a
+    join or a Python map) stay within 3x the emitted pairs, and no join
+    runs on the band keys.  A banded self-join emits ~1.4M candidate
+    rows here for 3,799 pairs."""
+    import os
+
+    df = similarity.near_dup_lsh_verified(spark, os.path.join(os.path.dirname(sf_dir), "sf0.1"))
+    n_pairs = len(df.collect())
+    produced, band_joins = [], []
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        name = node.nodeName()
+        if "Join" not in name and "InPandas" not in name:
+            continue
+        # a Python node counts its rows as the ones it hands back
+        for metric in ("numOutputRows", "pythonNumRowsReceived"):
+            rows = node.metrics().get(metric)
+            if rows.isDefined():
+                produced.append((name, rows.get().value()))
+        if "Join" in name and "_band" in node.toString():
+            band_joins.append(node.toString())
+    assert n_pairs > 0 and produced
+    assert max(r for _, r in produced) <= 3 * n_pairs, (n_pairs, produced)
+    assert not band_joins, band_joins
+
+
+_DIM = 6
+_vectors = st.lists(st.floats(-1.0, 1.0), min_size=_DIM, max_size=_DIM)
+
+
+@given(
+    base=st.lists(_vectors, min_size=2, max_size=12),
+    twin=_vectors.filter(lambda v: sum(x * x for x in v) > 1e-2),
+)
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+def test_near_dup_entry_points_agree_on_degenerate_vectors(spark, tmp_path_factory, base, twin):
+    """``embedding_near_dup`` and both ``near_dup_auto`` branches give
+    the documented result on a corpus holding a zero vector, a NaN
+    vector and a duplicate vector: the duplicate pair is emitted, the
+    zero and NaN vectors are never paired, the exact forms agree pair
+    for pair and the LSH branch emits a subset of them."""
+    import math
+
+    from ssafynews_data_spark.schemas import TESTDATA_SCHEMAS
+
+    zero, nan, dup_a, dup_b = 100, 101, 102, 103
+    vecs = {i: v for i, v in enumerate(base)}
+    vecs.update({zero: [0.0] * _DIM, nan: [math.nan] + [0.5] * (_DIM - 1), dup_a: twin, dup_b: twin})
+    d = tmp_path_factory.mktemp("degenerate")
+    spark.createDataFrame(
+        [(i, v, i % 3) for i, v in vecs.items()], TESTDATA_SCHEMAS["embeddings"]
+    ).coalesce(1).write.parquet(str(d / "embeddings.parquet"))
+    corpus = similarity._corpus(spark, str(d))
+
+    def pairs(df):
+        return {(r.id_a, r.id_b): r.cos_sim for r in df.collect()}
+
+    gemm = pairs(similarity.embedding_near_dup(spark, str(d)))
+    exact = pairs(similarity.near_dup_auto(corpus, exact_limit=10**9))
+    lsh = pairs(similarity.near_dup_auto(corpus, exact_limit=0))
+    assert gemm == exact
+    assert lsh.items() <= exact.items()
+    for got in (gemm, exact, lsh):
+        assert (dup_a, dup_b) in got
+        assert not {zero, nan} & {i for pair in got for i in pair}
 
 
 def test_ivfpq_recall_and_pruned_read(spark, sf_dir, tmp_path):
