@@ -23,17 +23,18 @@ ladder:
    further only by pairing with the IVF layout;
 4. IVF-Flat — a seeded k-means coarse quantizer (``_ivf_fit``, the ONE
    coarse fit: numpy Lloyd's on a bounded driver sample, cells assigned
-   by one JVM argmin projection), probe the ``NPROBE`` nearest centroids
-   only and rank exactly within them: the ``"ivf"``
-   kind of the index stack (item 6) with no codec, so its centroid-
-   partitioned ``_flat`` store is the whole index and a query reads
-   nprobe partitions (served from the artifact, or from an in-memory
-   fitted frame by the same ``_serve``);
+   by ``_nearest``, the one JVM nearest-centre projection), probe the
+   ``NPROBE`` nearest centroids only and rank exactly within them: the
+   ``"ivf"`` kind of the index stack (item 6) with no codec, so its
+   centroid-partitioned ``_flat`` store is the whole index and a query
+   reads nprobe partitions (served from the artifact, or from an
+   in-memory fitted frame by the same ``_serve``);
 5. PQ — product quantization (Jegou et al. 2011): per-subspace
    codebooks (seeded Lloyd's on a bounded md5-ordered sample, r7)
-   compress each vector to PQ_M 4-bit codes, queries score by ADC
-   with the lookup tables as ONE broadcast row (plan size independent
-   of the batch; ``adc_batch_parity_contract`` pins it bit-exact
+   compress each vector to PQ_M 4-bit codes (``_nearest`` again, one
+   book per subspace, so no index build starts a Python worker),
+   queries score by ADC with the lookup tables as ONE broadcast row
+   (plan size independent of the batch; ``adc_batch_parity_contract`` pins it bit-exact
    against a numpy ADC over the same tables), deep candidate list
    exact-re-ranked;
 6. the IVF × codec index stack — faiss ``index_factory`` compositions
@@ -585,35 +586,70 @@ def _ivf_fit(
     is a ValueError naming the fit.  Callers pin the assignment when it
     forks."""
     X = _fit_sample(fit_on)
-    what = f"k-means({k}) coarse fit"
-    if not len(X):
-        raise ValueError(f"{what}: no emb vectors to fit")
-    _check_finite(what, "emb", X, "k-means needs finite vectors")
+    _check_sample(f"k-means({k}) coarse fit", X)
     centers = _np_kmeans(X, k, seed=42, iters=20)
     return _ivf_assign(fit_on if assign is None else assign, centers), centers
 
 
+def _check_sample(what: str, X: "np.ndarray") -> None:
+    """A driver-side k-means sample must hold at least one vector and
+    only finite elements: otherwise a ValueError naming the fit (a NaN
+    sample element drags its cell's mean, and every later distance to
+    it, to NaN)."""
+    if not len(X):
+        raise ValueError(f"{what}: no emb vectors to fit")
+    _check_finite(what, "emb", X, "k-means needs finite vectors")
+
+
+def _nearest(
+    df: DataFrame, books, src: str = "emb", code: str = "codes", what: str = "encode"
+) -> DataFrame:
+    """THE nearest-centre rule of every quantizer, one JVM projection
+    (no Python worker): ``df`` plus ``code`` ARRAY<INT> and
+    ``<code>_d2`` ARRAY<DOUBLE>.  ``books`` holds M books of K centres,
+    each ``sub`` dims wide, and book m sees elements [m·sub, (m+1)·sub)
+    of ``src``.  Per book, each squared distance folds left to right
+    from 0 in ``argmin_assignment_mismatches``' order, the code is the
+    argmin (ties go to the lowest id, so a centre that repeats an
+    earlier one is never chosen) and ``_d2`` keeps the minimum.  One
+    dim-wide book is a coarse cell (``_ivf_assign``, ``pca_kmeans``);
+    PQ_M books are the PQ codes, whose minima sum to the vector's
+    reconstruction error (``opq_rotation_contract``).  The books ride
+    as one parsed literal (``_arr2_sql`` per book): a broadcast row of
+    them costs one Spark job per use, a literal none.  A ``src`` that is
+    NULL, holds a NULL or non-finite element or is not M·sub-dim is a
+    runtime error, never a code.  Replaces any ``code`` column."""
+    books = np.asarray(books, dtype=float)
+    sub = books.shape[2]
+    dim = len(books) * sub
+    carry = [f"`{c}`" for c in df.columns if c not in (code, f"{code}_d2")]
+    lit = "array(" + ", ".join(_arr2_sql(b) for b in books) + ")"
+    # each book's slice of src is cut once per row, not once per centre
+    parts = f"transform(sequence(0, {len(books) - 1}), m -> slice(`{src}`, m * {sub} + 1, {sub}))"
+    d2 = "aggregate(zip_with(s, c, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"
+    # x - x = 0 is false for NaN and ±Inf, and NULL for a NULL element
+    ok = f"size(`{src}`) = {dim} AND forall(`{src}`, x -> x - x = 0)"
+    bad = f"{what}: {src} is NULL, holds a NULL or non-finite element or is not {dim}-dim"
+    return df.selectExpr(
+        *carry,
+        f"IF({ok}, zip_with({lit}, {parts}, (b, s) -> transform(b, c -> {d2})),"
+        f" raise_error('{bad}')) AS _d2",
+    ).selectExpr(
+        *carry,
+        f"transform(_d2, d -> CAST(array_position(d, array_min(d)) - 1 AS INT)) AS `{code}`",
+        f"transform(_d2, d -> array_min(d)) AS `{code}_d2`",
+    )
+
+
 def _ivf_assign(df: DataFrame, centers: "np.ndarray") -> DataFrame:
     """``df`` plus ``centroid`` INT, the nearest of ``centers`` by
-    squared Euclidean distance, in one JVM projection (no Python
-    worker; the centers ride as one broadcast row).  Each distance
-    folds in ``argmin_assignment_mismatches``' order, so the two agree
-    bit for bit; ties go to the lowest id, so a surplus center that
-    repeats an earlier one stays empty.  An ``emb`` that is NULL, holds
-    a NULL or is not ``centers``-dim makes every distance NULL and is a
-    runtime error, never a NULL cell.  Replaces any ``centroid``."""
+    squared Euclidean distance: ``_nearest`` with the centers as its one
+    book, so a bad ``emb`` is a runtime error, never a cell, and a
+    surplus center that repeats an earlier one stays empty.  Replaces
+    any ``centroid``."""
     carry = [f"`{c}`" for c in df.columns if c != "centroid"]
-    cent = local_df(df.sparkSession, [(centers.tolist(),)], "_cent array<array<double>>")
-    d2 = "aggregate(zip_with(emb, c, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"
-    bad = f"coarse assign: emb is NULL, holds a NULL or is not {centers.shape[1]}-dim"
-    return (
-        df.crossJoin(F.broadcast(cent))
-        .selectExpr(*carry, f"transform(_cent, c -> {d2}) AS _d2")
-        .selectExpr(
-            *carry,
-            "coalesce(CAST(array_position(_d2, array_min(_d2)) - 1 AS INT),"
-            f" raise_error('{bad}')) AS centroid",
-        )
+    return _nearest(df, [centers], code="_cell", what="coarse assign").selectExpr(
+        *carry, "_cell[0] AS centroid"
     )
 
 
@@ -1075,41 +1111,29 @@ def semantic_dedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact kernel (``_exact_pairs``, capped at EXACT_NEAR_DUP_MAX_ROWS)
     the driver hash-checks via ``near_dup_auto_pairs``, so the reference
     side is itself verified."""
-    kept = semantic_dedup(spark, sf_dir)
+    kept = pin(semantic_dedup(spark, sf_dir))
     corpus = pin(_corpus(spark, sf_dir))
     pairs = pin(_exact_pairs(corpus, SEMDEDUP_EPS).select("id_a", "id_b"))
-    kept_ids = kept.select("vec_id")
-    dropped = corpus.select("vec_id").join(kept_ids, "vec_id", "left_anti")
-
-    n_total = corpus.agg(F.count("*").alias("n_total"))
-    n_kept = kept.agg(F.count("*").alias("n_kept"))
-    n_dropped_reported = (
+    # every count runs in the body over the pinned keepers, so the
+    # Python cluster step runs once however many counts read it
+    n_kept = kept.count()
+    n_drop = (
         kept.select("centroid", "n_dropped_in_cluster")
         .distinct()
-        .agg(F.coalesce(F.sum("n_dropped_in_cluster"), F.lit(0)).alias("n_drop"))
+        .agg(F.coalesce(F.sum("n_dropped_in_cluster"), F.lit(0)))
+        .first()[0]
     )
-    orphans = dropped.join(
-        pairs, dropped["vec_id"] == pairs["id_b"], "left_anti"
-    ).agg(F.count("*").alias("orphan_drops"))
+    dropped = corpus.select("vec_id").join(kept.select("vec_id"), "vec_id", "left_anti")
+    orphans = dropped.join(pairs, dropped["vec_id"] == pairs["id_b"], "left_anti").count()
     ka = kept.select(F.col("vec_id").alias("id_a"), F.col("centroid").alias("cent_a"))
     kb = kept.select(F.col("vec_id").alias("id_b"), F.col("centroid").alias("cent_b"))
     both_kept = (
-        pairs.join(ka, "id_a")
-        .join(kb, "id_b")
-        .filter(F.col("cent_a") == F.col("cent_b"))
-        .agg(F.count("*").alias("both_kept_incluster_pairs"))
+        pairs.join(ka, "id_a").join(kb, "id_b").filter(F.col("cent_a") == F.col("cent_b")).count()
     )
-    return (
-        n_total.crossJoin(n_kept)
-        .crossJoin(n_dropped_reported)
-        .crossJoin(orphans)
-        .crossJoin(both_kept)
-        .select(
-            "n_total",
-            (F.col("n_kept") + F.col("n_drop")).alias("n_accounted"),
-            "orphan_drops",
-            "both_kept_incluster_pairs",
-        )
+    return local_df(
+        spark,
+        [(corpus.count(), n_kept + n_drop, orphans, both_kept)],
+        "n_total long, n_accounted long, orphan_drops long, both_kept_incluster_pairs long",
     )
 
 
@@ -1248,8 +1272,7 @@ def _np_kmeans(X: "np.ndarray", k: int, seed: int, iters: int = 10) -> "np.ndarr
     else:
         C = X[np.arange(k) % len(X)].copy()
     for _ in range(iters):
-        # argmin ||x - c||^2 == argmax (x.c - ||c||^2 / 2), one GEMM
-        a = np.argmax(X @ C.T - (C * C).sum(1) / 2.0, axis=1)
+        a = _np_nearest(X, C)
         for j in range(k):
             mem = X[a == j]
             if len(mem):
@@ -1257,9 +1280,17 @@ def _np_kmeans(X: "np.ndarray", k: int, seed: int, iters: int = 10) -> "np.ndarr
     return C
 
 
+def _np_nearest(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """The driver-side nearest-centre step of the sample fits: per row of
+    X, the argmin of ||x - c||^2 == argmax (x.c - ||c||^2 / 2) over the
+    rows of C, one GEMM (ties to the lowest id).  Executors assign with
+    ``_nearest``'s summed squared differences instead, which can pick a
+    different centre only where two distances tie to rounding."""
+    return np.argmax(X @ C.T - (C * C).sum(1) / 2.0, axis=1)
+
+
 def _fit_sample(
     frame: DataFrame,
-    centers: "np.ndarray | None" = None,
     emb_col: str = "emb",
     id_col: str = "vec_id",
     order: "list[Column] | None" = None,
@@ -1269,22 +1300,13 @@ def _fit_sample(
     md5 of the id, or by the ``order`` keys (TakeOrderedAndProject: one
     pass over the corpus, no full shuffle, no partition-order bias).  It
     arrives as Arrow and is reshaped from the flat float buffer, so no
-    Python object is made per element.  No rows is a (0, 0) matrix.
-    With ``centers`` (``frame`` then carries a ``centroid`` column) each
-    sampled vector has its cell centroid subtracted — the RESIDUAL
-    sample of faiss ``by_residual=true``: residuals concentrate near the
-    origin, so the codebooks spend their resolution on the within-cell
-    displacement instead of re-describing the coarse structure IVF
-    already captured."""
+    Python object is made per element.  No rows is a (0, 0) matrix."""
     keys = order if order is not None else [F.md5(F.col(id_col).cast("string"))]
-    resid = [F.col("centroid").alias("c")] if centers is not None else []
     t = (
-        frame.select(
-            F.col(emb_col).alias("e"), *resid, *(k.alias(f"_o{i}") for i, k in enumerate(keys))
-        )
+        frame.select(F.col(emb_col).alias("e"), *(k.alias(f"_o{i}") for i, k in enumerate(keys)))
         .sort(*(f"_o{i}" for i in range(len(keys))))
         .limit(PQ_FIT_SAMPLE)
-        .select("e", *(["c"] if resid else []))
+        .select("e")
         .toArrow()
     )
     if t.num_rows == 0:
@@ -1295,15 +1317,14 @@ def _fit_sample(
         raise ValueError(
             f"{emb_col}: vectors of {lens.min()} and {lens.max()} dims in one fit sample"
         )
-    X = e.flatten().to_numpy(zero_copy_only=False).astype(float).reshape(len(e), -1)
-    if resid:
-        X -= centers[t.column("c").to_numpy().astype(np.int64)]
-    return X
+    return e.flatten().to_numpy(zero_copy_only=False).astype(float).reshape(len(e), -1)
 
 
 def _pq_books(X: "np.ndarray") -> list:
-    """One seeded k-means(PQ_K) per subspace of a driver sample: the M
-    centroid matrices (K x dim/M)."""
+    """THE PQ codebook fit: one seeded k-means(PQ_K) per subspace of a
+    driver sample, the M centroid matrices (K x dim/M).  An empty or
+    non-finite sample is a ValueError naming the fit."""
+    _check_sample(f"PQ({PQ_M}x{PQ_K}) codebook fit", X)
     sub = X.shape[1] // PQ_M
     return [
         _np_kmeans(X[:, m * sub : (m + 1) * sub], PQ_K, seed=42 + m)
@@ -1311,56 +1332,19 @@ def _pq_books(X: "np.ndarray") -> list:
     ]
 
 
-def _pq_codebooks(
-    frame: DataFrame,
-    centers: "np.ndarray | None" = None,
-    emb_col: str = "emb",
-    id_col: str = "vec_id",
-) -> list:
-    """Train PQ codebooks on the bounded sample (``_fit_sample``; residual
-    when ``centers`` is given).  Train-once-on-a-sample, encode-the-world
-    is the standard PQ pipeline (Jegou et al. 2011; faiss trains on
-    sampled vectors): the 8 fits run driver-side (seeded numpy Lloyd's,
-    milliseconds) instead of 8 MLlib jobs whose per-fit scheduling
-    overhead dominated at every fixture scale (VERDICT r6 item 3), so
-    fit cost is flat in corpus size BY CONSTRUCTION; encode stays
-    distributed (Arrow UDF, one GEMM per batch per subspace)."""
-    return _pq_books(_fit_sample(frame, centers, emb_col, id_col))
-
-
-def _pq_encode(books: list, centers: "np.ndarray | None" = None):
-    """Arrow UDF producing PQ codes (argmin centroid per subspace, one
-    numpy GEMM per batch per subspace).  Flat (no ``centers``):
-    ``emb -> codes``.  Residual: ``(emb, centroid) -> codes`` of
-    emb − centers[centroid], the KB centroid matrix captured in the
-    closure."""
-    sub = books[0].shape[1]
-
-    def codes(X: "np.ndarray") -> pd.Series:
-        out = np.empty((len(X), len(books)), dtype=np.int32)
-        for m, C in enumerate(books):
-            Xm = X[:, m * sub : (m + 1) * sub]
-            # argmin ||x - c||^2 = argmax (x.c - ||c||^2 / 2)
-            out[:, m] = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
-        return pd.Series(list(out))
-
-    if centers is None:
-
-        @F.pandas_udf("array<int>")
-        def encode(emb: pd.Series) -> pd.Series:
-            if len(emb) == 0:
-                return pd.Series([], dtype=object)
-            return codes(np.stack(emb.to_numpy()))
-
-    else:
-
-        @F.pandas_udf("array<int>")
-        def encode(emb: pd.Series, cent: pd.Series) -> pd.Series:
-            if len(emb) == 0:
-                return pd.Series([], dtype=object)
-            return codes(np.stack(emb.to_numpy()) - centers[cent.to_numpy().astype(int)])
-
-    return encode
+def _pq_codebooks(frame: DataFrame, emb_col: str = "emb", id_col: str = "vec_id") -> list:
+    """Train PQ codebooks on the bounded sample of ``emb_col``
+    (``_fit_sample``; under IVF the build passes the ``res`` column, the
+    RESIDUAL sample of faiss ``by_residual=true``: residuals concentrate
+    near the origin, so the codebooks spend their resolution on the
+    within-cell displacement instead of re-describing the coarse
+    structure IVF already captured).  Train-once-on-a-sample,
+    encode-the-world is the standard PQ pipeline (Jegou et al. 2011;
+    faiss trains on sampled vectors): the 8 fits run driver-side
+    (seeded numpy Lloyd's, milliseconds), so fit cost is flat in corpus
+    size BY CONSTRUCTION; the encode stays distributed and in the JVM
+    (``_nearest``, one projection against the books as a literal)."""
+    return _pq_books(_fit_sample(frame, emb_col, id_col))
 
 
 def _adc_tables(books: list, Q: "np.ndarray") -> tuple[list, list]:
@@ -1544,10 +1528,8 @@ def ann_pq_topk_frame(
     qids = [int(r[0]) for r in qrows]
     qnorm = np.sqrt((Q * Q).sum(1))
 
-    coded = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("emb_n"),
-        _pq_encode(books)(F.col(emb_col)).alias("codes"),
+    coded = _nearest(corpus, books, emb_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("emb_n"), "codes"
     )
     cand = _adc_candidate_cut(_adc_explode(coded, books, Q, qids, qnorm))
     q_emb = corpus.filter(F.col(id_col) < N_QUERIES).select(
@@ -1830,12 +1812,7 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
     qnorm = np.sqrt((Q * Q).sum(1))
-    coded = pin(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _pq_encode(books)(F.col("emb")).alias("codes"),
-        )
-    )
+    coded = pin(_nearest(corpus, books).select(F.col("vec_id").alias("neighbor_id"), "codes"))
     code_rows = coded.collect()
     ref = local_df(
         spark,
@@ -1894,11 +1871,12 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``train()`` lifecycle): build the index on the corpus MINUS the
     newest IVFPQ_APPEND_N vectors, then append those by encoding with
     the EXISTING codebooks/centroids — assign each new vector to its
-    nearest coarse cell (``_ivf_assign``, one JVM projection),
-    residual-encode, and ``mode("append")`` into the
-    centroid-partitioned codes + flat tables.  No re-fit, no rewrite of
-    existing partitions: at 100 TB this is how a live index absorbs a
-    day's new embeddings — append cost is sized by the DELTA only.
+    nearest coarse cell (``_ivf_assign``), residual-encode with the
+    build's own codes write (``_write_codes``, one JVM projection), and
+    ``mode("append")`` into the centroid-partitioned codes + flat
+    tables.  No re-fit, no rewrite of existing partitions: at 100 TB
+    this is how a live index absorbs a day's new embeddings — append
+    cost is sized by the DELTA only.
 
     Contract row: base/appended/total index row counts (DuckDB-
     recomputable) plus serve_complete — a post-append serve returns
@@ -1926,15 +1904,9 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = corpus.filter(F.col("vec_id") > cut)
     path = _index_path("ivfpq_append")
     books, centers = ivfpq_build_index(spark, base, path)
-    coded_delta = _ivf_assign(delta, centers)
-    coded_delta.select(
-        "vec_id",
-        "centroid",
-        _pq_encode(books, centers)(F.col("emb"), F.col("centroid")).alias("codes"),
-    ).write.mode("append").partitionBy("centroid").parquet(path)
-    coded_delta.select("vec_id", "emb", "centroid").write.mode("append").partitionBy(
-        "centroid"
-    ).parquet(path + "_flat")
+    cells = _residual(_ivf_assign(delta, centers), centers, "ivfpq append")
+    _write_codes(cells, path, "ivfpq", {"book": books, "center": centers}, "append")
+    _write_store(cells.select("vec_id", "emb", "centroid"), path + "_flat", ["centroid"], "append")
 
     idx = spark.read.parquet(path)
     ok = idx.agg(
@@ -2140,9 +2112,7 @@ def _opq_fit(X: "np.ndarray") -> tuple:
         # the Procrustes SVD (ADVICE r10)
         recon = Xr.copy()
         for m, C in enumerate(books):
-            Xm = Xr[:, m * sub : (m + 1) * sub]
-            codes = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
-            recon[:, m * sub : (m + 1) * sub] = C[codes]
+            recon[:, m * sub : (m + 1) * sub] = C[_np_nearest(Xr[:, m * sub : (m + 1) * sub], C)]
         return recon
 
     R = np.eye(d)
@@ -2164,31 +2134,6 @@ def _opq_fit(X: "np.ndarray") -> tuple:
         R = U @ Vt
     R_best, books_best, opq_sse = best
     return R_best, books_best, plain_books, plain_sse, opq_sse
-
-
-def _pq_sq_err(books: list, R: "np.ndarray | None" = None):
-    """Arrow UDF: embedding -> PQ squared reconstruction error (after
-    optional rotation R).  One GEMM per batch per subspace — the same
-    vectorized shape as ``_pq_encode``, so the corpus audit is a
-    single distributed pass with zero joins."""
-    sub = books[0].shape[1]
-
-    @F.pandas_udf("double")
-    def err(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=float)
-        X = np.stack(emb.to_numpy())
-        if R is not None:
-            X = X @ R
-        e = np.zeros(len(X))
-        for m, C in enumerate(books):
-            Xm = X[:, m * sub : (m + 1) * sub]
-            codes = np.argmax(Xm @ C.T - (C * C).sum(1) / 2.0, axis=1)
-            diff = Xm - C[codes]
-            e += (diff * diff).sum(1)
-        return pd.Series(e)
-
-    return err
 
 
 @register(
@@ -2213,15 +2158,17 @@ def opq_rotation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``opq_train_sse_le_plain``: trained OPQ sample-SSE <= plain PQ
       sample-SSE, EXACT by best-so-far tracking (iteration 0 is plain
       PQ), draw-independent — no floor calibration needed;
-    - ``opq_corpus_sse_ok``: the DISTRIBUTED corpus audit — both
-      encoders applied to every vector in one Arrow pass (two UDF
-      columns, zero joins, one 1-row aggregate), OPQ SSE within
-      OPQ_CORPUS_SSE_SLACK of plain (exact <= at test SFs where the
-      training sample contains the corpus; see the constant).
+    - ``opq_corpus_sse_ok``: the DISTRIBUTED corpus audit — every
+      vector rotated once (``_rotate_embeddings``), then both encoders
+      applied in one JVM projection each (``_nearest``, whose per-book
+      minimum distances sum to the squared reconstruction error; zero
+      joins, one 1-row aggregate), OPQ SSE within OPQ_CORPUS_SSE_SLACK
+      of plain (exact <= at test SFs where the training sample
+      contains the corpus; see the constant).
 
     100 TB shape: fit is flat-cost on the bounded PQ_FIT_SAMPLE
     (sample-train is the published OPQ practice — faiss OPQMatrix),
-    the rotation is a d×d broadcast into the encode UDF (32 KB at
+    the rotation is a d×d broadcast into the rotation UDF (32 KB at
     dim 64), and encode/audit stream the corpus once with map-side
     partial aggregation; nothing scales with corpus size but the
     linear scan itself."""
@@ -2236,15 +2183,15 @@ def opq_rotation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     R, opq_books, plain_books, plain_sse, opq_sse = _opq_fit(X)
     d = X.shape[1]
     orthogonal = bool(np.abs(R.T @ R - np.eye(d)).max() < 1e-8)
+    rotated = corpus.select("emb", _rotate_embeddings(R)(F.col("emb")).alias("emb_r"))
+    coded = _nearest(_nearest(rotated, plain_books, code="plain"), opq_books, "emb_r", "opq")
+
+    def sse(code: str) -> Column:
+        return F.sum(F.aggregate(f"{code}_d2", F.lit(0.0), lambda a, v: a + v))
+
     return (
-        corpus.select(
-            _pq_sq_err(plain_books)(F.col("emb")).alias("plain_err"),
-            _pq_sq_err(opq_books, R)(F.col("emb")).alias("opq_err"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("plain_err").alias("sse_plain"),
-            F.sum("opq_err").alias("sse_opq"),
+        coded.agg(
+            F.count("*").alias("n"), sse("plain").alias("sse_plain"), sse("opq").alias("sse_opq")
         )
         .select(
             F.col("n").alias("n_vectors"),
@@ -2261,7 +2208,11 @@ def opq_rotation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rotate_embeddings(R: "np.ndarray"):
     """Arrow UDF: embedding -> embedding · R (one GEMM per batch; R is
     a d×d closure broadcast — 32 KB at dim 64).  The OPQ pre-transform
-    applied corpus-wide, the faiss ``OPQMatrix`` chain position."""
+    applied corpus-wide, the faiss ``OPQMatrix`` chain position.  It
+    stays numpy, like ``_srp_band_keys``: d dot products of d terms per
+    vector is 8x the PQ encode's work, and a JVM ``transform`` form,
+    bit-identical, took 0.92-1.10 s against this UDF's 0.20-0.28 s
+    (sf0.1, 2,000 vectors, warm, 4 vCPUs)."""
 
     @F.pandas_udf("array<double>")
     def rot(emb: pd.Series) -> pd.Series:
@@ -2573,52 +2524,74 @@ def _build_index(spark: SparkSession, corpus: DataFrame, path: str, kind: str) -
     ``sq`` (the SQ8 vmin/vmax rows)."""
     k = _KINDS[kind]
     state: dict = {}
-    frame, part, src = corpus, [], "emb"
+    frame, part = corpus, []
     if k.ivf:
         assigned, state["center"] = _ivf_fit(corpus)
-        part = ["centroid"]
-        if k.codec == "sq8":
-            # the SQ8 codec sees the residual vs the own-cell centroid —
-            # centroid matrix inlined as one parsed literal (see _arr_sql)
-            _check_finite(f"{kind} index", "centroid", state["center"])
-            src = "res"
-            assigned = assigned.withColumn("res", F.expr(
-                f"zip_with(emb, element_at({_arr2_sql(state['center'])},"
-                f" centroid + 1), (x, c) -> x - c)"
-            ))
         frame = pin(assigned)
         frame.count()  # materialize once before the consumers fork
+        part = ["centroid"]
 
-    def write(df: DataFrame, suffix: str = "") -> None:
-        w = df.write.mode("overwrite")
-        (w.partitionBy(*part) if part else w).parquet(path + suffix)
+    def flat() -> None:
+        _write_store(frame.select("vec_id", "emb", *part), path + "_flat", part)
 
     if k.codec == "flat":
-        run_parallel(
-            lambda: write(frame.select("vec_id", "emb", *part), "_flat"),
-            lambda: _write_meta(spark, path, state),
-        )
+        run_parallel(flat, lambda: _write_meta(spark, path, state))
         return state
+    cells, src = frame, "emb"
+    if k.ivf:
+        cells, src = _residual(frame, state["center"], f"{kind} index"), "res"
 
     def train() -> dict:
         if k.codec == "pq":
-            return {"book": _pq_codebooks(frame, state.get("center"))}
-        vmin, vmax = sq8_train(frame.select(F.col(src).alias("emb")))
+            return {"book": _pq_codebooks(cells, src)}
+        vmin, vmax = sq8_train(cells.select(F.col(src).alias("emb")))
         _check_finite(f"{kind} index", "vmin", vmin)
         _check_finite(f"{kind} index", "vmax", vmax)
         return {"sq": np.stack([vmin, vmax])}
 
-    codec, _ = run_parallel(train, lambda: write(frame.select("vec_id", "emb", *part), "_flat"))
+    codec, _ = run_parallel(train, flat)
     state.update(codec)
-    if k.codec == "pq":
-        codes = _pq_encode(state["book"], state.get("center"))("emb", *part)
-    else:
-        codes = F.expr(_sq8_encode_sql(*state["sq"], src))
     run_parallel(
-        lambda: write(frame.select("vec_id", *part, codes.alias("codes"))),
-        lambda: _write_meta(spark, path, state),
+        lambda: _write_codes(cells, path, kind, state), lambda: _write_meta(spark, path, state)
     )
     return state
+
+
+def _residual(cells: DataFrame, centers: "np.ndarray", what: str) -> DataFrame:
+    """``cells`` (with ``emb`` and ``centroid``) plus ``res`` = emb −
+    centers[centroid], what a codec under IVF quantizes (faiss
+    ``by_residual``).  The centroid matrix is inlined as one parsed
+    literal (see ``_arr_sql``), so a non-finite center is a ValueError
+    naming ``what``."""
+    _check_finite(what, "centroid", centers)
+    return cells.withColumn("res", F.expr(
+        f"zip_with(emb, element_at({_arr2_sql(centers)}, centroid + 1), (x, c) -> x - c)"
+    ))
+
+
+def _write_store(df: DataFrame, path: str, part: list, mode: str = "overwrite") -> None:
+    """Write one index store as parquet, partitioned by ``part`` (the
+    ``centroid`` of an IVF kind, or nothing)."""
+    w = df.write.mode(mode)
+    (w.partitionBy(*part) if part else w).parquet(path)
+
+
+def _write_codes(
+    frame: DataFrame, path: str, kind: str, state: dict, mode: str = "overwrite"
+) -> None:
+    """Encode ``frame`` (``vec_id``, ``emb``; under IVF also ``centroid``
+    and its ``res``) with ``kind``'s trained codec in ``state`` and write
+    the (vec_id, codes) store at ``path`` — the build's codes write and
+    ``ivfpq_index_append``'s delta write.  Both codecs are one JVM
+    projection: PQ codes are ``_nearest`` over the codebooks, SQ8 codes
+    the affine ``_sq8_encode_sql``."""
+    k = _KINDS[kind]
+    part, src = (["centroid"], "res") if k.ivf else ([], "emb")
+    if k.codec == "pq":
+        coded = _nearest(frame, state["book"], src, what=f"{kind} encode")
+    else:
+        coded = frame.withColumn("codes", F.expr(_sq8_encode_sql(*state["sq"], src)))
+    _write_store(coded.select("vec_id", *part, "codes"), path, part, mode)
 
 
 def _write_meta(spark: SparkSession, path: str, state: dict) -> None:

@@ -13,9 +13,12 @@ JVM CPU in the JIT compiler threads warming MLlib's code paths, not in
 tasks — the fixed per-job overhead Chukonu (PAPERS.md) measures on
 small jobs.  Now the fit is one sample action (a
 ``TakeOrderedAndProject`` over the day's embeddings), a numpy
-eigen-decomposition, seeded Lloyd's (``similarity._np_kmeans``, the PQ
-codebook fit) and one projection against the models shipped as a
-broadcast row: 4 jobs.
+eigen-decomposition and seeded Lloyd's (``similarity._np_kmeans``, the
+fit of every coarse quantizer and PQ codebook), and the assignment is
+one JVM projection against the models as parsed literals, its
+``cluster`` taken from ``similarity._nearest``, the nearest-centre rule
+that also assigns IVF cells and encodes PQ codes: 3 jobs (a broadcast
+row of the models would add one: its broadcast is a Spark job).
 
 100 TB shape: the fit is flat-cost in corpus size.  The sample
 (``similarity._fit_sample``, the one the PQ codebooks train on) is
@@ -39,9 +42,11 @@ from pyspark.sql import functions as F
 from ssafynews_data_spark.caching import pin
 from ssafynews_data_spark.localframe import local_df
 from ssafynews_data_spark.operators.similarity import (
+    _arr_sql,
     _check_finite,
     _dot_sql,
     _fit_sample,
+    _nearest,
     _np_kmeans,
 )
 from ssafynews_data_spark.registry import register
@@ -102,13 +107,14 @@ def pca_kmeans(
     the module docstring): the top ``PQ_FIT_SAMPLE`` rows by a hash of
     the embedding (``_fit_sample``), every row when n is below the
     cap — then this one action also gives n and k.  The models ride
-    back to the executors as one broadcast row, and the assignment is
-    one projection: ``cluster`` = argmax(x·c − ‖c‖²/2) over the centres
-    (the ``_np_kmeans`` identity; ties to the lowest centre), ``pc<i>``
-    = x·axis_i rounded to 4 places, uncentred like MLlib's
-    ``PCAModel.transform``.  A non-finite sampled element is a
-    ValueError; past the cap, an unsampled non-finite vector is not
-    checked and projects to NaN components in cluster 0."""
+    back to the executors as parsed literals (``similarity._arr_sql``,
+    no broadcast job), and the assignment is one projection each:
+    ``pc<i>`` = x·axis_i rounded to 4 places, uncentred like MLlib's
+    ``PCAModel.transform``, and ``cluster`` = the centre nearest by
+    squared distance (``similarity._nearest``, the one nearest-centre
+    rule of the engine; ties to the lowest centre).  A
+    non-finite sampled element is a ValueError up front; past the cap,
+    an unsampled non-finite vector fails the query at assignment."""
     e = f"`{embedding_col}`"
     clean = df.filter(F.col(embedding_col).isNotNull())
     carry = [f"`{c}`" for c in df.columns if c != embedding_col]
@@ -126,20 +132,13 @@ def pca_kmeans(
         raise ValueError(f"pca_kmeans: {embedding_col} has {X.shape[1]} dims < k_pca={k_pca}")
     # below the cap len(X) IS n; at the cap n >= PQ_FIT_SAMPLE > max_k
     C = _np_kmeans(X, min(max_k, len(X)), seed=seed, iters=20)
-    model = local_df(
-        df.sparkSession,
-        [(_pca_components(X, k_pca).tolist(), C.tolist(), ((C * C).sum(1) / 2.0).tolist())],
-        "_pc array<array<double>>, _km array<array<double>>, _kh array<double>",
-    )
+    axes = _pca_components(X, k_pca)
     pcs = [f"pc{i + 1}" for i in range(k_pca)]
-    return (
-        clean.crossJoin(F.broadcast(model))
-        .selectExpr(
-            *carry,
-            f"zip_with(_km, _kh, (c, h) -> {_dot_sql(e, 'c')} - h) AS _s",
-            *(f"round({_dot_sql(e, f'_pc[{i}]')}, 4) AS {pc}" for i, pc in enumerate(pcs)),
-        )
-        .selectExpr(*carry, "CAST(array_position(_s, array_max(_s)) - 1 AS INT) AS cluster", *pcs)
+    projected = clean.selectExpr(
+        *carry, e, *(f"round({_dot_sql(e, _arr_sql(a))}, 4) AS {pc}" for a, pc in zip(axes, pcs))
+    )
+    return _nearest(projected, [C], embedding_col, "_cl", "pca_kmeans").selectExpr(
+        *carry, "_cl[0] AS cluster", *pcs
     )
 
 

@@ -31,9 +31,10 @@ JOB_BUDGET: dict[str, int] = {
     "daily_event_counts": 5,
     "mock_enrich_documents": 2,
     # the table read, the one sample collect the driver-side PCA and
-    # KMeans are fitted from, and two jobs for the write; with the two
-    # MLlib fits it ran 38
-    "pca_kmeans_clusters": 4,
+    # KMeans are fitted from, and the write; the models ride as parsed
+    # literals, not as a broadcast row whose broadcast is one more job
+    # (4); with the two MLlib fits it ran 38
+    "pca_kmeans_clusters": 3,
     "q1_pricing_summary": 3,
     "q3_shipping_priority": 7,
     "q5_regional_revenue": 13,

@@ -203,10 +203,10 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     # the exact all-pairs kernel: a round-robin block split (not counted)
     # into one mapInPandas against the driver-collected corpus matrix
     "near_dup_auto_pairs": 0,
-    # semantic_dedup's cluster exchange, printed once per reader of its
-    # output (5), plus the drop-count distinct; the exact kernel's pair
-    # set adds none (was 8 while it was a pair_cosine nested-loop join)
-    "semantic_dedup_contract": 6,
+    # every count runs inside the body over the pinned keepers; literal
+    # row out (was 6 while the five readers of semantic_dedup's output,
+    # each re-running its cluster step, were the returned plan)
+    "semantic_dedup_contract": 0,
     # the fit, the exact top-k and every nprobe point's hit count run
     # inside the body; literal rows out (was 18 while the hit joins were
     # the returned plan)

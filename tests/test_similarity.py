@@ -309,14 +309,24 @@ def test_ivf_fit_is_row_order_free(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "bad",
-    [None, [0.5] * 7, [0.5] * 9, [0.5] * 7 + [None]],
-    ids=["null", "short", "long", "null_elem"],
+    [
+        None,
+        [0.5] * 7,
+        [0.5] * 9,
+        [0.5] * 7 + [None],
+        [0.5] * 7 + [float("nan")],
+        [0.5] * 7 + [float("inf")],
+        [float("-inf")] + [0.5] * 7,
+    ],
+    ids=["null", "short", "long", "null_elem", "nan", "inf", "neg_inf"],
 )
 def test_ivf_assign_rejects_bad_vectors(spark, bad):
     """A vector assigned to the frozen cells (the append delta, or a
-    corpus row outside the fit sample) that is NULL, holds a NULL or has
-    the wrong dimension is an error, not a row written under a NULL cell
-    that no probe reads."""
+    corpus row outside the fit sample) or PQ-encoded with frozen
+    codebooks that is NULL, holds a NULL or non-finite element or has
+    the wrong dimension is an error, not a row written under a cell or
+    code that hides it (by distance alone, a NaN or Inf vector would
+    land in cell 0)."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
@@ -325,8 +335,53 @@ def test_ivf_assign_rejects_bad_vectors(spark, bad):
     fit_on = spark.createDataFrame(rows, schema)
     delta = spark.createDataFrame([(100, [0.25] * 8), (101, bad)], schema)
     assigned, _ = similarity._ivf_fit(fit_on, delta)
-    with pytest.raises((Py4JJavaError, PySparkException)):
-        assigned.collect()
+    encoded = similarity._nearest(delta, similarity._pq_codebooks(fit_on))
+    for out in (assigned, encoded):
+        with pytest.raises((Py4JJavaError, PySparkException)):
+            out.collect()
+
+
+def test_pq_codes_match_numpy_nearest_codeword(spark):
+    """PQ codes equal a numpy nearest-codeword reference (the first
+    argmin of the squared distance, summed in the same order) on random
+    vectors, with codebooks that repeat codewords: every vector nearest
+    a repeated codeword ties exactly and must take the lower id."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    M, K, sub = 4, 6, 3
+    books = rng.normal(size=(M, K, sub))
+    books[0, 4] = books[0, 1]  # surplus codewords repeating earlier ones
+    books[2, 5] = books[2, 0]
+    books[3, 3] = books[3, 2]
+    X = rng.normal(size=(200, M * sub))
+    X[:10, :sub] = books[0, 1] + rng.normal(scale=1e-3, size=(10, sub))
+    X[10, 2 * sub : 3 * sub] = books[2, 0]  # exactly on a repeated codeword
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(X)], "vec_id long, emb array<double>"
+    )
+    got = {r.vec_id: list(r.codes) for r in similarity._nearest(df, books).collect()}
+
+    def d2(x, c) -> float:
+        return sum((float(a) - float(b)) * (float(a) - float(b)) for a, b in zip(x, c))
+
+    want = {
+        i: [int(np.argmin([d2(v[m * sub : (m + 1) * sub], c) for c in books[m]])) for m in range(M)]
+        for i, v in enumerate(X)
+    }
+    assert got == want
+    assert all(got[i][0] == 1 for i in range(10)) and got[10][2] == 0
+    # the later id of a repeated codeword is never chosen
+    assert all(c[0] != 4 and c[2] != 5 and c[3] != 3 for c in got.values())
+
+
+def test_flat_pq_rejects_non_finite_vector(spark):
+    """Flat PQ runs the one PQ codebook fit, which rejects a NaN sample
+    element up front instead of fitting codebooks that hand every vector
+    the same code in that subspace."""
+    corpus = spark.createDataFrame(_rows_with_nan(), "vec_id long, emb array<double>")
+    with pytest.raises(ValueError, match=r"PQ\(8x16\) codebook fit: non-finite emb\[\d+\]\[3\]"):
+        similarity.ann_pq_topk_frame(spark, corpus)
 
 
 def _rows_with_nan() -> list:
@@ -477,9 +532,8 @@ def test_adc_matches_numpy_reference(spark, sf_dir):
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
     qnorm = np.sqrt((Q * Q).sum(1))
-    coded = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        similarity._pq_encode(books)(F.col("emb")).alias("codes"),
+    coded = similarity._nearest(corpus, books).select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
     scored = similarity._adc_explode(coded, books, Q, qids, qnorm)
     got = sorted((r.query_id, r.neighbor_id, r.adc_sim) for r in scored.collect())
@@ -510,7 +564,8 @@ def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
 
     corpus = similarity.pin(similarity._corpus(spark, sf_dir).limit(300))
     assigned, centers = similarity._ivf_fit(corpus)
-    books = similarity._pq_codebooks(assigned, centers)
+    cells = similarity._residual(assigned, centers, "test")
+    books = similarity._pq_codebooks(cells, "res")
 
     qrows = sorted(
         corpus.filter(F.col("vec_id") < similarity.N_QUERIES)
@@ -521,12 +576,8 @@ def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
     qids = [int(r[0]) for r in qrows]
     qnorm = np.sqrt((Q * Q).sum(1))
 
-    coded = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        "centroid",
-        similarity._pq_encode(books, centers)(
-            F.col("emb"), F.col("centroid")
-        ).alias("codes"),
+    coded = similarity._nearest(cells, books, "res").select(
+        F.col("vec_id").alias("neighbor_id"), "centroid", "codes"
     )
     scored = similarity._adc_explode(coded, books, Q, qids, qnorm, centers)
     plan = _plan(scored)
@@ -567,17 +618,11 @@ def test_ivfpq_append_visible_to_serve(spark, sf_dir, tmp_path):
     delta = spark.createDataFrame(
         [(9_000_000, twin)], "vec_id long, emb array<double>"
     )
-    coded = similarity._ivf_assign(delta, centers)
-    coded.select(
-        "vec_id",
-        "centroid",
-        similarity._pq_encode(books, centers)(
-            F.col("emb"), F.col("centroid")
-        ).alias("codes"),
-    ).write.mode("append").partitionBy("centroid").parquet(path)
-    coded.select("vec_id", "emb", "centroid").write.mode("append").partitionBy(
-        "centroid"
-    ).parquet(path + "_flat")
+    cells = similarity._residual(similarity._ivf_assign(delta, centers), centers, "test")
+    similarity._write_codes(cells, path, "ivfpq", {"book": books, "center": centers}, "append")
+    similarity._write_store(
+        cells.select("vec_id", "emb", "centroid"), path + "_flat", ["centroid"], "append"
+    )
 
     qrows = [(0, list(twin_src))]
     out = similarity.ivfpq_serve(spark, path, books, centers, qrows).collect()
@@ -1169,17 +1214,41 @@ def test_ivf_flat_serve_job_budget(spark, sf_dir, tmp_path):
 #: corpus (``_build_index``), and to run ``semantic_dedup`` end to end,
 #: on the sf0.001 fixture.  Every coarse fit is one bounded sample
 #: collect; pinned like SERVE_JOB_BUDGET, slack 0.
-BUILD_JOB_BUDGET = {"ivf": 7, "ivfpq": 7, "sq8": 5, "ivfsq8": 9, "semantic_dedup": 5}
+BUILD_JOB_BUDGET = {"ivf": 6, "ivfpq": 7, "sq8": 5, "ivfsq8": 8, "semantic_dedup": 5}
+
+#: executed-plan nodes that run a Python worker
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "InPandas")
+
+
+def _sql_executions(spark, run) -> list:
+    """Call ``run()`` and return the ids of the SQL executions it started,
+    from the session's SQL status store (so writes, collects and
+    ``run_parallel``'s threads all count)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids() -> set:
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    bus.waitUntilEmpty()
+    before = ids()
+    run()
+    bus.waitUntilEmpty()
+    return sorted(ids() - before)
 
 
 def test_build_job_budget(spark, sf_dir, tmp_path):
     """Each build, counted under its own job group (``run_parallel``'s
-    threads inherit it), runs exactly its budgeted jobs."""
+    threads inherit it), runs exactly its budgeted jobs, and no SQL
+    execution of an index build starts a Python worker: IVF cells and
+    PQ codes are JVM projections (``_nearest``)."""
     assert set(BUILD_JOB_BUDGET) == set(similarity._KINDS) | {"semantic_dedup"}
     corpus = similarity.pin(similarity._corpus(spark, sf_dir))
     corpus.count()
+    store = spark._jsparkSession.sharedState().statusStore()
     sc = spark.sparkContext
-    jobs = {}
+    jobs, python = {}, {}
     for name in BUILD_JOB_BUDGET:
         group = f"build_budget_{name}"
         sc.setLocalProperty("spark.jobGroup.id", group)
@@ -1187,9 +1256,46 @@ def test_build_job_budget(spark, sf_dir, tmp_path):
             if name == "semantic_dedup":
                 assert similarity.semantic_dedup(spark, sf_dir).collect()
             else:
-                similarity._build_index(spark, corpus, str(tmp_path / name), name)
+                execs = _sql_executions(
+                    spark,
+                    lambda: similarity._build_index(spark, corpus, str(tmp_path / name), name),
+                )
+                assert execs
+                plans = [store.execution(e).get().physicalPlanDescription() for e in execs]
+                python[name] = sorted({n for p in plans for n in _PYTHON_NODES if n in p})
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert python == {kind: [] for kind in similarity._KINDS}
     assert jobs == BUILD_JOB_BUDGET
+
+
+def test_semantic_dedup_contract_runs_the_cluster_step_once(spark, sf_dir):
+    """``semantic_dedup_contract`` reads ``semantic_dedup``'s output five
+    times; the Python cluster step (the grouped map) must still receive
+    each corpus row once, not once per reader."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = similarity._corpus(spark, sf_dir).count()
+    fed = 0
+    for eid in _sql_executions(
+        spark, lambda: similarity.semantic_dedup_contract(spark, sf_dir).collect()
+    ):
+        graph, values = store.planGraph(eid), store.executionMetrics(eid)
+        nodes = graph.allNodes()
+        by_id = {nodes.apply(i).id(): nodes.apply(i) for i in range(nodes.size())}
+        edges = graph.edges()
+        child = {edges.apply(i).toId(): edges.apply(i).fromId() for i in range(edges.size())}
+
+        def rows_read(node) -> int:
+            # down to the exchange feeding the node: its "records read"
+            while True:
+                ms = node.metrics()
+                for j in range(ms.size()):
+                    if ms.apply(j).name() == "records read":
+                        v = values.get(ms.apply(j).accumulatorId())
+                        return int(v.get()) if v.isDefined() else 0
+                node = by_id[child[node.id()]]
+
+        fed += sum(rows_read(v) for v in by_id.values() if v.name() == "FlatMapGroupsInPandas")
+    assert n > 0 and fed == n, (fed, n)

@@ -125,15 +125,24 @@ def test_non_finite_embedding_is_a_value_error(spark, bad):
     ],
 )
 def test_identical_vectors_one_cluster_identity_components(spark, v, elem):
-    """All-identical vectors: every row lands in cluster 0 and, with a
-    zero covariance, the components are the first two axes, so pc1/pc2
-    are the first two coordinates."""
+    """All-identical vectors: every row lands in one cluster, the first
+    fitted centre nearest by squared distance (the six-row mean of 0.1
+    is off by rounding, so the double case lands on a centre that is
+    still the vector itself, not on centre 0), and, with a zero
+    covariance, the components are the first two axes, so pc1/pc2 are
+    the first two coordinates."""
+    import numpy as np
+
+    from ssafynews_data_spark.operators.similarity import _np_kmeans
+
     df = spark.createDataFrame(
         [(i, v) for i in range(6)], f"vec_id long, embedding array<{elem}>"
     )
     rows = vectors.pca_kmeans(df).collect()
+    x = np.array(v, dtype=np.float32 if elem == "float" else float).astype(float)
+    C = _np_kmeans(np.stack([x] * 6), 5, seed=vectors.SEED, iters=20)
     assert len(rows) == 6
-    assert {r.cluster for r in rows} == {0}
+    assert {r.cluster for r in rows} == {int(np.argmin(((x - C) ** 2).sum(1)))}
     assert {(r.pc1, r.pc2) for r in rows} == {(v[0], v[1])}
 
 

@@ -71,7 +71,7 @@ SWEEP_ROOT = os.path.join(
 #: plus the round-6 corpus-scale addition (exact-substring spans) and,
 #: round 7, the PQ serving path — its codebook fit is sample-bounded
 #: (flat in corpus size by construction), so this row guards that the
-#: remaining cost (encode UDF + ADC scoring + re-rank) stays ~linear
+#: remaining cost (JVM encode + ADC scoring + re-rank) stays ~linear
 #: and a future regression to corpus-sized fitting (or a quadratic
 #: ADC) is caught the way the BRP-LSH blow-up was.
 HEADLINERS = (
