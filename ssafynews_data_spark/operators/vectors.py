@@ -15,7 +15,7 @@ small jobs.  Now the fit is one sample action (a
 ``TakeOrderedAndProject`` over the day's embeddings), a numpy
 eigen-decomposition and seeded Lloyd's (``similarity._np_kmeans``, the
 fit of every coarse quantizer and PQ codebook), and the assignment is
-one JVM projection against the models as parsed literals, its
+one JVM projection against the models as typed literals, its
 ``cluster`` taken from ``similarity._nearest``, the nearest-centre rule
 that also assigns IVF cells and encodes PQ codes: 3 jobs (a broadcast
 row of the models would add one: its broadcast is a Spark job).
@@ -107,7 +107,7 @@ def pca_kmeans(
     the module docstring): the top ``PQ_FIT_SAMPLE`` rows by a hash of
     the embedding (``_fit_sample``), every row when n is below the
     cap — then this one action also gives n and k.  The models ride
-    back to the executors as parsed literals (``similarity._arr_sql``,
+    back to the executors as typed literals (``similarity._arr_sql``,
     no broadcast job), and the assignment is one projection each:
     ``pc<i>`` = x·axis_i rounded to 4 places, uncentred like MLlib's
     ``PCAModel.transform``, and ``cluster`` = the centre nearest by

@@ -860,9 +860,9 @@ def test_sq8_meta_cold_start_matches_train(spark, sf_dir, tmp_path):
 
 def test_sq8_build_rejects_non_finite_bounds(spark, tmp_path):
     """One NaN embedding component makes an SQ8 bound non-finite; the
-    bounds are rendered as SQL literals, which have no NaN/Inf form, so
-    the build must fail with a ValueError naming the index kind and the
-    bound — not with a ParseException from deep inside the build."""
+    bounds are rendered as SQL literals, which must be finite, so the
+    build must fail with a ValueError naming the index kind and the
+    bound — not with an error from deep inside the build, or none."""
     corpus = spark.createDataFrame(_rows_with_nan(), "vec_id long, emb array<double>")
     with pytest.raises(ValueError, match=r"sq8 index: non-finite vmax\[3\]"):
         similarity.sq8_build_index(spark, corpus, str(tmp_path / "sq8nan"))
@@ -1020,7 +1020,7 @@ def test_rows_but_no_query_ids_match_the_oracle(spark, no_query_ids_sf, name):
 
 def test_sq8_sql_twins_match_column_forms(spark):
     """r14 optimization guard: the SQL-string twins (_cosine_sql,
-    _sq8_encode_sql, _sq8_dequant_sql, _arr_sql/_arr2_sql) must produce
+    _sq8_encode_sql, _sq8_dequant_sql, _arr_sql) must produce
     BIT-IDENTICAL doubles/ints to the Column-API forms they replaced on
     the hot construction paths (guide §7.3 — one parse instead of
     hundreds of py4j round-trips).  Exact ==, not approx."""
@@ -1070,7 +1070,7 @@ def test_sq8_sql_twins_match_column_forms(spark):
         F.array(*[similarity._sq8_lit(row) for row in mat]).alias("m")
     ).collect()[0].m
     lit_sql = df.limit(1).selectExpr(
-        f"{similarity._arr2_sql(mat)} AS m"
+        f"{similarity._arr_sql(mat)} AS m"
     ).collect()[0].m
     assert [list(r) for r in lit_col] == [list(r) for r in lit_sql]
 
@@ -1081,15 +1081,27 @@ def test_sq8_sql_twins_match_column_forms(spark):
     ids=["nan", "inf", "2d-neg-inf"],
 )
 def test_arr_sql_rejects_non_finite(arr):
-    """Spark SQL has no NaN/Inf double literal (``nanD`` analyzes as an
-    unresolved column): the literal renderers themselves must raise the
-    ValueError ``_check_finite`` raises, so a caller that skips the
-    up-front check still gets a clear error, never an AnalysisException."""
+    """A NaN/Inf quantizer constant would poison every row it meets: the
+    literal renderer itself must raise the ValueError ``_check_finite``
+    raises, so a caller that skips the up-front check still gets a
+    clear error, never a silently wrong plan."""
+    with pytest.raises(ValueError, match=r"SQL array literal: non-finite element\[1\]"):
+        similarity._arr_sql(arr)
+
+
+def test_arr_sql_round_trips_every_double_and_folds(spark):
+    """``_arr_sql`` holds the same bits as the numpy array it renders, at
+    every magnitude (subnormals, -0.0, the extremes), and the optimizer
+    folds it into one literal: no row re-parses the JSON text."""
     import numpy as np
 
-    render = similarity._arr2_sql if np.ndim(arr) == 2 else similarity._arr_sql
-    with pytest.raises(ValueError, match=r"SQL array literal: non-finite element\[1\]"):
-        render(arr)
+    rng = np.random.default_rng(11)
+    X = rng.normal(size=(3, 4, 8)) * 10.0 ** rng.integers(-300, 300, size=(3, 4, 8))
+    X[0, 0, :4] = [-0.0, 5e-324, 1.7976931348623157e308, -2.2250738585072014e-308]
+    df = spark.range(1).selectExpr(f"{similarity._arr_sql(X)} AS a")
+    got = np.asarray(df.first().a, dtype=float)
+    assert np.array_equal(got.view(np.int64), X.view(np.int64))
+    assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_probe_cells_orders_like_a_spark_window(spark, sf_dir):
