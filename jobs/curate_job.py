@@ -12,6 +12,10 @@ Usage:
     spark-submit jobs/curate_job.py \
         --input /path/to/documents.parquet --output /path/out --shards 64
 
+``spark-submit`` starts the driver JVM before this script runs, so the
+engine's compile policy reaches it only as ``--driver-java-options
+"<session.DRIVER_JIT_POLICY>"``.
+
 The reference has no curation job (its pipeline stops at enrichment);
 this is the north-star extension from SURVEY.md §7 packaged the same
 way as jobs/daily_report_job.py.  At 100 TB every stage keeps its

@@ -8,6 +8,10 @@ Usage (identical invocation shape to the reference):
     spark-submit jobs/daily_report_job.py \
         --date 2025-05-24 --input /path/to/articles --output /path/out
 
+``spark-submit`` starts the driver JVM before this script runs, so the
+engine's compile policy reaches it only as ``--driver-java-options
+"<session.DRIVER_JIT_POLICY>"``.
+
 Differences by design (SURVEY.md §4): reads partitioned parquet (the
 date filter is partition pruning, not a post-scan filter), caches the
 day slice once instead of re-scanning per aggregate, keeps sentiment/

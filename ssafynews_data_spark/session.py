@@ -11,6 +11,27 @@ with the settings that matter at 100 TB:
 - Session timezone pinned to UTC so event-time semantics are stable and
   DuckDB-oracle comparisons are exact (DuckDB timestamps are UTC-naive).
 - Arrow enabled for every pandas boundary (pandas_udf / toPandas).
+- One JIT compile policy for the driver JVM (``DRIVER_JIT_POLICY``):
+  tiered compilation and C2 stay, but the tier-4 (C2) thresholds are
+  ten times the JDK 17 defaults, so only code that stays hot is
+  compiled by C2 and a short job runs on C1 code.  Cold, the 11
+  perfbench ``batch`` queries at sf0.01 spent 22-25 of 33-39 JVM CPU
+  seconds in the compiler threads, on compiles they finished too late
+  to use; with the policy the compiler threads use 10-11 s and the
+  ``batch`` pass about 31% less CPU.  Long work pays for it: warm
+  sf0.1 ``bench.py`` wall time is about 7% higher, and at sf1 the
+  executor threads use more CPU on C1 code than the compiles saved
+  (``docs/SCALE.md``, "Measured: JIT compile policy").  It rides
+  in ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
+  callers pass their own ``extraJavaOptions`` through ``extra_conf``,
+  which would replace ours, while the launcher puts the default options
+  in front of the extra ones.  When the driver JVM is already running
+  before this builder is reached (``spark-submit`` in client mode),
+  the launcher has read its options already: pass the same string as
+  ``--driver-java-options``.  In local mode the executors are threads
+  of the driver JVM and run under the policy; cluster executors keep
+  the JVM defaults: their work is long, data-proportional tasks, which
+  nobody has measured under this policy.
 """
 
 from __future__ import annotations
@@ -20,6 +41,15 @@ import os
 from pyspark.sql import SparkSession
 
 from ssafynews_data_spark.caching import scratch_dir
+
+#: the driver JVM's compile policy: the four tier-4 (C2) thresholds at
+#: ten times their JDK 17 defaults (5000, 600, 15000, 40000).  All four
+#: are raised: with the back-edge threshold at its default, the loops of
+#: a short job still reach C2 through on-stack replacement.
+DRIVER_JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def default_driver_mem() -> str:
@@ -94,6 +124,7 @@ def session_builder(
         # of the caller's working directory
         .config("spark.sql.warehouse.dir", scratch_dir("warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_POLICY)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -11,7 +11,9 @@ from ssafynews_data_spark.registry import load_all
 #: every registered query that pins intermediates (dedup barrier, LSH
 #: signatures, similarity corpus, rollup ladder, block-id
 #: partitioning).  ``pca_kmeans_clusters`` pinned its MLlib fit input
-#: and now fits on a driver sample; it stays listed as a no-leak check.
+#: and now fits on a driver sample, and ``embedding_near_dup`` reads its
+#: corpus once, by one collect, and pins nothing; both stay listed as
+#: no-leak checks.
 CACHE_USERS = [
     "minhash_lsh_pairs",
     "embedding_near_dup",

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from tools.profile_bench import jvm_threads, thread_kind, thread_split_s
+from tools.profile_bench import jvm_threads, thread_kind, thread_split_s, total_split
 
 
 def _stat(tmp_path, pid: int, tid: int, name: str, utime: int, stime: int) -> None:
@@ -40,3 +40,17 @@ def test_split_is_the_per_thread_delta(tmp_path):
         "compiler": 3.0, "executor": 2.0, "py4j": 2.0, "scheduler": 0.0,
         "gc": 0.0, "other": 0.0,
     }
+
+
+def test_total_split_sums_each_kind():
+    splits = [
+        {"compiler": 2.5, "executor": 1.0, "py4j": 0.5, "scheduler": 0.0, "gc": 0.25, "other": 0.0},
+        {"compiler": 1.5, "executor": 0.5, "py4j": 0.0, "scheduler": 0.25, "gc": 0.0, "other": 1.0},
+    ]
+    assert total_split(splits) == {
+        "compiler": 4.0, "executor": 1.5, "py4j": 0.5, "scheduler": 0.25,
+        "gc": 0.25, "other": 1.0,
+    }
+    assert total_split([]) == dict.fromkeys(
+        ["compiler", "executor", "py4j", "scheduler", "gc", "other"], 0.0
+    )

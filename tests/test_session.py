@@ -18,3 +18,27 @@ def test_driver_heap_default_follows_physical_ram(monkeypatch):
     assert int(heap[:-1]) <= phys_mb // 2
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1500m")
     assert session_builder()._options["spark.driver.memory"] == "1500m"
+
+
+def test_driver_jvm_runs_the_jit_policy(spark):
+    """Every flag of the compile policy reaches the driver JVM's input
+    arguments, also in a session whose caller set its own
+    ``extraJavaOptions`` (the tier-1 fixture passes extra conf too)."""
+    from ssafynews_data_spark.session import DRIVER_JIT_POLICY
+
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert set(DRIVER_JIT_POLICY.split()) <= set(args), args
+
+
+def test_callers_extra_java_options_leave_the_policy_in_place():
+    """A caller's ``spark.driver.extraJavaOptions`` (perfbench passes one)
+    sets its own key; the policy stays in ``defaultJavaOptions``, which
+    the launcher puts in front of it."""
+    from ssafynews_data_spark.session import DRIVER_JIT_POLICY
+
+    opts = session_builder(
+        extra_conf={"spark.driver.extraJavaOptions": "-XX:-UsePerfData"}
+    )._options
+    assert opts["spark.driver.defaultJavaOptions"] == DRIVER_JIT_POLICY
+    assert opts["spark.driver.extraJavaOptions"] == "-XX:-UsePerfData"

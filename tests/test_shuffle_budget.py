@@ -200,8 +200,8 @@ EXTRA_SHUFFLE_BUDGET: dict[str, int] = {
     "ann_ivf_topk": 1,
     # the same serve from the partition-pruned "ivf" artifact
     "ivf_partition_pruning": 1,
-    # the exact all-pairs kernel: a round-robin block split (not counted)
-    # into one mapInPandas against the driver-collected corpus matrix
+    # the exact all-pairs kernel: one mapInPandas over a range of block
+    # ids against the driver-collected, id-sorted corpus matrix
     "near_dup_auto_pairs": 0,
     # every count runs inside the body over the pinned keepers; literal
     # row out (was 6 while the five readers of semantic_dedup's output,

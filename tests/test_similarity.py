@@ -74,6 +74,45 @@ def test_near_dup_pairs_ordered(spark, sf_dir):
     assert all(r.cos_sim >= similarity.NEAR_DUP_COS for r in rows)
 
 
+def test_exact_pairs_computes_each_cosine_once(monkeypatch):
+    """The exact kernel's blocks cover the upper triangle once: over
+    n = 5,000 id-sorted rows, every block of ``_triangle_cuts`` paired
+    with the rows after it computes at most n²/2 cosine elements plus
+    the diagonal tiles' other halves (n · PAIR_TILE / 2), where a
+    block paired with the whole corpus computes n².  The blocks emit
+    exactly the pairs of one all-pairs mask, bit for bit."""
+    import numpy as np
+
+    n = 5_000
+    rng = np.random.default_rng(7)
+    M = rng.standard_normal((n, 8))
+    M[n // 2 :] = M[: n - n // 2] + 0.2 * rng.standard_normal((n - n // 2, 8))
+    ids = np.arange(n, dtype=np.int64) * 3
+    ref = {
+        (ids[i], ids[j]): c
+        for ii, jj, cs in similarity._near_pairs(ids, M, ids, M, 0.9)
+        for i, j, c in zip(ii, jj, cs)
+    }
+    assert len(ref) > 1000
+    computed = []
+    cosine = similarity._cosine_matrix
+    monkeypatch.setattr(
+        similarity, "_cosine_matrix",
+        lambda A, B: computed.append(len(A) * len(B)) or cosine(A, B),
+    )
+    for parts in (1, 2, 3, 4):
+        computed.clear()
+        cuts = similarity._triangle_cuts(n, parts)
+        got = {
+            (ids[i], ids[j]): c
+            for k in range(parts)
+            for ii, jj, cs in similarity._triangle_block(ids, M, cuts[k], cuts[k + 1], 0.9)
+            for i, j, c in zip(ii, jj, cs)
+        }
+        assert got == ref, parts
+        assert sum(computed) <= n * n / 2 + n * similarity.PAIR_TILE / 2, (parts, sum(computed))
+
+
 def test_near_dup_guard_rejects_large_corpus(spark, sf_dir, monkeypatch):
     """The exact verify form materializes the corpus on the driver; above
     the cap it must refuse loudly (pointing at near_dup_auto), not OOM."""

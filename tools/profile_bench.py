@@ -13,16 +13,22 @@ Usage:
 instead of the engine's: bare ``local[8]`` builder, no engine configs —
 so the run proves the wins survive the grading driver's environment
 (the engine-session conf, e.g. dataFrameDebugging=off, must not be the
-only thing carrying a number).
+only thing carrying a number).  The bare session also runs without the
+engine's JIT compile policy (``session.DRIVER_JIT_POLICY``): its driver
+JVM compiles at the JDK defaults.
 
-Prints two lines per query to stdout: ``name  median  min  runs``, then
+Before the first query it prints ``jvm  <-XX flags>``, the ``-XX``
+input arguments of the driver JVM, so a run records the compile policy
+it ran under.  Then it prints two lines per query to stdout:
+``name  median  min  runs``, then
 ``name  threads  kind=cpu_s ...``, the JVM's CPU time over its reps
 split by thread kind (``THREAD_KINDS``: JIT compiler, executor tasks,
 py4j handlers, the scheduler and AQE stage threads, GC, other), read
 from ``/proc/<jvm>/task/*/stat``.  That split showed the daily report's
 MLlib fits spending most of their CPU in the JIT compiler threads
 warming MLlib's code paths, not in tasks; run one query with
-``--reps=1`` to see it cold.
+``--reps=1`` to see it cold.  After the last query, ``TOTAL  threads
+kind=cpu_s ...`` sums the per-query splits.
 """
 
 from __future__ import annotations
@@ -49,6 +55,7 @@ THREAD_KINDS = (
     )),
     ("gc", ("GC Thread", "G1 ", "VM Thread")),
 )
+KIND_NAMES = tuple(k for k, _ in THREAD_KINDS) + ("other",)
 
 
 def thread_kind(name: str) -> str:
@@ -79,10 +86,23 @@ def thread_split_s(before: dict, after: dict) -> dict[str, float]:
     """CPU seconds per thread kind between two ``jvm_threads`` snapshots.
     A thread that exited in between drops out: its time is in the
     process total but not in this split."""
-    split = dict.fromkeys([k for k, _ in THREAD_KINDS] + ["other"], 0)
+    split = dict.fromkeys(KIND_NAMES, 0)
     for tid, (kind, ticks) in after.items():
         split[kind] += ticks - before.get(tid, (kind, 0))[1]
     return {k: v / os.sysconf("SC_CLK_TCK") for k, v in split.items()}
+
+
+def total_split(splits: list[dict[str, float]]) -> dict[str, float]:
+    """The per-kind sum of per-query ``thread_split_s`` results."""
+    total = dict.fromkeys(KIND_NAMES, 0.0)
+    for split in splits:
+        for kind, s in split.items():
+            total[kind] += s
+    return total
+
+
+def _fmt_split(split: dict[str, float]) -> str:
+    return "  ".join(f"{k}={v:.2f}" for k, v in split.items())
 
 
 def main() -> int:
@@ -144,7 +164,12 @@ def main() -> int:
     # same warmup as bench.py: JVM/codegen/Arrow paths exist before timing
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.range(64).repartition(4).mapInPandas(lambda it: it, "id long").count()
-    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    jvm = spark.sparkContext._jvm
+    jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
+    args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    print("jvm  " + " ".join(a for a in args if a.startswith("-XX")))
+
+    splits = []
 
     for name, q in sel.items():
         # formatted plan (captured via the internal API so it lands in a file)
@@ -172,8 +197,10 @@ def main() -> int:
             f"{name}  median={statistics.median(runs):.3f}  "
             f"min={min(runs):.3f}  runs={[round(r, 3) for r in runs]}"
         )
-        split = thread_split_s(t_before, jvm_threads(jvm_pid))
-        print(f"{name}  threads  " + "  ".join(f"{k}={v:.2f}" for k, v in split.items()))
+        splits.append(thread_split_s(t_before, jvm_threads(jvm_pid)))
+        print(f"{name}  threads  {_fmt_split(splits[-1])}")
+    if splits:
+        print(f"TOTAL  threads  {_fmt_split(total_split(splits))}")
     return 0
 
 
