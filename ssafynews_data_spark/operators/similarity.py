@@ -736,9 +736,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         A = np.array(pdf["emb"].tolist(), dtype=np.float64)
         # the group knows its whole answer: kept rows AND the drop count
         # (every id with a smaller-id near-dup drops; the smallest id of
-        # a cluster can never drop, so a cluster is never empty)
+        # a cluster can never drop, so a cluster is never empty).  A
+        # one-member cluster's only tile is skipped: no tile, no drop.
         dropped = np.unique(
-            np.concatenate([ids[jj] for _, jj, _ in _near_pairs(ids, A, ids, A, SEMDEDUP_EPS)])
+            np.concatenate(
+                [ids[jj] for _, jj, _ in _near_pairs(ids, A, ids, A, SEMDEDUP_EPS)] or [ids[:0]]
+            )
         )
         keep = ~np.isin(ids, dropped)
         return pd.DataFrame(

@@ -19,19 +19,29 @@ with the settings that matter at 100 TB:
   seconds in the compiler threads, on compiles they finished too late
   to use; with the policy the compiler threads use 10-11 s and the
   ``batch`` pass about 31% less CPU.  Long work pays for it: warm
-  sf0.1 ``bench.py`` wall time is about 7% higher, and at sf1 the
-  executor threads use more CPU on C1 code than the compiles saved
-  (``docs/SCALE.md``, "Measured: JIT compile policy").  It rides
-  in ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
+  sf0.1 ``bench.py`` wall time was about 10% higher, at sf1 the
+  executor threads used more CPU on C1 code than the compiles saved,
+  and the tier-1 suite (one JVM for about 20 minutes) took 26% longer
+  (``docs/SCALE.md``, "Measured: JIT compile policy").  No JVM flag can
+  change the thresholds once the JVM runs, and nothing the builder sees
+  tells a short process from a long one, so the caller decides: a
+  process known to run long (the test suite's session, ``bench.py``'s
+  warm repetitions) passes ``JDK_DEFAULT_JIT`` in ``extra_conf`` and
+  keeps the JDK defaults.  The policy rides in
+  ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
   callers pass their own ``extraJavaOptions`` through ``extra_conf``,
   which would replace ours, while the launcher puts the default options
-  in front of the extra ones.  When the driver JVM is already running
-  before this builder is reached (``spark-submit`` in client mode),
-  the launcher has read its options already: pass the same string as
-  ``--driver-java-options``.  In local mode the executors are threads
-  of the driver JVM and run under the policy; cluster executors keep
-  the JVM defaults: their work is long, data-proportional tasks, which
-  nobody has measured under this policy.
+  in front of the extra ones.  Production runs do not receive the
+  policy either: under ``spark-submit`` (the daily report's documented
+  route; client mode) the launcher has read the driver's options
+  before this builder is reached, so the policy applies only if given
+  as ``--driver-java-options``, and a session from a bare
+  ``SparkSession.builder`` (how ``__spark_entry__``'s callers build
+  theirs) never sees it.  In
+  local mode the executors are threads of the driver JVM and run under
+  the policy; cluster executors keep the JVM defaults: their work is
+  long, data-proportional tasks, which nobody has measured under this
+  policy.
 """
 
 from __future__ import annotations
@@ -50,6 +60,11 @@ DRIVER_JIT_POLICY = (
     "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
     " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
 )
+
+#: ``extra_conf`` of a long-lived session: an empty
+#: ``defaultJavaOptions`` leaves its driver JVM at the JDK's compile
+#: defaults, which keep long work fast
+JDK_DEFAULT_JIT = {"spark.driver.defaultJavaOptions": ""}
 
 
 def default_driver_mem() -> str:

@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 
 from ssafynews_data_spark import get_session
+from ssafynews_data_spark.session import JDK_DEFAULT_JIT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -13,7 +14,12 @@ def spark():
         app_name="ssafynews-tests",
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={"spark.sql.streaming.checkpointLocation.deleteOnExit": "true"},
+        # one JVM for the whole suite: long-lived, so the JDK's compile
+        # defaults, not the short-job policy
+        extra_conf={
+            "spark.sql.streaming.checkpointLocation.deleteOnExit": "true",
+            **JDK_DEFAULT_JIT,
+        },
     )
     yield s
 

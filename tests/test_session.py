@@ -20,25 +20,41 @@ def test_driver_heap_default_follows_physical_ram(monkeypatch):
     assert session_builder()._options["spark.driver.memory"] == "1500m"
 
 
-def test_driver_jvm_runs_the_jit_policy(spark):
-    """Every flag of the compile policy reaches the driver JVM's input
-    arguments, also in a session whose caller set its own
-    ``extraJavaOptions`` (the tier-1 fixture passes extra conf too)."""
+def test_engine_driver_jvm_runs_the_policy_beside_callers_flags(tmp_path):
+    """A fresh engine session whose caller sets its own
+    ``extraJavaOptions`` (perfbench's route) launches its driver JVM
+    with every flag of the compile policy and every flag of the
+    caller's.  It runs in a child process: the suite's own JVM is
+    already up, and a JVM's flags are fixed at launch."""
+    import json
+    import subprocess
+    import sys
+
     from ssafynews_data_spark.session import DRIVER_JIT_POLICY
 
-    jvm = spark.sparkContext._jvm
-    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    caller = f"-Djava.io.tmpdir={tmp_path} -XX:-UsePerfData"
+    child = (
+        "import json, sys\n"
+        "from ssafynews_data_spark import get_session\n"
+        "s = get_session(master='local[1]', extra_conf={'spark.driver.extraJavaOptions': sys.argv[1]})\n"
+        "bean = s.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()\n"
+        "print(json.dumps(list(bean.getInputArguments())))\n"
+        "s.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="512m", PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", child, caller],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    args = json.loads(out.strip().splitlines()[-1])
     assert set(DRIVER_JIT_POLICY.split()) <= set(args), args
+    assert set(caller.split()) <= set(args), args
 
 
-def test_callers_extra_java_options_leave_the_policy_in_place():
-    """A caller's ``spark.driver.extraJavaOptions`` (perfbench passes one)
-    sets its own key; the policy stays in ``defaultJavaOptions``, which
-    the launcher puts in front of it."""
-    from ssafynews_data_spark.session import DRIVER_JIT_POLICY
-
-    opts = session_builder(
-        extra_conf={"spark.driver.extraJavaOptions": "-XX:-UsePerfData"}
-    )._options
-    assert opts["spark.driver.defaultJavaOptions"] == DRIVER_JIT_POLICY
-    assert opts["spark.driver.extraJavaOptions"] == "-XX:-UsePerfData"
+def test_long_lived_session_keeps_the_jdk_defaults(spark):
+    """The suite's session, one JVM for the whole run, passes
+    ``JDK_DEFAULT_JIT``: its driver JVM carries no tier-4 flag."""
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = list(bean.getInputArguments())
+    assert not [a for a in args if a.startswith("-XX:Tier4")], args

@@ -462,6 +462,26 @@ def test_semantic_dedup_rejects_non_finite_vector(spark, tmp_path):
         similarity.semantic_dedup(spark, str(d))
 
 
+@pytest.mark.parametrize("n", [1, 3])
+def test_semantic_dedup_keeps_one_member_clusters(spark, tmp_path, n):
+    """Fewer vectors than SEMDEDUP_K: every cluster holds one vector,
+    whose only pair tile holds no pair and is skipped.  Each vector is
+    kept with a drop count of 0, and the contract accounts for all."""
+    from ssafynews_data_spark.schemas import TESTDATA_SCHEMAS
+
+    d = tmp_path / f"one_member_sf{n}"
+    rows = [(i, [float(j == i) for j in range(8)], i % 3) for i in range(n)]
+    spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).coalesce(1).write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    out = similarity.semantic_dedup(spark, str(d)).collect()
+    assert sorted(r.vec_id for r in out) == list(range(n))
+    assert len({r.centroid for r in out}) == n
+    assert all(r.n_dropped_in_cluster == 0 for r in out)
+    r = similarity.semantic_dedup_contract(spark, str(d)).collect()[0]
+    assert (r.n_total, r.n_accounted, r.orphan_drops, r.both_kept_incluster_pairs) == (n, n, 0, 0)
+
+
 @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq8"])
 def test_ivf_kinds_build_and_serve_below_ivf_k(spark, tmp_path, kind):
     """Fewer vectors than IVF_K: the fit still returns IVF_K centroids,

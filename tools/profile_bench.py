@@ -166,8 +166,8 @@ def main() -> int:
     spark.range(64).repartition(4).mapInPandas(lambda it: it, "id long").count()
     jvm = spark.sparkContext._jvm
     jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
-    args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
-    print("jvm  " + " ".join(a for a in args if a.startswith("-XX")))
+    jvm_args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    print("jvm  " + " ".join(a for a in jvm_args if a.startswith("-XX")))
 
     splits = []
 
