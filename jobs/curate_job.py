@@ -44,15 +44,12 @@ def main(argv: list[str] | None = None) -> int:
     args = parser.parse_args(argv)
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
-
+    from ssafynews_data_spark import get_session
     from ssafynews_data_spark.plans.curate import curate
     from ssafynews_data_spark.plans.pipeline import curate_full
-    from ssafynews_data_spark.sources.readers import _ensure_session_conf
     from ssafynews_data_spark.sources.sinks import write_training_shards
 
-    spark = SparkSession.builder.appName("curate_corpus").getOrCreate()
-    _ensure_session_conf(spark)
+    spark = get_session(app_name="curate_corpus")
 
     docs = spark.read.parquet(args.input)
     curated = curate_full(docs) if args.full else curate(docs)

@@ -1,14 +1,14 @@
 """Driver-local DataFrames as a JVM ``LocalRelation``.
 
-Contract rows, centroid lists, quantizer meta frames, the ADC lookup
-row, serve-request query embeddings and streaming-sink snapshots are
-all lists the driver already holds.  ``spark.createDataFrame(rows)``
-ships such a list through an RDD: the plan scans a ``LogicalRDD`` whose
-every execution forks a Python worker to run the schema's
-``toInternal``.  On a 4-vCPU VM those workers took about 0.5 of the
-1.5-3.3 CPU s of every warm ANN serve request (the query embeddings,
-the ADC lookup row and the SQ8 constants are such frames).  An empty
-list even fans out into ``defaultParallelism`` Python tasks.
+Contract rows, centroid lists, quantizer meta frames, serve-request
+query embeddings and streaming-sink snapshots are all lists the driver
+already holds.  ``spark.createDataFrame(rows)`` ships such a list
+through an RDD: the plan scans a ``LogicalRDD`` whose every execution
+forks a Python worker to run the schema's ``toInternal``.  On a 4-vCPU
+VM those workers took about 0.5 of the 1.5-3.3 CPU s of every warm ANN
+serve request, when the query embeddings, the ADC lookup row and the
+SQ8 constants were such frames (the last two are plan literals now).
+An empty list even fans out into ``defaultParallelism`` Python tasks.
 
 ``local_df`` runs the same conversion once, on the driver, and hands the
 result to the JVM as an Arrow table.  Below

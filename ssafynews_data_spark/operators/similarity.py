@@ -33,10 +33,10 @@ ladder:
    codebooks (seeded Lloyd's on a bounded md5-ordered sample, r7)
    compress each vector to PQ_M 4-bit codes (``_nearest`` again, one
    book per subspace, so no index build starts a Python worker),
-   queries score by ADC with the lookup tables as ONE broadcast row
-   (plan size independent of the batch; ``adc_batch_parity_contract`` pins it bit-exact
-   against a numpy ADC over the same tables), deep candidate list
-   exact-re-ranked;
+   queries score by ADC against lookup tables that ride in the plan as
+   folded literals (``_arr_sql``, like every other quantizer constant;
+   ``adc_batch_parity_contract`` pins it bit-exact against a numpy ADC
+   over the same tables), deep candidate list exact-re-ranked;
 6. the IVF × codec index stack — faiss ``index_factory`` compositions
    "IVF8,Flat" (``"ivf"``: IVF-Flat, item 4), "IVF8,PQ8x4" (``ivfpq_*``:
    RESIDUAL PQ codes, ``by_residual=true``, r8 — recall at the nprobe
@@ -1378,7 +1378,7 @@ def _pq_codebooks(frame: DataFrame, emb_col: str = "emb", id_col: str = "vec_id"
 def _adc_tables(books: list, Q: "np.ndarray") -> tuple[list, list]:
     """The ADC lookup tables: per subspace m, the (|Q|, K) partial dots
     Q_m · C_mᵀ and the K squared centroid norms ‖C_m[k]‖².  Shared by
-    the Spark lookup row and the numpy reference of
+    the Spark scoring literals and the numpy reference of
     ``adc_batch_parity_contract``, so both read the same doubles."""
     sub = books[0].shape[1]
     dots = [Q[:, m * sub : (m + 1) * sub] @ C.T for m, C in enumerate(books)]
@@ -1386,73 +1386,19 @@ def _adc_tables(books: list, Q: "np.ndarray") -> tuple[list, list]:
     return dots, norms
 
 
-def _adc_lut_row(
-    spark: SparkSession,
-    books: list,
-    Q: "np.ndarray",
-    qids: list,
-    qnorm: "np.ndarray",
-    centers: "np.ndarray | None" = None,
-) -> DataFrame:
-    """The ADC lookup table as ONE broadcastable ``local_df`` row whose
-    maps are built on the driver (data, not plan literals — the literal
-    form's plan compile cost exceeded the whole execution, r13), so the
-    serving plan stays constant-size no matter how many queries are
-    batched and the row costs no job of its own:
-
-    - ``_adc_lut[m·K + code]`` = (pd: partial dots over queries,
-      cn2: ||c||²), a ``map<int, struct<pd, cn2>>``;
-    - ``_adc_qids`` and ``_adc_qn``, the query ids and query norms;
-      the ids stay ``array<int>`` (``bigint`` only for ids past 2³¹),
-      since they become the served ``query_id``.
-
-    With ``centers`` (residual ADC) it also carries the centroid-keyed
-    terms — ``_adc_qc[c]`` = per-query dot(q, c) array, ``_adc_ccn2[c]``
-    = ‖c‖², and ``_adc_cross[m·IVF_K·K + c·K + k]`` = dot(c_m, C_m[k]):
-    M·IVF_K·K + IVF_K·(Q + 2) doubles ≈ tens of KB."""
-    dots, norms = _adc_tables(books, Q)
-    row = [
-        {
-            m * PQ_K + k: ([float(x) for x in pd_mk[:, k]], norms[m][k])
-            for m, pd_mk in enumerate(dots)
-            for k in range(PQ_K)
-        },
-        [int(q) for q in qids],
-        [float(x) for x in qnorm],
-    ]
-    # int unless an id needs 64 bits — the type F.lit gave this array
-    qid_t = "int" if all(-(2**31) <= q < 2**31 for q in row[1]) else "bigint"
-    schema = (
-        "_adc_lut map<int, struct<pd: array<double>, cn2: double>>,"
-        f" _adc_qids array<{qid_t}>, _adc_qn array<double>"
+def _explode_scores(df: DataFrame, carry: list, sims: str, qids: list) -> DataFrame:
+    """The one scoring tail of both codecs: ``sims`` is a SQL array of
+    per-row scores, one per query of the batch in ``qids`` order;
+    ``posexplode`` turns each into a (query_id, <carry>, adc_sim) row
+    and self-pairs drop.  The ids ride as SQL integer text, so
+    ``query_id`` is ``int`` unless an id needs 64 bits."""
+    ids = f"array({', '.join(str(int(q)) for q in qids)})"
+    cols = [f"`{c}`" for c in carry]
+    return (
+        df.selectExpr(*cols, f"posexplode({sims}) AS (qpos, adc_sim)")
+        .selectExpr(f"element_at({ids}, qpos + 1) AS query_id", *cols, "adc_sim")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    if centers is not None:
-        sub = books[0].shape[1]
-        n_cells = centers.shape[0]
-        qc = Q @ centers.T  # (Q, IVF_K)
-        cn2 = (centers * centers).sum(1)  # (IVF_K,)
-        cross = {}
-        for m, C in enumerate(books):
-            cc_mk = centers[:, m * sub : (m + 1) * sub] @ C.T  # (IVF_K, K)
-            for c in range(n_cells):
-                for k in range(PQ_K):
-                    cross[m * n_cells * PQ_K + c * PQ_K + k] = float(cc_mk[c, k])
-        row += [
-            {c: [float(x) for x in qc[:, c]] for c in range(n_cells)},
-            {c: float(cn2[c]) for c in range(n_cells)},
-            cross,
-        ]
-        schema += (
-            ", _adc_qc map<int, array<double>>, _adc_ccn2 map<int, double>,"
-            " _adc_cross map<int, double>"
-        )
-    return local_df(spark, [tuple(row)], schema)
-
-
-#: columns the ADC machinery injects; never part of the caller's carry
-_ADC_HELPER_COLS = frozenset(
-    {"codes", "_adc_lut", "_adc_qids", "_adc_qn", "_adc_qc", "_adc_ccn2", "_adc_cross"}
-)
 
 
 def _adc_explode(
@@ -1460,61 +1406,49 @@ def _adc_explode(
     books: list,
     Q: "np.ndarray",
     qids: list,
-    qnorm: "np.ndarray",
     centers: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Explode a coded frame (``neighbor_id``, ``codes``, any carry
     columns) into per-(query, neighbor) ADC cosine rows: (query_id,
     <carry>, adc_sim), self-pairs dropped.  Shared by the flat PQ path
-    and IVF-PQ so the ADC normalization/tiebreak lives in ONE place;
-    the lookups arrive as the one broadcast row of ``_adc_lut_row``.
+    and IVF-PQ so the ADC normalization/tiebreak lives in ONE place.
+    The lookup tables of ``_adc_tables`` are plan literals
+    (``_arr_sql``), indexed by code: per subspace m the (K, |Q|) partial
+    dots and the K squared centroid norms, plus the |Q| query norms.
 
     With ``centers`` the frame also carries ``centroid`` and the codes
     are RESIDUAL codes; the reconstruction is x̂ = c + r̂, so
 
     - dot(q, x̂)  = dot(q, c)          [centroid lookup, per query]
-                  + Σ_m dot(q_m, C_m[k_m])   [the shared residual maps]
+                  + Σ_m dot(q_m, C_m[k_m])   [the shared residual tables]
     - ‖x̂‖²      = ‖c‖² + 2·Σ_m dot(c_m, C_m[k_m]) + Σ_m ‖C_m[k_m]‖²
 
     i.e. exactly ONE extra lookup per subspace vs the flat form (the
-    (centroid, code) cross-dot), plus two centroid-keyed scalars.
+    (centroid, code) cross-dot), plus two centroid-indexed terms.
     Without ``centers`` no centroid term is emitted: the flat plan is
     the flat sums alone."""
-    carry = [c for c in df.columns if c not in _ADC_HELPER_COLS]
-    df = df.crossJoin(
-        F.broadcast(_adc_lut_row(df.sparkSession, books, Q, qids, qnorm, centers))
-    )
+    carry = [c for c in df.columns if c != "codes"]
+    dots, norms = _adc_tables(books, Q)
     # the whole scoring expression as ONE parsed SQL string (guide §7.3)
     # — the Column-API form paid ~40 py4j round-trips per
     # zip_with/element_at while building the identical tree
-    ent = lambda m: f"element_at(_adc_lut, {m * PQ_K} + codes[{m}])"  # noqa: E731
-    dots_s = f"{ent(0)}.pd"
-    norm2_s = f"{ent(0)}.cn2"
+    dots_s = f"{_arr_sql(dots[0].T)}[codes[0]]"
+    norm2_s = f"{_arr_sql(norms[0])}[codes[0]]"
     for m in range(1, len(books)):
-        dots_s = f"zip_with({dots_s}, {ent(m)}.pd, (a, b) -> a + b)"
-        norm2_s = f"{norm2_s} + {ent(m)}.cn2"
+        dots_s = f"zip_with({dots_s}, {_arr_sql(dots[m].T)}[codes[{m}]], (a, b) -> a + b)"
+        norm2_s = f"{norm2_s} + {_arr_sql(norms[m])}[codes[{m}]]"
     if centers is not None:
+        sub = books[0].shape[1]
         cross_s = " + ".join(
-            f"element_at(_adc_cross, {m * centers.shape[0] * PQ_K}"
-            f" + centroid * {PQ_K} + codes[{m}])"
-            for m in range(len(books))
+            f"{_arr_sql(centers[:, m * sub : (m + 1) * sub] @ C.T)}[centroid][codes[{m}]]"
+            for m, C in enumerate(books)
         )
-        dots_s = f"zip_with({dots_s}, element_at(_adc_qc, centroid), (r, c) -> r + c)"
-        norm2_s = f"element_at(_adc_ccn2, centroid) + ({cross_s}) * 2.0D + ({norm2_s})"
-    sim_s = f"zip_with({dots_s}, _adc_qn, (d, qn) -> d / (qn * sqrt({norm2_s})))"
-    return (
-        df.selectExpr(
-            *[f"`{c}`" for c in carry],
-            "_adc_qids",
-            f"posexplode({sim_s}) AS (qpos, adc_sim)",
-        )
-        .selectExpr(
-            "element_at(_adc_qids, qpos + 1) AS query_id",
-            *[f"`{c}`" for c in carry],
-            "adc_sim",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
+        qc, cn2 = (Q @ centers.T).T, (centers * centers).sum(1)
+        dots_s = f"zip_with({dots_s}, {_arr_sql(qc)}[centroid], (r, c) -> r + c)"
+        norm2_s = f"{_arr_sql(cn2)}[centroid] + ({cross_s}) * 2.0D + ({norm2_s})"
+    qnorm = np.sqrt((Q * Q).sum(1))
+    sim_s = f"zip_with({dots_s}, {_arr_sql(qnorm)}, (d, qn) -> d / (qn * sqrt({norm2_s})))"
+    return _explode_scores(df, carry, sim_s, qids)
 
 
 def _adc_candidate_cut(scored: DataFrame, depth: int = PQ_RERANK) -> DataFrame:
@@ -1535,9 +1469,9 @@ def ann_pq_topk_frame(
     the standard PQ serving pipeline (Jegou et al. 2011, public).
 
     Spark shape: the per-(subspace, code) partial dot products against
-    ALL queries travel as ONE broadcast lookup row (M·K entries, each
-    an array of Q doubles — a few KB), so ADC is map lookups + one
-    zip_with sum per subspace, pure codegen, no shuffles until the
+    ALL queries ride in the plan as literals (per subspace a K×Q
+    array, a few KB in all; ``_adc_explode``), so ADC is array lookups
+    + one zip_with sum per subspace, no join and no shuffle until the
     per-query group limit; only the PQ_RERANK x Q
     candidate rows join back for exact re-rank.  At 100 TB the codes
     table (M bytes/vector vs 4·dim) is the stored index — encode once,
@@ -1554,12 +1488,11 @@ def ann_pq_topk_frame(
     books = _pq_codebooks(corpus, emb_col=emb_col, id_col=id_col)
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
 
     coded = _nearest(corpus, books, emb_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("emb_n"), "codes"
     )
-    cand = _adc_candidate_cut(_adc_explode(coded, books, Q, qids, qnorm))
+    cand = _adc_candidate_cut(_adc_explode(coded, books, Q, qids))
     q_emb = corpus.filter(F.col(id_col) < N_QUERIES).select(
         F.col(id_col).alias("query_id"), F.col(emb_col).alias("emb_q")
     )
@@ -1786,8 +1719,7 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _adc_reference(
-    ids: list, codes: "np.ndarray", books: list, Q: "np.ndarray", qids: list,
-    qnorm: "np.ndarray",
+    ids: list, codes: "np.ndarray", books: list, Q: "np.ndarray", qids: list
 ) -> list[tuple]:
     """numpy twin of flat ``_adc_explode`` over (ids, codes (n, M)):
     the SAME ``_adc_tables`` doubles, summed over subspaces left to
@@ -1800,6 +1732,7 @@ def _adc_reference(
     for m in range(1, len(books)):
         acc = acc + dots[m][:, codes[:, m]]
         norm2 = norm2 + np.asarray(norms[m])[codes[:, m]]
+    qnorm = np.sqrt((Q * Q).sum(1))
     sim = acc / (qnorm[:, None] * np.sqrt(norm2)[None, :])
     return [
         (int(q), int(n), float(sim[j, i]))
@@ -1821,7 +1754,7 @@ def _adc_reference(
 )
 def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable exactness contract for flat ADC: Spark's
-    broadcast-lookup scoring (``_adc_explode``) and a numpy ADC over
+    literal-lookup scoring (``_adc_explode``) and a numpy ADC over
     the SAME lookup tables in the SAME accumulation order
     (``_adc_reference``) must score every (query, neighbor) pair
     BIT-identically.  Output: (n_scored, paths_identical); n_scored =
@@ -1839,7 +1772,6 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = _pq_codebooks(corpus)
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
     coded = pin(_nearest(corpus, books).select(F.col("vec_id").alias("neighbor_id"), "codes"))
     code_rows = coded.collect()
     ref = local_df(
@@ -1847,14 +1779,14 @@ def adc_batch_parity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         _adc_reference(
             [r.neighbor_id for r in code_rows],
             np.array([r.codes for r in code_rows], dtype=np.int64).reshape(-1, PQ_M),
-            books, Q, qids, qnorm,
+            books, Q, qids,
         ),
         "query_id long, neighbor_id long, adc_sim double",
     )
     # pin both scored frames: each feeds two anti-join counts (and got
     # a third count) — without the barrier the ADC scoring pipeline
     # re-ran per consumer
-    got = pin(_adc_explode(coded, books, Q, qids, qnorm))
+    got = pin(_adc_explode(coded, books, Q, qids))
     ref = pin(ref)
     cols = ["query_id", "neighbor_id", "adc_sim"]
     only_got = got.join(ref, cols, "left_anti").count()
@@ -2442,51 +2374,27 @@ def _sq8_encode(
     )
 
 
-def _sq8_const_row(
-    spark: SparkSession,
-    vmin: "np.ndarray",
-    vmax: "np.ndarray",
-    centers: "np.ndarray | None" = None,
-) -> DataFrame:
-    """The SQ8 quantizer constants as ONE broadcastable row — data, not
-    plan literals (the ADC-router move, F11/r13): at dim 64 the literal
-    arrays made a serve plan cost more to analyze/codegen than to
-    execute (measured 1.14 → 0.83 s per ivf-sq8 serve pass, identical
-    rows).  Columns: ``_lo``, ``_rng`` (+ ``_cent`` when the centroid
-    matrix is needed).  Same doubles as the literal form, so every
-    downstream value is bit-identical; the literal helpers remain for
-    the one-pass build/encode paths where plan cost is paid once."""
-    row: tuple = (
-        [float(x) for x in vmin],
-        [float(x) for x in (vmax - vmin)],
-    )
-    schema = "_lo array<double>, _rng array<double>"
-    if centers is not None:
-        row = row + (
-            [[float(x) for x in centers[c]] for c in range(centers.shape[0])],
-        )
-        schema += ", _cent array<array<double>>"
-    return local_df(spark, [row], schema)
-
-
-def _sq8_dequant_col(col: Column | None = None) -> Column:
-    """The SQ8 affine dequant (the inverse of ``_sq8_encode``) against
-    the ``_sq8_const_row`` columns instead of plan literals — identical
-    arithmetic on identical doubles."""
+def _sq8_dequant_col(
+    vmin: "np.ndarray", vmax: "np.ndarray", col: Column | None = None
+) -> Column:
+    """The SQ8 affine dequant (the inverse of ``_sq8_encode``):
+    x̂[i] = lo[i] + code[i]·rng[i]/SQ_LEVELS on the same literal doubles."""
+    lo, rng = _sq8_lit(vmin), _sq8_lit(vmax - vmin)
     return F.transform(
         F.col("codes") if col is None else col,
-        lambda c, i: F.element_at(F.col("_lo"), i + 1)
-        + c.cast("double") * F.element_at(F.col("_rng"), i + 1) / SQ_LEVELS,
+        lambda c, i: F.element_at(lo, i + 1)
+        + c.cast("double") * F.element_at(rng, i + 1) / SQ_LEVELS,
     )
 
 
-def _sq8_dequant_sql(col: str = "codes") -> str:
+def _sq8_dequant_sql(vmin: "np.ndarray", vmax: "np.ndarray", col: str = "codes") -> str:
     """SQL twin of :func:`_sq8_dequant_col` — same affine expression
     (lo[i] + c·rng[i]/SQ_LEVELS, identical association), one parse
     instead of a transform-with-index Column build (guide §7.3)."""
+    lo, rng = _arr_sql(vmin), _arr_sql(vmax - vmin)
     return (
-        f"transform({col}, (c, i) -> element_at(_lo, i + 1)"
-        f" + CAST(c AS DOUBLE) * element_at(_rng, i + 1) / {SQ_LEVELS})"
+        f"transform({col}, (c, i) -> element_at({lo}, i + 1)"
+        f" + CAST(c AS DOUBLE) * element_at({rng}, i + 1) / {SQ_LEVELS})"
     )
 
 
@@ -2658,30 +2566,26 @@ def _read_meta(spark: SparkSession, path: str) -> dict:
 
 def _sq8_adc(
     coded: DataFrame,
-    q_emb: DataFrame,
+    Q: "np.ndarray",
+    qids: list,
     vmin: "np.ndarray",
     vmax: "np.ndarray",
     centers: "np.ndarray | None" = None,
 ) -> DataFrame:
     """SQ8 asymmetric score of a (neighbor_id, [centroid,] codes) frame:
-    float queries (broadcast) against the affine dequant of the codes —
+    the float queries ``Q`` against the affine dequant of the codes —
     plus the cell centroid when ``centers`` (IVF-SQ8 residual codes) —
-    as (query_id, neighbor_id, [centroid,] adc_sim).  The quantizer
-    (and centroid) constants ride as one broadcast row
-    (``_sq8_const_row``) and the projections are parsed strings."""
-    carry = ["centroid"] if centers is not None else []
-    emb_hat = _sq8_dequant_sql()
+    as (query_id, neighbor_id, [centroid,] adc_sim), self-pairs dropped.
+    Queries, bounds and centroids are plan literals (``_arr_sql``); each
+    coded row scores every query in one ``transform`` and
+    ``_explode_scores`` turns the scores into rows, as ADC does."""
+    carry = ["neighbor_id"] + (["centroid"] if centers is not None else [])
+    emb_hat = _sq8_dequant_sql(vmin, vmax)
     if centers is not None:
-        emb_hat = f"zip_with({emb_hat}, element_at(_cent, centroid + 1), (r, c) -> r + c)"
-    const = _sq8_const_row(coded.sparkSession, vmin, vmax, centers)
-    return (
-        coded.crossJoin(F.broadcast(const))
-        .selectExpr("neighbor_id", *carry, f"{emb_hat} AS emb_hat")
-        .join(F.broadcast(q_emb), F.col("neighbor_id") != F.col("query_id"))
-        .selectExpr(
-            "query_id", "neighbor_id", *carry,
-            f"{_cosine_sql('emb_q', 'emb_hat')} AS adc_sim",
-        )
+        emb_hat = f"zip_with({emb_hat}, {_arr_sql(centers)}[centroid], (r, c) -> r + c)"
+    sims = f"transform({_arr_sql(Q)}, emb_q -> {_cosine_sql('emb_q', 'emb_hat')})"
+    return _explode_scores(
+        coded.selectExpr(*carry, f"{emb_hat} AS emb_hat"), carry, sims, qids
     )
 
 
@@ -2711,8 +2615,8 @@ def _serve(
         return local_df(spark, [], _TOPK_SCHEMA)
     k = _KINDS[kind]
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
+    _check_finite(f"{kind} serve", "query", Q, "a NaN/Inf query has no ranking")
     qids = [int(r[0]) for r in qrows]
-    embs = [[float(x) for x in r[1]] for r in qrows]
     centers = state.get("center")
     flat = spark.read.parquet(path + "_flat") if isinstance(path, str) else path
     part = []
@@ -2724,7 +2628,7 @@ def _serve(
     if k.codec == "flat":
         probe = local_df(
             spark,
-            [(q, c, e) for q, e in zip(qids, embs) for c in probes[q]],
+            [(q, c, e) for q, e in zip(qids, Q.tolist()) for c in probes[q]],
             "query_id long, centroid int, emb_q array<double>",
         )
         cand = flat.join(F.broadcast(probe), "centroid").filter(
@@ -2733,16 +2637,15 @@ def _serve(
         return _exact_rerank_topk(
             cand.selectExpr("query_id", "vec_id AS neighbor_id", "emb_q", "emb AS emb_n")
         )
-    q_emb = local_df(spark, list(zip(qids, embs)), "query_id long, emb_q array<double>")
+    q_emb = local_df(spark, list(zip(qids, Q.tolist())), "query_id long, emb_q array<double>")
     codes = spark.read.parquet(path)
     if k.ivf:
         codes = codes.filter(F.col("centroid").isin(cells))
     coded = codes.select(F.col("vec_id").alias("neighbor_id"), *part, "codes")
     if k.codec == "pq":
-        qnorm = np.sqrt((Q * Q).sum(1))
-        scored = _adc_explode(coded, state["book"], Q, qids, qnorm, centers)
+        scored = _adc_explode(coded, state["book"], Q, qids, centers)
     else:
-        scored = _sq8_adc(coded, q_emb, *state["sq"], centers)
+        scored = _sq8_adc(coded, Q, qids, *state["sq"], centers)
     if k.ivf:
         # per-query allowed-cell map as one parsed literal string —
         # integer membership logic, so only plan-construction cost changes
@@ -2868,25 +2771,17 @@ def _sq8_recon_ok(
     step = range/SQ_LEVELS (+1 ulp headroom).  Exact by construction
     for a correct codec trained on this corpus; a truncating or
     mis-scaled codec fails it (pytest-proven to fire)."""
-    # constants as one broadcast row (see _sq8_const_row); step_i =
-    # rng_i / SQ_LEVELS computed element-wise — the same IEEE division
-    # the literal form baked in, so the bound is bit-identical
-    const = _sq8_const_row(codes.sparkSession, vmin, vmax)
-    # whole fold as one parsed string (guide §7.3); float literals are
-    # repr-round-tripped so the bound constants are the same doubles
-    # the Column form folded in
+    # whole fold as one parsed string (guide §7.3); the step literal is
+    # numpy's correctly rounded rng/SQ_LEVELS, the same double the JVM
+    # division gives, and the float literals are repr-round-tripped
     slack, eps = (1.0 + 1e-9), 1e-15
+    err = f"zip_with(emb, {_sq8_dequant_sql(vmin, vmax)}, (x, xh) -> abs(x - xh))"
     row_ok = (
-        f"aggregate("
-        f"zip_with("
-        f"zip_with(emb, {_sq8_dequant_sql()}, (x, xh) -> abs(x - xh)),"
-        f" transform(_rng, r -> r / {SQ_LEVELS}),"
-        f" (e, s) -> e <= s / 2.0D * {slack!r}D + {eps!r}D),"
-        f" true, (acc, ok) -> acc AND ok)"
+        f"forall(zip_with({err}, {_arr_sql((vmax - vmin) / SQ_LEVELS)},"
+        f" (e, s) -> e <= s / 2.0D * {slack!r}D + {eps!r}D), ok -> ok)"
     )
     return bool(
         codes.join(corpus, "vec_id")
-        .crossJoin(F.broadcast(const))
         .selectExpr(f"{row_ok} AS row_ok")
         .agg(F.min("row_ok").alias("ok"))
         .collect()[0]
@@ -2923,7 +2818,7 @@ def sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee behind the reference's pgvector column
     (ollama_consumer.py:234) at a 4x-compressed scan footprint.
     100 TB shape: train is one d-row agg, encode is row-local codegen,
-    serve scans codes only (broadcast queries) and touches the flat
+    serve scans codes only (queries as a plan literal) and touches the flat
     store for Q×SQ_RERANK candidate rows."""
     corpus = pin(_corpus(spark, sf_dir))
     qrows = _query_rows(corpus)
@@ -3151,13 +3046,10 @@ def ivf_sq8_serve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def recon(built: dict, _) -> bool:
         # residual recon bound: the residual frame named for
-        # _sq8_recon_ok's (vec_id, emb)/(vec_id, codes); centroid
-        # constants ride as one broadcast row (see _sq8_const_row)
-        resid = spark.read.parquet(path + "_flat").crossJoin(
-            F.broadcast(_sq8_const_row(spark, *built["sq"], built["center"]))
-        ).selectExpr(
-            "vec_id", "zip_with(emb, element_at(_cent, centroid + 1), (x, c) -> x - c) AS emb"
-        )
+        # _sq8_recon_ok's (vec_id, emb)/(vec_id, codes)
+        resid = _residual(
+            spark.read.parquet(path + "_flat"), built["center"], "ivfsq8 recon"
+        ).select("vec_id", F.col("res").alias("emb"))
         codes = spark.read.parquet(path).select("vec_id", "codes")
         return _sq8_recon_ok(codes, resid, *built["sq"])
 

@@ -70,6 +70,28 @@ def test_curate_job_end_to_end(spark, sf_dir, tmp_path):
     assert train.join(test, "doc_id", "inner").count() == 0
 
 
+def test_curate_job_takes_the_engine_session(spark, sf_dir, tmp_path, monkeypatch):
+    """jobs/curate_job.py builds its session through ``get_session``, as
+    the daily-report job does, so a standalone run gets the engine conf."""
+    import curate_job
+
+    import ssafynews_data_spark
+
+    calls = []
+
+    def fake_get_session(**kwargs):
+        calls.append(kwargs)
+        return spark
+
+    monkeypatch.setattr(ssafynews_data_spark, "get_session", fake_get_session)
+    rc = curate_job.main(
+        ["--input", os.path.join(sf_dir, "documents.parquet"), "--output",
+         str(tmp_path / "out"), "--shards", "2"]
+    )
+    assert rc == 0
+    assert calls == [{"app_name": "curate_corpus"}]
+
+
 def test_curate_job_full_chain(spark, sf_dir, tmp_path):
     """jobs/curate_job.py --full: the complete gopher+decon+mix chain
     writes sharded splits whose membership matches curate_full."""

@@ -572,12 +572,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _joins_or_local_relations(df) -> list:
+    """Joins and driver-local relations in ``df``'s optimized plan: a
+    scoring plan whose constants are all literals holds neither."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [w for w in ("Join", "LocalRelation") if w in plan]
+
+
 def test_adc_matches_numpy_reference(spark, sf_dir):
-    """Flat ADC is exact over its lookup tables: Spark's broadcast-row
+    """Flat ADC is exact over its lookup tables: Spark's literal-table
     scoring must produce the SAME (query_id, neighbor_id, adc_sim) rows
     as the numpy ADC over the same tables in the same accumulation
     order (bit-identical, not approx), and the tables must reach the
-    plan as ONE broadcast row, never as plan literals."""
+    plan as literals: no join, no local relation."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -590,26 +597,23 @@ def test_adc_matches_numpy_reference(spark, sf_dir):
     books = similarity._pq_codebooks(corpus)
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
     coded = similarity._nearest(corpus, books).select(
         F.col("vec_id").alias("neighbor_id"), "codes"
     )
-    scored = similarity._adc_explode(coded, books, Q, qids, qnorm)
+    scored = similarity._adc_explode(coded, books, Q, qids)
     got = sorted((r.query_id, r.neighbor_id, r.adc_sim) for r in scored.collect())
     code_rows = coded.collect()
     want = sorted(
         similarity._adc_reference(
             [r.neighbor_id for r in code_rows],
             np.array([r.codes for r in code_rows]),
-            books, Q, qids, qnorm,
+            books, Q, qids,
         )
     )
     assert got == want  # bit-identical, not approx
     assert len(got) == len(qids) * (len(code_rows) - 1)
 
-    plan = _plan(scored)
-    assert "_adc_lut" in plan and "Broadcast" in plan
-    assert "_adc_cross" not in plan  # flat: no centroid terms
+    assert _joins_or_local_relations(scored) == []
 
 
 def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
@@ -617,7 +621,8 @@ def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
     (query, neighbor) row, adc_sim must equal the numpy cosine between
     the query and center[centroid] + decode(codes) — the cross-term and
     norm bookkeeping of by_residual has no approximation of its own —
-    and the centroid-keyed terms reach the plan as the broadcast row."""
+    and the centroid-indexed terms reach the plan as literals too: no
+    join, no local relation."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -633,14 +638,12 @@ def test_residual_adc_matches_numpy_reconstruction(spark, sf_dir, tmp_path):
     )
     Q = np.stack([np.asarray(r[1], dtype=float) for r in qrows])
     qids = [int(r[0]) for r in qrows]
-    qnorm = np.sqrt((Q * Q).sum(1))
 
     coded = similarity._nearest(cells, books, "res").select(
         F.col("vec_id").alias("neighbor_id"), "centroid", "codes"
     )
-    scored = similarity._adc_explode(coded, books, Q, qids, qnorm, centers)
-    plan = _plan(scored)
-    assert "_adc_cross" in plan and "Broadcast" in plan
+    scored = similarity._adc_explode(coded, books, Q, qids, centers)
+    assert _joins_or_local_relations(scored) == []
     rows = scored.collect()
     assert rows
 
@@ -927,13 +930,17 @@ def test_sq8_build_rejects_non_finite_bounds(spark, tmp_path):
         similarity.sq8_build_index(spark, corpus, str(tmp_path / "sq8nan"))
 
 
-@pytest.mark.parametrize(
-    "contract", ["ivfpq_serve_contract", "sq8_serve_contract", "ivf_sq8_serve_contract"]
-)
-def test_serve_roundtrip_detects_perturbed_state(spark, sf_dir, monkeypatch, contract):
-    """The shared build → reload → serve → anti-join body can FAIL: a
-    cold-started server whose reloaded state differs from the built one
-    in a single double must report state_roundtrip_ok = False."""
+_SERVE_CONTRACTS = ["ivfpq_serve_contract", "sq8_serve_contract", "ivf_sq8_serve_contract"]
+
+
+def _perturb_reloaded_state(monkeypatch, spark, sf_dir, finite: bool) -> None:
+    """Make every cold start (``_read_meta``) reload a state that differs
+    from the built one.  With ``centers``, query 0's nearest cell
+    changes: one coordinate turns NaN, or (``finite``) the whole centre
+    turns into -q0, so the probe never picks that cell again and query
+    0's neighbours change.  Without, vmin[0] turns NaN, or (``finite``)
+    vmin and vmax trade places: every dequantized dim mirrors, so the
+    candidate cut keeps the rows that score worst."""
     import numpy as np
 
     q0 = np.asarray(similarity._corpus(spark, sf_dir).filter("vec_id = 0").first().emb)
@@ -942,23 +949,61 @@ def test_serve_roundtrip_detects_perturbed_state(spark, sf_dir, monkeypatch, con
     def perturbed(spark, path):
         state = read(spark, path)
         if "center" in state:
-            # one coordinate of query 0's nearest cell turns NaN: the
-            # probe never picks that cell again, so query 0's probed
-            # cells (and with them its neighbours) change
             arr = state["center"].copy()
-            arr[similarity._probe_cells(arr, q0[None, :], [0])[0][0], 0] = np.nan
+            c = similarity._probe_cells(arr, q0[None, :], [0])[0][0]
+            if finite:
+                arr[c] = -q0
+            else:
+                arr[c, 0] = np.nan
             state["center"] = arr
+        elif finite:
+            state["sq"] = state["sq"][::-1].copy()
         else:
-            # vmin[0] turns NaN: every approximate score is NaN, so the
-            # candidate cut no longer follows similarity
             arr = state["sq"].copy()
             arr[0, 0] = np.nan
             state["sq"] = arr
         return state
 
     monkeypatch.setattr(similarity, "_read_meta", perturbed)
-    row = getattr(similarity, contract)(spark, sf_dir).collect()[0]
-    assert row.state_roundtrip_ok is False
+
+
+@pytest.mark.parametrize("contract", _SERVE_CONTRACTS)
+def test_serve_roundtrip_detects_perturbed_state(spark, sf_dir, monkeypatch, contract):
+    """A reloaded state with a non-finite constant never reaches a serve
+    plan: every constant is an ``_arr_sql`` literal, so the serve raises
+    instead of ranking on NaN."""
+    _perturb_reloaded_state(monkeypatch, spark, sf_dir, finite=False)
+    with pytest.raises(ValueError, match="non-finite"):
+        getattr(similarity, contract)(spark, sf_dir).collect()
+
+
+@pytest.mark.parametrize("contract", _SERVE_CONTRACTS)
+def test_serve_roundtrip_detects_finite_perturbation(spark, sf_dir, monkeypatch, contract):
+    """The shared build → reload → serve → anti-join body can FAIL: a
+    cold-started server whose reloaded state differs from the built one
+    in what the probe or the candidate cut keeps must report
+    state_roundtrip_ok = False."""
+    _perturb_reloaded_state(monkeypatch, spark, sf_dir, finite=True)
+    assert getattr(similarity, contract)(spark, sf_dir).collect()[0].state_roundtrip_ok is False
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "sq8", "ivfsq8"])
+def test_serve_rejects_non_finite_query(spark, sf_dir, tmp_path, kind):
+    """A query vector with a NaN component has no ranking: every index
+    kind's serve raises a ValueError naming the kind and the element,
+    instead of returning neighbours with sim = NaN."""
+    import math
+
+    corpus = similarity.pin(similarity._corpus(spark, sf_dir))
+    qrows = similarity._query_rows(corpus)
+    if not qrows:
+        pytest.skip("no query ids")
+    path = str(tmp_path / kind)
+    state = similarity._build_index(spark, corpus, path, kind)
+    bad = [(int(r[0]), list(r[1])) for r in qrows]
+    bad[0][1][3] = math.nan
+    with pytest.raises(ValueError, match=rf"{kind} serve: non-finite query\[0\]\[3\]"):
+        similarity._serve(spark, path, kind, state, bad)
 
 
 def test_contrastive_triplet_invariants(spark, sf_dir):
@@ -1112,13 +1157,12 @@ def test_sq8_sql_twins_match_column_forms(spark):
         (r.id, list(r.c)) for r in enc_sql
     )
 
-    # dequant: Column _sq8_dequant_col vs _sq8_dequant_sql over a coded
-    # frame joined with the quantizer const row
-    coded = df.selectExpr(
-        "id", f"{similarity._sq8_encode_sql(vmin, vmax, 'a')} AS codes"
-    ).crossJoin(F.broadcast(similarity._sq8_const_row(spark, vmin, vmax)))
-    deq_col = coded.select("id", similarity._sq8_dequant_col().alias("d")).collect()
-    deq_sql = coded.selectExpr("id", f"{similarity._sq8_dequant_sql()} AS d").collect()
+    # dequant: Column _sq8_dequant_col vs _sq8_dequant_sql on the same bounds
+    coded = df.selectExpr("id", f"{similarity._sq8_encode_sql(vmin, vmax, 'a')} AS codes")
+    deq_col = coded.select("id", similarity._sq8_dequant_col(vmin, vmax).alias("d")).collect()
+    deq_sql = coded.selectExpr(
+        "id", f"{similarity._sq8_dequant_sql(vmin, vmax)} AS d"
+    ).collect()
     assert sorted((r.id, list(r.d)) for r in deq_col) == sorted(
         (r.id, list(r.d)) for r in deq_sql
     )
@@ -1204,11 +1248,11 @@ def test_probe_cells_orders_like_a_spark_window(spark, sf_dir):
 
 #: Spark jobs per warm ``*_serve`` request (ROADMAP direction 5, "budgets
 #: first").  Job counts repeat exactly, so they pin the serve path the way
-#: test_shuffle_budget pins shuffles: the query embeddings, the ADC lookup
-#: row and the SQ8 constants are LocalRelations that cost no job, and the
-#: IVF-PQ lookup maps are built on the driver, not aggregated by Spark.
-#: Slack 0 — a new job must be justified, not absorbed.
-SERVE_JOB_BUDGET = {"ivfpq": 8, "sq8": 9, "ivfsq8": 9}
+#: test_shuffle_budget pins shuffles: the ADC tables, the SQ8 bounds and
+#: the request batch are plan literals that cost no job; the one
+#: driver-local relation left is the refine's query embeddings.  Slack 0
+#: — a new job must be justified, not absorbed.
+SERVE_JOB_BUDGET = {"ivfpq": 7, "sq8": 7, "ivfsq8": 7}
 
 
 def test_serve_job_budget(spark, sf_dir, tmp_path):
